@@ -26,9 +26,9 @@ import graft.functions.HashExprs.bpe_merge_step
   *  - the state rewrite is the compiled [[bpe_merge_step]] expression
   *    (left-greedy non-overlapping, standard BPE apply order) inside
   *    whole-stage codegen;
-  *  - `localCheckpoint` per round truncates the N-round lineage
-  *    (d5/g1's pattern), so rounds stay O(vocab) each with no plan
-  *    blow-up.
+  *  - [[Fixpoint]] pins each round's state, truncating the N-round
+  *    lineage (d5's pattern), so rounds stay O(vocab) each with no
+  *    plan blow-up.
   *
   * Everything is a pure function of (vocab, rounds): reruns, retries
   * and any partitioning produce identical merge tables
@@ -46,16 +46,12 @@ object Bpe {
     * early when no adjacent pair remains. */
   def train(vocab: DataFrame, rounds: Int): (Seq[Merge], DataFrame) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var state = vocab
-      .select(
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-          .as("syms"),
-        col("freq"))
-      .localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var exhausted = false
-    var r = 1
-    while (r <= rounds && !exhausted) {
+    val first = vocab.select(
+      expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
+        .as("syms"),
+      col("freq"))
+    val state = Fixpoint.run(first, maxRounds = rounds) { (r, state) =>
       // adjacent pairs weighted by word frequency — vocabulary-sized
       // (t19's spelling; the interpreted lambda runs once per WORD,
       // not per corpus token)
@@ -69,16 +65,11 @@ object Bpe {
         .orderBy(col("support").desc, col("l").asc, col("r").asc)
         .limit(1) // TakeOrdered — the O(1) global merge decision
         .collect()
-      if (best.isEmpty) {
-        exhausted = true
-      } else {
-        val row = best.head
-        val (l, rr, sup) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(r, l, rr, sup)
-        state = state
-          .select(bpe_merge_step(col("syms"), l, rr).as("syms"), col("freq"))
-          .localCheckpoint(true) // truncate per-round lineage
-        r += 1
+      // no pair left: the vocabulary is exhausted, stop early
+      best.headOption.map { row =>
+        val (l, rr) = (row.getString(0), row.getString(1))
+        merges += Merge(r, l, rr, row.getLong(2))
+        state.select(bpe_merge_step(col("syms"), l, rr).as("syms"), col("freq"))
       }
     }
     val outVocab = state

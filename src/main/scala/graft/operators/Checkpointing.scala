@@ -2,11 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Iteration-pin discipline for the iterative operators (g1 PageRank,
-  * g4 BFS, d5/s8 connected components, the shared co-purchase edge
-  * build): each generation is CHECKPOINTED so lineage stays shallow
-  * and planning stays sane ([[org.apache.spark.sql.graftbridge.Bridge
-  * .withExactStats]]).
+/** The pin of the iterative operators. [[Fixpoint]] pins every
+  * generation through it — d5/s8 connected components, g4 BFS, g5
+  * k-core peeling, BPE training and IVF Lloyd — and so do their fixed
+  * inputs (CC's edge set, g4's adjacency, Lloyd's training sample) and
+  * the co-purchase edge build and g1 edge set of [[GraphQueries]].
+  * Each generation is CHECKPOINTED so lineage stays one generation deep
+  * and planning stays sane.
   *
   * The default pin is `localCheckpoint(eager = true)` — executor-
   * MEMORY-backed, zero disk I/O, the right call on a healthy cluster
@@ -19,12 +21,14 @@ import org.apache.spark.sql.DataFrame
   *   `graft.iterativeCheckpoint = reliable`
   *
   * (plus `SparkContext.setCheckpointDir` to a fault-tolerant FS) and
-  * every iteration pin becomes a RELIABLE `checkpoint()` — materialized
+  * every pin above becomes a RELIABLE `checkpoint()` — materialized
   * to the checkpoint directory, recoverable across executor loss, at
   * the cost of one write+read per generation. Same plan shape either
-  * way (both produce a `LogicalRDD`), so stats pinning and the
-  * generation-free discipline compose unchanged; results are
-  * bit-identical (`ReliableCheckpointSpec`). */
+  * way (both produce a `LogicalRDD`), so exact-stats pinning and
+  * Fixpoint's freeing of superseded generations compose unchanged;
+  * results are bit-identical (`ReliableCheckpointSpec`). The lineage-
+  * versus-checkpoint trade is the one D-Streams (SOSP'13) names.
+  * Other one-off pins outside these operators stay `localCheckpoint`. */
 object Checkpointing {
 
   /** Session-conf key: "local" (default) or "reliable". */

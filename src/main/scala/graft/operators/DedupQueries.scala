@@ -300,16 +300,11 @@ object DedupQueries {
   }
 
   def connectedComponents(pairs: DataFrame): DataFrame = {
-    // Pin EXACT statistics on every checkpointed generation
-    // (Bridge.withExactStats): localCheckpoint inherits the
-    // optimizer's ESTIMATE of the producing plan, and in this loop
-    // generation k+1's estimate is a product of joins over generation
-    // k's — compounding ~×4 per iteration until the size arithmetic
-    // overflows BigInteger at planning time around iteration 13
-    // (first hit by s8 on the 10× embeddings corpus, whose cross-copy
-    // bridge edges push the iteration count past the base corpus's).
-    // |labels| = |nodes| is a loop invariant, so the exact row count
-    // is known once and holds for every generation.
+    // EXACT statistics on every generation (Fixpoint's exactRowBytes,
+    // |labels| = |nodes|): estimated, generation k+1's size is a
+    // product of joins over generation k's — ~×4 per iteration until
+    // it overflows BigInteger at planning time around iteration 13
+    // (first hit by s8 on the 10× embeddings corpus).
     import org.apache.spark.sql.graftbridge.Bridge.withExactStats
     // SELF-LOOPED symmetrized edges (r19): with (a, a) present for
     // every node, hooking IS the neighbor-min aggregate — min over
@@ -342,57 +337,35 @@ object DedupQueries {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
         lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
+    // hooking then pointer jump: label ← label(label). The inner join
+    // is total: a label is a MIN over node ids, so it is always a node
+    // id, and doc_id is unique in `hooked` — row count is preserved.
+    // The parent's label can only be ≤ the child's (labels never
+    // increase), so `pl` alone is the new minimum.
+    def jump(hooked: DataFrame): DataFrame = {
+      val parents = hooked
+        .select(col("doc_id").as("pid"), col("cluster_id").as("pl"))
+      hooked.join(parents, hooked("cluster_id") === parents("pid"))
+        .select(hooked("doc_id"), col("pl").as("cluster_id"))
+    }
     // FUSED generation 1: hooking over the IDENTITY labels is just
     // min over neighbors ∪ self — one aggregate over the self-looped
     // edge set (groupBy(da) IS the node-distinct), so the identity
     // generation never materializes and round 1 skips its
     // edges ⋈ labels join, the nodes-distinct exchange, and one
-    // checkpoint. Bit-identical to running the loop body once over
-    // identity labels; the loop below continues from generation 2.
+    // checkpoint. Bit-identical to running the round once over
+    // identity labels; Fixpoint's count of it is |nodes| (see above).
     val hooked0 = edges.groupBy(col("da").as("doc_id"))
       .agg(min(col("db")).as("cluster_id"))
-    val parents0 = hooked0
-      .select(col("doc_id").as("pid"), col("cluster_id").as("pl"))
-    val labels0 = Checkpointing.pin(
-      hooked0.join(parents0, hooked0("cluster_id") === parents0("pid"))
-        .select(hooked0("doc_id"), col("pl").as("cluster_id")))
-    // |nodes| = generation 1's row count (see above) — a map-side
-    // count over just-pinned blocks
-    val nNodes = labels0.count()
-    var labels = withExactStats(labels0, nNodes, 16L)
-    var prevSum = labelSum(labels)
-    var converged = false
-    while (!converged) {
+    Fixpoint.run(jump(hooked0), measure = Some(labelSum),
+        exactRowBytes = Some(16L)) { (_, labels) =>
       // hooking in ONE join + aggregate: the self-loop row delivers
       // each node's own label into its min, and every node appears as
       // a `da` (self-loops guarantee coverage), so the r6–r18
       // labels-left-join + least/coalesce stage is gone.
-      val hooked = edges.join(labels, edges("db") === labels("doc_id"))
-        .groupBy(edges("da").as("doc_id")).agg(min("cluster_id").as("cluster_id"))
-      // pointer jump: label ← label(label). Inner join is total: a
-      // label is a MIN over node ids, so it is always a node id, and
-      // doc_id is unique in `hooked` — row count is preserved. The
-      // parent's label can only be ≤ the child's (labels never
-      // increase), so `pl` alone is the new minimum.
-      val parents = hooked
-        .select(col("doc_id").as("pid"), col("cluster_id").as("pl"))
-      val next = withExactStats(
-        Checkpointing.pin(
-          hooked.join(parents, hooked("cluster_id") === parents("pid"))
-            .select(hooked("doc_id"), col("pl").as("cluster_id"))),
-        nNodes, 16L)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      // the old generation is fully consumed — free its blocks now, or a
-      // deep component graph holds O(iterations × |nodes|) dead blocks.
-      // Bridge.persistedRdd reads the checkpointed RDD off the plan —
-      // exact and safe under concurrent jobs (a registry diff is not).
-      org.apache.spark.sql.graftbridge.Bridge.persistedRdd(labels)
-        .foreach(_.unpersist(blocking = false))
-      labels = next
+      Some(jump(edges.join(labels, edges("db") === labels("doc_id"))
+        .groupBy(edges("da").as("doc_id")).agg(min("cluster_id").as("cluster_id"))))
     }
-    labels
   }
 
   /** (doc_id, cluster_id) labels over the standard d2/d5 near-dup

@@ -23,8 +23,8 @@ import graft.sources.Tables
   * rank mass ≈ |V|·10⁶, so the ×850 000 step stays inside int64 up to
   * ~10¹⁰ vertices; beyond that, a DECIMAL(38,0) accumulator is the
   * swap (x5's pattern). A fixed 3 iterations keeps the lineage
-  * shallow; long-horizon runs would `localCheckpoint` per round like
-  * d5's label propagation.
+  * shallow, so g1's rounds stay lazy and unpinned; g4 and g5 iterate
+  * through [[Fixpoint]], which pins every generation.
   *
   * Node encoding: part → 2·partkey, supplier → 2·suppkey+1 — a single
   * BIGINT join key, no string concat in the hot path.
@@ -291,10 +291,9 @@ object GraphQueries {
     // level only, never the whole visited set) against the adjacency,
     // anti-joins out already-visited nodes (BFS's dedup — this is what
     // keeps the dataflow node-bounded where a naive path recursion is
-    // exponential), and localCheckpoints to keep lineage shallow —
-    // the g1/d5 iterative discipline. Output is the per-level summary
-    // (exact counts + id range), so result size is O(depth) at any
-    // graph size. The oracle replays min-hop BFS as a recursive CTE
+    // exponential); Fixpoint pins each level. Output is the per-level
+    // summary (exact counts + id range), so result size is O(depth) at
+    // any graph size. The oracle replays min-hop BFS as a recursive CTE
     // with UNION (not UNION ALL) recursion — DuckDB's row dedup is
     // the visited-set analogue, keeping the recursion node-bounded
     // too. 100 TB shape: per-round cost is |frontier|·avg-degree
@@ -307,27 +306,18 @@ object GraphQueries {
           .union(edges.select(col("v").as("src"), col("u").as("dst"))))
       val seeds = und.select(col("src").as("id")).distinct()
         .filter(col("id") < 10)
-      var visited = Checkpointing.pin(seeds.withColumn("hops", lit(0)))
-      // early exit on an exhausted frontier: a round whose next level
-      // is empty leaves `visited` unchanged, and every later round is
-      // a no-op join over an empty frontier — skip them (identical
-      // output; the count reads the just-pinned generation's row
-      // count, one cheap job over in-memory blocks). The bounded
-      // maxHops contract is unchanged — this only skips provably
-      // empty rounds.
-      var prevCount = visited.count()
-      var exhausted = false
-      for (h <- 1 to maxHops if !exhausted) {
+      // the row-count measure ends the walk at an exhausted frontier:
+      // an empty level leaves `visited` unchanged, so every later
+      // round is a no-op (identical output within the maxHops bound)
+      val visited = Fixpoint.run(seeds.withColumn("hops", lit(0)),
+          maxRounds = maxHops, measure = Some(_.count())) { (h, visited) =>
         val frontier = visited.filter(col("hops") === h - 1)
           .select(col("id").as("src"))
         val next = und.join(frontier, "src")
           .select(col("dst").as("id")).distinct()
           .join(visited.select("id"), Seq("id"), "left_anti")
           .withColumn("hops", lit(h))
-        visited = Checkpointing.pin(visited.unionByName(next))
-        val cnt = visited.count()
-        exhausted = cnt == prevCount
-        prevCount = cnt
+        Some(visited.unionByName(next))
       }
       visited.groupBy("hops")
         .agg(count(lit(1)).as("n_parts"),
@@ -350,34 +340,25 @@ object GraphQueries {
     // round body until no row count change). Per round: ONE hash
     // aggregate for degrees + two semi-joins to drop edges touching a
     // peeled endpoint — all shuffles on the node key, nothing global,
-    // frontier shrinks monotonically. Each round's edge set is pinned
-    // (Checkpointing.pin): 6 rounds of lazy lineage would replay the
-    // whole peel history per action and defeat AQE's per-round stats.
+    // frontier shrinks monotonically. Fixpoint pins each round's edge
+    // set: 6 rounds of lazy lineage would replay the whole peel
+    // history per action and defeat AQE's per-round stats.
     "g5_kcore" -> { (s, d) =>
       val k = 3
       val rounds = 6
       val e0 = coPurchaseEdges(s, d, minSupport = 2)
-      var und = Checkpointing.pin(
-        e0.select(col("u").as("src"), col("v").as("dst"))
-          .union(e0.select(col("v").as("src"), col("u").as("dst"))))
-      // early exit at the fixpoint: peeling only ever REMOVES edges,
-      // so an unchanged edge count between rounds means the round was
-      // a no-op and every remaining round would be too — identical
-      // output to running all 6 (each count is one cheap job over the
-      // just-pinned generation's in-memory blocks; the graph here
-      // converges in 2–3 rounds, so this skips roughly half the
-      // degree-agg + double-semi-join rounds).
-      var prevEdges = und.count()
-      var converged = false
-      for (_ <- 1 to rounds if !converged) {
+      // peeling only ever REMOVES edges, so an unchanged edge count
+      // means the round was a no-op and so would every later one be:
+      // the row-count measure stops there (this graph converges in
+      // 2–3 rounds; output identical to running all 6)
+      val und = Fixpoint.run(
+          e0.select(col("u").as("src"), col("v").as("dst"))
+            .union(e0.select(col("v").as("src"), col("u").as("dst"))),
+          maxRounds = rounds, measure = Some(_.count())) { (_, und) =>
         val keep = und.groupBy("src").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select("src")
-        und = Checkpointing.pin(
-          und.join(keep, Seq("src"), "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi"))
-        val cnt = und.count()
-        converged = cnt == prevEdges
-        prevEdges = cnt
+        Some(und.join(keep, Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi"))
       }
       und.groupBy("src").agg(count(lit(1)).as("core_deg"))
         .select(col("src").as("part_id"), col("core_deg"))

@@ -205,26 +205,24 @@ object IvfIndex {
     // one materialization feeds every training round (each round scans
     // the training input for assignment + means; without the pin that
     // is a parquet re-scan + re-quantization per consumer)
-    val vv = v.select("vec_id", "qv")
-      .filter(col("vec_id") % stride === 0)
-      .localCheckpoint(true)
-    var cents = vv.filter(col("vec_id") < k * stride)
+    val vv = Checkpointing.pin(v.select("vec_id", "qv")
+      .filter(col("vec_id") % stride === 0))
+    val init = vv.filter(col("vec_id") < k * stride)
       .select(expr(s"vec_id DIV $stride").as("cid"), col("qv").as("cv"))
-      .localCheckpoint(true)
     // The init's dense-0-based-vec_id contract, enforced LOUDLY:
     // sparse or 1-based ids would silently yield fewer than
     // min(k, sample) centroids with non-dense cids, breaking the
     // router's `cid < kc` coarse filter without a wrong-looking
-    // result anywhere. Two scalar aggs on already-pinned frames.
+    // result anywhere. Two scalar aggs over the pinned sample.
     val sampleN = vv.count()
-    val init = cents.agg(count(lit(1)), max(col("cid"))).head()
+    val initStats = init.agg(count(lit(1)), max(col("cid"))).head()
     val expectK = math.min(k, sampleN)
-    require(init.getLong(0) == expectK &&
-        (expectK == 0L || init.getLong(1) == expectK - 1),
+    require(initStats.getLong(0) == expectK &&
+        (expectK == 0L || initStats.getLong(1) == expectK - 1),
       s"IVF Lloyd init expects dense 0-based vec_ids: sampled $sampleN " +
-        s"vectors at stride $stride but init yielded ${init.getLong(0)} " +
-        s"centroids (expected $expectK, max cid ${init.get(1)})")
-    for (_ <- 1 to rounds) {
+        s"vectors at stride $stride but init yielded ${initStats.getLong(0)} " +
+        s"centroids (expected $expectK, max cid ${initStats.get(1)})")
+    Fixpoint.run(init, maxRounds = rounds) { (_, cents) =>
       val assigned = routeAssign(vv, cents, kc)
       // 64×N explode, but shuffled only as (cell, dim) partial sums —
       // map-side combine caps the wire at 64·k rows per partition
@@ -235,10 +233,8 @@ object IvfIndex {
         .groupBy("cid")
         .agg(expr("transform(array_sort(collect_list(struct(dim, m))), p -> p.m)")
           .as("mv"))
-      cents = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("mv"), col("cv")).as("cv"))
-        .localCheckpoint(true)
+      Some(cents.join(means, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("mv"), col("cv")).as("cv")))
     }
-    cents
   }
 }

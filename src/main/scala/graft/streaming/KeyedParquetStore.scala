@@ -50,6 +50,9 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   import KeyedParquetStore.DropPolicy
 
   private def path(table: String) = s"$root/$table"
+  // Per-write option: the session conf is shared by every mirror and
+  // reader in the session, so the store never sets it.
+  private val OverwriteMode = "partitionOverwriteMode"
   private def schemaPath(table: String) = new Path(s"${path(table)}/_graft_schema.json")
 
   private def bucketOf(key: org.apache.spark.sql.Column) =
@@ -207,16 +210,13 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   def snapshot(spark: SparkSession, table: String, source: DataFrame, keyCol: String): Unit = {
     require(!source.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
-    // full overwrite: a prior merge() leaves partitionOverwriteMode=
-    // dynamic session-wide, under which this write would only replace
-    // buckets present in `source` and leave stale buckets on disk
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     source
       .withColumn("bucket", bucketOf(col(keyCol)))
       .repartition(col("bucket"))
       .write
       .partitionBy("bucket")
       .mode(SaveMode.Overwrite)
+      .option(OverwriteMode, "static") // full replace, whatever the session says
       .parquet(path(table))
     writeSchema(spark, table, source.schema)
   }
@@ -282,7 +282,6 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       hasDeletes: Option[Boolean] = None): Unit = {
     require(!changes.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val keyed = changes.withColumn("bucket", bucketOf(col(keyCol)))
     val dataSchema = StructType(changes.schema.filterNot(_.name == "op"))
     if (dropPolicy == DropPolicy.Error && exists(spark, table)) {
@@ -298,7 +297,8 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     if (!exists(spark, table) || bucketsOnDisk(spark, table).isEmpty) {
       keyed.filter(col("op") =!= "D").drop("op")
         .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(path(table))
+        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
+        .option(OverwriteMode, "dynamic").parquet(path(table))
       writeSchema(spark, table, dataSchema)
       return
     }
@@ -349,7 +349,8 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     if (remaining.nonEmpty) {
       merged
         .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(path(table))
+        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
+        .option(OverwriteMode, "dynamic").parquet(path(table))
     }
     // persist the (possibly widened) schema AFTER the data write, so a
     // crash between the two leaves a readable store (old sidecar, old
@@ -436,7 +437,6 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * the next completed cadence cycle", not "at job exit". */
   def compact(spark: SparkSession, table: String, clusterBy: Seq[String] = Nil,
       dropWhere: Option[Column] = None): Long = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val schema = schemaOf(spark, table)
     val before = bucketsOnDisk(spark, table)
     if (before.isEmpty) return 0L
@@ -454,7 +454,8 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       kept
         .repartition(col("bucket"))
         .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*)
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(path(table))
+        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
+        .option(OverwriteMode, "dynamic").parquet(path(table))
       // dynamic overwrite leaves a bucket's OLD file in place when the
       // rewrite emits no rows for it — a fully-purged bucket must be
       // cleared explicitly or its dropped rows resurrect (the distinct

@@ -49,23 +49,6 @@ object Bridge {
     }.sum
   }
 
-  /** Broadcast blocks currently held by the local block manager:
-    * (distinct broadcast count, total stored bytes). Diagnostic — used
-    * to attribute run-over-run slowdown to broadcast accumulation
-    * (broadcast cleanup is ContextCleaner/GC-driven, so nothing frees
-    * them between back-to-back runs of the same query). */
-  def broadcastBlockStats(): (Int, Long) = {
-    val bm = org.apache.spark.SparkEnv.get.blockManager
-    val ids = bm.getMatchingBlockIds(
-      _.isInstanceOf[org.apache.spark.storage.BroadcastBlockId])
-    val bytes = ids.flatMap(id => bm.getStatus(id))
-      .map(s => s.memSize + s.diskSize).sum
-    val nBc = ids.collect {
-      case b: org.apache.spark.storage.BroadcastBlockId => b.broadcastId
-    }.distinct.size
-    (nBc, bytes)
-  }
-
   /** Drop ALL stored broadcast blocks (driver + executors). Safe only
     * when no live plan will re-read an existing broadcast variable —
     * i.e. at a measurement-harness run boundary where every plan is

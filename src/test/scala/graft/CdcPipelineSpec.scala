@@ -274,7 +274,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     val store = new KeyedParquetStore(root, nBuckets = 8)
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
     store.snapshot(spark, "t", (1L to 100L).map(k => (k, s"a$k")).toDF("id", "v"), "id")
-    // a merge leaves partitionOverwriteMode=dynamic session-wide...
+    // a merge rewrites only the buckets it touches (dynamic overwrite)...
     CdcPipeline.applyBatch(
       Seq(ChangeEvent(1, ts(1), "U", "t", 1, """{"id":1,"v":"u"}""")).toDF(),
       store, Map("t" -> schema), Map("t" -> "id"))
@@ -282,6 +282,40 @@ class CdcPipelineSpec extends AnyFunSuite {
     store.snapshot(spark, "t", Seq((999L, "only")).toDF("id", "v"), "id")
     val state = store.read(spark, "t").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(state == Seq((999L, "only")), s"stale rows survived resync: ${state.take(5)}")
+  }
+
+  test("the store never changes the session's partitionOverwriteMode, and " +
+    "snapshot replaces every bucket even when the session says dynamic") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val store = new KeyedParquetStore(
+      Files.createTempDirectory("cdc_owmode").toString, nBuckets = 8)
+    def unchanged(step: String)(body: => Unit): Unit = {
+      val before = spark.conf.getAll.toSet
+      body
+      val after = spark.conf.getAll.toSet
+      val (gone, added) = (before diff after, after diff before)
+      assert(gone.isEmpty && added.isEmpty, s"$step changed the session conf: $gone -> $added")
+    }
+    unchanged("snapshot") {
+      store.snapshot(spark, "t", (1L to 100L).map(k => (k, s"a$k")).toDF("id", "v"), "id")
+    }
+    unchanged("merge") {
+      store.merge(spark, "t",
+        Seq(("U", 1L, "u"), ("D", 2L, null: String)).toDF("op", "id", "v"), "id")
+    }
+    unchanged("compact") { store.compact(spark, "t") }
+    assert(store.read(spark, "t").count() == 99)
+    // a session left in dynamic mode (another writer's choice) must not
+    // turn the full-replace snapshot into a per-bucket overwrite that
+    // keeps the buckets the new image does not touch
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, "dynamic")
+    try unchanged("snapshot under dynamic") {
+      store.snapshot(spark, "t", Seq((999L, "only")).toDF("id", "v"), "id")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val state = store.read(spark, "t").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(state == Seq((999L, "only")), s"stale buckets survived: ${state.take(5)}")
   }
 
   test("bucketed layout prunes: merge touches only affected buckets") {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Checkpointing, DedupQueries, GraphQueries}
+import graft.operators.{Bpe, Checkpointing, DedupQueries, GraphQueries, IvfIndex}
 
 /** Opt-in RELIABLE checkpointing for the iterative operators (r14
   * verdict ask: `localCheckpoint(true)` is executor-memory-backed, so
@@ -16,6 +16,7 @@ import graft.operators.{Checkpointing, DedupQueries, GraphQueries}
   * bit-identical results, and the iteration state survives on disk. */
 class ReliableCheckpointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
 
   private def withReliable[A](body: => A): A = {
     val ckpt = Files.createTempDirectory("graft_reliable_ckpt").toString
@@ -25,10 +26,20 @@ class ReliableCheckpointSpec extends AnyFunSuite {
     finally spark.conf.unset(Checkpointing.ModeKey)
   }
 
+  /** rdd-* checkpoint data directories under the current checkpoint dir. */
+  private def checkpointRdds(): Int = {
+    val dir = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.sparkContext.getCheckpointDir.get).toUri.getPath)
+    def rdds(f: java.io.File): Int =
+      if (f.isDirectory)
+        f.listFiles().map(rdds).sum +
+          (if (f.getName.startsWith("rdd-")) 1 else 0)
+      else 0
+    rdds(dir)
+  }
+
   test("g4 BFS and d5 connected components: reliable mode is " +
     "bit-identical to local mode and materializes generations to disk") {
-    val sf = "/root/testdata/sf0.001"
-
     val g4Local = GraphQueries.queries("g4_reach")(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     val ccPairs = spark.range(200).select(
@@ -43,15 +54,7 @@ class ReliableCheckpointSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq
       // the generations are ON DISK (fault-tolerant), not in executor
       // memory: the checkpoint dir holds rdd-* data directories
-      val dir = new java.io.File(new org.apache.hadoop.fs.Path(
-        spark.sparkContext.getCheckpointDir.get).toUri.getPath)
-      def rdds(f: java.io.File): Int =
-        if (f.isDirectory)
-          f.listFiles().map(rdds).sum +
-            (if (f.getName.startsWith("rdd-")) 1 else 0)
-        else 0
-      assert(rdds(dir) > 3,
-        s"reliable mode must write generation RDDs under $dir")
+      assert(checkpointRdds() > 3, "reliable mode must write generation RDDs")
       (g4, cc)
     }
     assert(g4Rel == g4Local, "g4 must be bit-identical across modes")
@@ -61,5 +64,38 @@ class ReliableCheckpointSpec extends AnyFunSuite {
     // (fresh context state can't be simulated here — the dir is already
     // set — so pin the require's message contractually instead)
     assert(Checkpointing.ModeKey == "graft.iterativeCheckpoint")
+  }
+
+  private lazy val vocab = {
+    import spark.implicits._
+    Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
+      .toSeq.toDF("word", "freq")
+  }
+  private lazy val vectors = spark.range(256).select(col("id").as("vec_id"),
+    expr("transform(sequence(0, 63), d -> (id * 31 + d * 7) % 997)").as("qv"))
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  // each run gets a fresh checkpoint dir; the minimum is the number of
+  // generations every run pins (g5: co-purchase edges, generation 1
+  // and at least one round; BPE: 1 + 8 rounds; Lloyd: the training
+  // sample, 1 + 4 rounds)
+  Seq[(String, () => Any, Int)](
+    ("g5 k-core", () => rows(GraphQueries.queries("g5_kcore")(spark, sf)), 3),
+    ("BPE", () => { val (m, out) = Bpe.train(vocab, rounds = 8); (m, rows(out)) }, 9),
+    ("Lloyd", () => rows(IvfIndex.lloydCentroids(vectors, 8L, rounds = 4)), 6)
+  ).foreach { case (name, run, minRdds) =>
+    test(s"$name: reliable mode is bit-identical to local mode and " +
+      "writes every generation to disk") {
+      val local = run()
+      val reliable = withReliable {
+        val out = run()
+        val n = checkpointRdds()
+        assert(n >= minRdds, s"$name: reliable mode wrote $n rdd-* dirs, " +
+          s"expected at least $minRdds (one per pinned generation)")
+        out
+      }
+      assert(reliable == local, s"$name must be bit-identical across modes")
+    }
   }
 }
