@@ -315,28 +315,22 @@ object DedupQueries {
     // |nodes| rows to the pinned edge set, paid once.
     val sym = pairs.select(col("da"), col("db"))
       .union(pairs.select(col("db").as("da"), col("da").as("db")))
-    val edges0 = Checkpointing.pin(sym.union(
-      sym.select(col("da")).distinct().select(col("da"), col("da").as("db"))))
-      // ^ reused every iteration; reliable-mode opt-in via Checkpointing
-    // |edges| reads straight off the pinned blocks — a map-side count,
-    // no exchange. |nodes| comes later from generation 1's own row
-    // count (hooked0 groups by da over the self-looped set, so its
+    // The edge set is reused every iteration (reliable-mode opt-in via
+    // Checkpointing). |edges| is the pin's own row count, folded in the
+    // job that materializes it. |nodes| comes later from generation 1's
+    // row count (hooked0 groups by da over the self-looped set, so its
     // output row count IS the node count) — the r6–r18 spelling paid a
     // countDistinct exchange over the edge set for a number a pinned
     // generation already knows (r19).
-    val nEdges = edges0.count()
-    val edges = withExactStats(edges0, nEdges, 16L)
+    val e = Checkpointing.materialize(sym.union(
+      sym.select(col("da")).distinct().select(col("da"), col("da").as("db"))))
+    val edges = withExactStats(e.df, e.rows, 16L)
     // Convergence check without a generation-vs-generation join: labels
     // only ever DECREASE (least of self and neighbors), so the label
     // sum is strictly monotone until fixpoint — equal consecutive sums
-    // ⟺ no label changed. One scalar aggregate per iteration instead
-    // of a |nodes| join + count; DECIMAL(38,0) so the sum is exact at
-    // any id magnitude × node count.
-    // coalesce: SUM over an empty frame is NULL — an empty pair graph
-    // must converge immediately, not NPE on the comparison
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
+    // ⟺ no label changed. Fixpoint folds the exact sum into each
+    // generation's pin job, so the check costs no job of its own; an
+    // empty pair graph sums to 0 twice and converges at once.
     // hooking then pointer jump: label ← label(label). The inner join
     // is total: a label is a MIN over node ids, so it is always a node
     // id, and doc_id is unique in `hooked` — row count is preserved.
@@ -357,7 +351,7 @@ object DedupQueries {
     // identity labels; Fixpoint's count of it is |nodes| (see above).
     val hooked0 = edges.groupBy(col("da").as("doc_id"))
       .agg(min(col("db")).as("cluster_id"))
-    Fixpoint.run(jump(hooked0), measure = Some(labelSum),
+    Fixpoint.run(jump(hooked0), measure = Some(Fixpoint.SumOf("cluster_id")),
         exactRowBytes = Some(16L)) { (_, labels) =>
       // hooking in ONE join + aggregate: the self-loop row delivers
       // each node's own label into its min, and every node appears as

@@ -2,7 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
+
+import graft.sources.Tables
 
 /** Right-to-be-forgotten sweep — tombstoned keys removed from a corpus
   * table AND from every derived artifact that could still serve them.
@@ -127,11 +130,13 @@ object Erasure {
     val before = spark.read.parquet(src)
     val schema = before.schema
     val rowsBefore = before.count()
-    survivors(spark, src, keyCol, tomb).write.parquet(scratch.toString)
-    swapIn(fs, scratch, srcPath, old)
-    val after = spark.read.schema(schema).parquet(src)
-    Report(table, rowsBefore, after.count(),
-      after.join(tomb, Seq(keyCol), "left_semi").count())
+    try {
+      survivors(spark, src, keyCol, tomb).write.parquet(scratch.toString)
+      swapIn(fs, scratch, srcPath, old)
+      val after = spark.read.schema(schema).parquet(src)
+      Report(table, rowsBefore, after.count(),
+        after.join(tomb, Seq(keyCol), "left_semi").count())
+    } finally Bridge.free(tomb)
   }
 
   /** One edge of an erasure cascade: child rows of `childTable` are
@@ -152,10 +157,12 @@ object Erasure {
     * set is human-scale, but 10k tombstoned customers can derive
     * millions of order keys — those never land on the driver and
     * never become plan literals; each level's frame is pinned
-    * (localCheckpoint) so the fixpoint doesn't stack lineage and the
-    * final rewrite can't reference files the swap replaces. Growth
-    * detection is one `isEmpty` probe per edge per pass (a driver
-    * BOOLEAN, not the keys), bounded by the DAG depth. Erasure then
+    * ([[Checkpointing]], so reliable mode reaches it) so the fixpoint
+    * doesn't stack lineage and the final rewrite can't reference files
+    * the swap replaces, and a superseded frame is freed once unioned.
+    * Growth detection is the fresh keys' row count, folded into their
+    * pin's job (a driver LONG, not the keys), once per edge per pass,
+    * bounded by the DAG depth. Erasure then
     * runs in CHILD-BEFORE-PARENT topological order (Kahn over the
     * edges; cycles rejected), so a crash mid-cascade can only ever
     * leave ORPHAN-FREE state + un-erased ancestors (re-run completes
@@ -188,7 +195,7 @@ object Erasure {
     // DataFrame keyed by that table's own key column.
     import spark.implicits._
     val tombs = scala.collection.mutable.Map[String, DataFrame](
-      parentTable -> broadcast(ids.toDF(parentKeyCol)).localCheckpoint(true))
+      parentTable -> Checkpointing.pin(broadcast(ids.toDF(parentKeyCol))))
     var grew = true
     while (grew) {
       grew = false
@@ -197,19 +204,23 @@ object Erasure {
           // semi-join the child on the FK against the parent's
           // tombstones (renamed to the FK column); the derived child
           // keys are a frame — never collected
-          val derived = spark.read
-            .parquet(s"$dataDir/${e.childTable}.parquet")
+          val derived = Tables.parquet(spark, s"$dataDir/${e.childTable}.parquet")
             .join(parentTomb.toDF(e.fkCol), Seq(e.fkCol), "left_semi")
             .select(col(e.childKeyCol)).distinct()
-          // pin the fresh keys BEFORE probing emptiness, so the
-          // semi-join evaluates exactly once per edge per pass
-          val fresh = (tombs.get(e.childTable) match {
-            case Some(have) => derived.join(have, Seq(e.childKeyCol), "left_anti")
-            case None => derived
-          }).localCheckpoint(true)
-          if (!fresh.isEmpty) {
-            tombs(e.childTable) = tombs.get(e.childTable)
-              .fold(fresh)(_.unionByName(fresh).localCheckpoint(true))
+          val have = tombs.get(e.childTable)
+          // the fresh keys' pin counts them in the job that
+          // materializes them: the semi-join evaluates once per edge
+          // per pass, and the count is the emptiness test
+          val fresh = Checkpointing.materialize(have.fold(derived)(
+            derived.join(_, Seq(e.childKeyCol), "left_anti")))
+          if (fresh.rows == 0L) Bridge.free(fresh.df)
+          else {
+            tombs(e.childTable) = have.fold(fresh.df) { h =>
+              val grown = Checkpointing.pin(h.unionByName(fresh.df))
+              Bridge.free(h)
+              Bridge.free(fresh.df)
+              grown
+            }
             grew = true
           }
         }
@@ -233,10 +244,10 @@ object Erasure {
         s"cascade edges contain a cycle among ${tables.diff(erased.toSeq)}")
       ready.foreach(erased.add)
     }
-    erased.toSeq.flatMap { table =>
+    try erased.toSeq.flatMap { table =>
       tombs.get(table).map(frame =>
         forget(spark, dataDir, table, keyColOf(table), frame))
-    }
+    } finally tombs.values.foreach(Bridge.free)
   }
 
   /** Outcome of one [[forgetPartitioned]] sweep: partition directories

@@ -310,7 +310,7 @@ object GraphQueries {
       // an empty level leaves `visited` unchanged, so every later
       // round is a no-op (identical output within the maxHops bound)
       val visited = Fixpoint.run(seeds.withColumn("hops", lit(0)),
-          maxRounds = maxHops, measure = Some(_.count())) { (h, visited) =>
+          maxRounds = maxHops, measure = Some(Fixpoint.Rows)) { (h, visited) =>
         val frontier = visited.filter(col("hops") === h - 1)
           .select(col("id").as("src"))
         val next = und.join(frontier, "src")
@@ -354,7 +354,7 @@ object GraphQueries {
       val und = Fixpoint.run(
           e0.select(col("u").as("src"), col("v").as("dst"))
             .union(e0.select(col("v").as("src"), col("u").as("dst"))),
-          maxRounds = rounds, measure = Some(_.count())) { (_, und) =>
+          maxRounds = rounds, measure = Some(Fixpoint.Rows)) { (_, und) =>
         val keep = und.groupBy("src").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select("src")
         Some(und.join(keep, Seq("src"), "left_semi")

@@ -1,16 +1,20 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Batch table layer over the driver-generated parquet corpus
-  * (see /root/repo/TESTDATA.md). Mirrors the reference's two-store
+  * (see TESTDATA.md). Mirrors the reference's two-store
   * relational model (source/target databases,
   * reference quickstart_prepare_peers.sh:16–19) as parquet-backed
   * namespaces: a table is loaded from `<dir>/<name>.parquet`.
   *
-  * Scale note: loaders are plain `spark.read.parquet` so Catalyst
+  * Scale note: loaders are plain lazy parquet scans, so Catalyst
   * retains full predicate-pushdown / column-pruning / partition-
-  * pruning freedom — no eager caching, no collect.
+  * pruning freedom — no eager caching, no collect. A load runs no
+  * job: the schema is the one Spark's inference would find, read on
+  * the driver from a single footer ([[Bridge.parquetSchema]]) instead
+  * of by the one-task inference job `spark.read.parquet` runs.
   */
 object Tables {
 
@@ -20,8 +24,15 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") return events(spark, dir)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
+
+  /** `spark.read.parquet(path)` with its schema read on the driver,
+    * falling back to Spark's inference where one footer does not
+    * decide it. Reads the session's parquet confs at call time. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    Bridge.parquetSchema(spark, path)
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
 
   /** The events table's `ts` has shipped in two physical spellings:
     * TIMESTAMP(NANOS), which Spark's parquet reader rejects by default
@@ -33,7 +44,7 @@ object Tables {
     * DuckDB oracle equivalents stay `epoch_ns(ts)` / `ts`. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
     val normalized = raw.schema("ts").dataType match {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -596,19 +597,17 @@ object CdcPipeline {
       s"table '$table' is not a soft-delete store (missing " +
         s"$SoftDeleteCol/$SyncedLsnCol) - sweepSoftDeleted only applies " +
         "to snapshotSoft/applyBatchSoft targets")
-    val expired = store.read(spark, table)
+    // one materialization feeds the count AND the merge's key frame;
+    // the count is folded into the pin's own job
+    val expired = graft.operators.Checkpointing.materialize(store.read(spark, table)
       .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn)
-      .select(col(keyCol))
-      // one materialization feeds the count AND the merge's key frame
-      .localCheckpoint(true)
+      .select(col(keyCol)))
     try {
-      val n = expired.count()
-      if (n > 0L)
+      if (expired.rows > 0L)
         store.merge(spark, table,
-          expired.withColumn("op", lit("D")), keyCol)
-      n
-    } finally org.apache.spark.sql.graftbridge.Bridge.persistedRdd(expired)
-      .foreach(_.unpersist(blocking = false))
+          expired.df.withColumn("op", lit("D")), keyCol)
+      expired.rows
+    } finally Bridge.free(expired.df)
   }
 
   /** The retention CADENCE helper — the steady-state spelling of the
@@ -657,19 +656,19 @@ object CdcPipeline {
     * blocks. Downstream needs several passes (table fan-out, key dedup,
     * merge); without pinning, each action re-executes the source scan —
     * 3–5× read amplification per batch (observed via
-    * StreamingQueryProgress.numInputRows). The unpersist in `finally`
+    * StreamingQueryProgress.numInputRows). The free in `finally`
     * matters just as much: a long-lived mirror runs thousands of
     * micro-batches, and leaked checkpoint blocks accumulate until the
     * executor heap thrashes. */
   private[streaming] def withPinnedBatch(batch: DataFrame)(body: DataFrame => Unit): Unit = {
-    val pinned = batch.localCheckpoint(true)
-    // no isEmpty probe job here (r19): both apply bodies start with a
-    // per-table fan-out aggregate whose empty result already makes the
-    // whole body a no-op, so the emptiness check rides a job they pay
-    // anyway instead of costing its own scan per micro-batch
+    // a LAZY pin: no job of its own. Every apply body starts with a
+    // per-table fan-out aggregate, whose first job reads the batch and
+    // stores its blocks; later passes read those. The same aggregate's
+    // empty result makes the whole body a no-op, so neither pinning nor
+    // the emptiness check costs a scan per micro-batch.
+    val pinned = batch.localCheckpoint(false)
     try body(pinned)
-    finally org.apache.spark.sql.graftbridge.Bridge.persistedRdd(pinned)
-      .foreach(_.unpersist(blocking = false))
+    finally Bridge.free(pinned)
   }
 
   /** `dropPolicy`: change images are parsed with the source's DECLARED
@@ -690,12 +689,12 @@ object CdcPipeline {
       // ONE driver pass collects the table fan-out, the batch's max
       // LSN (the applied-watermark input), each table's key-change
       // row count, its unchanged-TOAST marker count, its touched
-      // BUCKET set, and its delete count. moves/toasts let the common
-      // slice (no moves, no markers — the steady state) skip the
-      // expansion explode and the store-lookup join entirely; the
-      // bucket set and delete count let merge skip its touched-bucket
-      // and emptied-bucket collect jobs on that same steady path
-      // (r19 — 3 collect-class jobs per batch down to 1)
+      // BUCKET set. moves/toasts let the common slice (no moves, no
+      // markers — the steady state) skip the expansion explode and the
+      // store-lookup join entirely; the bucket set lets merge skip its
+      // touched-bucket collect on that same steady path. With merge's
+      // emptied-bucket set folded into its pin, the steady path runs
+      // this one collect-class aggregate and no other.
       val kc = if (pinned.columns.contains("beforeKey"))
         sum(when(col("op") === "U" && col("beforeKey").isNotNull &&
           col("beforeKey") =!= col("key"), 1L).otherwise(0L))
@@ -718,14 +717,12 @@ object CdcPipeline {
             store.bucketExpr(col("key").cast(sch(keyCols(t)).dataType)))
             .otherwise(acc)
       }
-      val dc = sum(when(col("op") === "D", 1L).otherwise(0L))
       val present = pinned.groupBy("table")
         .agg(max("lsn").as("mx"), kc.as("moves"), tc.as("toasts"),
-          mts.as("mts"), collect_set(bucketCol).as("bks"), dc.as("dels"))
+          mts.as("mts"), collect_set(bucketCol).as("bks"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), Option(r.getTimestamp(4)),
-          r.getSeq[Int](5).toSeq, r.getLong(6)))
-      present.foreach { case (table, _, moves, toasts, _, bks, dels) =>
+          r.getLong(3), Option(r.getTimestamp(4)), r.getSeq[Int](5).toSeq))
+      present.foreach { case (table, _, moves, toasts, _, bks) =>
         val slice = pinned.filter(col("table") === table)
         val changes =
           if (toasts > 0L) {
@@ -752,15 +749,14 @@ object CdcPipeline {
           }
           else if (moves == 0L) lastImageRaw(slice, schemas(table), keyCols(table))
           else lastImagePerKey(slice, schemas(table), keyCols(table))
-        // bucket/delete hints hold only on the no-move / no-TOAST path:
+        // the bucket hint holds only on the no-move / no-TOAST path:
         // there the merged key column IS cast(envelope key), the same
         // expression the fan-out aggregate bucketed. Key-change
         // expansion adds beforeKeys and TOAST resolution re-derives
         // images, so those paths let merge compute its own bucket set.
         val steady = moves == 0L && toasts == 0L
         store.merge(spark, table, changes, keyCols(table), dropPolicy,
-          touchedHint = if (steady) Some(bks) else None,
-          hasDeletes = if (steady) Some(dels > 0L) else None)
+          touchedHint = if (steady) Some(bks) else None)
       }
       // every table's merge landed: the batch is fully applied — record
       // the watermark LAST so a crash mid-batch leaves it conservative

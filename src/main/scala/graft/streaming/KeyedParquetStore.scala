@@ -3,7 +3,10 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.operators.Checkpointing
 
 /** Keyed, bucketed parquet table store with idempotent merge — the
   * CDC target (reference: PeerDB's ordered apply to target tables,
@@ -266,20 +269,18 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     */
   /** `touchedHint`: the PRECOMPUTED bucket set of `changes`' keys
     * (`bucketExpr` over the key cast to the table's key type) — skips
-    * this merge's own touched-bucket collect job. The hint must be the
-    * EXACT bucket set of the keys in `changes`: a missing bucket would
-    * skip its survivor dedup and duplicate keys. [[CdcPipeline.applyBatch]]
-    * supplies it only on the no-key-change / no-TOAST path, where the
-    * merged keys are by construction `cast(envelope key)` — the same
-    * expression the hint aggregates.
-    *
-    * `hasDeletes`: `Some(false)` asserts `changes` carries no `op = "D"`
-    * rows, so every touched bucket retains rows (each changed key has an
-    * upsert) and the emptied-bucket collect is skipped. */
+    * this merge's own touched-bucket collect job (2 jobs under AQE).
+    * The hint must be the EXACT bucket set of the keys in `changes`: a
+    * missing bucket would skip its survivor dedup and duplicate keys.
+    * [[CdcPipeline.applyBatch]] supplies it only on the no-key-change /
+    * no-TOAST path, where the merged keys are by construction
+    * `cast(envelope key)` — the same expression the hint aggregates.
+    * Either way the merged rows' own bucket set, which finds the
+    * buckets a batch's deletes emptied, is folded into the job that
+    * materializes them, so it costs no job. */
   def merge(spark: SparkSession, table: String, changes: DataFrame, keyCol: String,
       dropPolicy: DropPolicy = DropPolicy.KeepNullFill,
-      touchedHint: Option[Seq[Int]] = None,
-      hasDeletes: Option[Boolean] = None): Unit = {
+      touchedHint: Option[Seq[Int]] = None): Unit = {
     require(!changes.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
     val keyed = changes.withColumn("bucket", bucketOf(col(keyCol)))
@@ -322,36 +323,31 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       changedKeys.select(keyCol), Seq(keyCol), "left_anti")
     val upserts = keyed.filter(col("op") =!= "D").drop("op")
 
-    val merged = alignTo(survivors, target)
-      .unionByName(alignTo(upserts, target))
-      // Break lineage from the files about to be overwritten (Spark
-      // refuses to overwrite a path it is also reading from) and
-      // materialize exactly once. Bounded by the touched buckets.
-      .localCheckpoint(true)
-
-    // Dynamic overwrite replaces only the bucket=... dirs present in
-    // `merged`. A touched bucket whose rows were ALL deleted is absent
-    // from `merged` — clear it explicitly or deletes would resurface.
-    // A delete-free batch cannot empty a bucket (every changed key has
-    // an upsert landing in its bucket), so the collect is skipped when
-    // the caller has already proven op = "D" absent.
-    val remaining =
-      if (hasDeletes.contains(false)) touched.toSet
-      else merged.select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    val emptied = touched.filterNot(remaining)
-    if (emptied.nonEmpty) {
-      val f = fs(spark)
-      emptied.foreach { b =>
-        f.delete(new Path(s"${path(table)}/bucket=$b"), true)
+    // Break lineage from the files about to be overwritten (Spark
+    // refuses to overwrite a path it is also reading from) and
+    // materialize exactly once, bounded by the touched buckets. The
+    // same job folds the buckets that still hold rows.
+    val pin = Checkpointing.materialize(alignTo(survivors, target)
+      .unionByName(alignTo(upserts, target)), keysOf = Some("bucket"))
+    try {
+      // Dynamic overwrite replaces only the bucket=... dirs present in
+      // the merged rows. A touched bucket whose rows were ALL deleted is
+      // absent from them — clear it explicitly or deletes would resurface.
+      val emptied = touched.filterNot(pin.keys)
+      if (emptied.nonEmpty) {
+        val f = fs(spark)
+        emptied.foreach { b =>
+          f.delete(new Path(s"${path(table)}/bucket=$b"), true)
+        }
       }
-    }
 
-    if (remaining.nonEmpty) {
-      merged
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-        .option(OverwriteMode, "dynamic").parquet(path(table))
-    }
+      if (pin.keys.nonEmpty) {
+        pin.df
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").mode(SaveMode.Overwrite)
+          .option(OverwriteMode, "dynamic").parquet(path(table))
+      }
+    } finally Bridge.free(pin.df)
     // persist the (possibly widened) schema AFTER the data write, so a
     // crash between the two leaves a readable store (old sidecar, old
     // columns) rather than a sidecar promising columns no file carries
@@ -472,7 +468,6 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     } finally
       // a compaction CADENCE (sweepAndCompact) must not accumulate one
       // generation of checkpoint blocks per cycle
-      org.apache.spark.sql.graftbridge.Bridge.persistedRdd(current)
-        .foreach(_.unpersist(blocking = false))
+      Bridge.free(current)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** STREAMING sequence packing — the stateful half of
   * [[graft.operators.CorpusPipeline]]'s `c10_pack_sequences`: a
@@ -150,10 +151,8 @@ class StreamingPacker(
         // state LAST: a crash before this line replays the batch into
         // the same batch=<id> dir (overwrite = idempotent)
         writeState(spark, State(batchId, maxDoc, newTotal, newOpen))
-      } finally org.apache.spark.sql.graftbridge.Bridge.persistedRdd(pinned)
-        .foreach(_.unpersist(blocking = false))
-    } finally org.apache.spark.sql.graftbridge.Bridge.persistedRdd(toks)
-      .foreach(_.unpersist(blocking = false))
+      } finally Bridge.free(pinned)
+    } finally Bridge.free(toks)
   }
 
   /** The manifest so far — closed bins from disk plus the in-flight

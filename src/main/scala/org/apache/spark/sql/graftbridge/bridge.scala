@@ -28,6 +28,53 @@ object Bridge {
       case _ => None
     }
 
+  /** Free a pinned frame's blocks (the [[persistedRdd]] of a
+    * checkpoint result; no-op on any other frame). Same effect as
+    * `RDD.unpersist(blocking = false)` minus its WARN that a locally
+    * checkpointed RDD cannot be recomputed: a superseded generation or
+    * a finished batch is freed on purpose, once per round, and the
+    * warning would bury real ones. */
+  def free(df: org.apache.spark.sql.DataFrame): Unit =
+    persistedRdd(df).foreach(r => r.sparkContext.unpersistRDD(r.id, blocking = false))
+
+  /** The schema `spark.read.parquet(path)` would infer, read on the
+    * driver from the one footer Spark's inference reads (a summary
+    * file first, else the first data file by path), so a load runs no
+    * footer-reading job. None where inference reads more than one
+    * footer, discovers partitions or may skip a corrupt footer —
+    * `mergeSchema` or `ignoreCorruptFiles` on, or a directory with
+    * subdirectories — and when no file qualifies or the path does not
+    * name one; the caller then lets Spark infer. */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.conf
+    if (conf.isParquetSchemaMergingEnabled || conf.ignoreCorruptFiles) return None
+    val p = new org.apache.hadoop.fs.Path(path)
+    val hadoopConf = state.newHadoopConf()
+    val fs = p.getFileSystem(hadoopConf)
+    // a missing path or a glob: Spark's own read reports or expands it
+    val st = try fs.getFileStatus(p) catch { case _: java.io.FileNotFoundException => return None }
+    val leaves =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(p).toSeq.filterNot(f =>
+        org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+    if (leaves.exists(_.isDirectory)) return None
+    val sorted = leaves.sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => sorted.find(_.getPath.getName == n)).headOption
+      .orElse(sorted.find(f => !summaries.contains(f.getPath.getName)))
+      .map { f =>
+        val footer = new org.apache.parquet.hadoop.Footer(f.getPath,
+          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(conf))
+      }
+  }
+
   /** Rows EMITTED by `df`'s file scans in its last execution — i.e.
     * rows surviving parquet row-group/page skipping under the pushed
     * predicates (record-level parquet filtering is off by default, so

@@ -411,25 +411,20 @@ class CdcPipelineSpec extends AnyFunSuite {
     }.toDF()
     // batch 1 takes the first-write fast path — gate the STEADY batch
     CdcPipeline.applyBatch(batch(1000L), store, Map("t" -> schema), Map("t" -> "id"))
-    val gid = "apply_jobcount"
-    spark.sparkContext.setJobGroup(gid, "steady applyBatch job count",
-      interruptOnCancel = false)
-    try CdcPipeline.applyBatch(batch(2000L), store,
-      Map("t" -> schema), Map("t" -> "id"))
-    finally spark.sparkContext.clearJobGroup()
-    def read() = spark.sparkContext.statusTracker.getJobIdsForGroup(gid).length
-    var prev = -1; var cur = read(); var spins = 0
-    while (cur != prev && spins < 50) {
-      Thread.sleep(100); prev = cur; cur = read(); spins += 1
+    val cur = JobCount.of(spark, "apply_jobcount") {
+      CdcPipeline.applyBatch(batch(2000L), store,
+        Map("t" -> schema), Map("t" -> "id"))
     }
-    // measured steady state after the r19 job cuts: 10 jobs (batch pin,
-    // fan-out aggregate + its AQE stages, merge materialize + stages,
-    // bucket overwrite). The pre-r19 shape ran 16 (isEmpty probe,
-    // touched-bucket collect, emptied-bucket collect + their stages) —
-    // gate with slack so AQE stage-count jitter cannot flake, while a
-    // reintroduced per-batch collect (±2 jobs each) still trips
-    assert(cur <= 13,
-      s"steady-state applyBatch ran $cur jobs (expected ~10) - a " +
+    // measured steady state: 8 jobs in each of 5 runs (fan-out
+    // aggregate + its AQE stage, whose first job also stores the lazily
+    // pinned batch; merge materialize + stages, which also folds the
+    // surviving-bucket set; bucket overwrite). Before: 9 in each of 5
+    // runs, with an eager batch pin (and 2 more for an emptied-bucket
+    // collect when a batch held deletes), under a gate of 13; the
+    // pre-r19 shape ran 16. A reintroduced per-batch collect (2 jobs)
+    // or probe trips it.
+    assert(cur <= 8,
+      s"steady-state applyBatch ran $cur jobs (expected 8) - a " +
         "per-batch collect/probe job crept back into the apply path")
   }
 }

@@ -118,6 +118,45 @@ class ErasureSpec extends AnyFunSuite {
       .count() == 0L, "no line item may reference an erased order")
   }
 
+  test("cascade over a multi-parent FK DAG: the fixpoint erases every " +
+    "reachable key, and leaves at most one pinned frame per table") {
+    val work = Files.createTempDirectory("graft_erasure_dag").toString
+    // A→X, X→Y, A→B, B→X in this order: one ordered pass would miss
+    // the X keys B→X adds after X→Y ran, and Y's keys behind them
+    spark.range(10).select(col("id").as("a_id"))
+      .write.parquet(s"$work/a.parquet")
+    spark.range(40).select(col("id").as("b_id"), (col("id") % 10).as("b_a"))
+      .write.parquet(s"$work/b.parquet")
+    spark.range(200).select(col("id").as("x_id"), (col("id") % 10 + 100).as("x_a"),
+      (col("id") % 40).as("x_b")).write.parquet(s"$work/x.parquet")
+    spark.range(1000).select(col("id").as("y_id"), (col("id") % 200).as("y_x"))
+      .write.parquet(s"$work/y.parquet")
+    def read(t: String) = spark.read.parquet(s"$work/$t.parquet")
+    // x_a never matches an a_id: every X key reaches it through B
+    val doomedB = read("b").filter(col("b_a").isin(0L, 1L)).select("b_id")
+      .collect().map(_.getLong(0)).toSet
+    val doomedX = read("x").filter(col("x_b").isin(doomedB.toSeq: _*))
+      .select("x_id").collect().map(_.getLong(0)).toSet
+    val nY = read("y").filter(col("y_x").isin(doomedX.toSeq: _*)).count()
+    assert(doomedX.nonEmpty && nY > 0)
+
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val reps = Erasure.forgetCascade(spark, work, "a", "a_id", Seq(0L, 1L),
+      edges = Seq(
+        "a" -> Erasure.CascadeEdge("x", "x_a", "x_id"),
+        "x" -> Erasure.CascadeEdge("y", "y_x", "y_id"),
+        "a" -> Erasure.CascadeEdge("b", "b_a", "b_id"),
+        "b" -> Erasure.CascadeEdge("x", "x_b", "x_id")))
+    val added = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    assert(added <= 4, s"the cascade left $added persistent RDDs (4 tables)")
+    assert(reps.forall(_.residue == 0L), s"got $reps")
+    val byTable = reps.map(r => r.table -> (r.rowsBefore - r.rowsAfter)).toMap
+    assert(byTable == Map("a" -> 2L, "b" -> doomedB.size.toLong,
+      "x" -> doomedX.size.toLong, "y" -> nY), s"got $byTable")
+    assert(read("y").filter(col("y_x").isin(doomedX.toSeq: _*)).count() == 0L)
+    assert(read("x").count() == 200L - doomedX.size)
+  }
+
   test("cascade at scale: 100k derived child keys stay a DataFrame — " +
     "no isin literal list in the rewrite plan, residue 0") {
     import spark.implicits._

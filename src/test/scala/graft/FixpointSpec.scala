@@ -11,7 +11,8 @@ import graft.operators.{Bpe, DedupQueries, GraphQueries, IvfIndex}
   *  - it frees every superseded generation, so after an operator
   *    returns, the persistent RDDs it added are its fixed inputs plus
   *    the final generation, whatever the round count;
-  *  - it runs no job beyond the hand-written loops it replaced. */
+  *  - it runs one job per generation: the pin's job also folds the
+  *    generation's row count and measure. */
 class FixpointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
@@ -21,20 +22,6 @@ class FixpointSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = body
     (out, (spark.sparkContext.getPersistentRDDs.keySet -- before).size)
-  }
-
-  /** Jobs `body` ran, counted through a job group once the status
-    * tracker stops changing (it is fed by the async listener bus). */
-  private def jobsOf(gid: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(gid, gid, interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    def read() = sc.statusTracker.getJobIdsForGroup(gid).length
-    var prev = -1; var cur = read(); var spins = 0
-    while (cur != prev && spins < 50) {
-      Thread.sleep(100); prev = cur; cur = read(); spins += 1
-    }
-    cur
   }
 
   test("CC holds its edge set plus the final generation, however deep the graph") {
@@ -79,13 +66,14 @@ class FixpointSpec extends AnyFunSuite {
 
   test("iterative job-count gate: d5, g4 and g5 at sf0.001 run no more " +
     "jobs than the hand-written loops did") {
-    // Bounds: the max over 5 runs of the hand-written loops the shared
-    // loop replaced, construction plus collect() in one JVM: d5 33, g4
-    // 33, g5 17 jobs in every run. The loop runs the same jobs: one
-    // pin plus one measure per round.
-    val bounds = Map("d5_dedup_clusters" -> 33, "g4_reach" -> 33, "g5_kcore" -> 17)
+    // Bounds: the max over 5 runs, construction plus collect() in one
+    // JVM, with each generation's row count and measure folded into
+    // its pin's job: d5 24, g4 24, g5 12 jobs in every run. The
+    // hand-written loops, and the shared loop before the fold, ran
+    // d5 33, g4 33, g5 17, paying separate count and sum jobs.
+    val bounds = Map("d5_dedup_clusters" -> 24, "g4_reach" -> 24, "g5_kcore" -> 12)
     bounds.foreach { case (q, bound) =>
-      val jobs = jobsOf(s"fixpoint_jobs_$q") {
+      val jobs = JobCount.of(spark, s"fixpoint_jobs_$q") {
         SparkEntry.queries(q)(spark, sf).collect()
       }
       assert(jobs <= bound, s"$q ran $jobs jobs, above its bound $bound")

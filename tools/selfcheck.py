@@ -10,7 +10,7 @@ Compares each <name>.parquet result against the oracle SQL run in
 DuckDB: schema (column names), row count, and exact values after
 sorting columns by name and rows by all columns.
 """
-import sys, json, glob, math
+import sys, json, glob, math, atexit, shutil, tempfile
 
 import duckdb
 
@@ -47,7 +47,14 @@ def cmp_cell(a, b):
 
 
 def main(out_dir, sf_dir):
-    con = duckdb.connect()
+    # a bounded memory limit plus a spill directory, one thread: s22's
+    # MMR re-rank oracle still runs out of a 4 GB limit with 2 or 4
+    # threads (per-thread join state) and, with DuckDB's default limit,
+    # on a host with ~15 GB of RAM; single-threaded it spills and passes
+    spill = tempfile.mkdtemp(prefix="selfcheck_duckdb_")
+    atexit.register(shutil.rmtree, spill, True)
+    con = duckdb.connect(config={"memory_limit": "4GB", "threads": 1,
+                                 "temp_directory": spill})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
