@@ -1,25 +1,27 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** The one pin: every [[Fixpoint]] generation (CC, g4 BFS, g5 k-core,
   * BPE, IVF Lloyd), their fixed inputs, [[GraphQueries]]' edge sets,
-  * [[Erasure.forgetCascade]]'s worklist and the CDC store's merge and
-  * sweep. A pinned frame's lineage is one generation deep.
+  * [[Erasure.forgetCascade]]'s worklist, the CDC apply path's
+  * micro-batch and the CDC store's merge, sweep and compaction. A
+  * pinned frame's lineage is one generation deep.
   *
-  * [[materialize]] marks the frame lazily, then runs ONE job over the
-  * marked RDD that stores its blocks and folds a narrow projection into
-  * a constant-size driver value: the row count, the exact sum of one
-  * integral column, the distinct values of one small-domain int column
-  * (a bucket id). A pin plus a count, a convergence sum or a bucket
-  * collect costs one job, not the pin's job plus two (an aggregate is a
-  * shuffle-map job plus a result job under AQE).
+  * [[materializeWith]] marks the frame lazily, then runs ONE job over
+  * the marked rows that stores their blocks and folds them into a
+  * driver value of bounded size ([[Fold]]): a row count, a convergence
+  * sum, a bucket set, or the CDC batch's per-table watermarks and
+  * touched buckets. A pin plus a count or a collect-class aggregate
+  * costs one job, not the pin's job plus two (an aggregate is a
+  * shuffle-map job plus a result job under AQE). [[materialize]] is
+  * the row/sum/keys instance of it.
   *
   * The default is a local checkpoint: executor-memory-backed, no disk
   * I/O, but lineage is TRUNCATED, so losing an executor mid-iteration
@@ -37,6 +39,14 @@ object Checkpointing {
   /** Session-conf key: "local" (default) or "reliable". */
   val ModeKey = "graft.iterativeCheckpoint"
 
+  /** What a pin's job folds. `cols` are evaluated per row against the
+    * pinned frame; `part` folds one partition's projected rows on an
+    * executor (it must capture only serializable values); `merge`
+    * combines two partitions' values on the driver. The value lands on
+    * the driver, so it must be bounded by a small domain. */
+  final case class Fold[A](cols: Seq[Column], part: Iterator[InternalRow] => A,
+      merge: (A, A) => A)
+
   /** A materialized pin and what its job folded: `rows`, the exact
     * `sum` of the `sumOf` column (nulls skipped, 0 when none) and the
     * distinct non-null `keys` of the `keysOf` column. */
@@ -50,6 +60,22 @@ object Checkpointing {
     * domain is small (the value is a driver-side set). */
   def materialize(df: DataFrame, sumOf: Option[String] = None,
       keysOf: Option[String] = None): Pinned = {
+    sumOf.foreach(c => require(Seq(IntegerType, LongType).contains(df.schema(c).dataType),
+      s"sumOf column '$c' is ${df.schema(c).dataType}, not INT or BIGINT"))
+    keysOf.foreach(c => require(df.schema(c).dataType == IntegerType,
+      s"keysOf column '$c' is ${df.schema(c).dataType}, not INT"))
+    val stats = Fold[(Long, BigInt, Set[Int])](
+      Seq(sumOf.fold(lit(null).cast(LongType))(col(_).cast(LongType)),
+        keysOf.fold(lit(null).cast(IntegerType))(col)),
+      countSumKeys, { case ((r1, s1, k1), (r2, s2, k2)) => (r1 + r2, s1 + s2, k1 ++ k2) })
+    val (pinned, (rows, sum, keys)) = materializeWith(df, stats)
+    Pinned(pinned, rows, sum, keys)
+  }
+
+  /** Pin `df` under the session's checkpoint mode and return it with
+    * `fold`'s value over its rows, computed in the job that stores
+    * them. */
+  def materializeWith[A: ClassTag](df: DataFrame, fold: Fold[A]): (DataFrame, A) = {
     val spark = df.sparkSession
     val pinned =
       if (spark.conf.get(ModeKey, "local") == "reliable") {
@@ -58,41 +84,30 @@ object Checkpointing {
             "(a fault-tolerant location every executor can reach)")
         df.checkpoint() // eager + reliable
       } else df.localCheckpoint(false)
-    val schema = pinned.schema
-    val sumAt = sumOf.fold(-1)(schema.fieldIndex)
-    val sumIsLong = sumOf.exists { c =>
-      require(Seq(IntegerType, LongType).contains(schema(c).dataType),
-        s"sumOf column '$c' is ${schema(c).dataType}, not INT or BIGINT")
-      schema(c).dataType == LongType
-    }
-    val keyAt = keysOf.fold(-1) { c =>
-      require(schema(c).dataType == IntegerType,
-        s"keysOf column '$c' is ${schema(c).dataType}, not INT")
-      schema.fieldIndex(c)
-    }
-    val rdd = Bridge.persistedRdd(pinned).get.asInstanceOf[RDD[InternalRow]]
-    val parts = spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
-      fold(it, sumAt, sumIsLong, keyAt))
-    Pinned(pinned, parts.map(_._1).sum, parts.map(_._2).sum,
-      parts.iterator.flatMap(_._3).toSet)
+    // the projection reads the marked RDD, so computing it stores the
+    // pin's blocks: one job for both
+    val projected = pinned.select(fold.cols: _*).queryExecution.toRdd
+    val part = fold.part
+    val parts = spark.sparkContext.runJob(projected, (it: Iterator[InternalRow]) => part(it))
+    (pinned, parts.reduceOption(fold.merge).getOrElse(part(Iterator.empty)))
   }
 
-  /** One partition's (rows, exact sum, keys). The sum runs in a Long
-    * and spills into a BigInt only when an addition overflows. */
-  private def fold(it: Iterator[InternalRow], sumAt: Int, sumIsLong: Boolean,
-      keyAt: Int): (Long, BigInt, Set[Int]) = {
+  /** One partition's (rows, exact sum of column 0, distinct column 1).
+    * The sum runs in a Long and spills into a BigInt only when an
+    * addition overflows. */
+  private def countSumKeys(it: Iterator[InternalRow]): (Long, BigInt, Set[Int]) = {
     var rows = 0L
     var acc = 0L
     var spilled = BigInt(0)
     val keys = mutable.Set.empty[Int]
     it.foreach { r =>
       rows += 1
-      if (sumAt >= 0 && !r.isNullAt(sumAt)) {
-        val v = if (sumIsLong) r.getLong(sumAt) else r.getInt(sumAt).toLong
+      if (!r.isNullAt(0)) {
+        val v = r.getLong(0)
         val t = acc + v
         if (((acc ^ t) & (v ^ t)) < 0) { spilled += acc; acc = v } else acc = t
       }
-      if (keyAt >= 0 && !r.isNullAt(keyAt)) keys += r.getInt(keyAt)
+      if (!r.isNullAt(1)) keys += r.getInt(1)
     }
     (rows, spilled + acc, keys.toSet)
   }

@@ -81,7 +81,7 @@ object Erasure {
     * keys neither sits on the driver nor blows up the expression tree. */
   private[graft] def survivors(spark: SparkSession, src: String,
       keyCol: String, tombstones: DataFrame): DataFrame =
-    spark.read.parquet(src).join(tombstones, Seq(keyCol), "left_anti")
+    Tables.parquet(spark, src).join(tombstones, Seq(keyCol), "left_anti")
 
   /** Human-scale convenience overload: the handful of subject ids an
     * erasure REQUEST names. Derived sets (FK cascades) stay as
@@ -96,17 +96,19 @@ object Erasure {
   /** Erase every row of `<dataDir>/<table>.parquet` whose `keyCol`
     * appears in `tombstones` (a one-column DataFrame named `keyCol`) —
     * anti-join rewrite + atomic old-aside swap. The tombstone frame is
-    * PINNED ([[DataFrame.localCheckpoint]]) before the rewrite so its
-    * lineage cannot reference the files the swap replaces, and so the
-    * three passes (rewrite, residue check) evaluate one materialized
-    * set. Distributed end-to-end: a cascade deriving millions of child
-    * keys never lands on the driver. */
+    * PINNED ([[Checkpointing.pin]]) before the rewrite so its lineage
+    * cannot reference the files the swap replaces, and so the rewrite
+    * and the residue check evaluate one materialized set; a frame that
+    * is already a pin ([[forgetCascade]]'s) is used as is and left to
+    * its owner to free. Distributed end-to-end: a cascade deriving
+    * millions of child keys never lands on the driver. */
   def forget(spark: SparkSession, dataDir: String, table: String,
       keyCol: String, tombstones: DataFrame): Report = {
     require(tombstones.columns.toSeq == Seq(keyCol),
       s"tombstone frame must have exactly one column '$keyCol', " +
         s"got ${tombstones.columns.mkString("[", ", ", "]")}")
-    val tomb = tombstones.localCheckpoint(true)
+    val owned = Bridge.persistedRdd(tombstones).isEmpty
+    val tomb = if (owned) Checkpointing.pin(tombstones) else tombstones
     val src = s"$dataDir/$table.parquet"
     val srcPath = new org.apache.hadoop.fs.Path(src)
     val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -127,7 +129,7 @@ object Erasure {
     // every row writes a zero-row directory, which plain parquet reads
     // cannot schema-infer — the explicit schema keeps a fully-erased
     // table readable (as empty), which is a legal erasure outcome
-    val before = spark.read.parquet(src)
+    val before = Tables.parquet(spark, src)
     val schema = before.schema
     val rowsBefore = before.count()
     try {
@@ -136,7 +138,7 @@ object Erasure {
       val after = spark.read.schema(schema).parquet(src)
       Report(table, rowsBefore, after.count(),
         after.join(tomb, Seq(keyCol), "left_semi").count())
-    } finally Bridge.free(tomb)
+    } finally if (owned) Bridge.free(tomb)
   }
 
   /** One edge of an erasure cascade: child rows of `childTable` are

@@ -87,7 +87,9 @@ class AggMaintenance(
     * store. Safe to call again with the same `batchId` (replay): the
     * view fold is skipped, the idempotent merge still runs. */
   def applyBatch(batch: DataFrame, batchId: Long): Unit =
-    CdcPipeline.withPinnedBatch(batch.filter(col("table") === table)) { pinned =>
+    CdcPipeline.withPinnedBatch(batch.filter(col("table") === table),
+        CdcPipeline.storeBucket(store, Map(table -> schema), Map(table -> keyCol))) {
+        (pinned, slices) =>
       val spark = pinned.sparkSession
       val changes = CdcPipeline.lastImagePerKey(pinned, schema, keyCol)
       if (batchId > lastBatchId(spark)) {
@@ -123,7 +125,8 @@ class AggMaintenance(
       }
       // AFTER the view commit: a crash here replays the batch, the
       // fold above is skipped by batch id, this merge is idempotent
-      store.merge(pinned.sparkSession, table, changes, keyCol)
+      store.merge(pinned.sparkSession, table, changes, keyCol,
+        touchedHint = Some(slices.get(table).fold(Seq.empty[Int])(_.buckets.toSeq)))
     }
 
   /** Continuous maintenance: one StreamingQuery keeping base table and

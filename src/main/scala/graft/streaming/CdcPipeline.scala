@@ -1,11 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+
+import graft.operators.Checkpointing
 
 /** The CDC replication pipeline re-expressed on Structured Streaming —
   * the reference's core capability (PeerDB mirror: snapshot + WAL tail
@@ -57,8 +61,6 @@ object CdcPipeline {
       val others = events.columns.filterNot(c =>
         c == "beforeKey" || c == "op" || c == "key" || c == "after").toSeq
       val afterType = events.schema("after").dataType
-      val keyChange = col("op") === "U" && col("beforeKey").isNotNull &&
-        col("beforeKey") =!= col("key")
       val asIs = struct(col("op").as("op"), col("key").as("key"),
         col("after").as("after"))
       val pair = array(
@@ -66,10 +68,17 @@ object CdcPipeline {
           lit(null).cast(afterType).as("after")),
         asIs)
       events
-        .withColumn("_e", explode(when(keyChange, pair).otherwise(array(asIs))))
+        .withColumn("_e", explode(when(keyMove(events), pair).otherwise(array(asIs))))
         .select(others.map(col) ++ Seq(col("_e.op").as("op"),
           col("_e.key").as("key"), col("_e.after").as("after")): _*)
     }
+
+  /** Whether an event is a PRIMARY-KEY-CHANGING update (never null);
+    * false throughout a frame without `beforeKey`. */
+  private def keyMove(events: DataFrame): Column =
+    if (!events.columns.contains("beforeKey")) lit(false)
+    else coalesce(col("op") === "U" && col("beforeKey").isNotNull &&
+      col("beforeKey") =!= col("key"), lit(false))
 
   /** Bulk snapshot of source tables into the target store (step 1). */
   def snapshot(
@@ -187,31 +196,28 @@ object CdcPipeline {
 
   /** Last-write-wins dedup + after-image parse for one table's slice
     * of a micro-batch: max(lsn) per key wins; output is `op` plus the
-    * parsed row columns — the shape every sink's merge consumes. The
-    * window partitions by key, so the shuffle is on the merge key —
-    * co-located with the downstream bucket/partition layout.
-    * PK-changing updates are expanded FIRST ([[normalizeKeyChanges]]),
-    * so every consumer of this function — [[applyBatch]], [[asOf]],
-    * [[JdbcMirror.applyEnvelopeBatch]] — applies a key-change as
-    * delete(old)+upsert(new) with no caller-side handling. */
+    * parsed row columns — one row per key, the shape a sink that
+    * cannot rank by LSN itself consumes. The window partitions by key,
+    * so the shuffle is on the merge key. PK-changing updates are
+    * expanded FIRST ([[normalizeKeyChanges]]), so every consumer —
+    * [[asOf]], [[JdbcMirror.applyEnvelopeBatch]], [[AggMaintenance]] —
+    * applies a key-change as delete(old)+upsert(new) with no
+    * caller-side handling. [[applyBatch]] skips this dedup: the
+    * store's merge ranks the parsed events by LSN in its own shuffle. */
   def lastImagePerKey(
       events: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    lastImageRaw(normalizeKeyChanges(events), schema, keyCol)
-
-  /** [[lastImagePerKey]] WITHOUT the key-change expansion — for callers
-    * that have already proven the slice carries no key-change rows
-    * ([[applyBatch]] folds that proof into its existing per-table
-    * driver pass), so the common all-null-beforeKey feed pays no
-    * explode on the hot path. */
-  private def lastImageRaw(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    events
+    parseImages(normalizeKeyChanges(events)
       .withColumn("_rn", row_number().over(
         Window.partitionBy("key").orderBy(col("lsn").desc)))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
+      .filter(col("_rn") === 1), schema, keyCol)
+
+  /** `op`, then `keep`, then the row columns parsed from each event's
+    * after-image, the key cast to its declared type. */
+  private def parseImages(events: DataFrame, schema: StructType, keyCol: String,
+      keep: Column*): DataFrame =
+    events
       .withColumn("_row", from_json(col("after"), schema))
-      .select(col("op") +: schema.fieldNames.toSeq.map { f =>
+      .select((col("op") +: keep) ++ schema.fieldNames.toSeq.map { f =>
         if (f == keyCol) col("key").cast(schema(f).dataType).as(f)
         else col("_row").getField(f).as(f)
       }: _*)
@@ -471,26 +477,12 @@ object CdcPipeline {
       store: KeyedParquetStore,
       schemas: Map[String, StructType],
       keyCols: Map[String, String]): Unit =
-    withPinnedBatch(batch) { pinned =>
+    withPinnedBatch(batch, storeBucket(store, schemas, keyCols)) { (pinned, slices) =>
       val spark = pinned.sparkSession
       // a key-change U counts as a delete too: the expansion emits
       // D(beforeKey), whose tombstone needs the same store fallback
-      val isDel =
-        if (pinned.columns.contains("beforeKey"))
-          col("op") === "D" || (col("op") === "U" &&
-            col("beforeKey").isNotNull && col("beforeKey") =!= col("key"))
-        else col("op") === "D"
-      val mts = if (pinned.columns.contains("commitTs")) max(col("commitTs"))
-        else max(lit(null).cast("timestamp"))
-      val present = pinned.groupBy("table")
-        .agg(max("lsn").as("mx"),
-          sum(when(isDel, 1L).otherwise(0L)).as("dels"),
-          sum(when(col("after").contains(UnchangedToast), 1L).otherwise(0L))
-            .as("toasts"),
-          mts.as("mts"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), Option(r.getTimestamp(4))))
-      present.foreach { case (table, _, dels, toasts, _) =>
+      val isDel = col("op") === "D" || keyMove(pinned)
+      slices.foreach { case (table, SliceStats(_, _, dels, toasts, _, buckets)) =>
         // soft mode carries the winner's whole image; per-column TOAST
         // inheritance is not wired here — upserting a marker would be
         // silent corruption, so reject the batch loudly instead
@@ -545,13 +537,11 @@ object CdcPipeline {
                   .otherwise(col(f)).as(f)
               } ++ Seq(col(SoftDeleteCol), col(SyncedLsnCol))): _*)
           }
-        store.merge(spark, table, filled.withColumn("op", lit("U")), keyCol)
+        // one row per key, and its keys are the slice's keys
+        store.merge(spark, table, filled.withColumn("op", lit("U")), keyCol,
+          touchedHint = Some(buckets.toSeq))
       }
-      if (present.nonEmpty)
-        // commit order = lsn order in a WAL, so the global max commitTs
-        // IS the watermark event's source commit time
-        store.recordAppliedLsn(spark, present.map(_._2).max,
-          present.flatMap(_._5).sortBy(_.getTime).lastOption)
+      recordApplied(store, spark, slices)
     }
 
   /** RETENTION SWEEP for soft-delete mode — the VACUUM the soft target
@@ -649,29 +639,112 @@ object CdcPipeline {
       clusterBy = Seq(SyncedLsnCol), dropWhere = Some(expired))
   }
 
-  /** Apply one micro-batch: multi-table fan-out (C6), last-per-key
-    * dedup (C1/C3), idempotent merge. Also usable directly for batch
-    * backfill. */
-  /** Materialize a micro-batch ONCE, run `body` over it, then free its
-    * blocks. Downstream needs several passes (table fan-out, key dedup,
-    * merge); without pinning, each action re-executes the source scan —
-    * 3–5× read amplification per batch (observed via
-    * StreamingQueryProgress.numInputRows). The free in `finally`
-    * matters just as much: a long-lived mirror runs thousands of
-    * micro-batches, and leaked checkpoint blocks accumulate until the
-    * executor heap thrashes. */
-  private[streaming] def withPinnedBatch(batch: DataFrame)(body: DataFrame => Unit): Unit = {
-    // a LAZY pin: no job of its own. Every apply body starts with a
-    // per-table fan-out aggregate, whose first job reads the batch and
-    // stores its blocks; later passes read those. The same aggregate's
-    // empty result makes the whole body a no-op, so neither pinning nor
-    // the emptiness check costs a scan per micro-batch.
-    val pinned = batch.localCheckpoint(false)
-    try body(pinned)
+  /** One table's slice of a micro-batch, folded in the job that pins
+    * the batch: its max LSN (the applied-watermark input), key-moving
+    * UPDATE count, delete count (a key move deletes its old key),
+    * unchanged-TOAST marker count, max source commit time, and the
+    * store buckets its keys hash to, the old keys of moves included. */
+  private[streaming] final case class SliceStats(maxLsn: Long, moves: Long,
+      deletes: Long, toasts: Long, maxCommitTs: Option[java.sql.Timestamp],
+      buckets: Set[Int]) {
+    def +(o: SliceStats): SliceStats = SliceStats(maxLsn.max(o.maxLsn),
+      moves + o.moves, deletes + o.deletes, toasts + o.toasts,
+      (maxCommitTs ++ o.maxCommitTs).maxByOption(_.getTime), buckets ++ o.buckets)
+  }
+
+  /** The bucket of envelope column `c` (`key` or `beforeKey`) in
+    * `store`, per table. `hash()` is type-sensitive (`hash("1") !=
+    * hash(1L)`), so the value is first cast to the table's declared key
+    * type — the cast [[parseImages]] gives the merged key column. */
+  private[streaming] def storeBucket(store: KeyedParquetStore, schemas: Map[String, StructType],
+      keyCols: Map[String, String])(c: String): Column =
+    schemas.foldLeft(lit(null).cast("int")) { case (acc, (t, sch)) =>
+      when(col("table") === t, store.bucketExpr(col(c).cast(sch(keyCols(t)).dataType)))
+        .otherwise(acc)
+    }
+
+  /** Pin a micro-batch, run `body` over it with its per-table
+    * [[SliceStats]], then free its blocks. Downstream needs several
+    * passes (table fan-out, merge, TOAST and soft-delete lookups);
+    * without pinning, each re-executes the source scan — 3–5× read
+    * amplification per batch (observed via
+    * StreamingQueryProgress.numInputRows). The one job that stores the
+    * batch also folds the stats ([[Checkpointing.materializeWith]]),
+    * bounded by tables × buckets, so the fan-out costs no job of its
+    * own; an empty batch folds to no tables and the body does nothing.
+    * `bucketOf` gives the bucket column of an envelope key column
+    * ([[storeBucket]]); without a store, buckets stay empty. The free
+    * in `finally` matters: a long-lived mirror runs thousands of
+    * micro-batches, and leaked blocks accumulate until the executor
+    * heap thrashes. */
+  private[streaming] def withPinnedBatch(batch: DataFrame,
+      bucketOf: String => Column = _ => lit(null).cast("int"))(
+      body: (DataFrame, Map[String, SliceStats]) => Unit): Unit = {
+    val move = keyMove(batch)
+    // commitTs guard mirrors beforeKey's: a hand-built envelope frame
+    // may omit the column — the time-lag metric then reads unknown
+    val stats = Checkpointing.Fold[Map[String, SliceStats]](Seq(
+      col("table"), col("lsn"), move,
+      coalesce(col("op") === "D", lit(false)) || move,
+      // raw-JSON substring test: no parse, and the sentinel cannot
+      // appear in organic data (it is this engine's own marker)
+      coalesce(col("after").contains(UnchangedToast), lit(false)),
+      if (batch.columns.contains("commitTs")) col("commitTs")
+      else lit(null).cast("timestamp"),
+      bucketOf("key"),
+      if (batch.columns.contains("beforeKey")) when(move, bucketOf("beforeKey"))
+      else lit(null).cast("int")),
+      foldSlices, (a, b) => b.foldLeft(a) { case (m, (t, s)) =>
+        m.updated(t, m.get(t).fold(s)(_ + s))
+      })
+    val (pinned, slices) = Checkpointing.materializeWith(batch, stats)
+    try body(pinned, slices)
     finally Bridge.free(pinned)
   }
 
-  /** `dropPolicy`: change images are parsed with the source's DECLARED
+  /** One partition's [[SliceStats]] over the fold columns of
+    * [[withPinnedBatch]]. */
+  private def foldSlices(it: Iterator[InternalRow]): Map[String, SliceStats] =
+    it.foldLeft(Map.empty[String, SliceStats]) { (m, r) =>
+      def count(i: Int) = if (r.getBoolean(i)) 1L else 0L
+      def opt[T](i: Int, get: Int => T) = if (r.isNullAt(i)) None else Some(get(i))
+      val s = SliceStats(opt(1, r.getLong).getOrElse(Long.MinValue),
+        count(2), count(3), count(4),
+        opt(5, r.getLong).map(DateTimeUtils.toJavaTimestamp),
+        (opt(6, r.getInt) ++ opt(7, r.getInt)).toSet)
+      val t = String.valueOf(r.getUTF8String(0))
+      m.updated(t, m.get(t).fold(s)(_ + s))
+    }
+
+  /** Record the batch's watermark once every table's merge landed, so
+    * a crash mid-batch leaves it conservative (a low watermark only
+    * means extra idempotent replay, never loss). Commit order = lsn
+    * order in a WAL, so the global max commitTs IS the watermark
+    * event's source commit time (absent on feeds whose events carry no
+    * commitTs — the time-lag metric then reads unknown). */
+  private def recordApplied(store: KeyedParquetStore, spark: SparkSession,
+      slices: Map[String, SliceStats]): Unit =
+    if (slices.nonEmpty)
+      store.recordAppliedLsn(spark, slices.values.map(_.maxLsn).max,
+        slices.values.flatMap(_.maxCommitTs).maxByOption(_.getTime))
+
+  /** Apply one micro-batch: multi-table fan-out (C6), last-write-wins
+    * per key (C1/C3), idempotent merge. Also usable directly for batch
+    * backfill.
+    *
+    * Steady batch, 4 jobs: the batch pin, whose job also folds the
+    * fan-out ([[withPinnedBatch]]), then per table the merge's shuffle
+    * map stage, its pin and its write. A slice without TOAST markers
+    * hands its parsed events to the merge ranked by LSN, so the
+    * last-write-wins dedup rides the merge's own bucket shuffle; key
+    * moves are expanded first ([[normalizeKeyChanges]]; both halves
+    * carry the event's LSN and address different keys). Only a slice
+    * with markers resolves them per key first
+    * ([[lastImageToastWithResolveKey]], [[resolveToastAgainstCurrent]]).
+    * Every path's merged keys are the slice's keys, old keys of moves
+    * included, so the folded bucket set is the merge's exact hint.
+    *
+    * `dropPolicy`: change images are parsed with the source's DECLARED
     * schema (`schemas`), so a stored column absent from it means the
     * source dropped the column — under `DropPolicy.Error` the merge
     * rejects loudly and the operator re-syncs
@@ -684,90 +757,45 @@ object CdcPipeline {
       keyCols: Map[String, String],
       dropPolicy: KeyedParquetStore.DropPolicy =
         KeyedParquetStore.DropPolicy.KeepNullFill): Unit =
-    withPinnedBatch(batch) { pinned =>
+    withPinnedBatch(batch, storeBucket(store, schemas, keyCols)) { (pinned, slices) =>
       val spark = pinned.sparkSession
-      // ONE driver pass collects the table fan-out, the batch's max
-      // LSN (the applied-watermark input), each table's key-change
-      // row count, its unchanged-TOAST marker count, its touched
-      // BUCKET set. moves/toasts let the common slice (no moves, no
-      // markers — the steady state) skip the expansion explode and the
-      // store-lookup join entirely; the bucket set lets merge skip its
-      // touched-bucket collect on that same steady path. With merge's
-      // emptied-bucket set folded into its pin, the steady path runs
-      // this one collect-class aggregate and no other.
-      val kc = if (pinned.columns.contains("beforeKey"))
-        sum(when(col("op") === "U" && col("beforeKey").isNotNull &&
-          col("beforeKey") =!= col("key"), 1L).otherwise(0L))
-      else sum(lit(0L))
-      // raw-JSON substring test: no parse, and the sentinel cannot
-      // appear in organic data (it is this engine's own marker)
-      val tc = sum(when(col("after").contains(UnchangedToast), 1L).otherwise(0L))
-      // commitTs guard mirrors beforeKey's: a hand-built envelope frame
-      // may omit the column — the time-lag metric then reads unknown
-      val mts = if (pinned.columns.contains("commitTs")) max(col("commitTs"))
-        else max(lit(null).cast("timestamp"))
-      // the batch's touched-bucket set per table, riding the SAME
-      // aggregate (r19: was a second collect job inside merge). The
-      // bucket of a row is hash-of-typed-key, so the key is cast to its
-      // table's declared key type first — exactly the cast the merged
-      // key column gets in lastImageRaw/lastImagePerKey.
-      val bucketCol = schemas.foldLeft(lit(null).cast("int")) {
-        case (acc, (t, sch)) =>
-          when(col("table") === t,
-            store.bucketExpr(col("key").cast(sch(keyCols(t)).dataType)))
-            .otherwise(acc)
-      }
-      val present = pinned.groupBy("table")
-        .agg(max("lsn").as("mx"), kc.as("moves"), tc.as("toasts"),
-          mts.as("mts"), collect_set(bucketCol).as("bks"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), Option(r.getTimestamp(4)), r.getSeq[Int](5).toSeq))
-      present.foreach { case (table, _, moves, toasts, _, bks) =>
+      slices.foreach { case (table, s) =>
+        val (schema, keyCol) = (schemas(table), keyCols(table))
         val slice = pinned.filter(col("table") === table)
-        val changes =
-          if (toasts > 0L) {
-            val img = lastImageToastWithResolveKey(slice, schemas(table), keyCols(table))
-            // bucket-pruned store read: only buckets the MARKED rows'
-            // lookup keys (own key + beforeKey) hash to are opened —
-            // at scale the fallback join reads O(marked buckets), not
-            // the table
-            val kType = schemas(table)(keyCols(table)).dataType
-            val marked = slice.filter(col("after").contains(UnchangedToast))
-            val probe = (if (slice.columns.contains("beforeKey"))
-              marked.select(col("key").as("k"))
-                .unionByName(marked.select(
-                  coalesce(col("beforeKey"), col("key")).as("k")))
-            else marked.select(col("key").as("k")))
-              .select(col("k").cast(kType).as("k"))
-            val current =
-              if (store.exists(spark, table))
-                store.readForKeys(spark, table, probe, "k")
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                schemas(table))
-            resolveToastAgainstCurrent(img, current, schemas(table), keyCols(table))
-          }
-          else if (moves == 0L) lastImageRaw(slice, schemas(table), keyCols(table))
-          else lastImagePerKey(slice, schemas(table), keyCols(table))
-        // the bucket hint holds only on the no-move / no-TOAST path:
-        // there the merged key column IS cast(envelope key), the same
-        // expression the fan-out aggregate bucketed. Key-change
-        // expansion adds beforeKeys and TOAST resolution re-derives
-        // images, so those paths let merge compute its own bucket set.
-        val steady = moves == 0L && toasts == 0L
-        store.merge(spark, table, changes, keyCols(table), dropPolicy,
-          touchedHint = if (steady) Some(bks) else None)
+        val hint = Some(s.buckets.toSeq)
+        if (s.toasts > 0L) {
+          val img = lastImageToastWithResolveKey(slice, schema, keyCol)
+          // bucket-pruned store read: only buckets the MARKED rows'
+          // lookup keys (own key + beforeKey) hash to are opened —
+          // at scale the fallback join reads O(marked buckets), not
+          // the table
+          val marked = slice.filter(col("after").contains(UnchangedToast))
+          val probe = (if (slice.columns.contains("beforeKey"))
+            marked.select(col("key").as("k"))
+              .unionByName(marked.select(
+                coalesce(col("beforeKey"), col("key")).as("k")))
+          else marked.select(col("key").as("k")))
+            .select(col("k").cast(schema(keyCol).dataType).as("k"))
+          val current =
+            if (store.exists(spark, table))
+              store.readForKeys(spark, table, probe, "k")
+            else spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          store.merge(spark, table,
+            resolveToastAgainstCurrent(img, current, schema, keyCol),
+            keyCol, dropPolicy, hint)
+        } else {
+          val events = if (s.moves == 0L) slice else normalizeKeyChanges(slice)
+          store.merge(spark, table,
+            parseImages(events, schema, keyCol, col("lsn").as(LsnRank)),
+            keyCol, dropPolicy, hint, rankCol = Some(LsnRank))
+        }
       }
-      // every table's merge landed: the batch is fully applied — record
-      // the watermark LAST so a crash mid-batch leaves it conservative
-      // (a low watermark only means extra idempotent replay, never loss).
-      // commit order = lsn order in a WAL, so the global max commitTs IS
-      // the watermark event's source commit time (absent on feeds whose
-      // events carry no commitTs — the time-lag metric then reads unknown)
-      if (present.nonEmpty)
-        store.recordAppliedLsn(spark, present.map(_._2).max,
-          present.flatMap(_._5).sortBy(_.getTime).lastOption)
+      recordApplied(store, spark, slices)
     }
+
+  // the merge's rank column on the apply path: the event's LSN
+  private val LsnRank = "_lsn"
 
   /** Consistent read AS OF an LSN — reconstruct a table's state at one
     * WAL position from its snapshot image plus the retained change

@@ -146,8 +146,7 @@ object JdbcMirror {
     *
     * The read-back is BATCH-SIZED, not target-sized: the marked rows'
     * lookup keys (own key + beforeKey) collect to the driver — bounded
-    * by the micro-batch's marker count, the same class as the
-    * per-batch fan-out collect — and ship back as chunked
+    * by the micro-batch's marker count — and ship back as chunked
     * `WHERE <key> IN (…)` partition predicates
     * ([[keyInPredicates]]), one database-side index probe per chunk
     * instead of a full table scan. The parquet analogue is
@@ -159,16 +158,12 @@ object JdbcMirror {
       keyCols: Map[String, String],
       props: Properties = new Properties(),
       tableNameOf: String => String = identity): Unit =
-    CdcPipeline.withPinnedBatch(batch) { pinned =>
+    CdcPipeline.withPinnedBatch(batch) { (pinned, slices) =>
       val spark = pinned.sparkSession
-      val present = pinned.groupBy("table")
-        .agg(sum(when(col("after").contains(CdcPipeline.UnchangedToast), 1L)
-          .otherwise(0L)).as("toasts"))
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      present.foreach { case (table, toasts) =>
+      slices.foreach { case (table, s) =>
         val slice = pinned.filter(col("table") === table)
         val changes =
-          if (toasts == 0L)
+          if (s.toasts == 0L)
             CdcPipeline.lastImagePerKey(slice, schemas(table), keyCols(table))
           else {
             checkIdent(tableNameOf(table), "table name")

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.operators.Checkpointing
 
@@ -56,15 +57,18 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   // Per-write option: the session conf is shared by every mirror and
   // reader in the session, so the store never sets it.
   private val OverwriteMode = "partitionOverwriteMode"
+  // merge's per-row order; stored rows carry a null rank, which sorts
+  // below every change
+  private val Rank = "_graft_rank"
   private def schemaPath(table: String) = new Path(s"${path(table)}/_graft_schema.json")
 
   private def bucketOf(key: org.apache.spark.sql.Column) =
     pmod(hash(key), lit(nBuckets))
 
   /** The store's bucket assignment as a column expression — exposed so
-    * the apply path can fold the touched-bucket computation into a
-    * driver pass it already pays ([[graft.streaming.CdcPipeline.applyBatch]]'s
-    * fan-out aggregate) instead of a second collect job per batch.
+    * the apply path can fold the touched-bucket set into the job that
+    * pins its micro-batch ([[graft.streaming.CdcPipeline.withPinnedBatch]])
+    * instead of a collect job per batch.
     * Callers MUST apply it to the key cast to the table's key type:
     * `hash()` is type-sensitive, so `hash("1") != hash(1L)`. */
   private[streaming] def bucketExpr(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -245,114 +249,110 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       incoming.fields.filterNot(f => stored.fieldNames.contains(f.name)))
   }
 
-  /** Project `df` to `schema` + bucket, null-padding absent columns. */
-  private def alignTo(df: DataFrame, schema: StructType): DataFrame =
-    df.select(schema.fields.toSeq.map { f =>
+  /** Project `df` to `schema`, then `extra`, then bucket, null-padding
+    * absent schema columns. */
+  private def alignTo(df: DataFrame, schema: StructType, extra: Column*): DataFrame =
+    df.select((schema.fields.toSeq.map { f =>
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
-    } :+ col("bucket"): _*)
+    } ++ extra) :+ col("bucket"): _*)
 
-  /** Idempotent merge of a deduped change set into the table.
+  /** Idempotent merge of a change set into the table.
     *
-    * `changes` must carry exactly one row per key (last-write-wins
-    * already applied upstream — see [[CdcPipeline.applyBatch]]) with
-    * columns: `op` ("I"|"U"|"D"), the key column, and the full row
-    * image for upserts. The batch schema may be WIDER than the stored
-    * one (new source columns) or narrower (columns absent from this
-    * batch) — see [[unionSchema]]; existing rows get nulls for new
-    * columns, new rows get nulls for omitted ones.
+    * `changes` carries `op` ("I"|"U"|"D"), the key column and the row
+    * image for upserts. With `rankCol`, a key may appear several times
+    * and its highest-ranked row wins (the apply path passes parsed
+    * feed events ranked by LSN); without it, `changes` must carry one
+    * row per key. The batch schema may be WIDER than the stored one
+    * (new source columns) or narrower (columns absent from this batch)
+    * — see [[unionSchema]]; existing rows get nulls for new columns,
+    * new rows get nulls for omitted ones.
     *
-    * Only buckets containing changed keys are read + rewritten
-    * (dynamic partition overwrite). Re-applying the same change set
-    * is a no-op — effective exactly-once on top of Spark's
-    * at-least-once foreachBatch (SURVEY.md §2.8 C5).
-    */
-  /** `touchedHint`: the PRECOMPUTED bucket set of `changes`' keys
-    * (`bucketExpr` over the key cast to the table's key type) — skips
-    * this merge's own touched-bucket collect job (2 jobs under AQE).
+    * Only buckets containing changed keys are read and rewritten
+    * (dynamic partition overwrite). Their stored rows, ranked below
+    * every change, and the changes meet in ONE shuffle on the bucket
+    * column; `row_number` over (bucket, key) by rank descending runs
+    * on that partitioning with no second exchange, keeps each key's
+    * winner and drops deletes. The result is pinned, which breaks its
+    * lineage from the files about to be overwritten (Spark refuses to
+    * overwrite a path it is also reading from), and the pin's job
+    * folds the buckets that still hold rows. Its partitions already
+    * hold whole buckets, so the write needs no exchange and each
+    * touched bucket gets one file. On the apply path's steady batch
+    * that is 3 jobs: the shuffle map stage, the pin, the write.
+    * Re-applying the same change set is a no-op — effective
+    * exactly-once on top of Spark's at-least-once foreachBatch
+    * (SURVEY.md §2.8 C5).
+    *
+    * `touchedHint`: the PRECOMPUTED bucket set of `changes`' keys
+    * (`bucketExpr` over the key cast to the table's key type), which
+    * skips this merge's own touched-bucket collect (2 jobs under AQE).
     * The hint must be the EXACT bucket set of the keys in `changes`: a
-    * missing bucket would skip its survivor dedup and duplicate keys.
-    * [[CdcPipeline.applyBatch]] supplies it only on the no-key-change /
-    * no-TOAST path, where the merged keys are by construction
-    * `cast(envelope key)` — the same expression the hint aggregates.
-    * Either way the merged rows' own bucket set, which finds the
-    * buckets a batch's deletes emptied, is folded into the job that
-    * materializes them, so it costs no job. */
+    * missing bucket would skip its stored rows and duplicate keys.
+    * [[CdcPipeline.applyBatch]] folds it into the job that pins the
+    * micro-batch. */
   def merge(spark: SparkSession, table: String, changes: DataFrame, keyCol: String,
       dropPolicy: DropPolicy = DropPolicy.KeepNullFill,
-      touchedHint: Option[Seq[Int]] = None): Unit = {
+      touchedHint: Option[Seq[Int]] = None,
+      rankCol: Option[String] = None): Unit = {
     require(!changes.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
     val keyed = changes.withColumn("bucket", bucketOf(col(keyCol)))
-    val dataSchema = StructType(changes.schema.filterNot(_.name == "op"))
-    if (dropPolicy == DropPolicy.Error && exists(spark, table)) {
-      val dropped = schemaOf(spark, table).fieldNames
-        .filterNot(dataSchema.fieldNames.contains)
+    val dataSchema = StructType(changes.schema.filterNot(f =>
+      f.name == "op" || rankCol.contains(f.name)))
+    val stored = if (exists(spark, table)) Some(schemaOf(spark, table)) else None
+    stored.filter(_ => dropPolicy == DropPolicy.Error).foreach { s =>
+      val dropped = s.fieldNames.filterNot(dataSchema.fieldNames.contains)
       require(dropped.isEmpty,
         s"table '$table': batch schema omits stored column(s) " +
           s"${dropped.mkString("[", ", ", "]")} under DropPolicy.Error - " +
           "a source column drop is non-additive; re-sync the table " +
           "(KeyedParquetStore.resync) or merge with DropPolicy.KeepNullFill")
     }
+    val target = stored.fold(dataSchema)(unionSchema(_, dataSchema))
 
-    if (!exists(spark, table) || bucketsOnDisk(spark, table).isEmpty) {
-      keyed.filter(col("op") =!= "D").drop("op")
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-        .option(OverwriteMode, "dynamic").parquet(path(table))
-      writeSchema(spark, table, dataSchema)
-      return
-    }
+    // Buckets touched by this batch, when any are stored. The key set
+    // per micro-batch is small relative to the table (CDC batches,
+    // insert.ps1:11–13), and the collect is bounded by nBuckets, never
+    // by table size.
+    val onDisk = stored.isDefined && bucketsOnDisk(spark, table).nonEmpty
+    val touched =
+      if (!onDisk) Nil
+      else touchedHint.getOrElse(
+        keyed.select("bucket").distinct().collect().map(_.getInt(0)).toSeq)
+    if (onDisk && touched.isEmpty) return
 
-    // Buckets touched by this batch. Key-set per micro-batch is small
-    // relative to the table (CDC batches, insert.ps1:11–13) — collect
-    // is bounded by nBuckets, never by table size. The apply path's
-    // fan-out aggregate precomputes this (touchedHint) so the steady
-    // state pays no collect job here.
-    val touched = touchedHint.getOrElse(
-      keyed.select("bucket").distinct().collect().map(_.getInt(0)).toSeq)
-    if (touched.isEmpty) return
+    val incoming = alignTo(keyed, target, col("op"),
+      rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
+    val ranked =
+      if (!onDisk) incoming
+      else alignTo(spark.read.schema(stored.get).parquet(path(table))
+        .filter(col("bucket").isin(touched: _*)), target,
+        lit(null).cast("string").as("op"), lit(null).cast(LongType).as(Rank))
+        .unionByName(incoming)
+    val winners = ranked.repartition(col("bucket"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)))
+      .filter(col("_rn") === 1 && !(col("op") <=> "D"))
+      .drop("_rn", "op", Rank)
 
-    val schema = schemaOf(spark, table)
-    val target = unionSchema(schema, dataSchema)
-    val current = spark.read.schema(schema).parquet(path(table))
-      .filter(col("bucket").isin(touched: _*))
-
-    val changedKeys = keyed.select(col(keyCol), col("bucket")).distinct()
-    val survivors = current.join(
-      changedKeys.select(keyCol), Seq(keyCol), "left_anti")
-    val upserts = keyed.filter(col("op") =!= "D").drop("op")
-
-    // Break lineage from the files about to be overwritten (Spark
-    // refuses to overwrite a path it is also reading from) and
-    // materialize exactly once, bounded by the touched buckets. The
-    // same job folds the buckets that still hold rows.
-    val pin = Checkpointing.materialize(alignTo(survivors, target)
-      .unionByName(alignTo(upserts, target)), keysOf = Some("bucket"))
+    val pin = Checkpointing.materialize(winners, keysOf = Some("bucket"))
     try {
       // Dynamic overwrite replaces only the bucket=... dirs present in
       // the merged rows. A touched bucket whose rows were ALL deleted is
       // absent from them — clear it explicitly or deletes would resurface.
-      val emptied = touched.filterNot(pin.keys)
-      if (emptied.nonEmpty) {
-        val f = fs(spark)
-        emptied.foreach { b =>
-          f.delete(new Path(s"${path(table)}/bucket=$b"), true)
-        }
-      }
-
-      if (pin.keys.nonEmpty) {
-        pin.df
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").mode(SaveMode.Overwrite)
+      val f = fs(spark)
+      touched.filterNot(pin.keys).foreach(b =>
+        f.delete(new Path(s"${path(table)}/bucket=$b"), true))
+      if (pin.keys.nonEmpty)
+        pin.df.write.partitionBy("bucket").mode(SaveMode.Overwrite)
           .option(OverwriteMode, "dynamic").parquet(path(table))
-      }
     } finally Bridge.free(pin.df)
     // persist the (possibly widened) schema AFTER the data write, so a
     // crash between the two leaves a readable store (old sidecar, old
     // columns) rather than a sidecar promising columns no file carries
     // in rewritten buckets
-    if (target != schema) writeSchema(spark, table, target)
+    if (!stored.contains(target)) writeSchema(spark, table, target)
   }
 
   /** Non-additive evolution path — the reference workflow's RESYNC
@@ -419,10 +419,11 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * parquet-native analogue of clustered-index maintenance.
     *
     * Returns the number of rows PURGED by `dropWhere` (0 when none is
-    * given), counted against the same checkpointed read the rewrite
+    * given), counted against the same pinned read the rewrite
     * consumes — so the count and the purge can never disagree, even
     * when a concurrent `applyBatchSoft` lands mid-compact (rows it
-    * expires are simply part of the NEXT cycle).
+    * expires are simply part of the NEXT cycle). The pin's one job
+    * folds both the purge count and the set of buckets that keep rows.
     *
     * Crash window: the fully-purged-bucket cleanup below runs as a
     * separate FS pass AFTER the dynamic-overwrite commit. A crash
@@ -436,38 +437,34 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     val schema = schemaOf(spark, table)
     val before = bucketsOnDisk(spark, table)
     if (before.isEmpty) return 0L
-    val current = spark.read.schema(schema).parquet(path(table))
-      .localCheckpoint(true) // break lineage from the files being replaced
+    // `dropWhere` rows are PURGED during the rewrite — retention folded
+    // into the compaction pass the cadence already pays, one table
+    // rewrite instead of discovery + merge + compact as separate jobs
+    // (CdcPipeline.sweepAndCompact's contract). A row where the
+    // predicate evaluates to NULL (e.g. null _deleted) is KEPT —
+    // retention must fail toward retaining. The pin breaks lineage
+    // from the files being replaced.
+    val purged = dropWhere.fold(lit(false))(c => coalesce(c, lit(false)))
+    val pin = Checkpointing.materialize(spark.read.schema(schema).parquet(path(table))
+      .withColumn("_purged", purged.cast("int"))
+      .withColumn("_kept", when(col("_purged") === 0, col("bucket").cast("int"))),
+      sumOf = Some("_purged"), keysOf = Some("_kept"))
     try {
-      // `dropWhere` rows are PURGED during the rewrite — retention
-      // folded into the compaction pass the cadence already pays, one
-      // table rewrite instead of discovery + merge + compact as
-      // separate jobs (CdcPipeline.sweepAndCompact's contract). A row
-      // where the predicate evaluates to NULL (e.g. null _deleted) is
-      // KEPT — retention must fail toward retaining.
-      val kept = dropWhere.fold(current)(c =>
-        current.filter(!coalesce(c, lit(false))))
-      kept
+      pin.df.filter(col("_purged") === 0).drop("_purged", "_kept")
         .repartition(col("bucket"))
         .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*)
         .write.partitionBy("bucket").mode(SaveMode.Overwrite)
         .option(OverwriteMode, "dynamic").parquet(path(table))
       // dynamic overwrite leaves a bucket's OLD file in place when the
       // rewrite emits no rows for it — a fully-purged bucket must be
-      // cleared explicitly or its dropped rows resurrect (the distinct
-      // below reads the CHECKPOINTED blocks, not the replaced files)
-      dropWhere.fold(0L) { c =>
-        val after = kept.select(col("bucket").cast("int")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        val f = fs(spark)
-        before.filterNot(after).foreach(b =>
-          f.delete(new Path(path(table), s"bucket=$b"), true))
-        // same checkpointed blocks the rewrite read — count == purge
-        current.filter(coalesce(c, lit(false))).count()
-      }
+      // cleared explicitly or its dropped rows resurrect
+      val f = fs(spark)
+      before.filterNot(pin.keys).foreach(b =>
+        f.delete(new Path(path(table), s"bucket=$b"), true))
+      pin.sum.toLong
     } finally
       // a compaction CADENCE (sweepAndCompact) must not accumulate one
       // generation of checkpoint blocks per cycle
-      Bridge.free(current)
+      Bridge.free(pin.df)
   }
 }

@@ -1,0 +1,160 @@
+package graft
+
+import java.nio.file.Files
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
+
+/** The store's one-shuffle merge, as [[CdcPipeline.applyBatch]] drives
+  * it, against a control that never calls it: [[CdcPipeline.asOf]]
+  * over the snapshot and every event so far (its own window dedup and
+  * anti-join). Batch by batch the two must hold the same rows. */
+class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = SparkTestSession.spark
+
+  private def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
+
+  private val lSchema = StructType(Seq(StructField("id", LongType),
+    StructField("name", StringType), StructField("n", LongType)))
+  // the same table after a source ADD COLUMN
+  private val lWide = lSchema.add(StructField("w", StringType))
+  private val sSchema = StructType(Seq(StructField("code", StringType),
+    StructField("n", LongType)))
+  private val keys = Map("lt" -> "id", "st" -> "code")
+
+  private def lt(lsn: Long, op: String, k: Long, n: Long = 0L, w: Option[String] = None,
+      before: Option[Long] = None): ChangeEvent =
+    ChangeEvent(lsn, ts(lsn), op, "lt", k,
+      if (op == "D") null
+      else s"""{"id":$k,"name":"v$n","n":$n${w.fold("")(x => s""","w":"$x"""")}}""",
+      before)
+
+  private def st(lsn: Long, op: String, k: Long, n: Long = 0L,
+      before: Option[Long] = None): ChangeEvent =
+    ChangeEvent(lsn, ts(lsn), op, "st", k,
+      if (op == "D") null else s"""{"code":"$k","n":$n}""", before)
+
+  /** Several events per key in one batch, a delete of an absent key,
+    * a key move, on both a long- and a string-keyed table. */
+  private val batch1: Seq[ChangeEvent] =
+    Seq(lt(100, "I", 100, 1), lt(101, "U", 100, 2), lt(102, "D", 100),
+      lt(103, "D", 5), lt(104, "I", 5, 55)) ++
+      (105L to 109L).map(l => lt(l, "U", 7, l)) ++
+      Seq(lt(110, "D", 999), lt(111, "I", 200, 200),
+        lt(112, "U", 300, 300, before = Some(8L))) ++
+      Seq(st(120, "I", 100, 1), st(121, "U", 100, 2), st(122, "D", 100),
+        st(123, "D", 5), st(124, "I", 5, 55)) ++
+      (125L to 129L).map(l => st(l, "U", 7, l)) ++
+      Seq(st(130, "D", 999), st(131, "U", 300, 300, before = Some(8L)))
+
+  private def sorted(df: DataFrame, keyCol: String): Seq[Row] = {
+    val cols = df.columns.sorted.toSeq
+    df.select(cols.map(col): _*).orderBy(keyCol).collect().toSeq
+  }
+
+  test("applyBatch's merge equals asOf over the whole feed, batch by batch: " +
+    "repeated keys, absent deletes, moves, string keys, an emptied bucket, " +
+    "a widened schema") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cdc_merge_eq").toString
+    val store = new KeyedParquetStore(root, nBuckets = 4)
+    val lSnap = (1L to 40L).map(i => (i, s"s$i", i)).toDF("id", "name", "n")
+    val sSnap = (1L to 40L).map(i => (i.toString, i)).toDF("code", "n")
+    CdcPipeline.snapshot(spark, store, Map("lt" -> lSnap, "st" -> sSnap), keys)
+
+    val fed = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
+    def applyAndCheck(batch: Seq[ChangeEvent], lNow: StructType): Unit = {
+      val schemas = Map("lt" -> lNow, "st" -> sSchema)
+      CdcPipeline.applyBatch(batch.toDF(), store, schemas, keys)
+      fed ++= batch
+      val all = fed.toSeq.toDF()
+      val maxLsn = fed.map(_.lsn).max
+      val lPadded = lNow.fieldNames.foldLeft(lSnap)((df, f) =>
+        if (df.columns.contains(f)) df else df.withColumn(f, lit(null).cast(lNow(f).dataType)))
+      val controls = Map(
+        "lt" -> CdcPipeline.asOf(lPadded, all.filter(col("table") === "lt"), lNow, "id", maxLsn),
+        "st" -> CdcPipeline.asOf(sSnap, all.filter(col("table") === "st"), sSchema, "code", maxLsn))
+      controls.foreach { case (t, control) =>
+        val got = sorted(store.read(spark, t), keys(t))
+        val want = sorted(control, keys(t))
+        assert(got == want, s"table $t after lsn $maxLsn: store=${got.take(8)} " +
+          s"control=${want.take(8)}")
+      }
+    }
+
+    applyAndCheck(batch1, lSchema)
+    val lRows = store.read(spark, "lt").collect().map(r => r.getLong(0) -> r).toMap
+    assert(!lRows.contains(100L) && !lRows.contains(999L) && !lRows.contains(8L))
+    assert(lRows(5L).getLong(2) == 55L && lRows(7L).getLong(2) == 109L &&
+      lRows(300L).getLong(2) == 300L)
+    // a replayed batch reconverges to the same state
+    CdcPipeline.applyBatch(batch1.toDF(), store, Map("lt" -> lSchema, "st" -> sSchema), keys)
+    assert(sorted(store.read(spark, "lt"), "id") == sorted(
+      spark.createDataFrame(spark.sparkContext.parallelize(lRows.values.toSeq), lSchema), "id"))
+
+    // empty bucket b of lt: delete every key it holds, and update a key
+    // of another bucket
+    val layout = spark.read.parquet(s"$root/lt").select("id", "bucket").as[(Long, Int)]
+      .collect().toSeq
+    val b = layout.find(_._1 == 1L).get._2
+    val doomed = layout.collect { case (k, `b`) => k }.sorted
+    assert(doomed.size > 1)
+    applyAndCheck(doomed.zipWithIndex.map { case (k, i) => lt(200L + i, "D", k) } :+
+      lt(299, "U", layout.find(_._2 != b).get._1, 299), lSchema)
+    assert(spark.read.parquet(s"$root/lt").filter(col("bucket") === b).count() == 0L,
+      s"bucket $b still holds rows")
+
+    // an ADD COLUMN inside one batch: some events carry the new column,
+    // one key twice, and a new key without it
+    applyAndCheck(Seq(lt(300, "U", 2, 2, Some("a")), lt(301, "U", 3, 3, Some("b")),
+      lt(302, "U", 3, 33, Some("c")), lt(303, "I", 600, 600), lt(304, "U", 4, 4)), lWide)
+    assert(store.schemaOf(spark, "lt").map(f => f.name -> f.dataType) ==
+      lWide.map(f => f.name -> f.dataType))
+  }
+
+  test("plan shape: the merge's pinned plan shuffles once, the store write not at all") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cdc_merge_plan").toString
+    val store = new KeyedParquetStore(root, nBuckets = 8)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)))
+    def batch(lsn0: Long) = (0 until 200).map { i =>
+      ChangeEvent(lsn0 + i, ts(i), if (i % 9 == 4) "D" else "U", "t", i % 50,
+        s"""{"id":${i % 50},"v":${lsn0 + i}}""")
+    }.toDF()
+    CdcPipeline.applyBatch(batch(1000L), store, Map("t" -> schema), Map("t" -> "id"))
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add((f, qe))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      CdcPipeline.applyBatch(batch(2000L), store, Map("t" -> schema), Map("t" -> "id"))
+      def mine = seen.toArray.toSeq.map(_.asInstanceOf[(String, QueryExecution)])
+        .filter(_._2.executedPlan.toString.contains(root))
+      var spins = 0
+      while (!mine.exists(_._1 == "command") && spins < 100) { Thread.sleep(100); spins += 1 }
+      def shuffles(qe: QueryExecution) =
+        collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }.size
+      val pins = mine.filter { case (f, qe) =>
+        f == "localCheckpoint" && collect(qe.executedPlan) { case w: WindowExec => w }.nonEmpty
+      }
+      assert(pins.size == 1, s"expected one merge pin, saw ${mine.map(_._1)}")
+      assert(shuffles(pins.head._2) == 1, pins.head._2.executedPlan.toString)
+      val writes = mine.filter(_._1 == "command")
+      assert(writes.size == 1, s"expected one store write, saw ${mine.map(_._1)}")
+      assert(shuffles(writes.head._2) == 0, writes.head._2.executedPlan.toString)
+    } finally spark.listenerManager.unregister(listener)
+  }
+}

@@ -415,16 +415,48 @@ class CdcPipelineSpec extends AnyFunSuite {
       CdcPipeline.applyBatch(batch(2000L), store,
         Map("t" -> schema), Map("t" -> "id"))
     }
-    // measured steady state: 8 jobs in each of 5 runs (fan-out
-    // aggregate + its AQE stage, whose first job also stores the lazily
-    // pinned batch; merge materialize + stages, which also folds the
-    // surviving-bucket set; bucket overwrite). Before: 9 in each of 5
-    // runs, with an eager batch pin (and 2 more for an emptied-bucket
-    // collect when a batch held deletes), under a gate of 13; the
-    // pre-r19 shape ran 16. A reintroduced per-batch collect (2 jobs)
-    // or probe trips it.
-    assert(cur <= 8,
-      s"steady-state applyBatch ran $cur jobs (expected 8) - a " +
+    // measured steady state: 4 jobs in each of 3 runs (the batch pin,
+    // whose job also folds the fan-out; the merge's bucket shuffle map
+    // stage; its pin, which also folds the surviving-bucket set; the
+    // bucket overwrite). The previous shape ran 8 (fan-out aggregate and
+    // its AQE stage; a window dedup shuffled twice plus a broadcast
+    // before the merge pin; a repartitioned write) under a gate of 8;
+    // the pre-r19 shape ran 16. A reintroduced per-batch collect (2
+    // jobs) or probe trips it.
+    assert(cur <= 4,
+      s"steady-state applyBatch ran $cur jobs (expected 4) - a " +
         "per-batch collect/probe job crept back into the apply path")
+  }
+
+  test("job-count gate: a batch with key-moving updates takes the same " +
+    "4-job merge (no pre-dedup shuffle)") {
+    import spark.implicits._
+    val store = new KeyedParquetStore(
+      Files.createTempDirectory("cdc_jobs_moves").toString, nBuckets = 8)
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("v", LongType)))
+    CdcPipeline.applyBatch((0 until 50).map { i =>
+      ChangeEvent(1000L + i, ts(i), "I", "t", i, s"""{"id":$i,"v":$i}""")
+    }.toDF(), store, Map("t" -> schema), Map("t" -> "id"))
+    // five keys move (k -> 100 + k), then every key is updated
+    val moves = (0 until 5).map { i =>
+      ChangeEvent(2000L + i, ts(i), "U", "t", 100 + i,
+        s"""{"id":${100 + i},"v":-1}""", Some(i.toLong))
+    } ++ (5 until 200).map { i =>
+      ChangeEvent(2000L + i, ts(i), "U", "t", i % 50,
+        s"""{"id":${i % 50},"v":${2000 + i}}""")
+    }
+    val cur = JobCount.of(spark, "apply_jobcount_moves") {
+      CdcPipeline.applyBatch(moves.toDF(), store, Map("t" -> schema), Map("t" -> "id"))
+    }
+    // measured: 4 in each of 3 runs; the previous shape ran 11 (the key-change
+    // expansion's window dedup and the merge's own touched-bucket
+    // collect on top of the steady shape)
+    assert(cur <= 4, s"move-path applyBatch ran $cur jobs (expected 4)")
+    val state = store.read(spark, "t").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // moved keys 0..4 are gone; updates after the move recreate them
+    assert(state.size == 55 && (100 until 105).forall(k => state(k.toLong) == -1L),
+      s"got ${state.toSeq.sorted.take(10)}")
   }
 }

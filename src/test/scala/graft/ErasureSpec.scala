@@ -141,14 +141,22 @@ class ErasureSpec extends AnyFunSuite {
     assert(doomedX.nonEmpty && nY > 0)
 
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val reps = Erasure.forgetCascade(spark, work, "a", "a_id", Seq(0L, 1L),
-      edges = Seq(
-        "a" -> Erasure.CascadeEdge("x", "x_a", "x_id"),
-        "x" -> Erasure.CascadeEdge("y", "y_x", "y_id"),
-        "a" -> Erasure.CascadeEdge("b", "b_a", "b_id"),
-        "b" -> Erasure.CascadeEdge("x", "x_b", "x_id")))
+    var reps = Seq.empty[Erasure.Report]
+    val jobs = JobCount.of(spark, "erasure_dag") {
+      reps = Erasure.forgetCascade(spark, work, "a", "a_id", Seq(0L, 1L),
+        edges = Seq(
+          "a" -> Erasure.CascadeEdge("x", "x_a", "x_id"),
+          "x" -> Erasure.CascadeEdge("y", "y_x", "y_id"),
+          "a" -> Erasure.CascadeEdge("b", "b_a", "b_id"),
+          "b" -> Erasure.CascadeEdge("x", "x_b", "x_id")))
+    }
     val added = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-    assert(added <= 4, s"the cascade left $added persistent RDDs (4 tables)")
+    assert(added == 0, s"the cascade left $added persistent RDDs")
+    // measured: 77 in each of 3 runs; the previous shape ran 89, re-pinning
+    // every table's already pinned tombstones in forget and inferring
+    // the table's schema with a footer-reading job on each of its two
+    // reads
+    assert(jobs <= 77, s"the cascade ran $jobs jobs")
     assert(reps.forall(_.residue == 0L), s"got $reps")
     val byTable = reps.map(r => r.table -> (r.rowsBefore - r.rowsAfter)).toMap
     assert(byTable == Map("a" -> 2L, "b" -> doomedB.size.toLong,
