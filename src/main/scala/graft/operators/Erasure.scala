@@ -93,52 +93,58 @@ object Erasure {
     forget(spark, dataDir, table, keyCol, broadcast(ids.toDF(keyCol)))
   }
 
+  /** Run `body` on the tombstone frame pinned ([[Checkpointing.pin]]),
+    * so every pass of one erasure evaluates one materialized key set
+    * whose lineage cannot reference files a swap replaces. A frame that
+    * is already a pin ([[forgetCascade]]'s) is used as is and left to
+    * its owner to free; a pin made here is freed on return. */
+  private def pinned[T](tombstones: DataFrame)(body: DataFrame => T): T = {
+    val owned = Bridge.persistedRdd(tombstones).isEmpty
+    val tomb = if (owned) Checkpointing.pin(tombstones) else tombstones
+    try body(tomb) finally if (owned) Bridge.free(tomb)
+  }
+
   /** Erase every row of `<dataDir>/<table>.parquet` whose `keyCol`
     * appears in `tombstones` (a one-column DataFrame named `keyCol`) —
     * anti-join rewrite + atomic old-aside swap. The tombstone frame is
-    * PINNED ([[Checkpointing.pin]]) before the rewrite so its lineage
-    * cannot reference the files the swap replaces, and so the rewrite
-    * and the residue check evaluate one materialized set; a frame that
-    * is already a pin ([[forgetCascade]]'s) is used as is and left to
-    * its owner to free. Distributed end-to-end: a cascade deriving
+    * [[pinned]] for the rewrite and the residue check. Distributed
+    * end-to-end: a cascade deriving
     * millions of child keys never lands on the driver. */
   def forget(spark: SparkSession, dataDir: String, table: String,
       keyCol: String, tombstones: DataFrame): Report = {
     require(tombstones.columns.toSeq == Seq(keyCol),
       s"tombstone frame must have exactly one column '$keyCol', " +
         s"got ${tombstones.columns.mkString("[", ", ", "]")}")
-    val owned = Bridge.persistedRdd(tombstones).isEmpty
-    val tomb = if (owned) Checkpointing.pin(tombstones) else tombstones
-    val src = s"$dataDir/$table.parquet"
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val scratch = new org.apache.hadoop.fs.Path(src + "._forget_scratch")
-    val old = new org.apache.hadoop.fs.Path(src + "._forget_old")
-    // crash recovery BEFORE any sweep: an attempt that died between
-    // the two swap renames leaves src ABSENT and the data in _old —
-    // restore it first (deleting _old in that state would destroy the
-    // only copy). Scratch is always droppable (pre-swap); _old is
-    // droppable only while src exists (completed swap, interrupted
-    // cleanup).
-    if (!fs.exists(srcPath) && fs.exists(old) && !fs.rename(old, srcPath))
-      throw new java.io.IOException(
-        s"erasure crash recovery failed: rename $old -> $srcPath returned false")
-    fs.delete(scratch, true)
-    if (fs.exists(srcPath)) fs.delete(old, true)
-    // capture the schema BEFORE the rewrite: a sweep that tombstones
-    // every row writes a zero-row directory, which plain parquet reads
-    // cannot schema-infer — the explicit schema keeps a fully-erased
-    // table readable (as empty), which is a legal erasure outcome
-    val before = Tables.parquet(spark, src)
-    val schema = before.schema
-    val rowsBefore = before.count()
-    try {
+    pinned(tombstones) { tomb =>
+      val src = s"$dataDir/$table.parquet"
+      val srcPath = new org.apache.hadoop.fs.Path(src)
+      val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val scratch = new org.apache.hadoop.fs.Path(src + "._forget_scratch")
+      val old = new org.apache.hadoop.fs.Path(src + "._forget_old")
+      // crash recovery BEFORE any sweep: an attempt that died between
+      // the two swap renames leaves src ABSENT and the data in _old —
+      // restore it first (deleting _old in that state would destroy the
+      // only copy). Scratch is always droppable (pre-swap); _old is
+      // droppable only while src exists (completed swap, interrupted
+      // cleanup).
+      if (!fs.exists(srcPath) && fs.exists(old) && !fs.rename(old, srcPath))
+        throw new java.io.IOException(
+          s"erasure crash recovery failed: rename $old -> $srcPath returned false")
+      fs.delete(scratch, true)
+      if (fs.exists(srcPath)) fs.delete(old, true)
+      // capture the schema BEFORE the rewrite: a sweep that tombstones
+      // every row writes a zero-row directory, which plain parquet reads
+      // cannot schema-infer — the explicit schema keeps a fully-erased
+      // table readable (as empty), which is a legal erasure outcome
+      val before = Tables.parquet(spark, src)
+      val schema = before.schema
+      val rowsBefore = before.count()
       survivors(spark, src, keyCol, tomb).write.parquet(scratch.toString)
       swapIn(fs, scratch, srcPath, old)
       val after = spark.read.schema(schema).parquet(src)
       Report(table, rowsBefore, after.count(),
         after.join(tomb, Seq(keyCol), "left_semi").count())
-    } finally if (owned) Bridge.free(tomb)
+    }
   }
 
   /** One edge of an erasure cascade: child rows of `childTable` are
@@ -287,73 +293,74 @@ object Erasure {
     require(tombstones.columns.toSeq == Seq(keyCol),
       s"tombstone frame must have exactly one column '$keyCol', got " +
         tombstones.columns.mkString("[", ", ", "]"))
-    val tomb = tombstones.localCheckpoint(true)
-    val root = s"$dataDir/$table.parquet"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = rootPath.getFileSystem(conf)
+    pinned(tombstones) { tomb =>
+      val root = s"$dataDir/$table.parquet"
+      val rootPath = new org.apache.hadoop.fs.Path(root)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = rootPath.getFileSystem(conf)
 
-    // crash recovery BEFORE discovery (a parked partition dir is
-    // invisible to the scan): restore _forget_old_ twins whose
-    // original is absent, sweep completed-swap leftovers and scratch
-    def sweep(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).filter(_.isDirectory).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("_forget_old_")) {
-          val orig = new org.apache.hadoop.fs.Path(
-            st.getPath.getParent, nm.stripPrefix("_forget_old_"))
-          if (!fs.exists(orig)) {
-            if (!fs.rename(st.getPath, orig))
-              throw new java.io.IOException(
-                s"erasure crash recovery failed: ${st.getPath} -> $orig " +
-                  "returned false")
-            sweep(orig)
-          } else fs.delete(st.getPath, true)
-        } else if (nm.startsWith("_forget_scratch_")) {
-          fs.delete(st.getPath, true)
-        } else if (!nm.startsWith("_") && !nm.startsWith(".")) sweep(st.getPath)
+      // crash recovery BEFORE discovery (a parked partition dir is
+      // invisible to the scan): restore _forget_old_ twins whose
+      // original is absent, sweep completed-swap leftovers and scratch
+      def sweep(dir: org.apache.hadoop.fs.Path): Unit =
+        fs.listStatus(dir).filter(_.isDirectory).foreach { st =>
+          val nm = st.getPath.getName
+          if (nm.startsWith("_forget_old_")) {
+            val orig = new org.apache.hadoop.fs.Path(
+              st.getPath.getParent, nm.stripPrefix("_forget_old_"))
+            if (!fs.exists(orig)) {
+              if (!fs.rename(st.getPath, orig))
+                throw new java.io.IOException(
+                  s"erasure crash recovery failed: ${st.getPath} -> $orig " +
+                    "returned false")
+              sweep(orig)
+            } else fs.delete(st.getPath, true)
+          } else if (nm.startsWith("_forget_scratch_")) {
+            fs.delete(st.getPath, true)
+          } else if (!nm.startsWith("_") && !nm.startsWith(".")) sweep(st.getPath)
+        }
+      sweep(rootPath)
+
+      require(spark.read.parquet(root).columns.contains(keyCol),
+        s"'$keyCol' must be a data column of $table (a partition-column " +
+          "erasure is a directory delete, not a rewrite)")
+      val parentOf = regexp_extract(col("p"), "^(.*)/[^/]+$", 1)
+      val files = spark.read.parquet(root)
+        .select(col(keyCol), expr("_metadata.file_path").as("p"))
+      val allDirs = files.select(parentOf.as("dir")).distinct()
+        .collect().map(_.getString(0)).toSet
+      val affected = files.join(tomb, Seq(keyCol), "left_semi")
+        .select(parentOf.as("dir")).distinct()
+        .collect().map(_.getString(0)).sorted
+      val rootUri = fs.makeQualified(rootPath).toString
+      affected.foreach { d =>
+        require(fs.makeQualified(new org.apache.hadoop.fs.Path(d))
+            .toString != rootUri,
+          s"$table is not hive-partitioned (data files sit directly under " +
+            s"$root) — use Erasure.forget, which rewrites the whole table")
       }
-    sweep(rootPath)
-
-    require(spark.read.parquet(root).columns.contains(keyCol),
-      s"'$keyCol' must be a data column of $table (a partition-column " +
-        "erasure is a directory delete, not a rewrite)")
-    val parentOf = regexp_extract(col("p"), "^(.*)/[^/]+$", 1)
-    val files = spark.read.parquet(root)
-      .select(col(keyCol), expr("_metadata.file_path").as("p"))
-    val allDirs = files.select(parentOf.as("dir")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val affected = files.join(tomb, Seq(keyCol), "left_semi")
-      .select(parentOf.as("dir")).distinct()
-      .collect().map(_.getString(0)).sorted
-    val rootUri = fs.makeQualified(rootPath).toString
-    affected.foreach { d =>
-      require(fs.makeQualified(new org.apache.hadoop.fs.Path(d))
-          .toString != rootUri,
-        s"$table is not hive-partitioned (data files sit directly under " +
-          s"$root) — use Erasure.forget, which rewrites the whole table")
+      val beforeAll = spark.read.parquet(root)
+      val fullSchema = beforeAll.schema // incl. partition columns — keeps
+      // a fully-emptied layout readable (same rationale as [[forget]])
+      val rowsBefore = beforeAll.count()
+      affected.foreach { d =>
+        val dir = new org.apache.hadoop.fs.Path(d)
+        val scratch = new org.apache.hadoop.fs.Path(
+          dir.getParent, s"_forget_scratch_${dir.getName}")
+        val old = new org.apache.hadoop.fs.Path(
+          dir.getParent, s"_forget_old_${dir.getName}")
+        // read the leaf dir directly: data columns only (partition
+        // values live in the dir name, which the swap preserves)
+        spark.read.parquet(d).join(tomb, Seq(keyCol), "left_anti")
+          .write.parquet(scratch.toString)
+        swapIn(fs, scratch, dir, old)
+      }
+      val after = spark.read.schema(fullSchema).parquet(root)
+      PartitionedReport(table,
+        affected.length.toLong, (allDirs.size - affected.length).toLong,
+        rowsBefore, after.count(),
+        after.join(tomb, Seq(keyCol), "left_semi").count())
     }
-    val beforeAll = spark.read.parquet(root)
-    val fullSchema = beforeAll.schema // incl. partition columns — keeps
-    // a fully-emptied layout readable (same rationale as [[forget]])
-    val rowsBefore = beforeAll.count()
-    affected.foreach { d =>
-      val dir = new org.apache.hadoop.fs.Path(d)
-      val scratch = new org.apache.hadoop.fs.Path(
-        dir.getParent, s"_forget_scratch_${dir.getName}")
-      val old = new org.apache.hadoop.fs.Path(
-        dir.getParent, s"_forget_old_${dir.getName}")
-      // read the leaf dir directly: data columns only (partition
-      // values live in the dir name, which the swap preserves)
-      spark.read.parquet(d).join(tomb, Seq(keyCol), "left_anti")
-        .write.parquet(scratch.toString)
-      swapIn(fs, scratch, dir, old)
-    }
-    val after = spark.read.schema(fullSchema).parquet(root)
-    PartitionedReport(table,
-      affected.length.toLong, (allDirs.size - affected.length).toLong,
-      rowsBefore, after.count(),
-      after.join(tomb, Seq(keyCol), "left_semi").count())
   }
 
   /** Redact a key's CHANGE HISTORY from the retained feed — the last
@@ -397,66 +404,67 @@ object Erasure {
     require(tombstones.columns.toSeq == Seq("key"),
       s"tombstone frame must have exactly one column 'key', got " +
         tombstones.columns.mkString("[", ", ", "]"))
-    val tomb = tombstones.localCheckpoint(true)
-    import graft.streaming.ChangeFeed
-    val conf = spark.sparkContext.hadoopConfiguration
-    // crash recovery BEFORE discovery: an attempt that died mid-swap
-    // left the original ABSENT and the data in its _redact_old_ twin —
-    // such a file would not even appear in the discovery scan, so the
-    // orphan sweep must run first (restore when the original is
-    // missing, drop when the swap completed and only cleanup died)
-    val feedPath = new org.apache.hadoop.fs.Path(feedDir)
-    val feedFs = feedPath.getFileSystem(conf)
-    if (feedFs.exists(feedPath)) feedFs.listStatus(feedPath).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("_redact_old_")) {
-        val orig = new org.apache.hadoop.fs.Path(
-          st.getPath.getParent, nm.stripPrefix("_redact_old_"))
-        if (!feedFs.exists(orig)) {
-          if (!feedFs.rename(st.getPath, orig))
-            throw new java.io.IOException(
-              s"redaction crash recovery failed: ${st.getPath} -> $orig " +
-                "returned false")
-        } else feedFs.delete(st.getPath, false)
-      } else if (nm.startsWith("_redact_scratch_")) {
-        feedFs.delete(st.getPath, true)
+    pinned(tombstones) { tomb =>
+      import graft.streaming.ChangeFeed
+      val conf = spark.sparkContext.hadoopConfiguration
+      // crash recovery BEFORE discovery: an attempt that died mid-swap
+      // left the original ABSENT and the data in its _redact_old_ twin —
+      // such a file would not even appear in the discovery scan, so the
+      // orphan sweep must run first (restore when the original is
+      // missing, drop when the swap completed and only cleanup died)
+      val feedPath = new org.apache.hadoop.fs.Path(feedDir)
+      val feedFs = feedPath.getFileSystem(conf)
+      if (feedFs.exists(feedPath)) feedFs.listStatus(feedPath).foreach { st =>
+        val nm = st.getPath.getName
+        if (nm.startsWith("_redact_old_")) {
+          val orig = new org.apache.hadoop.fs.Path(
+            st.getPath.getParent, nm.stripPrefix("_redact_old_"))
+          if (!feedFs.exists(orig)) {
+            if (!feedFs.rename(st.getPath, orig))
+              throw new java.io.IOException(
+                s"redaction crash recovery failed: ${st.getPath} -> $orig " +
+                  "returned false")
+          } else feedFs.delete(st.getPath, false)
+        } else if (nm.startsWith("_redact_scratch_")) {
+          feedFs.delete(st.getPath, true)
+        }
       }
+      // discovery: one distributed pass — the metadata column is bound
+      // on the file-scan relation BEFORE the join so it resolves
+      val affected = ChangeFeed.readAll(spark, feedDir)
+        .filter(col("table") === lit(table))
+        .select(col("key"), expr("_metadata.file_path").as("path"))
+        .join(tomb, Seq("key"), "left_semi")
+        .select("path").distinct()
+        .collect().map(_.getString(0)).sorted
+      var removed = 0L
+      affected.foreach { p =>
+        // _metadata.file_path may carry URI-encoded forms — hand the raw
+        // string to Hadoop's lenient Path parser (the prune discipline)
+        val orig = new org.apache.hadoop.fs.Path(p)
+        val fs = orig.getFileSystem(conf)
+        val scratchDir = new org.apache.hadoop.fs.Path(
+          orig.getParent, s"_redact_scratch_${orig.getName}")
+        val oldAside = new org.apache.hadoop.fs.Path(
+          orig.getParent, s"_redact_old_${orig.getName}")
+        // (crash leftovers were swept/restored up front — discovery ran
+        // on clean state, so no per-file recovery is needed here)
+        val file = spark.read.schema(ChangeFeed.schema).json(p)
+        removed += file.filter(col("table") === lit(table))
+          .join(tomb, Seq("key"), "left_semi").count()
+        file.join(tomb.withColumnRenamed("key", "_tk"),
+            col("key") === col("_tk") && col("table") === lit(table), "left_anti")
+          .select(ChangeFeed.schema.fieldNames.map(col).toSeq: _*)
+          .coalesce(1).write.json(scratchDir.toString)
+        val part = fs.listStatus(scratchDir)
+          .map(_.getPath).filter(_.getName.startsWith("part-"))
+          .headOption.getOrElse(throw new java.io.IOException(
+            s"redaction write produced no part file in $scratchDir"))
+        swapIn(fs, part, orig, oldAside)
+        fs.delete(scratchDir, true)
+      }
+      (affected.length.toLong, removed)
     }
-    // discovery: one distributed pass — the metadata column is bound
-    // on the file-scan relation BEFORE the join so it resolves
-    val affected = ChangeFeed.readAll(spark, feedDir)
-      .filter(col("table") === lit(table))
-      .select(col("key"), expr("_metadata.file_path").as("path"))
-      .join(tomb, Seq("key"), "left_semi")
-      .select("path").distinct()
-      .collect().map(_.getString(0)).sorted
-    var removed = 0L
-    affected.foreach { p =>
-      // _metadata.file_path may carry URI-encoded forms — hand the raw
-      // string to Hadoop's lenient Path parser (the prune discipline)
-      val orig = new org.apache.hadoop.fs.Path(p)
-      val fs = orig.getFileSystem(conf)
-      val scratchDir = new org.apache.hadoop.fs.Path(
-        orig.getParent, s"_redact_scratch_${orig.getName}")
-      val oldAside = new org.apache.hadoop.fs.Path(
-        orig.getParent, s"_redact_old_${orig.getName}")
-      // (crash leftovers were swept/restored up front — discovery ran
-      // on clean state, so no per-file recovery is needed here)
-      val file = spark.read.schema(ChangeFeed.schema).json(p)
-      removed += file.filter(col("table") === lit(table))
-        .join(tomb, Seq("key"), "left_semi").count()
-      file.join(tomb.withColumnRenamed("key", "_tk"),
-          col("key") === col("_tk") && col("table") === lit(table), "left_anti")
-        .select(ChangeFeed.schema.fieldNames.map(col).toSeq: _*)
-        .coalesce(1).write.json(scratchDir.toString)
-      val part = fs.listStatus(scratchDir)
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .headOption.getOrElse(throw new java.io.IOException(
-          s"redaction write produced no part file in $scratchDir"))
-      swapIn(fs, part, orig, oldAside)
-      fs.delete(scratchDir, true)
-    }
-    (affected.length.toLong, removed)
   }
 
   /** Erase keys from a [[graft.streaming.KeyedParquetStore]] table by
@@ -497,31 +505,32 @@ object Erasure {
       : DataFrame = {
     require(tombstones.columns.length == 1,
       "tombstone frame must have exactly one column (the key)")
-    val tomb = tombstones.localCheckpoint(true)
-    def residue(df: DataFrame, keyCol: String): Long =
-      df.join(tomb.toDF(keyCol), Seq(keyCol), "left_semi").count()
-    val rows =
-      corpus.map { case (d, t, k) =>
-        ("corpus", s"$d/$t.parquet", residue(spark.read.parquet(s"$d/$t.parquet"), k))
-      } ++
-      store.map { case (s, t, k) =>
-        ("store", s"${s.root}/$t", residue(s.read(spark, t), k))
-      } ++
-      feeds.map { case (f, t) =>
-        ("feed", s"$f/$t", residue(graft.streaming.ChangeFeed.readAll(spark, f)
-          .filter(col("table") === lit(t)), "key"))
-      } ++
-      jdbc.map { case (url, t, k, props) =>
-        // JDBC column case differs per engine (Derby upper-cases) —
-        // match the key column case-insensitively
-        val df = graft.sources.Tables.jdbc(spark, url, t, props)
-        val kc = df.columns.find(_.equalsIgnoreCase(k)).getOrElse(k)
-        ("jdbc", s"$url/$t", residue(df.withColumnRenamed(kc, k), k))
-      }
-    import spark.implicits._
-    rows.toDF("surface", "location", "residue")
-      .withColumn("clean", col("residue") === 0L)
-      .orderBy("surface", "location")
+    pinned(tombstones) { tomb =>
+      def residue(df: DataFrame, keyCol: String): Long =
+        df.join(tomb.toDF(keyCol), Seq(keyCol), "left_semi").count()
+      val rows =
+        corpus.map { case (d, t, k) =>
+          ("corpus", s"$d/$t.parquet", residue(spark.read.parquet(s"$d/$t.parquet"), k))
+        } ++
+        store.map { case (s, t, k) =>
+          ("store", s"${s.root}/$t", residue(s.read(spark, t), k))
+        } ++
+        feeds.map { case (f, t) =>
+          ("feed", s"$f/$t", residue(graft.streaming.ChangeFeed.readAll(spark, f)
+            .filter(col("table") === lit(t)), "key"))
+        } ++
+        jdbc.map { case (url, t, k, props) =>
+          // JDBC column case differs per engine (Derby upper-cases) —
+          // match the key column case-insensitively
+          val df = graft.sources.Tables.jdbc(spark, url, t, props)
+          val kc = df.columns.find(_.equalsIgnoreCase(k)).getOrElse(k)
+          ("jdbc", s"$url/$t", residue(df.withColumnRenamed(kc, k), k))
+        }
+      import spark.implicits._
+      rows.toDF("surface", "location", "residue")
+        .withColumn("clean", col("residue") === 0L)
+        .orderBy("surface", "location")
+    }
   }
 
   /** Erase keys from a JDBC mirror TARGET — the database-parity sink

@@ -1202,7 +1202,9 @@ object SimilarityQueries {
   }
 
   /** s22's oracle: MMR greedy UNROLLED to k=5 — `pool` is the top-20
-    * relevance cut, `ps` the pool-internal pairwise sims (both floored
+    * relevance cut, `pc` the pool's components (filtered before the
+    * self-join, so the join never spans every vector), `ps` the
+    * pool-internal pairwise sims (both floored
     * to ppm off bit-identical IEEE divisions of exact integers), `m_i`
     * the running max-sim after i selections, `s_{i+1}` the argmax of
     * 7·rel − 3·maxsim with the engine's (score DESC, id ASC)
@@ -1221,11 +1223,11 @@ object SimilarityQueries {
           CAST(FLOOR(dot / (qn.norm * vn.norm) * 1000000) AS BIGINT) AS rel_ppm
         FROM da JOIN n qn ON qn.vec_id = 0 JOIN n vn ON vn.vec_id = id),
       pool AS (SELECT id, rel_ppm FROM rel ORDER BY rel_ppm DESC, id LIMIT 20),
+      pc AS (SELECT c.* FROM c JOIN pool ON c.vec_id = pool.id),
       ps AS (
         SELECT a.vec_id AS ia, b.vec_id AS ib,
           CAST(FLOOR(SUM(a.q * b.q) / (na.norm * nb.norm) * 1000000) AS BIGINT) AS sim_ppm
-        FROM c a JOIN c b ON a.idx = b.idx AND a.vec_id <> b.vec_id
-        JOIN pool pa ON a.vec_id = pa.id JOIN pool pb ON b.vec_id = pb.id
+        FROM pc a JOIN pc b ON a.idx = b.idx AND a.vec_id <> b.vec_id
         JOIN n na ON na.vec_id = a.vec_id JOIN n nb ON nb.vec_id = b.vec_id
         GROUP BY a.vec_id, b.vec_id, na.norm, nb.norm),
       s1 AS (SELECT id, rel_ppm FROM pool ORDER BY rel_ppm DESC, id LIMIT 1),

@@ -231,9 +231,10 @@ object CdcPipeline {
     * postgresql.conf:3 — merge the old value back at the target). A
     * sink that upserts the marker verbatim silently corrupts every
     * wide-text column on its first partial UPDATE, so the apply path
-    * must COALESCE the marker with the row's previous image:
-    * first the key's own earlier events in the same batch, then the
-    * target's stored row ([[applyBatch]]). Scope: StringType columns —
+    * carries the previous value into a marked column: the key's
+    * highest-ranked unmarked value in the batch, the target's stored
+    * row ranked lowest, in the store's one merge shuffle
+    * ([[KeyedParquetStore.merge]] `carry`). Scope: StringType columns —
     * TOAST applies to varlena types, which this engine's feed models
     * as JSON strings.
     *
@@ -242,8 +243,8 @@ object CdcPipeline {
     * is a raw substring test on the JSON after-image. Producers must
     * never emit this string as ORGANIC data — an organic exact match
     * would silently inherit an older image, and an organic substring
-    * occurrence merely re-routes the slice through the heavier (still
-    * correct) marker-resolution path. The feed publishers
+    * occurrence merely adds the carry aggregates to the slice's merge
+    * (still correct). The feed publishers
     * ([[ChangeFeed.publish]]/[[ChangeFeed.publishTransactional]]) are
     * deliberately NOT gated: the marker is legitimate feed content (a
     * real decoder writes it), and a publish-side organic/marker
@@ -260,8 +261,9 @@ object CdcPipeline {
     * markers: per key, the max-LSN winner's marked columns resolve to
     * that key's last UNMARKED value in the slice (by LSN, deletes
     * excluded); a column marked in EVERY event of the slice keeps the
-    * marker, so a store-backed caller ([[applyBatch]]) can finish the
-    * resolution against the target's current row. Output shape matches
+    * marker, so a caller with a target ([[asOf]],
+    * [[JdbcMirror.applyEnvelopeBatch]]) can finish the resolution
+    * against its current row. Output shape matches
     * [[lastImagePerKey]] exactly.
     *
     * One hash aggregate on the key — the same single shuffle as the
@@ -344,10 +346,11 @@ object CdcPipeline {
     * neither lookup can satisfy fails loudly: Postgres only omits a
     * TOAST value for a row that exists, so reaching that state means
     * the feed and the target have diverged — upserting the marker (or
-    * null) would be silent corruption. The joins are broadcast-shaped
-    * in practice (one batch's marked keys vs the store), and only run
-    * on the applyBatch slices whose driver-pass marker count was
-    * non-zero. */
+    * null) would be silent corruption. Callers: [[asOf]] (against the
+    * snapshot image) and [[JdbcMirror.applyEnvelopeBatch]] (against
+    * the target table, on slices with markers). The parquet store
+    * applies the same rule, in the same lookup order, inside its merge
+    * ([[KeyedParquetStore.merge]] `carry` and `movedKeys`). */
   private[streaming] def resolveToastAgainstCurrent(
       img: DataFrame, current: DataFrame, schema: StructType,
       keyCol: String): DataFrame = {
@@ -409,25 +412,17 @@ object CdcPipeline {
     * whether the key's LAST event was a delete, [[SyncedLsnCol]] is
     * that last event's LSN. A re-insert after a delete flips the flag
     * back with the new image — same max-LSN rule as everywhere else.
-    * A delete with NO in-slice image leaves the data columns null;
-    * [[applyBatchSoft]] finishes those from the store's current row
-    * (retain-what-it-died-with), and a tombstone for a key the target
-    * never saw keeps the nulls — an honest record of "deleted before
-    * first sync", not corruption, so no loud failure (contrast
-    * [[resolveToastAgainstCurrent]], where a hole would OVERWRITE real
-    * data). Key-changing updates expand first, so the OLD key stays
-    * behind as a flagged tombstone — exactly what an auditable target
-    * wants from a PK change. Same single key-shuffle hash aggregate
-    * as [[lastImageResolvingToast]]. */
+    * A delete with NO in-slice image leaves the data columns null
+    * ([[applyBatchSoft]]'s merge carries them from the stored row
+    * instead — retain-what-it-died-with), and a tombstone for a key
+    * the target never saw keeps the nulls — an honest record of
+    * "deleted before first sync", not corruption, so no loud failure
+    * (contrast [[resolveToastAgainstCurrent]], where a hole would
+    * OVERWRITE real data). Key-changing updates expand first, so the
+    * OLD key stays behind as a flagged tombstone — exactly what an
+    * auditable target wants from a PK change. Same single key-shuffle
+    * hash aggregate as [[lastImageResolvingToast]]. */
   def softImagePerKey(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    softImageWithPresence(events, schema, keyCol).drop("_has_image")
-
-  /** [[softImagePerKey]] plus an internal `_has_image` flag (whether
-    * any in-slice non-delete image existed) so [[applyBatchSoft]]'s
-    * store fallback can tell an imageless tombstone from a real image
-    * whose fields are legitimately null. */
-  private def softImageWithPresence(
       events: DataFrame, schema: StructType, keyCol: String): DataFrame = {
     val parsed = normalizeKeyChanges(events)
       .withColumn("_row", from_json(col("after"), schema))
@@ -440,11 +435,7 @@ object CdcPipeline {
         else col("_c.r").getField(f).as(f)
       } ++ Seq(
         (col("_w.o") === "D").as(SoftDeleteCol),
-        col("_w.l").as(SyncedLsnCol),
-        // internal: whether ANY in-slice image existed — the store
-        // fallback must not splice stored values into a real image
-        // whose fields are legitimately null
-        col("_c").isNotNull.as("_has_image")): _*)
+        col("_w.l").as(SyncedLsnCol)): _*)
   }
 
   /** [[snapshot]] for a soft-delete mirror: the initial image lands
@@ -465,84 +456,23 @@ object CdcPipeline {
   /** [[applyBatch]] in soft-delete mode: every key's converged change
     * lands as an UPSERT — deletes flip [[SoftDeleteCol]] instead of
     * removing the row, so the target is append-safe for audit and
-    * reversible reads (filter `NOT _deleted` for the live view). The
-    * store-fallback join (a deleted key retains the image it died
-    * with even when the delete was the batch's only event for it) is
-    * gated on the slice's delete count — insert/update-only batches,
-    * the steady state, skip it. Idempotent: a replayed batch
-    * reconverges because the fallback reads data columns the first
-    * apply already wrote. */
+    * reversible reads (filter `NOT _deleted` for the live view). It
+    * is [[applyBatch]]'s one merge with the soft rule: the winning
+    * event's op sets [[SoftDeleteCol]] and its LSN [[SyncedLsnCol]],
+    * deletes are kept, and every data column carries the key's last
+    * non-delete image, the stored row included — so a tombstone keeps
+    * the image it died with even when the delete was the batch's only
+    * event for its key, and a key the target never saw dies with
+    * nulls. Same 4 jobs as a steady [[applyBatch]], with or without
+    * deletes. Idempotent: a replayed batch reconverges because the
+    * carry reads data columns the first apply already wrote. */
   def applyBatchSoft(
       batch: DataFrame,
       store: KeyedParquetStore,
       schemas: Map[String, StructType],
       keyCols: Map[String, String]): Unit =
-    withPinnedBatch(batch, storeBucket(store, schemas, keyCols)) { (pinned, slices) =>
-      val spark = pinned.sparkSession
-      // a key-change U counts as a delete too: the expansion emits
-      // D(beforeKey), whose tombstone needs the same store fallback
-      val isDel = col("op") === "D" || keyMove(pinned)
-      slices.foreach { case (table, SliceStats(_, _, dels, toasts, _, buckets)) =>
-        // soft mode carries the winner's whole image; per-column TOAST
-        // inheritance is not wired here — upserting a marker would be
-        // silent corruption, so reject the batch loudly instead
-        require(toasts == 0L,
-          s"table '$table': $toasts unchanged-TOAST marker(s) in a " +
-            "soft-delete apply - marker resolution is not supported on " +
-            "the soft-delete path; resolve markers upstream " +
-            "(lastImageResolvingToast) or mirror this table with " +
-            "applyBatch")
-        // soft mode's contract is positional: the store must have been
-        // seeded via [[snapshotSoft]] (or a prior soft apply). Against a
-        // plain-snapshot store the merge would additively WIDEN the
-        // schema and every pre-existing row would read `_deleted = NULL`
-        // — which the documented live view `NOT _deleted` silently
-        // drops (NULL is not false). Fail loudly instead.
-        if (store.exists(spark, table)) {
-          val stored = store.schemaOf(spark, table).fieldNames
-          require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
-            s"table '$table': store is not soft-delete seeded (missing " +
-              s"$SoftDeleteCol/$SyncedLsnCol) - merging softly would leave " +
-              "pre-existing rows with a NULL deleted flag, silently absent " +
-              "from the live view; seed with snapshotSoft (or resync) " +
-              "before applyBatchSoft")
-        }
-        val schema = schemas(table)
-        val keyCol = keyCols(table)
-        val dataCols = schema.fieldNames.toSeq.filterNot(_ == keyCol)
-        val img = softImageWithPresence(
-          pinned.filter(col("table") === table), schema, keyCol)
-        val filled =
-          if (dels == 0L || !store.exists(spark, table))
-            img.drop("_has_image")
-          else {
-            // bucket-pruned fallback read: only buckets the DELETE
-            // rows' keys (incl. key-change beforeKeys) hash to
-            val kType = schema(keyCol).dataType
-            val delRows = pinned.filter(col("table") === table && isDel)
-            val probe = (if (pinned.columns.contains("beforeKey"))
-              delRows.select(col("key").as("k"))
-                .unionByName(delRows.select(
-                  coalesce(col("beforeKey"), col("key")).as("k")))
-            else delRows.select(col("key").as("k")))
-              .select(col("k").cast(kType).as("k"))
-            val cur = store.readForKeys(spark, table, probe, "k").select(
-              col(keyCol).as("_cur_key") +:
-                dataCols.map(c => col(c).as(s"_cur_$c")): _*)
-            img.join(cur, img(keyCol) === cur("_cur_key"), "left")
-              .select(col(keyCol) +: (dataCols.map { f =>
-                // only an IMAGELESS tombstone inherits — any in-batch
-                // image is authoritative even where its fields are null
-                when(col(SoftDeleteCol) && !col("_has_image"), col(s"_cur_$f"))
-                  .otherwise(col(f)).as(f)
-              } ++ Seq(col(SoftDeleteCol), col(SyncedLsnCol))): _*)
-          }
-        // one row per key, and its keys are the slice's keys
-        store.merge(spark, table, filled.withColumn("op", lit("U")), keyCol,
-          touchedHint = Some(buckets.toSeq))
-      }
-      recordApplied(store, spark, slices)
-    }
+    applyTables(batch, store, schemas, keyCols,
+      KeyedParquetStore.DropPolicy.KeepNullFill, soft = true)
 
   /** RETENTION SWEEP for soft-delete mode — the VACUUM the soft target
     * needs: under churn, `_deleted` tombstones accumulate FOREVER (a
@@ -641,16 +571,21 @@ object CdcPipeline {
 
   /** One table's slice of a micro-batch, folded in the job that pins
     * the batch: its max LSN (the applied-watermark input), key-moving
-    * UPDATE count, delete count (a key move deletes its old key),
-    * unchanged-TOAST marker count, max source commit time, and the
-    * store buckets its keys hash to, the old keys of moves included. */
+    * UPDATE count, count of those moves that carry an unchanged-TOAST
+    * marker, marker count, max source commit time, and the store
+    * buckets its keys hash to, the old keys of moves included. */
   private[streaming] final case class SliceStats(maxLsn: Long, moves: Long,
-      deletes: Long, toasts: Long, maxCommitTs: Option[java.sql.Timestamp],
+      markedMoves: Long, toasts: Long, maxCommitTs: Option[java.sql.Timestamp],
       buckets: Set[Int]) {
     def +(o: SliceStats): SliceStats = SliceStats(maxLsn.max(o.maxLsn),
-      moves + o.moves, deletes + o.deletes, toasts + o.toasts,
+      moves + o.moves, markedMoves + o.markedMoves, toasts + o.toasts,
       (maxCommitTs ++ o.maxCommitTs).maxByOption(_.getTime), buckets ++ o.buckets)
   }
+
+  // whether an event's after-image carries an unchanged-TOAST marker:
+  // a raw-JSON substring test, no parse, and the sentinel cannot
+  // appear in organic data (it is this engine's own marker)
+  private def marked: Column = coalesce(col("after").contains(UnchangedToast), lit(false))
 
   /** The bucket of envelope column `c` (`key` or `beforeKey`) in
     * `store`, per table. `hash()` is type-sensitive (`hash("1") !=
@@ -664,10 +599,10 @@ object CdcPipeline {
     }
 
   /** Pin a micro-batch, run `body` over it with its per-table
-    * [[SliceStats]], then free its blocks. Downstream needs several
-    * passes (table fan-out, merge, TOAST and soft-delete lookups);
-    * without pinning, each re-executes the source scan — 3–5× read
-    * amplification per batch (observed via
+    * [[SliceStats]], then free its blocks. Downstream reads it once
+    * per table slice (and once more for a slice's marked key moves);
+    * without pinning, each read re-executes the source scan — 3–5×
+    * read amplification per batch (observed via
     * StreamingQueryProgress.numInputRows). The one job that stores the
     * batch also folds the stats ([[Checkpointing.materializeWith]]),
     * bounded by tables × buckets, so the fan-out costs no job of its
@@ -684,11 +619,7 @@ object CdcPipeline {
     // commitTs guard mirrors beforeKey's: a hand-built envelope frame
     // may omit the column — the time-lag metric then reads unknown
     val stats = Checkpointing.Fold[Map[String, SliceStats]](Seq(
-      col("table"), col("lsn"), move,
-      coalesce(col("op") === "D", lit(false)) || move,
-      // raw-JSON substring test: no parse, and the sentinel cannot
-      // appear in organic data (it is this engine's own marker)
-      coalesce(col("after").contains(UnchangedToast), lit(false)),
+      col("table"), col("lsn"), move, move && marked, marked,
       if (batch.columns.contains("commitTs")) col("commitTs")
       else lit(null).cast("timestamp"),
       bucketOf("key"),
@@ -734,15 +665,17 @@ object CdcPipeline {
     *
     * Steady batch, 4 jobs: the batch pin, whose job also folds the
     * fan-out ([[withPinnedBatch]]), then per table the merge's shuffle
-    * map stage, its pin and its write. A slice without TOAST markers
-    * hands its parsed events to the merge ranked by LSN, so the
-    * last-write-wins dedup rides the merge's own bucket shuffle; key
-    * moves are expanded first ([[normalizeKeyChanges]]; both halves
-    * carry the event's LSN and address different keys). Only a slice
-    * with markers resolves them per key first
-    * ([[lastImageToastWithResolveKey]], [[resolveToastAgainstCurrent]]).
-    * Every path's merged keys are the slice's keys, old keys of moves
-    * included, so the folded bucket set is the merge's exact hint.
+    * map stage, its pin and its write. Each slice hands its parsed
+    * events to the merge ranked by LSN, so the last-write-wins dedup
+    * rides the merge's own bucket shuffle; key moves are expanded
+    * first ([[normalizeKeyChanges]]; both halves carry the event's LSN
+    * and address different keys). A slice with TOAST markers adds the
+    * merge's `carry` rule for its string columns on the same shuffle
+    * ([[UnchangedToast]]), so it runs the same 4 jobs; a marked key
+    * move also brings its old key's stored row in under the new key
+    * (`movedKeys`, one broadcast job more). Every slice's merged keys
+    * are the slice's keys, old keys of moves included, so the folded
+    * bucket set is the merge's exact hint.
     *
     * `dropPolicy`: change images are parsed with the source's DECLARED
     * schema (`schemas`), so a stored column absent from it means the
@@ -757,39 +690,61 @@ object CdcPipeline {
       keyCols: Map[String, String],
       dropPolicy: KeyedParquetStore.DropPolicy =
         KeyedParquetStore.DropPolicy.KeepNullFill): Unit =
+    applyTables(batch, store, schemas, keyCols, dropPolicy, soft = false)
+
+  /** The per-table body of [[applyBatch]] and [[applyBatchSoft]]: one
+    * [[KeyedParquetStore.merge]] per slice, fed the slice's parsed
+    * events ranked by LSN. */
+  private def applyTables(batch: DataFrame, store: KeyedParquetStore,
+      schemas: Map[String, StructType], keyCols: Map[String, String],
+      dropPolicy: KeyedParquetStore.DropPolicy, soft: Boolean): Unit =
     withPinnedBatch(batch, storeBucket(store, schemas, keyCols)) { (pinned, slices) =>
       val spark = pinned.sparkSession
       slices.foreach { case (table, s) =>
+        if (soft) {
+          // the soft path does not resolve unchanged-TOAST markers —
+          // upserting one would be silent corruption, so reject the
+          // batch loudly instead
+          require(s.toasts == 0L,
+            s"table '$table': ${s.toasts} unchanged-TOAST marker(s) in a " +
+              "soft-delete apply - marker resolution is not supported on " +
+              "the soft-delete path; resolve markers upstream " +
+              "(lastImageResolvingToast) or mirror this table with " +
+              "applyBatch")
+          // soft mode's contract is positional: the store must have been
+          // seeded via [[snapshotSoft]] (or a prior soft apply). Against a
+          // plain-snapshot store the merge would additively WIDEN the
+          // schema and every pre-existing row would read `_deleted = NULL`
+          // — which the documented live view `NOT _deleted` silently
+          // drops (NULL is not false). Fail loudly instead.
+          if (store.exists(spark, table)) {
+            val stored = store.schemaOf(spark, table).fieldNames
+            require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
+              s"table '$table': store is not soft-delete seeded (missing " +
+                s"$SoftDeleteCol/$SyncedLsnCol) - merging softly would leave " +
+                "pre-existing rows with a NULL deleted flag, silently absent " +
+                "from the live view; seed with snapshotSoft (or resync) " +
+                "before applyBatchSoft")
+          }
+        }
         val (schema, keyCol) = (schemas(table), keyCols(table))
         val slice = pinned.filter(col("table") === table)
-        val hint = Some(s.buckets.toSeq)
-        if (s.toasts > 0L) {
-          val img = lastImageToastWithResolveKey(slice, schema, keyCol)
-          // bucket-pruned store read: only buckets the MARKED rows'
-          // lookup keys (own key + beforeKey) hash to are opened —
-          // at scale the fallback join reads O(marked buckets), not
-          // the table
-          val marked = slice.filter(col("after").contains(UnchangedToast))
-          val probe = (if (slice.columns.contains("beforeKey"))
-            marked.select(col("key").as("k"))
-              .unionByName(marked.select(
-                coalesce(col("beforeKey"), col("key")).as("k")))
-          else marked.select(col("key").as("k")))
-            .select(col("k").cast(schema(keyCol).dataType).as("k"))
-          val current =
-            if (store.exists(spark, table))
-              store.readForKeys(spark, table, probe, "k")
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          store.merge(spark, table,
-            resolveToastAgainstCurrent(img, current, schema, keyCol),
-            keyCol, dropPolicy, hint)
-        } else {
-          val events = if (s.moves == 0L) slice else normalizeKeyChanges(slice)
-          store.merge(spark, table,
-            parseImages(events, schema, keyCol, col("lsn").as(LsnRank)),
-            keyCol, dropPolicy, hint, rankCol = Some(LsnRank))
+        val events = parseImages(if (s.moves == 0L) slice else normalizeKeyChanges(slice),
+          schema, keyCol, col("lsn").as(LsnRank))
+        // a marked key move inherits from its old key's stored row
+        val movedKeys = Option.when(s.markedMoves > 0L) {
+          val kType = schema(keyCol).dataType
+          slice.filter(keyMove(slice) && marked).select(
+            col("beforeKey").cast(kType).as("_from"), col("key").cast(kType).as("_to"))
         }
+        store.merge(spark, table,
+          if (!soft) events
+          else events.withColumn(SoftDeleteCol, col("op") === "D")
+            .withColumn(SyncedLsnCol, col(LsnRank)),
+          keyCol, dropPolicy, Some(s.buckets.toSeq), Some(LsnRank),
+          carry = if (soft) schema.fieldNames.toSeq.filterNot(_ == keyCol)
+            else if (s.toasts > 0L) toastableCols(schema, keyCol) else Nil,
+          movedKeys = movedKeys, keepDeletes = soft)
       }
       recordApplied(store, spark, slices)
     }
@@ -823,8 +778,10 @@ object CdcPipeline {
     *                  [[UnchangedToast]] markers (the feed retains
     *                  source events verbatim, so the markers ARE in the
     *                  retained history): winners resolve in-feed first,
-    *                  then against the snapshot image — the same
-    *                  two-step [[applyBatch]] runs. Off by default so
+    *                  then against the snapshot image — the carry rule
+    *                  [[applyBatch]]'s merge applies in its one
+    *                  shuffle, spelled here as two steps over a feed
+    *                  and a snapshot. Off by default so
     *                  marker-free feeds keep the plain window dedup
     *                  plan unchanged.
     */

@@ -136,9 +136,9 @@ object JdbcMirror {
     * pass a `tableNameOf` to map namespaces.
     *
     * Unchanged-TOAST markers ([[CdcPipeline.UnchangedToast]]) resolve
-    * exactly as on the parquet path: in-batch inheritance first, then
-    * the TARGET table's current rows (read back over the same JDBC
-    * connection properties) — so a psql→psql mirror keeps its wide
+    * by the parquet path's rule in two steps: in-batch inheritance
+    * first, then the TARGET table's current rows (read back over the
+    * same JDBC connection properties) — so a psql→psql mirror keeps its wide
     * text columns through partial UPDATEs, the behavior the reference
     * relies on (volumes/postgresql.conf:3). The read-back is gated on
     * a per-table marker count, so marker-free batches — the steady
@@ -149,8 +149,10 @@ object JdbcMirror {
     * by the micro-batch's marker count — and ship back as chunked
     * `WHERE <key> IN (…)` partition predicates
     * ([[keyInPredicates]]), one database-side index probe per chunk
-    * instead of a full table scan. The parquet analogue is
-    * [[KeyedParquetStore.readForKeys]]'s bucket prune. */
+    * instead of a full table scan. The parquet store needs no
+    * read-back: its merge already reads the touched buckets' rows and
+    * carries the stored value in the same shuffle
+    * ([[KeyedParquetStore.merge]] `carry`). */
   def applyEnvelopeBatch(
       batch: DataFrame,
       url: String,

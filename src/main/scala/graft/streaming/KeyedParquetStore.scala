@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 import graft.operators.Checkpointing
 
@@ -191,12 +191,12 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
 
   /** [[read]] restricted to the buckets that could hold any of
     * `keys` — a bucket=… PARTITION filter, so Spark prunes the other
-    * buckets' files before any read. For a lookup join against a
-    * small key set (a micro-batch's markers, a delete slice) this
-    * turns a full-table scan into O(buckets the keys hash to); the
-    * driver collect is bounded by nBuckets, exactly like [[merge]]'s
-    * touched-bucket pass. Falls back to the full [[read]] when the
-    * keys cover every bucket. */
+    * buckets' files before any read. For a point lookup of a small key
+    * set (a reader's probe keys) this turns a full-table scan into
+    * O(buckets the keys hash to); the driver collect is bounded by
+    * nBuckets. Falls back to the full [[read]] when the keys cover
+    * every bucket. The apply path never calls it: [[merge]] reads the
+    * touched buckets itself. */
   def readForKeys(spark: SparkSession, table: String, keys: DataFrame,
       keyCol: String): DataFrame = {
     val schema = schemaOf(spark, table)
@@ -284,17 +284,39 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * exactly-once on top of Spark's at-least-once foreachBatch
     * (SURVEY.md §2.8 C5).
     *
+    * `carry`: columns a winner may leave unset. Each takes the value
+    * of the highest-ranked row of its key (the winner first, the
+    * stored row last) that is not a delete and does not hold
+    * [[CdcPipeline.UnchangedToast]] there; an explicit NULL is a
+    * value. The rule is a whole-partition window aggregate on the
+    * same window as `row_number`, so it adds no exchange and no job.
+    * A winner that is not a delete and finds no value fails the pin's
+    * job (`raise_error`), before anything is written: Postgres omits
+    * a TOAST value only for a row that exists, so the feed and the
+    * target have diverged. `movedKeys` (`_from`, `_to` key columns):
+    * key moves whose new row may inherit from the old key's stored
+    * row; that row joins the union under the new key, ranked above
+    * the new key's own stored row (where a replay finds what the
+    * first apply moved), at the cost of one broadcast job.
+    *
+    * `keepDeletes` (soft-delete mode): a delete winner is kept, not
+    * dropped; the caller carries every data column, so a tombstone
+    * keeps the last image its key had, the stored row included.
+    *
     * `touchedHint`: the PRECOMPUTED bucket set of `changes`' keys
     * (`bucketExpr` over the key cast to the table's key type), which
     * skips this merge's own touched-bucket collect (2 jobs under AQE).
-    * The hint must be the EXACT bucket set of the keys in `changes`: a
-    * missing bucket would skip its stored rows and duplicate keys.
-    * [[CdcPipeline.applyBatch]] folds it into the job that pins the
-    * micro-batch. */
+    * The hint must be the EXACT bucket set of the keys in `changes`
+    * (and of `movedKeys`' old keys): a missing bucket would skip its
+    * stored rows and duplicate keys. [[CdcPipeline.applyBatch]] folds
+    * it into the job that pins the micro-batch. */
   def merge(spark: SparkSession, table: String, changes: DataFrame, keyCol: String,
       dropPolicy: DropPolicy = DropPolicy.KeepNullFill,
       touchedHint: Option[Seq[Int]] = None,
-      rankCol: Option[String] = None): Unit = {
+      rankCol: Option[String] = None,
+      carry: Seq[String] = Nil,
+      movedKeys: Option[DataFrame] = None,
+      keepDeletes: Boolean = false): Unit = {
     require(!changes.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
     val keyed = changes.withColumn("bucket", bucketOf(col(keyCol)))
@@ -326,15 +348,38 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
     val ranked =
       if (!onDisk) incoming
-      else alignTo(spark.read.schema(stored.get).parquet(path(table))
-        .filter(col("bucket").isin(touched: _*)), target,
-        lit(null).cast("string").as("op"), lit(null).cast(LongType).as(Rank))
-        .unionByName(incoming)
+      else {
+        val rows = spark.read.schema(stored.get).parquet(path(table))
+          .filter(col("bucket").isin(touched: _*))
+        def asStored(df: DataFrame, rank: Column) =
+          alignTo(df, target, lit(null).cast("string").as("op"), rank.cast(LongType).as(Rank))
+        val moved = movedKeys.map(m => asStored(
+          rows.join(broadcast(m), col(keyCol) === col("_from"))
+            .drop(keyCol, "bucket").withColumnRenamed("_to", keyCol)
+            .withColumn("bucket", bucketOf(col(keyCol))), lit(Long.MinValue)))
+        (asStored(rows, lit(null)) +: moved.toSeq :+ incoming).reduce(_ unionByName _)
+      }
+    val byKey = Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)
+    val isDelete = col("op") <=> "D"
+    val carried = carry.map { c =>
+      val holds = if (target(c).dataType != StringType) !isDelete
+        else !isDelete && !(col(c) <=> CdcPipeline.UnchangedToast)
+      first(when(holds, struct(col(c).as("v"))), ignoreNulls = true)
+        .over(byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .as(s"_carry_$c")
+    }
+    val winner = col("_rn") === 1
     val winners = ranked.repartition(col("bucket"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)))
-      .filter(col("_rn") === 1 && !(col("op") <=> "D"))
-      .drop("_rn", "op", Rank)
+      .select(col("*") +: row_number().over(byKey).as("_rn") +: carried: _*)
+      .filter(if (keepDeletes) winner else winner && !isDelete)
+      .select(target.fields.toSeq.map { f =>
+        if (!carry.contains(f.name)) col(f.name)
+        else when(col(s"_carry_${f.name}").isNull && !isDelete,
+          raise_error(lit(s"table '$table': unchanged-TOAST column '${f.name}' " +
+            "has no stored image to inherit from - feed and target have " +
+            "diverged; re-sync the table (KeyedParquetStore.resync)")).cast(f.dataType))
+          .otherwise(col(s"_carry_${f.name}.v")).as(f.name)
+      } :+ col("bucket"): _*)
 
     val pin = Checkpointing.materialize(winners, keysOf = Some("bucket"))
     try {

@@ -15,10 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
 
-/** The store's one-shuffle merge, as [[CdcPipeline.applyBatch]] drives
-  * it, against a control that never calls it: [[CdcPipeline.asOf]]
-  * over the snapshot and every event so far (its own window dedup and
-  * anti-join). Batch by batch the two must hold the same rows. */
+/** The store's one-shuffle merge, as [[CdcPipeline.applyBatch]] and
+  * [[CdcPipeline.applyBatchSoft]] drive it, against a control that
+  * never calls it: [[CdcPipeline.asOf]] over the snapshot and every
+  * event so far (its own window dedup, or TOAST resolution, and
+  * anti-join), or for soft mode [[CdcPipeline.softImagePerKey]] over
+  * every event. Batch by batch the two must hold the same rows. */
 class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
@@ -122,39 +124,170 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       lWide.map(f => f.name -> f.dataType))
   }
 
+  private val M = CdcPipeline.UnchangedToast
+  private val tSchema = StructType(Seq(StructField("id", LongType),
+    StructField("name", StringType), StructField("bio", StringType)))
+
+  private def tt(lsn: Long, op: String, k: Long, name: String = null, bio: String = null,
+      before: Option[Long] = None): ChangeEvent = {
+    def js(v: String) = if (v == null) "null" else s""""$v""""
+    ChangeEvent(lsn, ts(lsn), op, "t", k,
+      if (op == "D") null else s"""{"id":$k,"name":${js(name)},"bio":${js(bio)}}""", before)
+  }
+
+  /** Apply batch after batch, checking the store against `control`
+    * over the snapshot and every event fed so far. */
+  private def checker(store: KeyedParquetStore, apply: DataFrame => Unit,
+      control: DataFrame => DataFrame): (Seq[ChangeEvent], Boolean) => Unit = {
+    import spark.implicits._
+    val fed = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
+    (batch, replay) => {
+      apply(batch.toDF())
+      if (!replay) fed ++= batch
+      val got = sorted(store.read(spark, "t"), "id")
+      val want = sorted(control(fed.toSeq.toDF()), "id")
+      assert(got == want, s"after lsn ${fed.map(_.lsn).max}${if (replay) " (replay)" else ""}: " +
+        s"store=$got control=$want")
+    }
+  }
+
+  test("TOAST markers carried by the merge equal asOf(resolveToast = true), batch by " +
+    "batch: in-batch chain, stored fallback, stored NULL, in-batch NULL, a marked " +
+    "move and its replay, a move onto a key deleted in the batch, a marked batch " +
+    "that empties a bucket") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cdc_merge_toast").toString
+    val store = new KeyedParquetStore(root, nBuckets = 4)
+    val snap = (1L to 40L).map(i => (i, s"n$i", if (i == 3L) null else s"bio$i"))
+      .toDF("id", "name", "bio")
+    CdcPipeline.snapshot(spark, store, Map("t" -> snap), Map("t" -> "id"))
+    val check = checker(store,
+      CdcPipeline.applyBatch(_, store, Map("t" -> tSchema), Map("t" -> "id")),
+      all => CdcPipeline.asOf(snap, all, tSchema, "id", Long.MaxValue, resolveToast = true))
+
+    val batchA = Seq(
+      // in-batch chain: the last unmarked value of each column wins
+      tt(100, "U", 1, "a1", "x"), tt(101, "U", 1, "a2", M), tt(102, "U", 1, M, M),
+      // stored fallback, and a stored NULL inherited as NULL
+      tt(103, "U", 2, "b2", M), tt(104, "U", 3, "c3", M),
+      // an explicit NULL in the batch is a value
+      tt(105, "U", 4, "d4", null), tt(106, "U", 4, "d5", M),
+      // a fresh key inherits from its own insert
+      tt(107, "I", 50, "e", "y"), tt(108, "U", 50, "e2", M),
+      // a marked move inherits from the old key, an unmarked one not
+      tt(109, "U", 105, "m5", M, before = Some(5L)),
+      tt(110, "U", 106, "m6", "full", before = Some(6L)),
+      // a marked update, then a delete
+      tt(111, "U", 7, M, M), tt(112, "D", 7),
+      // a marked move onto a key deleted earlier in the batch: the old
+      // key's stored row outranks the new key's own
+      tt(113, "D", 9), tt(114, "U", 9, "m9", M, before = Some(10L)))
+    check(batchA, false)
+    val rows = store.read(spark, "t").as[(Long, String, String)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(rows(1L) == (("a2", "x")) && rows(2L) == (("b2", "bio2")) &&
+      rows(3L) == (("c3", null)) && rows(4L) == (("d5", null)) &&
+      rows(50L) == (("e2", "y")) && rows(105L) == (("m5", "bio5")) &&
+      rows(106L) == (("m6", "full")) && rows(9L) == (("m9", "bio10")) &&
+      !rows.contains(5L) && !rows.contains(7L) && !rows.contains(10L), rows)
+    // the replay finds the moved value under the new key
+    check(batchA, true)
+
+    val layout = spark.read.parquet(s"$root/t").select("id", "bucket").as[(Long, Int)]
+      .collect().toSeq
+    val b = layout.find(_._1 == 9L).get._2
+    val doomed = layout.collect { case (k, `b`) => k }.sorted
+    val marked = layout.collect { case (k, o) if o != b && k > 10L && k <= 40L => k }.take(3)
+    assert(doomed.size > 1 && marked.nonEmpty)
+    check(doomed.zipWithIndex.map { case (k, i) => tt(200L + i, "D", k) } ++
+      marked.zipWithIndex.map { case (k, i) => tt(300L + i, "U", k, s"u$k", M) }, false)
+    assert(spark.read.parquet(s"$root/t").filter(col("bucket") === b).count() == 0L,
+      s"bucket $b still holds rows")
+  }
+
+  test("soft-delete merge equals a softImagePerKey control, batch by batch: a " +
+    "delete-only key keeps its stored image, re-inserts, a move's tombstone, a " +
+    "never-seen key, a replay") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cdc_merge_soft").toString
+    val store = new KeyedParquetStore(root, nBuckets = 4)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType), StructField("amount", LongType)))
+    val snap = (1L to 20L).map(i => (i, s"n$i", i * 10)).toDF("id", "name", "amount")
+    CdcPipeline.snapshotSoft(spark, store, Map("t" -> snap), Map("t" -> "id"))
+    def ev(lsn: Long, op: String, k: Long, amount: Long = 0L, before: Option[Long] = None) =
+      ChangeEvent(lsn, ts(lsn), op, "t", k,
+        if (op == "D") null else s"""{"id":$k,"name":"v$lsn","amount":$amount}""", before)
+    // the control: softImagePerKey over every event; a key with no
+    // image in the feed takes its data from the snapshot (or nulls)
+    def control(all: DataFrame): DataFrame = {
+      val img = CdcPipeline.softImagePerKey(all, schema, "id")
+      val imaged = CdcPipeline.normalizeKeyChanges(all).filter(col("op") =!= "D")
+        .select(col("key").as("id"))
+      val meta = Seq(CdcPipeline.SoftDeleteCol, CdcPipeline.SyncedLsnCol)
+      snap.withColumn(meta(0), lit(false)).withColumn(meta(1), lit(0L))
+        .join(img.select("id"), Seq("id"), "left_anti")
+        .unionByName(img.join(imaged, Seq("id"), "left_semi"))
+        .unionByName(img.join(imaged, Seq("id"), "left_anti").select("id", meta: _*)
+          .join(snap, Seq("id"), "left"))
+    }
+    val check = checker(store,
+      CdcPipeline.applyBatchSoft(_, store, Map("t" -> schema), Map("t" -> "id")), control)
+
+    val batchA = Seq(ev(100, "D", 2), ev(101, "D", 3), ev(102, "I", 3, 33),
+      ev(103, "U", 105, 55, before = Some(5L)), ev(104, "D", 99),
+      ev(105, "U", 1, 11), ev(106, "D", 1), ev(107, "U", 4, 44))
+    check(batchA, false)
+    check(batchA, true)
+    val rows = store.read(spark, "t").collect().map(r => r.getLong(0) -> r).toMap
+    assert(rows(2L).getString(1) == "n2" && rows(2L).getBoolean(3) &&
+      rows(5L).getLong(2) == 50L && rows(5L).getBoolean(3) && rows(5L).getLong(4) == 103L &&
+      rows(99L).isNullAt(1) && rows(99L).getBoolean(3) &&
+      !rows(3L).getBoolean(3) && rows(1L).getLong(2) == 11L && rows(1L).getBoolean(3), rows)
+    // a later batch: re-insert a tombstone, delete the moved key and a
+    // key whose image the previous batch wrote
+    check(Seq(ev(200, "I", 2, 22), ev(201, "D", 105), ev(202, "D", 4)), false)
+  }
+
   test("plan shape: the merge's pinned plan shuffles once, the store write not at all") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_merge_plan").toString
-    val store = new KeyedParquetStore(root, nBuckets = 8)
-    val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)))
-    def batch(lsn0: Long) = (0 until 200).map { i =>
-      ChangeEvent(lsn0 + i, ts(i), if (i % 9 == 4) "D" else "U", "t", i % 50,
-        s"""{"id":${i % 50},"v":${lsn0 + i}}""")
-    }.toDF()
-    CdcPipeline.applyBatch(batch(1000L), store, Map("t" -> schema), Map("t" -> "id"))
+    // the second input carries TOAST markers on a string column, resolved
+    // from the stored rows: the carry rides the same window
+    Seq(false, true).foreach { toast =>
+      val root = Files.createTempDirectory("cdc_merge_plan").toString
+      val store = new KeyedParquetStore(root, nBuckets = 8)
+      val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)) ++
+        (if (toast) Seq(StructField("bio", StringType)) else Nil))
+      def batch(lsn0: Long) = (0 until 200).map { i =>
+        val bio = if (lsn0 > 1000L && i % 3 == 0) M else s"b$i"
+        ChangeEvent(lsn0 + i, ts(i), if (i % 9 == 4) "D" else "U", "t", i % 50,
+          s"""{"id":${i % 50},"v":${lsn0 + i}${if (toast) s""","bio":"$bio"""" else ""}}""")
+      }.toDF()
+      CdcPipeline.applyBatch(batch(1000L), store, Map("t" -> schema), Map("t" -> "id"))
 
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add((f, qe))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      CdcPipeline.applyBatch(batch(2000L), store, Map("t" -> schema), Map("t" -> "id"))
-      def mine = seen.toArray.toSeq.map(_.asInstanceOf[(String, QueryExecution)])
-        .filter(_._2.executedPlan.toString.contains(root))
-      var spins = 0
-      while (!mine.exists(_._1 == "command") && spins < 100) { Thread.sleep(100); spins += 1 }
-      def shuffles(qe: QueryExecution) =
-        collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }.size
-      val pins = mine.filter { case (f, qe) =>
-        f == "localCheckpoint" && collect(qe.executedPlan) { case w: WindowExec => w }.nonEmpty
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add((f, qe))
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-      assert(pins.size == 1, s"expected one merge pin, saw ${mine.map(_._1)}")
-      assert(shuffles(pins.head._2) == 1, pins.head._2.executedPlan.toString)
-      val writes = mine.filter(_._1 == "command")
-      assert(writes.size == 1, s"expected one store write, saw ${mine.map(_._1)}")
-      assert(shuffles(writes.head._2) == 0, writes.head._2.executedPlan.toString)
-    } finally spark.listenerManager.unregister(listener)
+      spark.listenerManager.register(listener)
+      try {
+        CdcPipeline.applyBatch(batch(2000L), store, Map("t" -> schema), Map("t" -> "id"))
+        def mine = seen.toArray.toSeq.map(_.asInstanceOf[(String, QueryExecution)])
+          .filter(_._2.executedPlan.toString.contains(root))
+        var spins = 0
+        while (!mine.exists(_._1 == "command") && spins < 100) { Thread.sleep(100); spins += 1 }
+        def shuffles(qe: QueryExecution) =
+          collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }.size
+        val pins = mine.filter { case (f, qe) =>
+          f == "localCheckpoint" && collect(qe.executedPlan) { case w: WindowExec => w }.nonEmpty
+        }
+        assert(pins.size == 1, s"expected one merge pin, saw ${mine.map(_._1)}")
+        assert(shuffles(pins.head._2) == 1, pins.head._2.executedPlan.toString)
+        val writes = mine.filter(_._1 == "command")
+        assert(writes.size == 1, s"expected one store write, saw ${mine.map(_._1)}")
+        assert(shuffles(writes.head._2) == 0, writes.head._2.executedPlan.toString)
+      } finally spark.listenerManager.unregister(listener)
+    }
   }
 }

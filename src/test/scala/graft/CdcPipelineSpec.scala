@@ -459,4 +459,41 @@ class CdcPipelineSpec extends AnyFunSuite {
     assert(state.size == 55 && (100 until 105).forall(k => state(k.toLong) == -1L),
       s"got ${state.toSeq.sorted.take(10)}")
   }
+
+  test("job-count gate: TOAST and soft-delete batches take the steady 4-job " +
+    "merge; a marked key move one broadcast job more") {
+    import spark.implicits._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType),
+      StructField("bio", StringType)))
+    val M = CdcPipeline.UnchangedToast
+    def ev(i: Int, op: String, k: Long, bio: String = "b", before: Option[Long] = None) =
+      ChangeEvent(2000L + i, ts(i), op, "t", k,
+        if (op == "D") null else s"""{"id":$k,"v":$i,"bio":"$bio"}""", before)
+    val updates = (10 until 200).map(i => ev(i, "U", i % 50))
+    val deletes = (0 until 5).map(i => ev(i, "D", 40L + i))
+    val marked = (0 until 10).map(i => ev(i, "U", i.toLong, M))
+    val markedMoves = (0 until 5).map(i => ev(i, "U", 100L + i, M, Some(i.toLong)))
+    // measured, identical in each of 3 runs: 4, 4, 4 and 5 jobs. The
+    // previous shape ran 8, 8, 5 and 8: the TOAST path's per-key
+    // aggregate, bucket collect and lookup joins, and the soft path's
+    // own aggregate and delete fallback join, before the merge
+    val shapes = Seq(
+      ("toast", false, marked ++ updates, 4),
+      ("soft_deletes", true, deletes ++ updates, 4),
+      ("soft", true, updates, 4),
+      ("marked_moves", false, markedMoves ++ updates, 5))
+    shapes.foreach { case (name, soft, events, bound) =>
+      val store = new KeyedParquetStore(
+        Files.createTempDirectory(s"cdc_jobs_$name").toString, nBuckets = 8)
+      val seed = Map("t" -> (0L until 50L).map(i => (i, i, s"b$i")).toDF("id", "v", "bio"))
+      if (soft) CdcPipeline.snapshotSoft(spark, store, seed, Map("t" -> "id"))
+      else CdcPipeline.snapshot(spark, store, seed, Map("t" -> "id"))
+      val cur = JobCount.of(spark, s"apply_jobcount_$name") {
+        if (soft) CdcPipeline.applyBatchSoft(events.toDF(), store,
+          Map("t" -> schema), Map("t" -> "id"))
+        else CdcPipeline.applyBatch(events.toDF(), store, Map("t" -> schema), Map("t" -> "id"))
+      }
+      assert(cur <= bound, s"$name applyBatch ran $cur jobs (expected $bound)")
+    }
+  }
 }

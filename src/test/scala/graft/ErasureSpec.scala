@@ -165,6 +165,32 @@ class ErasureSpec extends AnyFunSuite {
     assert(read("x").count() == 200L - doomedX.size)
   }
 
+  test("forgetPartitioned, forgetFromFeed and certificate free the pin " +
+    "they make: no call leaves a persistent RDD") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft_erasure_pins").toString
+    spark.range(40).select(col("id").as("k"), (col("id") % 4).as("p"))
+      .write.partitionBy("p").parquet(s"$work/pt.parquet")
+    graft.streaming.ChangeFeed.publish((0L until 10L).map { i =>
+      (i, new java.sql.Timestamp(1700000000000L + i * 1000L), "I", "t", i,
+        s"""{"id":$i}""")
+    }.toDF("lsn", "commitTs", "op", "table", "key", "after").coalesce(1), s"$work/feed")
+    val calls = Seq[(String, () => Any)](
+      "forgetPartitioned" -> (() =>
+        Erasure.forgetPartitioned(spark, work, "pt", "k", Seq(1L, 2L).toDF("k"))),
+      "forgetFromFeed" -> (() =>
+        Erasure.forgetFromFeed(spark, s"$work/feed", "t", Seq(3L).toDF("key"))),
+      "certificate" -> (() =>
+        Erasure.certificate(spark, Seq(1L, 3L).toDF("key"),
+          corpus = Seq((work, "pt", "k")), feeds = Seq(s"$work/feed" -> "t")).collect()))
+    calls.foreach { case (name, call) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      call()
+      val added = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      assert(added == 0, s"$name left $added persistent RDDs")
+    }
+  }
+
   test("cascade at scale: 100k derived child keys stay a DataFrame — " +
     "no isin literal list in the rewrite plan, residue 0") {
     import spark.implicits._

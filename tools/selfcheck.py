@@ -47,13 +47,12 @@ def cmp_cell(a, b):
 
 
 def main(out_dir, sf_dir):
-    # a bounded memory limit plus a spill directory, one thread: s22's
-    # MMR re-rank oracle still runs out of a 4 GB limit with 2 or 4
-    # threads (per-thread join state) and, with DuckDB's default limit,
-    # on a host with ~15 GB of RAM; single-threaded it spills and passes
+    # a bounded memory limit plus a spill directory, so no oracle can
+    # exhaust the host; s22's oracle filters to its 20-vector pool
+    # before its self-join, so 4 threads fit the limit
     spill = tempfile.mkdtemp(prefix="selfcheck_duckdb_")
     atexit.register(shutil.rmtree, spill, True)
-    con = duckdb.connect(config={"memory_limit": "4GB", "threads": 1,
+    con = duckdb.connect(config={"memory_limit": "4GB", "threads": 4,
                                  "temp_directory": spill})
     for t in TABLES:
         con.execute(
