@@ -19,21 +19,11 @@ object Monitor {
     import spark.implicits._
     import graft.functions.FormatBytes.format_bytes
     val rows = tables.sorted.map { t =>
-      val n = if (store.exists(spark, t)) store.read(spark, t).count() else 0L
-      val bytes = storeBytes(spark, store, t)
-      (t, n, bytes)
+      if (!store.exists(spark, t)) (t, 0L, 0L)
+      else (t, store.read(spark, t).count(), store.bucketStats(spark, t).map(_._3).sum)
     }
     rows.toDF("table_name", "n_rows", "bytes")
       .withColumn("pretty_size", format_bytes(col("bytes")))
-  }
-
-  private def storeBytes(spark: SparkSession, store: KeyedParquetStore, table: String): Long = {
-    // resolve the filesystem from the store's root (it may not be the
-    // default FS — e.g. an object-store root)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(store.root), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"${store.root}/$table")
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
   /** §"REPLICATION LAG ANALYSIS" (monitoring.ps1:576–637): the
@@ -65,11 +55,11 @@ object Monitor {
   /** §"STORAGE ANALYSIS" (monitoring.ps1:922,937 — `pg_database_size`
     * / `pg_indexes_size`): per-table storage breakdown. A parquet
     * store has no separate index segments; the pruning structures that
-    * play the index role are (a) the hash-bucket directory layout and
+    * play the index role are (a) the manifest's per-bucket file lists and
     * (b) the parquet footers (column/offset indexes + row-group
     * min/max zone maps), so the report surfaces data bytes vs footer
     * ("index") bytes, plus the bucket/file layout that determines scan
-    * fan-out. Metadata-only FS walking — no data pages are read. */
+    * fan-out. Manifest and footers only — no data pages are read. */
   def storageReport(
       spark: SparkSession, store: KeyedParquetStore, tables: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -100,17 +90,13 @@ object Monitor {
       .withColumn("pretty_size", format_bytes(col("total_bytes")))
   }
 
-  def databaseSize(
-      spark: SparkSession, store: KeyedParquetStore, tables: Seq[String]): DataFrame =
-    databaseSizeOf(storageReport(spark, store, tables))
-
   /** §"REPLICATION INFRASTRUCTURE" (monitoring.ps1:960–1030): the
     * reference checks replication slots, `wal_level`, and
     * `max_wal_senders` with OK/WARNING rows. The engine's exact
     * analogues, one check row each:
     *
     *  - `applied_watermark` ↔ a slot's confirmed-flush LSN: the
-    *    store-maintained applied-LSN sidecar
+    *    store-maintained applied record
     *    ([[KeyedParquetStore.appliedLsn]]) — WARNING when absent
     *    (nothing ever applied → retention/rotation cannot engage);
     *  - `checkpoint_retention` ↔ `wal_level = logical`: the session
@@ -160,7 +146,8 @@ object Monitor {
       maxSecondsBehind: Long = 300L,
       includeTimeLag: Boolean = true): DataFrame = {
     import spark.implicits._
-    val applied = store.appliedLsn(spark)
+    val record = store.applied(spark)
+    val applied = record.map(_.lsn)
     // the knobs that DISTINGUISH a configured session: log.deletion
     // defaults to true in OSS Spark (checking it would be vacuous);
     // cleanupDelay defaults to 10 min and minBatchesToRetain to 100 —
@@ -238,20 +225,18 @@ object Monitor {
             // three different operator actions (check the capture side
             // vs check why events stopped carrying commitTs vs check
             // feed retention). The stale wording only fires when the
-            // sidecar LSN actually differs from the applied LSN;
+            // stamp's LSN actually differs from the applied LSN;
             // printing "stale at lsn=X (applied lsn=X)" sent the
             // operator to the wrong place.
             val unknownDetail =
               if (!feedHasData) "empty feed"
-              else store.appliedCommitTsAt(spark) match {
-                case Some((l, _))
-                    if store.appliedLsn(spark).contains(l) =>
+              else record.flatMap(a => a.stamp.map(s => (a.lsn, s._1))) match {
+                case Some((a, l)) if a == l =>
                   s"unknown - commit-time stamp current at lsn=$l but " +
                     "the retained feed events carry no commitTs"
-                case Some((l, _)) =>
+                case Some((a, l)) =>
                   s"unknown - commit-time stamp stale at lsn=$l " +
-                    s"(applied lsn=${store.appliedLsn(spark).getOrElse(-1L)}); " +
-                    "recent events carry no commitTs"
+                    s"(applied lsn=$a); recent events carry no commitTs"
                 case None => "unknown - no applied commit-time watermark"
               }
             Seq(("time_lag",

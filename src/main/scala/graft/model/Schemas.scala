@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
   * (quickstart_prepare_peers.sh:25–49) — schemas, primary keys, FK
   * relations, and the seed rows. Target-side schemas are never
   * re-declared: they propagate from these StructTypes through
-  * [[graft.streaming.KeyedParquetStore]]'s sidecar (SURVEY.md §1.3).
+  * [[graft.streaming.KeyedParquetStore]]'s manifest (SURVEY.md §1.3).
   */
 object Schemas {
 

@@ -467,22 +467,6 @@ object Erasure {
     }
   }
 
-  /** Erase keys from a [[graft.streaming.KeyedParquetStore]] table by
-    * applying delete tombstones THROUGH the replication merge (the
-    * same last-image + idempotent by-PK path a mirror's batches take),
-    * WITHOUT touching the applied-LSN watermark: the watermark means
-    * "every feed position ≤ this was applied", and synthetic
-    * out-of-band LSNs above it would let rotation prune feed files the
-    * store never read (eroding exactly the safety margin the
-    * watermark exists for). The tombstones' LSNs only order the batch
-    * internally.
-    *
-    * Contract for LIVE-replicated tables: publish `op='D'` events
-    * through the FEED instead (one erasure, every mirror converges) —
-    * an out-of-band store delete can be resurrected by a lagging
-    * mirror later applying an older update of the same key. This
-    * helper is for store-resident tables, or mirrors stopped and
-    * caught up. */
   /** POST-SWEEP CERTIFICATE — the auditable artifact a right-to-be-
     * forgotten obligation actually wants filed: one row per (surface,
     * table) with the RESIDUE COUNT of the tombstoned keys on that
@@ -493,7 +477,9 @@ object Erasure {
     * (e.g. a feed whose redaction was skipped, a mirror nobody swept).
     * Each check is one semi-join count against the pinned tombstone
     * frame — read-only, safe to run on a live system, |tables|-bounded
-    * driver loop with distributed counts. The derived-index surface
+    * driver loop with distributed counts. The store row scans every
+    * parquet file under the table's directory, not only the files its
+    * current version names. The derived-index surface
     * needs no row here: index guards rebuild from the (already-swept)
     * corpus by construction, and [[IndexStore.pruneUnservedVersions]]
     * destroys retained on-disk residue. */
@@ -513,7 +499,7 @@ object Erasure {
           ("corpus", s"$d/$t.parquet", residue(spark.read.parquet(s"$d/$t.parquet"), k))
         } ++
         store.map { case (s, t, k) =>
-          ("store", s"${s.root}/$t", residue(s.read(spark, t), k))
+          ("store", s"${s.root}/$t", residue(storeFiles(spark, s, t), k))
         } ++
         feeds.map { case (f, t) =>
           ("feed", s"$f/$t", residue(graft.streaming.ChangeFeed.readAll(spark, f)
@@ -531,6 +517,22 @@ object Erasure {
         .withColumn("clean", col("residue") === 0L)
         .orderBy("surface", "location")
     }
+  }
+
+  /** Every parquet file under a store table's directory, with the
+    * table's schema: the files its current version names and any
+    * other a reader or a crashed write left there. */
+  private def storeFiles(spark: SparkSession,
+      store: graft.streaming.KeyedParquetStore, table: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(s"${store.root}/$table")
+    val it = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(dir, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .map(_.toString).toSeq
+    val schema = store.schemaOf(spark, table)
+    if (files.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
   }
 
   /** Erase keys from a JDBC mirror TARGET — the database-parity sink
@@ -565,6 +567,30 @@ object Erasure {
     forgetFromJdbc(spark, url, table, keyCol, ids.toDF(keyCol), props)
   }
 
+  /** Erase keys from a [[graft.streaming.KeyedParquetStore]] table by
+    * applying delete tombstones THROUGH the replication merge (the
+    * same last-image + idempotent by-PK path a mirror's batches take),
+    * WITHOUT touching the applied-LSN watermark: the watermark means
+    * "every feed position ≤ this was applied", and synthetic
+    * out-of-band LSNs above it would let rotation prune feed files the
+    * store never read (eroding exactly the safety margin the
+    * watermark exists for). The tombstones' LSNs only order the batch
+    * internally.
+    *
+    * Contract for LIVE-replicated tables: publish `op='D'` events
+    * through the FEED instead (one erasure, every mirror converges) —
+    * an out-of-band store delete can be resurrected by a lagging
+    * mirror later applying an older update of the same key. This
+    * helper is for store-resident tables, or mirrors stopped and
+    * caught up.
+    *
+    * The merge's commit retires the files that held the keys, and the
+    * store keeps retired files for readers for a while
+    * ([[graft.streaming.KeyedParquetStore.RetentionMs]]); a
+    * right-to-be-forgotten obligation covers those copies too, so
+    * every file the new version does not name is deleted at once, the
+    * retention age skipped (the same trade as
+    * [[IndexStore.pruneUnservedVersions]]). */
   def forgetFromStore(spark: SparkSession,
       store: graft.streaming.KeyedParquetStore, table: String,
       keyCol: String, rowSchema: StructType, ids: Seq[Long]): Unit = {
@@ -580,5 +606,6 @@ object Erasure {
     val changes = graft.streaming.CdcPipeline
       .lastImagePerKey(batch, rowSchema, keyCol)
     store.merge(spark, table, changes, keyCol)
+    store.purgeSuperseded(spark, table)
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.streaming.AtomicFiles
+
 /** Persisted DERIVED-RELATION index sidecar — the build-once/serve-many
   * split every serving system makes (a FAISS/Lucene index is built
   * offline and opened by readers): an expensive derived relation (the
@@ -142,7 +144,8 @@ object IndexStore {
       throw new java.io.IOException(
         s"index version commit failed: rename $scratch -> $dest returned " +
           "false; scratch left in place, pointer not moved")
-    writeFileAtomically(pointerFile(dir), s"v$next")
+    AtomicFiles.writeAtomically(spark,
+      new org.apache.hadoop.fs.Path(pointerFile(dir).toUri), s"v$next")
     existing.filterNot(v => prevServed.contains(v))
       .foreach(v => fs.delete(
         new org.apache.hadoop.fs.Path(versionPath(dir, v)), true))
@@ -236,19 +239,6 @@ object IndexStore {
       entries.toSeq.sortBy(_._1).map { case (p, sig) => s"$p\t$sig" })
       .mkString("\n")
 
-  /** Atomic small-file write (manifest / fingerprint): temp + move, so
-    * a reader never sees a torn header. */
-  private def writeFileAtomically(target: java.nio.file.Path,
-      body: String): Unit = {
-    java.nio.file.Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** Serve index `name` over `dataDir`'s `sourceTable`, building it
     * with `build` only when absent or the source files changed.
     * Always returns a parquet scan of the sidecar. */
@@ -265,7 +255,7 @@ object IndexStore {
     if (!warm) {
       buildsPerformed += 1
       val committed = commitNewVersion(spark, build, dir)
-      writeFileAtomically(fpFile, fp)
+      AtomicFiles.writeAtomically(spark, new org.apache.hadoop.fs.Path(fpFile.toUri), fp)
       spark.read.parquet(committed)
     } else spark.read.parquet(served.get)
   }
@@ -316,7 +306,7 @@ object IndexStore {
     if (!fresh) {
       buildsPerformed += 1
       val committed = commitNewVersion(spark, build, dir)
-      writeFileAtomically(trainedFile,
+      AtomicFiles.writeAtomically(spark, new org.apache.hadoop.fs.Path(trainedFile.toUri),
         renderInventory(current, extraHeaders = Nil))
       spark.read.parquet(committed)
     } else {
@@ -394,8 +384,8 @@ object IndexStore {
     }
     val mutated = prev.exists { case (p, sig) => !current.get(p).contains(sig) }
     def writeManifest(deltas: Set[String]): Unit =
-      writeFileAtomically(manifest, renderInventory(current,
-        extraHeaders = Seq(s"deltas=${deltas.toSeq.sorted.mkString(",")}")))
+      AtomicFiles.writeAtomically(spark, new org.apache.hadoop.fs.Path(manifest.toUri),
+        renderInventory(current, extraHeaders = Seq(s"deltas=${deltas.toSeq.sorted.mkString(",")}")))
     if (prev.nonEmpty && served.isDefined && !mutated) {
       val newFiles = (current.keySet -- prev.keySet).toSeq.sorted
       if (newFiles.nonEmpty) { // append-only growth: delta build

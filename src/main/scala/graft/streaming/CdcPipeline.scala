@@ -274,10 +274,12 @@ object CdcPipeline {
     * last-by-lsn — op/image never act as tie-breakers.
     *
     * Key-change interplay: events run [[normalizeKeyChanges]] FIRST,
-    * and in-batch inheritance is keyed on the POST-change key — a
-    * PK-changing UPDATE whose marked column must inherit from the OLD
-    * key's image resolves via the store fallback (`_resolveKey` =
-    * beforeKey), not in-batch. Inheritance also ignores an intervening
+    * and in-batch inheritance is keyed on the POST-change key; the old
+    * key's events ranked below a PK-changing UPDATE join the new key's
+    * group (one join of the events with their moves, on frames with a
+    * `beforeKey` column), so the move inherits the old key's last
+    * in-batch value, and the OLD key's stored image is the fallback
+    * (`_resolveKey` = beforeKey). Inheritance also ignores an intervening
     * in-batch delete: Postgres cannot emit U-after-D for one key inside
     * one WAL span without the I that re-creates it carrying a full
     * image, so the case is unreachable from a real decoder; the
@@ -299,7 +301,15 @@ object CdcPipeline {
       else events.withColumn("_resolveKey", col("key"))
     // normalizeKeyChanges carries non-envelope columns through both
     // halves of the expansion, so _resolveKey survives it
-    val parsed = normalizeKeyChanges(withRk)
+    val expanded = normalizeKeyChanges(withRk)
+    // a move's new key also sees its old key's events below the move;
+    // their lower LSNs never win, so they only feed the carried values
+    val parsed = (if (!events.columns.contains("beforeKey")) expanded
+      else expanded.unionByName(expanded
+        .join(events.filter(keyMove(events)).select(col("beforeKey").as("_from"),
+          col("key").as("_to"), col("lsn").as("_at")),
+          col("key") === col("_from") && col("lsn") < col("_at"))
+        .withColumn("key", col("_to")).drop("_from", "_to", "_at")))
       .withColumn("_row", from_json(col("after"), schema))
     val tcols = toastableCols(schema, keyCol)
     val winner = max(struct(col("lsn").as("l"), col("op").as("o"),
@@ -463,7 +473,7 @@ object CdcPipeline {
     * non-delete image, the stored row included — so a tombstone keeps
     * the image it died with even when the delete was the batch's only
     * event for its key, and a key the target never saw dies with
-    * nulls. Same 4 jobs as a steady [[applyBatch]], with or without
+    * nulls. Same 3 jobs as a steady [[applyBatch]], with or without
     * deletes. Idempotent: a replayed batch reconverges because the
     * carry reads data columns the first apply already wrote. */
   def applyBatchSoft(
@@ -502,7 +512,11 @@ object CdcPipeline {
     *  - [[graft.operators.Erasure]] purges NAMED keys on demand
     *    (right-to-be-forgotten, certificate-backed); this sweep is the
     *    complementary AGE policy — erasure of an already-swept key is
-    *    a no-op, sweep of an erased key finds nothing.
+    *    a no-op, sweep of an erased key finds nothing. Like erasure, a
+    *    sweep that purges deletes every file the new version does not
+    *    name at once ([[KeyedParquetStore.purgeSuperseded]]), so the
+    *    swept keys leave no copy a certificate could find; a reader
+    *    still scanning a retired file fails instead.
     *
     * Returns the number of tombstones purged. */
   def sweepSoftDeleted(
@@ -511,23 +525,23 @@ object CdcPipeline {
       table: String,
       keyCol: String,
       upToLsn: Long): Long = {
-    require(store.exists(spark, table), s"table '$table' does not exist")
-    val stored = store.schemaOf(spark, table).fieldNames
-    require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
-      s"table '$table' is not a soft-delete store (missing " +
-        s"$SoftDeleteCol/$SyncedLsnCol) - sweepSoftDeleted only applies " +
-        "to snapshotSoft/applyBatchSoft targets")
+    requireSoft(spark, store, table, "sweepSoftDeleted")
     // one materialization feeds the count AND the merge's key frame;
-    // the count is folded into the pin's own job
-    val expired = graft.operators.Checkpointing.materialize(store.read(spark, table)
-      .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn)
-      .select(col(keyCol)))
-    try {
-      if (expired.rows > 0L)
-        store.merge(spark, table,
-          expired.df.withColumn("op", lit("D")), keyCol)
-      expired.rows
-    } finally Bridge.free(expired.df)
+    // the count is folded into the pin's own job. Both run under the
+    // table's commit lock, so an apply cannot revive a key between the
+    // discovery read and the purge
+    store.locked(table) {
+      val expired = graft.operators.Checkpointing.materialize(store.read(spark, table)
+        .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn)
+        .select(col(keyCol)))
+      try {
+        if (expired.rows > 0L) {
+          store.merge(spark, table, expired.df.withColumn("op", lit("D")), keyCol)
+          store.purgeSuperseded(spark, table)
+        }
+        expired.rows
+      } finally Bridge.free(expired.df)
+    }
   }
 
   /** The retention CADENCE helper — the steady-state spelling of the
@@ -537,8 +551,8 @@ object CdcPipeline {
     * scattered rows). A store on a compaction cadence is ALREADY
     * paying a periodic rewrite — so fold the purge into it: ONE
     * compact pass that (a) drops expired tombstones during the
-    * rewrite ([[KeyedParquetStore.compact]] `dropWhere`, with
-    * fully-purged buckets cleared) and (b) re-clusters each bucket by
+    * rewrite ([[KeyedParquetStore.compact]] `dropWhere`; a bucket the
+    * purge empties gets no file) and (b) re-clusters each bucket by
     * [[SyncedLsnCol]], which is what makes the NEXT cycle's discovery
     * scan read O(expired) via parquet row-group zone maps (young row
     * groups' `_synced_lsn` min exceeds the watermark → skipped)
@@ -555,18 +569,24 @@ object CdcPipeline {
       store: KeyedParquetStore,
       table: String,
       upToLsn: Long): Long = {
-    require(store.exists(spark, table), s"table '$table' does not exist")
-    val stored = store.schemaOf(spark, table).fieldNames
-    require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
-      s"table '$table' is not a soft-delete store (missing " +
-        s"$SoftDeleteCol/$SyncedLsnCol) - sweepAndCompact only applies " +
-        "to snapshotSoft/applyBatchSoft targets")
+    requireSoft(spark, store, table, "sweepAndCompact")
     val expired = col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn
     // the purge count comes from compact's OWN checkpointed read — a
     // separate pre-count here would race a concurrent applyBatchSoft
     // landing between the two reads (purged-but-uncounted rows)
     store.compact(spark, table,
       clusterBy = Seq(SyncedLsnCol), dropWhere = Some(expired))
+  }
+
+  /** Reject `op` on a table without the soft-delete columns; a missing
+    * table fails in [[KeyedParquetStore.schemaOf]]. */
+  private def requireSoft(spark: SparkSession, store: KeyedParquetStore, table: String,
+      op: String): Unit = {
+    val stored = store.schemaOf(spark, table).fieldNames
+    require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
+      s"table '$table' is not a soft-delete store (missing $SoftDeleteCol/$SyncedLsnCol) - " +
+        s"$op only applies to snapshotSoft/applyBatchSoft targets; seed it with snapshotSoft " +
+        "(or resync)")
   }
 
   /** One table's slice of a micro-batch, folded in the job that pins
@@ -663,19 +683,19 @@ object CdcPipeline {
     * per key (C1/C3), idempotent merge. Also usable directly for batch
     * backfill.
     *
-    * Steady batch, 4 jobs: the batch pin, whose job also folds the
+    * Steady batch, 3 jobs: the batch pin, whose job also folds the
     * fan-out ([[withPinnedBatch]]), then per table the merge's shuffle
-    * map stage, its pin and its write. Each slice hands its parsed
+    * map stage and its write. Each slice hands its parsed
     * events to the merge ranked by LSN, so the last-write-wins dedup
     * rides the merge's own bucket shuffle; key moves are expanded
     * first ([[normalizeKeyChanges]]; both halves carry the event's LSN
     * and address different keys). A slice with TOAST markers adds the
     * merge's `carry` rule for its string columns on the same shuffle
-    * ([[UnchangedToast]]), so it runs the same 4 jobs; a marked key
-    * move also brings its old key's stored row in under the new key
-    * (`movedKeys`, one broadcast job more). Every slice's merged keys
-    * are the slice's keys, old keys of moves included, so the folded
-    * bucket set is the merge's exact hint.
+    * ([[UnchangedToast]]), so it runs the same 3 jobs; a marked key
+    * move also brings its old key's stored row and earlier events in
+    * under the new key (`movedKeys`, one broadcast job more). Every
+    * slice's merged keys are the slice's keys, old keys of moves
+    * included, so the folded bucket set is the merge's exact hint.
     *
     * `dropPolicy`: change images are parsed with the source's DECLARED
     * schema (`schemas`), so a stored column absent from it means the
@@ -717,25 +737,17 @@ object CdcPipeline {
           // schema and every pre-existing row would read `_deleted = NULL`
           // — which the documented live view `NOT _deleted` silently
           // drops (NULL is not false). Fail loudly instead.
-          if (store.exists(spark, table)) {
-            val stored = store.schemaOf(spark, table).fieldNames
-            require(stored.contains(SoftDeleteCol) && stored.contains(SyncedLsnCol),
-              s"table '$table': store is not soft-delete seeded (missing " +
-                s"$SoftDeleteCol/$SyncedLsnCol) - merging softly would leave " +
-                "pre-existing rows with a NULL deleted flag, silently absent " +
-                "from the live view; seed with snapshotSoft (or resync) " +
-                "before applyBatchSoft")
-          }
+          if (store.exists(spark, table)) requireSoft(spark, store, table, "applyBatchSoft")
         }
         val (schema, keyCol) = (schemas(table), keyCols(table))
         val slice = pinned.filter(col("table") === table)
         val events = parseImages(if (s.moves == 0L) slice else normalizeKeyChanges(slice),
           schema, keyCol, col("lsn").as(LsnRank))
-        // a marked key move inherits from its old key's stored row
+        // a marked key move inherits from its old key
         val movedKeys = Option.when(s.markedMoves > 0L) {
           val kType = schema(keyCol).dataType
-          slice.filter(keyMove(slice) && marked).select(
-            col("beforeKey").cast(kType).as("_from"), col("key").cast(kType).as("_to"))
+          slice.filter(keyMove(slice) && marked).select(col("beforeKey").cast(kType).as("_from"),
+            col("key").cast(kType).as("_to"), col("lsn").as("_at"))
         }
         store.merge(spark, table,
           if (!soft) events
@@ -1373,8 +1385,8 @@ object CdcPipeline {
     * time-based metric is the engine's addition on top of that shape.
     *
     * Cost: ONE agg-only feed scan (max over a single column — column-
-    * pruned at the reader) + a tiny sidecar read. None when either
-    * side is unknown: nothing applied yet / pre-r16 store / feed
+    * pruned at the reader) + a tiny applied-record read. None when
+    * either side is unknown: nothing applied yet / feed
     * events without commitTs / a STALE stamp (the LSN advanced past
     * the last commitTs-bearing event — see
     * [[KeyedParquetStore.appliedCommitTs]]). Clamped at 0 — the

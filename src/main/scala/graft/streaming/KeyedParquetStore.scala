@@ -1,11 +1,18 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantLock
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Checkpointing
 
@@ -13,20 +20,38 @@ import graft.operators.Checkpointing
   * CDC target (reference: PeerDB's ordered apply to target tables,
   * README.md:231–238) without requiring a transactional table format.
   *
-  * Layout: `<root>/<table>/bucket=<b>/part-*.parquet` where
-  * `b = pmod(hash(key), nBuckets)`, plus a `_graft_schema.json`
-  * sidecar carrying the row schema (schema propagation: target schema
-  * derives from source, never hand-declared —
-  * quickstart_prepare_peers.sh:80, SURVEY.md §1.3 — and reads never
-  * pay parquet-footer schema inference).
+  * Layout: `<root>/<table>/_graft_manifest` names the table's one
+  * current version; every write puts NEW files into a fresh commit
+  * directory, `<root>/<table>/<commit>/bucket=<b>/part-*.parquet`
+  * where `b = pmod(hash(key), nBuckets)`, and never touches a file a
+  * version names. The manifest holds the row schema (schema
+  * propagation: target schema derives from source, never
+  * hand-declared — quickstart_prepare_peers.sh:80, SURVEY.md §1.3 —
+  * and reads never pay parquet-footer schema inference), every live
+  * file with its bucket and size, and the files earlier versions
+  * retired, each with its retire time. A directory without a manifest
+  * is a table that does not exist.
+  *
+  * Commit: one atomic replace of the manifest ([[AtomicFiles]]) — the
+  * reference's target commits each normalize batch atomically, and so
+  * does this store: a crash at any step before it leaves the previous
+  * version whole, and after it the new one. Commits to one table are
+  * serialized by a JVM-wide lock on the table path, held from the
+  * manifest read to the commit, so a `compact` racing a `merge` cannot
+  * lose the merge's update. Readers take no lock: they resolve the
+  * manifest once and scan exactly its files, so a reader racing a
+  * commit sees one whole version. Each commit's retention pass deletes
+  * the files retired more than [[RetentionMs]] ago and the unreferenced
+  * directories (a crashed write's) older than that.
   *
   * Scale design (the point of bucketing): a merge only reads and
   * rewrites the buckets that contain changed keys — cost is
   * O(touched buckets), not O(table size). At 100 TB you'd set
   * nBuckets so one bucket ≈ a few GB; a CDC micro-batch touching k
-  * keys rewrites ≤ k buckets via dynamic partition overwrite, while
-  * the other buckets are never opened (partition pruning on the
-  * `bucket` directory column). Reads prune the same way.
+  * keys rewrites ≤ k buckets, while the other buckets' files are
+  * carried into the new version unopened. Reads prune the same way:
+  * `bucket` is the scan's partition column, and a filter on it
+  * filters the manifest's entries.
   */
 object KeyedParquetStore {
   /** Policy for a batch whose declared schema OMITS stored columns —
@@ -48,22 +73,72 @@ object KeyedParquetStore {
       * operator chooses re-sync or an explicit KeepNullFill merge. */
     case object Error extends DropPolicy
   }
+
+
+  /** How long a retired file stays on disk after the commit that
+    * retires it, and how old an unreferenced directory must be before
+    * a commit deletes it. It is the bound on a reader's lifetime: a
+    * frame from [[KeyedParquetStore.read]] must run within this time of
+    * the commit that retires its files, and a write must commit within
+    * it. */
+  val RetentionMs: Long = 60000L
+
+  /** The applied record: the highest applied LSN, and the source
+    * commit-time stamp with the LSN it was recorded at. */
+  private[graft] final case class Applied(lsn: Long, stamp: Option[(Long, java.sql.Timestamp)])
+
+  private final case class LiveFile(path: String, bucket: Int, bytes: Long)
+  private final case class Retired(path: String, at: Long)
+  /** One version of a table; file paths are relative to its directory. */
+  private final case class Manifest(schema: StructType, live: Seq[LiveFile], retired: Seq[Retired])
+
+  private val ManifestName = "_graft_manifest"
+  private val BucketSchema = StructType(Seq(StructField("bucket", IntegerType)))
+  private val locks = new ConcurrentHashMap[String, ReentrantLock]()
+
+  private def render(m: Manifest): String =
+    (s"schema\t${m.schema.json}" +:
+      m.live.map(f => s"live\t${f.bucket}\t${f.bytes}\t${f.path}") ++:
+      m.retired.map(r => s"retired\t${r.at}\t${r.path}")).mkString("\n")
+
+  private def parse(text: String): Manifest = {
+    val lines = text.linesIterator.map(_.split("\t", 4)).toSeq
+    Manifest(
+      lines.collectFirst { case Array("schema", json) =>
+        DataType.fromJson(json).asInstanceOf[StructType] }.get,
+      lines.collect { case Array("live", b, n, p) => LiveFile(p, b.toInt, n.toLong) },
+      lines.collect { case Array("retired", t, p) => Retired(p, t.toLong) })
+  }
+
+  /** A manifest's files as a scan with `bucket` as its partition
+    * column: Spark lists nothing, and its partition pruning filters
+    * the entries. */
+  private final class ManifestIndex(dir: Path, files: Seq[LiveFile]) extends FileIndex {
+    def rootPaths: Seq[Path] = Seq(dir)
+    def partitionSchema: StructType = BucketSchema
+    def inputFiles: Array[String] = files.map(f => new Path(dir, f.path).toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.bytes).sum
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val keep = partitionFilters.reduceOption(And).map(e => Predicate.createInterpreted(
+        e.transform { case _: AttributeReference => BoundReference(0, IntegerType, true) }))
+      files.groupBy(_.bucket).toSeq.sortBy(_._1).collect {
+        case (b, fs) if keep.forall(_.eval(InternalRow(b))) =>
+          PartitionDirectory(InternalRow(b), fs.map(f =>
+            new FileStatus(f.bytes, false, 1, 0L, 0L, new Path(dir, f.path))).toArray)
+      }
+    }
+  }
 }
 
 class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
-  import KeyedParquetStore.DropPolicy
+  import KeyedParquetStore._
 
   private def path(table: String) = s"$root/$table"
-  // Per-write option: the session conf is shared by every mirror and
-  // reader in the session, so the store never sets it.
-  private val OverwriteMode = "partitionOverwriteMode"
   // merge's per-row order; stored rows carry a null rank, which sorts
   // below every change
   private val Rank = "_graft_rank"
-  private def schemaPath(table: String) = new Path(s"${path(table)}/_graft_schema.json")
-
-  private def bucketOf(key: org.apache.spark.sql.Column) =
-    pmod(hash(key), lit(nBuckets))
 
   /** The store's bucket assignment as a column expression — exposed so
     * the apply path can fold the touched-bucket set into the job that
@@ -71,161 +146,199 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * instead of a collect job per batch.
     * Callers MUST apply it to the key cast to the table's key type:
     * `hash()` is type-sensitive, so `hash("1") != hash(1L)`. */
-  private[streaming] def bucketExpr(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    bucketOf(key)
+  private[streaming] def bucketExpr(key: Column): Column = pmod(hash(key), lit(nBuckets))
 
   private def fs(spark: SparkSession): FileSystem =
     FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
-  def exists(spark: SparkSession, table: String): Boolean =
-    fs(spark).exists(schemaPath(table))
+  /** A small file's text, or None when it does not exist. */
+  private def readText(spark: SparkSession, p: Path): Option[String] =
+    try {
+      val in = fs(spark).open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
-  private def watermarkPath = new Path(s"$root/_graft_applied_lsn")
-  private def commitTsPath = new Path(s"$root/_graft_applied_commit_ts")
+  private def manifestPath(table: String) = new Path(path(table), ManifestName)
+
+  private def manifest(spark: SparkSession, table: String) =
+    readText(spark, manifestPath(table)).map(parse)
+
+  private def current(spark: SparkSession, table: String): Manifest = manifest(spark, table)
+    .getOrElse(throw new java.io.FileNotFoundException(s"table '$table' does not exist in $root"))
+
+  def exists(spark: SparkSession, table: String): Boolean =
+    fs(spark).exists(manifestPath(table))
+
+  private def appliedPath = new Path(s"$root/_graft_applied")
 
   /** Record the highest fully-applied LSN (monotonic — a replayed
     * batch's lower max never regresses it). The watermark is what
     * makes feed retention self-serve: [[CdcPipeline.rotateCheckpoint]]
     * prunes at `appliedLsn - safety` without the operator tracking
-    * positions out of band. Tiny atomic file (create-overwrite of a
-    * one-line value) per micro-batch — the same cost class as the
-    * checkpoint's own commit marker.
+    * positions out of band.
     *
     * `commitTs` (the watermark event's source commit timestamp, when
-    * the apply path has it) lands in a sibling sidecar under the same
-    * monotonic gate, RECORDED WITH THE LSN IT BELONGS TO (`"<lsn>
-    * <millis>"`) — it is the "applied as of <source time>" half of
-    * the seconds-behind-source lag metric
-    * ([[CdcPipeline.timeLagSeconds]]). A later batch that advances the
-    * LSN but carries no commitTs leaves the sidecar at the OLDER lsn,
-    * so the staleness is detectable ([[appliedCommitTs]] then reads
-    * unknown instead of overstating lag against a stale stamp).
-    * Pre-r16 stores simply lack the file and the metric reads as
-    * unknown. */
+    * the apply path has it) is the "applied as of <source time>" half
+    * of the seconds-behind-source lag metric
+    * ([[CdcPipeline.timeLagSeconds]]). It is stamped WITH THE LSN IT
+    * BELONGS TO; a later batch that advances the LSN but carries no
+    * commitTs keeps the older stamp, so the staleness is detectable
+    * ([[appliedCommitTs]] then reads unknown instead of overstating lag
+    * against a stale stamp).
+    *
+    * Both live in ONE store-level record, `<root>/_graft_applied`
+    * (`<applied lsn> [<stamp lsn> <stamp millis>]`), written as one
+    * OVERWRITING atomic rename from a per-call-unique tmp
+    * ([[AtomicFiles]]): a concurrent reader (Monitor.replicationInfra,
+    * rotateIfOversized on a cadence thread) never observes it absent
+    * or half-updated, and two mirrors sharing one store write
+    * CONCURRENTLY — racing lower-LSN writers are the benign race (a
+    * lower watermark only means extra idempotent replay, never loss). */
   def recordAppliedLsn(spark: SparkSession, lsn: Long,
-      commitTs: Option[java.sql.Timestamp] = None): Unit =
-    if (appliedLsn(spark).forall(_ < lsn)) {
-      // OVERWRITING atomic rename from a per-call-unique tmp
-      // ([[AtomicFiles]]), not delete-then-rename: a concurrent reader
-      // (Monitor.replicationInfra, rotateIfOversized on a cadence
-      // thread) must never observe the gap where the watermark is
-      // absent, a crash must not lose it until the next batch, and two
-      // mirrors sharing one store write CONCURRENTLY — racing
-      // lower-LSN writers are the benign pre-existing race (a lower
-      // watermark only means extra idempotent replay, never loss)
-      AtomicFiles.writeAtomically(spark, watermarkPath, lsn.toString)
-      commitTs.foreach(t =>
-        AtomicFiles.writeAtomically(spark, commitTsPath, s"$lsn ${t.getTime}"))
+      commitTs: Option[java.sql.Timestamp] = None): Unit = {
+    val prev = applied(spark)
+    if (prev.forall(_.lsn < lsn)) {
+      val stamp = commitTs.map(t => (lsn, t)).orElse(prev.flatMap(_.stamp))
+      AtomicFiles.writeAtomically(spark, appliedPath,
+        (lsn +: stamp.toSeq.flatMap { case (l, t) => Seq(l, t.getTime) }).mkString(" "))
+    }
+  }
+
+  /** The applied record ([[recordAppliedLsn]]), if any batch has been
+    * applied. */
+  private[graft] def applied(spark: SparkSession): Option[Applied] =
+    readText(spark, appliedPath).map(_.trim.split("\\s+").map(_.toLong)).map {
+      case Array(lsn, l, ms) => Applied(lsn, Some((l, new java.sql.Timestamp(ms))))
+      case a => Applied(a.head, None)
     }
 
   /** The commit-time stamp with the LSN it was recorded at: (lsn,
-    * source commit timestamp). Pre-r17 sidecars carried only the
-    * millis — they parse with lsn = -1 (provenance unknown). */
-  def appliedCommitTsAt(spark: SparkSession): Option[(Long, java.sql.Timestamp)] = {
-    val f = fs(spark)
-    if (!f.exists(commitTsPath)) None
-    else {
-      val in = f.open(commitTsPath)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s.split("\\s+") match {
-        case Array(lsn, ms) => Some((lsn.toLong, new java.sql.Timestamp(ms.toLong)))
-        case Array(ms) => Some((-1L, new java.sql.Timestamp(ms.toLong)))
-        case _ => None
-      }
-    }
-  }
+    * source commit timestamp). */
+  def appliedCommitTsAt(spark: SparkSession): Option[(Long, java.sql.Timestamp)] =
+    applied(spark).flatMap(_.stamp)
 
   /** Source commit timestamp at the applied watermark, if recorded
     * AND CURRENT: the stamp is honored only while its recorded LSN
     * equals the applied watermark — after a commitTs-less LSN advance
     * the metric honestly reads unknown rather than overstating lag
-    * against a stale stamp. Legacy single-value sidecars (lsn
-    * unknowable) stay honored for replay compatibility. */
+    * against a stale stamp. */
   def appliedCommitTs(spark: SparkSession): Option[java.sql.Timestamp] =
-    appliedCommitTsAt(spark).collect {
-      case (l, t) if l < 0 || appliedLsn(spark).contains(l) => t
-    }
+    applied(spark).flatMap(a => a.stamp.collect { case (l, t) if l == a.lsn => t })
 
   /** The highest applied LSN, if any batch has been applied. */
-  def appliedLsn(spark: SparkSession): Option[Long] = {
-    val f = fs(spark)
-    if (!f.exists(watermarkPath)) None
-    else {
-      val in = f.open(watermarkPath)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(s.toLong)
-    }
-  }
-
-  private def writeSchema(spark: SparkSession, table: String, schema: StructType): Unit = {
-    val out = fs(spark).create(schemaPath(table), true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-  }
+  def appliedLsn(spark: SparkSession): Option[Long] = applied(spark).map(_.lsn)
 
   /** The persisted row schema (without the bucket partition column). */
-  def schemaOf(spark: SparkSession, table: String): StructType = {
-    val in = fs(spark).open(schemaPath(table))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    DataType.fromJson(json).asInstanceOf[StructType]
+  def schemaOf(spark: SparkSession, table: String): StructType = current(spark, table).schema
+
+  /** `m`'s live files, with the `bucket` column last; every column is
+    * nullable, as in any Spark file scan. */
+  private def scan(spark: SparkSession, table: String, m: Manifest): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestIndex(new Path(path(table)), m.live), BucketSchema,
+      Bridge.asNullable(m.schema), None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** Read the current version of a table: its manifest's files, with
+    * its schema — an emptied table reads as an empty DataFrame, and no
+    * directory is listed and no footer opened for inference. */
+  def read(spark: SparkSession, table: String): DataFrame =
+    scan(spark, table, current(spark, table)).drop("bucket")
+
+  /** [[read]] restricted to the buckets that could hold any of
+    * `keys` — a `bucket` PARTITION filter, so the scan skips the other
+    * buckets' files. For a point lookup of a small key set (a reader's
+    * probe keys) this turns a full-table scan into O(buckets the keys
+    * hash to); the driver collect is bounded by nBuckets. Falls back to
+    * the full [[read]] when the keys cover every bucket. The apply path
+    * never calls it: [[merge]] reads the touched buckets itself. */
+  def readForKeys(spark: SparkSession, table: String, keys: DataFrame,
+      keyCol: String): DataFrame = {
+    val m = current(spark, table)
+    val rows = scan(spark, table, m)
+    val touched = if (m.live.isEmpty) Nil
+      else keys.select(bucketExpr(col(keyCol))).distinct().collect().map(_.getInt(0)).toSeq
+    (if (touched.size >= nBuckets) rows
+    else rows.filter(col("bucket").isin(touched: _*))).drop("bucket")
   }
 
-  /** Current bucket ids present on disk. */
-  private def bucketsOnDisk(spark: SparkSession, table: String): Seq[Int] =
-    fs(spark).listStatus(new Path(path(table)))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=").toInt).toSeq
+  /** Live files of a table's current version: (bucket, path). */
+  private[graft] def liveFiles(spark: SparkSession, table: String): Seq[(Int, String)] =
+    current(spark, table).live.map(f => (f.bucket, new Path(path(table), f.path).toString))
 
-  /** Read the current state of a table. Schema comes from the sidecar
-    * — an emptied table reads as an empty DataFrame, and no parquet
-    * footers are opened for inference. */
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val schema = schemaOf(spark, table)
-    if (bucketsOnDisk(spark, table).isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      spark.read.schema(schema).parquet(path(table)).drop("bucket")
+  /** Run `body` holding `table`'s commit lock, which every write takes
+    * from its manifest read to its commit. One reentrant lock per table
+    * path in this JVM: two stores over the same root share it. The lock
+    * is fair, so a compaction cadence cannot starve the mirror's merges. */
+  private[graft] def locked[T](table: String)(body: => T): T = {
+    val lock = locks.computeIfAbsent(new Path(path(table)).toString, _ => new ReentrantLock(true))
+    lock.lock()
+    try body finally lock.unlock()
+  }
+
+  /** Write `rows` (with a `bucket` column) into a fresh commit
+    * directory of `table` and commit its files as the next version
+    * after `cur`: `cur`'s live files in `replaced` buckets retire, the
+    * others carry over, and the new manifest replaces the old one
+    * atomically. The caller holds the table's lock. */
+  private def commit(spark: SparkSession, table: String, cur: Option[Manifest],
+      schema: StructType, rows: DataFrame, replaced: Int => Boolean): Unit = {
+    val dir = s"v${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
+    rows.write.partitionBy("bucket").parquet(s"${path(table)}/$dir")
+    val f = fs(spark)
+    val now = System.currentTimeMillis()
+    val written = f.globStatus(new Path(path(table), s"$dir/bucket=*/part-*")).toSeq.map { s =>
+      val b = s.getPath.getParent.getName.stripPrefix("bucket=")
+      LiveFile(s"$dir/bucket=$b/${s.getPath.getName}", b.toInt, s.getLen)
+    }
+    val (gone, kept) = cur.fold(Seq.empty[LiveFile])(_.live).partition(l => replaced(l.bucket))
+    val (expired, retained) =
+      cur.fold(Seq.empty[Retired])(_.retired).partition(_.at < now - RetentionMs)
+    val next = Manifest(schema, kept ++ written, retained ++ gone.map(l => Retired(l.path, now)))
+    AtomicFiles.writeAtomically(spark, manifestPath(table), render(next))
+    sweep(f, table, next, expired, now - RetentionMs)
+  }
+
+  /** Retention pass after a commit of `m`: delete the `expired` files
+    * (no longer in `m`), then every entry of the table directory that
+    * `m` does not reference and that was last modified before
+    * `cutoff` — a crashed write's commit directory or temp manifest,
+    * or a directory whose files all expired. A crash between the
+    * commit and this pass leaves the expired files in place until
+    * their directory holds no referenced file. */
+  private def sweep(f: FileSystem, table: String, m: Manifest, expired: Seq[Retired],
+      cutoff: Long): Unit = {
+    expired.foreach(r => f.delete(new Path(path(table), r.path), false))
+    val referenced = (m.live.map(_.path) ++ m.retired.map(_.path)).map(_.takeWhile(_ != '/')).toSet
+    f.listStatus(new Path(path(table))).foreach { s =>
+      val n = s.getPath.getName
+      if (n != ManifestName && !referenced(n) && s.getModificationTime < cutoff)
+        f.delete(s.getPath, true)
     }
   }
 
-  /** [[read]] restricted to the buckets that could hold any of
-    * `keys` — a bucket=… PARTITION filter, so Spark prunes the other
-    * buckets' files before any read. For a point lookup of a small key
-    * set (a reader's probe keys) this turns a full-table scan into
-    * O(buckets the keys hash to); the driver collect is bounded by
-    * nBuckets. Falls back to the full [[read]] when the keys cover
-    * every bucket. The apply path never calls it: [[merge]] reads the
-    * touched buckets itself. */
-  def readForKeys(spark: SparkSession, table: String, keys: DataFrame,
-      keyCol: String): DataFrame = {
-    val schema = schemaOf(spark, table)
-    if (bucketsOnDisk(spark, table).isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val touched = keys.select(bucketOf(col(keyCol)).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (touched.size >= nBuckets) read(spark, table)
-    else spark.read.schema(schema).parquet(path(table))
-      .filter(col("bucket").isin(touched: _*))
-      .drop("bucket")
-  }
+  /** Delete every file of `table` that its current version does not
+    * name, whatever its age: the retained files older readers may
+    * still scan, and any crashed write's. Erasure's obligation covers
+    * those copies too ([[graft.operators.Erasure.forgetFromStore]]);
+    * a reader still scanning one fails instead of serving it. */
+  private[graft] def purgeSuperseded(spark: SparkSession, table: String): Unit =
+    locked(table) {
+      manifest(spark, table).foreach { m =>
+        val kept = m.copy(retired = Nil)
+        AtomicFiles.writeAtomically(spark, manifestPath(table), render(kept))
+        sweep(fs(spark), table, kept, m.retired, Long.MaxValue)
+      }
+    }
 
   /** Initial snapshot load (CDC snapshot-then-stream handoff,
     * flow-snapshot-worker docker-compose.yml:133–141): bulk-write the
-    * source image partitioned by key bucket. */
+    * source image partitioned by key bucket as a new version that
+    * replaces every file of the previous one. */
   def snapshot(spark: SparkSession, table: String, source: DataFrame, keyCol: String): Unit = {
     require(!source.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
-    source
-      .withColumn("bucket", bucketOf(col(keyCol)))
-      .repartition(col("bucket"))
-      .write
-      .partitionBy("bucket")
-      .mode(SaveMode.Overwrite)
-      .option(OverwriteMode, "static") // full replace, whatever the session says
-      .parquet(path(table))
-    writeSchema(spark, table, source.schema)
+    locked(table)(commit(spark, table, manifest(spark, table), source.schema,
+      source.withColumn("bucket", bucketExpr(col(keyCol))).repartition(col("bucket")), _ => true))
   }
 
   /** Additive schema evolution (the PeerDB-style schema propagation —
@@ -268,21 +381,20 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * — see [[unionSchema]]; existing rows get nulls for new columns,
     * new rows get nulls for omitted ones.
     *
-    * Only buckets containing changed keys are read and rewritten
-    * (dynamic partition overwrite). Their stored rows, ranked below
-    * every change, and the changes meet in ONE shuffle on the bucket
-    * column; `row_number` over (bucket, key) by rank descending runs
-    * on that partitioning with no second exchange, keeps each key's
-    * winner and drops deletes. The result is pinned, which breaks its
-    * lineage from the files about to be overwritten (Spark refuses to
-    * overwrite a path it is also reading from), and the pin's job
-    * folds the buckets that still hold rows. Its partitions already
-    * hold whole buckets, so the write needs no exchange and each
-    * touched bucket gets one file. On the apply path's steady batch
-    * that is 3 jobs: the shuffle map stage, the pin, the write.
-    * Re-applying the same change set is a no-op — effective
-    * exactly-once on top of Spark's at-least-once foreachBatch
-    * (SURVEY.md §2.8 C5).
+    * Only buckets containing changed keys are read and rewritten: the
+    * merge reads version N's files of those buckets and writes version
+    * N+1's, so it never reads a file it replaces. The stored rows,
+    * ranked below every change, and the changes meet in ONE shuffle on
+    * the bucket column; `row_number` over (bucket, key) by rank
+    * descending runs on that partitioning with no second exchange,
+    * keeps each key's winner and drops deletes. Its partitions hold
+    * whole buckets, so the write needs no exchange and each touched
+    * bucket that keeps rows gets one file; a touched bucket that
+    * emptied gets none, and the commit drops its old files. On the
+    * apply path's steady batch that is 2 jobs: the shuffle map stage
+    * and the write. Re-applying the same change set is a no-op —
+    * effective exactly-once on top of Spark's at-least-once
+    * foreachBatch (SURVEY.md §2.8 C5).
     *
     * `carry`: columns a winner may leave unset. Each takes the value
     * of the highest-ranked row of its key (the winner first, the
@@ -290,14 +402,15 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * [[CdcPipeline.UnchangedToast]] there; an explicit NULL is a
     * value. The rule is a whole-partition window aggregate on the
     * same window as `row_number`, so it adds no exchange and no job.
-    * A winner that is not a delete and finds no value fails the pin's
-    * job (`raise_error`), before anything is written: Postgres omits
+    * A winner that is not a delete and finds no value fails the write
+    * job (`raise_error`), before anything is committed: Postgres omits
     * a TOAST value only for a row that exists, so the feed and the
-    * target have diverged. `movedKeys` (`_from`, `_to` key columns):
-    * key moves whose new row may inherit from the old key's stored
-    * row; that row joins the union under the new key, ranked above
-    * the new key's own stored row (where a replay finds what the
-    * first apply moved), at the cost of one broadcast job.
+    * target have diverged. `movedKeys` (`_from`, `_to` key columns and
+    * the move's rank `_at`): key moves whose new row may inherit from
+    * the old key — the old key's stored row, ranked above the new
+    * key's own stored row (where a replay finds what the first apply
+    * moved), and the old key's changes ranked below the move join the
+    * union under the new key, at the cost of one broadcast job.
     *
     * `keepDeletes` (soft-delete mode): a delete winner is kept, not
     * dropped; the caller carries every data column, so a tombstone
@@ -316,146 +429,117 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       rankCol: Option[String] = None,
       carry: Seq[String] = Nil,
       movedKeys: Option[DataFrame] = None,
-      keepDeletes: Boolean = false): Unit = {
+      keepDeletes: Boolean = false): Unit = locked(table) {
     require(!changes.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
-    val keyed = changes.withColumn("bucket", bucketOf(col(keyCol)))
+    val keyed = changes.withColumn("bucket", bucketExpr(col(keyCol)))
     val dataSchema = StructType(changes.schema.filterNot(f =>
       f.name == "op" || rankCol.contains(f.name)))
-    val stored = if (exists(spark, table)) Some(schemaOf(spark, table)) else None
-    stored.filter(_ => dropPolicy == DropPolicy.Error).foreach { s =>
-      val dropped = s.fieldNames.filterNot(dataSchema.fieldNames.contains)
+    val cur = manifest(spark, table)
+    cur.filter(_ => dropPolicy == DropPolicy.Error).foreach { m =>
+      val dropped = m.schema.fieldNames.filterNot(dataSchema.fieldNames.contains)
       require(dropped.isEmpty,
         s"table '$table': batch schema omits stored column(s) " +
           s"${dropped.mkString("[", ", ", "]")} under DropPolicy.Error - " +
           "a source column drop is non-additive; re-sync the table " +
           "(KeyedParquetStore.resync) or merge with DropPolicy.KeepNullFill")
     }
-    val target = stored.fold(dataSchema)(unionSchema(_, dataSchema))
+    val target = cur.fold(dataSchema)(m => unionSchema(m.schema, dataSchema))
 
     // Buckets touched by this batch, when any are stored. The key set
     // per micro-batch is small relative to the table (CDC batches,
     // insert.ps1:11–13), and the collect is bounded by nBuckets, never
     // by table size.
-    val onDisk = stored.isDefined && bucketsOnDisk(spark, table).nonEmpty
+    val onDisk = cur.exists(_.live.nonEmpty)
     val touched =
       if (!onDisk) Nil
       else touchedHint.getOrElse(
         keyed.select("bucket").distinct().collect().map(_.getInt(0)).toSeq)
-    if (onDisk && touched.isEmpty) return
-
-    val incoming = alignTo(keyed, target, col("op"),
-      rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
-    val ranked =
-      if (!onDisk) incoming
-      else {
-        val rows = spark.read.schema(stored.get).parquet(path(table))
-          .filter(col("bucket").isin(touched: _*))
-        def asStored(df: DataFrame, rank: Column) =
-          alignTo(df, target, lit(null).cast("string").as("op"), rank.cast(LongType).as(Rank))
-        val moved = movedKeys.map(m => asStored(
-          rows.join(broadcast(m), col(keyCol) === col("_from"))
-            .drop(keyCol, "bucket").withColumnRenamed("_to", keyCol)
-            .withColumn("bucket", bucketOf(col(keyCol))), lit(Long.MinValue)))
-        (asStored(rows, lit(null)) +: moved.toSeq :+ incoming).reduce(_ unionByName _)
+    if (!onDisk || touched.nonEmpty) {
+      val incoming = alignTo(keyed, target, col("op"),
+        rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
+      def asStored(df: DataFrame, rank: Column) =
+        alignTo(df, target, lit(null).cast("string").as("op"), rank.cast(LongType).as(Rank))
+      val stored = cur.filter(_ => onDisk).map(m =>
+        scan(spark, table, m).filter(col("bucket").isin(touched: _*)))
+      // a move's old key, stored and in the batch below the move, under
+      // the new key (a delete there is never carried)
+      val moved = movedKeys.map(m =>
+        (stored.map(asStored(_, lit(Long.MinValue))).toSeq :+ incoming).reduce(_ unionByName _)
+          .join(broadcast(m), col(keyCol) === col("_from") && col(Rank) < col("_at"))
+          .drop(keyCol, "bucket", "_from", "_at").withColumnRenamed("_to", keyCol)
+          .withColumn("bucket", bucketExpr(col(keyCol))))
+      val ranked = (stored.map(asStored(_, lit(null))).toSeq ++ moved :+ incoming)
+        .reduce(_ unionByName _)
+      val byKey = Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)
+      val isDelete = col("op") <=> "D"
+      val carried = carry.map { c =>
+        val holds = if (target(c).dataType != StringType) !isDelete
+          else !isDelete && !(col(c) <=> CdcPipeline.UnchangedToast)
+        first(when(holds, struct(col(c).as("v"))), ignoreNulls = true)
+          .over(byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as(s"_carry_$c")
       }
-    val byKey = Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)
-    val isDelete = col("op") <=> "D"
-    val carried = carry.map { c =>
-      val holds = if (target(c).dataType != StringType) !isDelete
-        else !isDelete && !(col(c) <=> CdcPipeline.UnchangedToast)
-      first(when(holds, struct(col(c).as("v"))), ignoreNulls = true)
-        .over(byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-        .as(s"_carry_$c")
+      val winner = col("_rn") === 1
+      val winners = ranked.repartition(col("bucket"))
+        .select(col("*") +: row_number().over(byKey).as("_rn") +: carried: _*)
+        .filter(if (keepDeletes) winner else winner && !isDelete)
+        .select(target.fields.toSeq.map { f =>
+          if (!carry.contains(f.name)) col(f.name)
+          else when(col(s"_carry_${f.name}").isNull && !isDelete,
+            raise_error(lit(s"table '$table': unchanged-TOAST column '${f.name}' " +
+              "has no stored image to inherit from - feed and target have " +
+              "diverged; re-sync the table (KeyedParquetStore.resync)")).cast(f.dataType))
+            .otherwise(col(s"_carry_${f.name}.v")).as(f.name)
+        } :+ col("bucket"): _*)
+      commit(spark, table, cur, target, winners, touched.toSet)
     }
-    val winner = col("_rn") === 1
-    val winners = ranked.repartition(col("bucket"))
-      .select(col("*") +: row_number().over(byKey).as("_rn") +: carried: _*)
-      .filter(if (keepDeletes) winner else winner && !isDelete)
-      .select(target.fields.toSeq.map { f =>
-        if (!carry.contains(f.name)) col(f.name)
-        else when(col(s"_carry_${f.name}").isNull && !isDelete,
-          raise_error(lit(s"table '$table': unchanged-TOAST column '${f.name}' " +
-            "has no stored image to inherit from - feed and target have " +
-            "diverged; re-sync the table (KeyedParquetStore.resync)")).cast(f.dataType))
-          .otherwise(col(s"_carry_${f.name}.v")).as(f.name)
-      } :+ col("bucket"): _*)
-
-    val pin = Checkpointing.materialize(winners, keysOf = Some("bucket"))
-    try {
-      // Dynamic overwrite replaces only the bucket=... dirs present in
-      // the merged rows. A touched bucket whose rows were ALL deleted is
-      // absent from them — clear it explicitly or deletes would resurface.
-      val f = fs(spark)
-      touched.filterNot(pin.keys).foreach(b =>
-        f.delete(new Path(s"${path(table)}/bucket=$b"), true))
-      if (pin.keys.nonEmpty)
-        pin.df.write.partitionBy("bucket").mode(SaveMode.Overwrite)
-          .option(OverwriteMode, "dynamic").parquet(path(table))
-    } finally Bridge.free(pin.df)
-    // persist the (possibly widened) schema AFTER the data write, so a
-    // crash between the two leaves a readable store (old sidecar, old
-    // columns) rather than a sidecar promising columns no file carries
-    // in rewritten buckets
-    if (!stored.contains(target)) writeSchema(spark, table, target)
   }
 
   /** Non-additive evolution path — the reference workflow's RESYNC
     * (drop the target table, re-snapshot from the source with the new
     * schema, then resume the stream; /root/reference/README.md:231–238).
-    * Column drops and retypes both land here: the stored files and the
-    * schema sidecar are replaced wholesale, so no file on disk ever
-    * disagrees with the sidecar about a column's type. */
-  def resync(spark: SparkSession, table: String, source: DataFrame, keyCol: String): Unit = {
-    fs(spark).delete(new Path(path(table)), true)
+    * Column drops and retypes both land here: the new version's files
+    * and schema replace the old ones in one commit, so no file a
+    * version names ever disagrees with its schema about a column's
+    * type. */
+  def resync(spark: SparkSession, table: String, source: DataFrame, keyCol: String): Unit =
     snapshot(spark, table, source, keyCol)
-  }
 
-  /** Drop a table wholesale — data files and schema sidecar. The
-    * target half of the mirror DROP lifecycle
-    * ([[CdcPipeline.drop]]); also the first step of [[resync]]. */
+  /** Drop a table wholesale — manifest and every file. The target half
+    * of the mirror DROP lifecycle ([[CdcPipeline.drop]]). */
   def drop(spark: SparkSession, table: String): Unit =
-    fs(spark).delete(new Path(path(table)), true)
+    locked(table)(fs(spark).delete(new Path(path(table)), true))
 
-  /** Per-bucket file statistics — drives compaction decisions and the
-    * monitoring table-stats report. */
-  def bucketStats(spark: SparkSession, table: String): Seq[(Int, Int, Long)] = {
-    val f = fs(spark)
-    bucketsOnDisk(spark, table).sorted.map { b =>
-      val files = f.listStatus(new Path(s"${path(table)}/bucket=$b"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      (b, files.length, files.map(_.getLen).sum)
-    }
-  }
+  /** Per-bucket file statistics of the current version — drives
+    * compaction decisions and the monitoring table-stats report. */
+  def bucketStats(spark: SparkSession, table: String): Seq[(Int, Int, Long)] =
+    current(spark, table).live.groupBy(_.bucket).toSeq.sortBy(_._1)
+      .map { case (b, fs) => (b, fs.size, fs.map(_.bytes).sum) }
 
-  /** Total parquet FOOTER metadata bytes across a table's files — the
-    * store's closest analogue to `pg_indexes_size`: parquet footers
+  /** Total parquet FOOTER metadata bytes across a table's live files —
+    * the store's closest analogue to `pg_indexes_size`: parquet footers
     * carry the column/offset indexes and row-group min/max zone maps
     * that serve the same pruning role as btree pages. Footer length is
     * the little-endian int32 in the 8-byte `len + "PAR1"` trailer. */
   def footerBytes(spark: SparkSession, table: String): Long = {
     val f = fs(spark)
-    bucketsOnDisk(spark, table).map { b =>
-      f.listStatus(new Path(s"${path(table)}/bucket=$b"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          val in = f.open(s.getPath)
-          try {
-            in.seek(s.getLen - 8)
-            val tail = new Array[Byte](4)
-            in.readFully(tail)
-            ((tail(0) & 0xffL) | ((tail(1) & 0xffL) << 8) |
-              ((tail(2) & 0xffL) << 16) | ((tail(3) & 0xffL) << 24)) + 8L
-          } finally in.close()
-        }.sum
+    current(spark, table).live.map { l =>
+      val in = f.open(new Path(path(table), l.path))
+      val tail = new Array[Byte](4)
+      try in.readFully(l.bytes - 8, tail) finally in.close()
+      (java.nio.ByteBuffer.wrap(tail).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        & 0xffffffffL) + 8L
     }.sum
   }
 
   /** Compact every bucket to one file per bucket. Continuous CDC
-    * merging accretes small files (each dynamic overwrite writes at
-    * least one file per touched bucket); at scale a periodic compactor
-    * keeps scan task counts proportional to data volume, not merge
-    * history. Contents are untouched — only file layout changes.
+    * merging accretes small files (each merge writes at least one file
+    * per touched bucket); at scale a periodic compactor keeps scan
+    * task counts proportional to data volume, not merge history.
+    * Contents are untouched — only file layout changes. It commits
+    * like any write, under the table's lock, so a merge that lands
+    * while it runs waits for it and then applies on top of it.
     *
     * Optional `clusterBy`: sort rows by these columns within each
     * bucket during the rewrite. Parquet row-group min/max statistics
@@ -464,52 +548,28 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * parquet-native analogue of clustered-index maintenance.
     *
     * Returns the number of rows PURGED by `dropWhere` (0 when none is
-    * given), counted against the same pinned read the rewrite
-    * consumes — so the count and the purge can never disagree, even
-    * when a concurrent `applyBatchSoft` lands mid-compact (rows it
-    * expires are simply part of the NEXT cycle). The pin's one job
-    * folds both the purge count and the set of buckets that keep rows.
-    *
-    * Crash window: the fully-purged-bucket cleanup below runs as a
-    * separate FS pass AFTER the dynamic-overwrite commit. A crash
-    * between the two leaves such a bucket's old file in place and its
-    * dropped rows visible again until the next cadence run — the purge
-    * predicate is stable (`expired` only grows), so a re-run heals it
-    * idempotently; durability of a purge is therefore "by the end of
-    * the next completed cadence cycle", not "at job exit". */
+    * given): the rewrite drops them, and the pin its count comes from
+    * is the read the rewrite consumes, so the count and the purge can
+    * never disagree. A row where the predicate evaluates to NULL (e.g.
+    * null _deleted) is KEPT — retention must fail toward retaining. A
+    * bucket the purge empties gets no file in the new version. */
   def compact(spark: SparkSession, table: String, clusterBy: Seq[String] = Nil,
-      dropWhere: Option[Column] = None): Long = {
-    val schema = schemaOf(spark, table)
-    val before = bucketsOnDisk(spark, table)
-    if (before.isEmpty) return 0L
-    // `dropWhere` rows are PURGED during the rewrite — retention folded
-    // into the compaction pass the cadence already pays, one table
-    // rewrite instead of discovery + merge + compact as separate jobs
-    // (CdcPipeline.sweepAndCompact's contract). A row where the
-    // predicate evaluates to NULL (e.g. null _deleted) is KEPT —
-    // retention must fail toward retaining. The pin breaks lineage
-    // from the files being replaced.
-    val purged = dropWhere.fold(lit(false))(c => coalesce(c, lit(false)))
-    val pin = Checkpointing.materialize(spark.read.schema(schema).parquet(path(table))
-      .withColumn("_purged", purged.cast("int"))
-      .withColumn("_kept", when(col("_purged") === 0, col("bucket").cast("int"))),
-      sumOf = Some("_purged"), keysOf = Some("_kept"))
-    try {
-      pin.df.filter(col("_purged") === 0).drop("_purged", "_kept")
-        .repartition(col("bucket"))
-        .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*)
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-        .option(OverwriteMode, "dynamic").parquet(path(table))
-      // dynamic overwrite leaves a bucket's OLD file in place when the
-      // rewrite emits no rows for it — a fully-purged bucket must be
-      // cleared explicitly or its dropped rows resurrect
-      val f = fs(spark)
-      before.filterNot(pin.keys).foreach(b =>
-        f.delete(new Path(path(table), s"bucket=$b"), true))
-      pin.sum.toLong
-    } finally
-      // a compaction CADENCE (sweepAndCompact) must not accumulate one
-      // generation of checkpoint blocks per cycle
-      Bridge.free(pin.df)
+      dropWhere: Option[Column] = None): Long = locked(table) {
+    val cur = current(spark, table)
+    if (cur.live.isEmpty) 0L
+    else {
+      val rows = scan(spark, table, cur)
+      val pin = dropWhere.map(c => Checkpointing.materialize(
+        rows.withColumn("_purged", coalesce(c, lit(false)).cast("int")), sumOf = Some("_purged")))
+      try {
+        val kept = pin.fold(rows)(_.df.filter(col("_purged") === 0).drop("_purged"))
+        commit(spark, table, Some(cur), cur.schema, kept.repartition(col("bucket"))
+          .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*), _ => true)
+        pin.fold(0L)(_.sum.toLong)
+      } finally
+        // a compaction CADENCE (sweepAndCompact) must not accumulate one
+        // generation of checkpoint blocks per cycle
+        pin.foreach(p => Bridge.free(p.df))
+    }
   }
 }

@@ -14,6 +14,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field nullable, at every depth — what Spark's
+    * own file sources scan with, whatever schema the files declare. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+
   /** The RDD whose blocks an eager `localCheckpoint()` persisted, if
     * `df` is such a checkpoint result. The public Dataset API offers no
     * handle to it (`df.rdd` wraps a fresh deserializer RDD), and

@@ -59,6 +59,12 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (125L to 129L).map(l => st(l, "U", 7, l)) ++
       Seq(st(130, "D", 999), st(131, "U", 300, 300, before = Some(8L)))
 
+  /** (key, bucket) of every row in `t`'s live files, from the manifest. */
+  private def layout(store: KeyedParquetStore, t: String, keyCol: String): Seq[(Long, Int)] =
+    store.liveFiles(spark, t).flatMap { case (b, file) =>
+      spark.read.parquet(file).select(col(keyCol).cast("long")).collect().map(_.getLong(0) -> b)
+    }
+
   private def sorted(df: DataFrame, keyCol: String): Seq[Row] = {
     val cols = df.columns.sorted.toSeq
     df.select(cols.map(col): _*).orderBy(keyCol).collect().toSeq
@@ -106,14 +112,13 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
     // empty bucket b of lt: delete every key it holds, and update a key
     // of another bucket
-    val layout = spark.read.parquet(s"$root/lt").select("id", "bucket").as[(Long, Int)]
-      .collect().toSeq
-    val b = layout.find(_._1 == 1L).get._2
-    val doomed = layout.collect { case (k, `b`) => k }.sorted
+    val lLayout = layout(store, "lt", "id")
+    val b = lLayout.find(_._1 == 1L).get._2
+    val doomed = lLayout.collect { case (k, `b`) => k }.sorted
     assert(doomed.size > 1)
     applyAndCheck(doomed.zipWithIndex.map { case (k, i) => lt(200L + i, "D", k) } :+
-      lt(299, "U", layout.find(_._2 != b).get._1, 299), lSchema)
-    assert(spark.read.parquet(s"$root/lt").filter(col("bucket") === b).count() == 0L,
+      lt(299, "U", lLayout.find(_._2 != b).get._1, 299), lSchema)
+    assert(layout(store, "lt", "id").count(_._2 == b) == 0,
       s"bucket $b still holds rows")
 
     // an ADD COLUMN inside one batch: some events carry the new column,
@@ -193,16 +198,33 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the replay finds the moved value under the new key
     check(batchA, true)
 
-    val layout = spark.read.parquet(s"$root/t").select("id", "bucket").as[(Long, Int)]
-      .collect().toSeq
-    val b = layout.find(_._1 == 9L).get._2
-    val doomed = layout.collect { case (k, `b`) => k }.sorted
-    val marked = layout.collect { case (k, o) if o != b && k > 10L && k <= 40L => k }.take(3)
+    val tLayout = layout(store, "t", "id")
+    val b = tLayout.find(_._1 == 9L).get._2
+    val doomed = tLayout.collect { case (k, `b`) => k }.sorted
+    val marked = tLayout.collect { case (k, o) if o != b && k > 10L && k <= 40L => k }.take(3)
     assert(doomed.size > 1 && marked.nonEmpty)
     check(doomed.zipWithIndex.map { case (k, i) => tt(200L + i, "D", k) } ++
       marked.zipWithIndex.map { case (k, i) => tt(300L + i, "U", k, s"u$k", M) }, false)
-    assert(spark.read.parquet(s"$root/t").filter(col("bucket") === b).count() == 0L,
+    assert(layout(store, "t", "id").count(_._2 == b) == 0,
       s"bucket $b still holds rows")
+  }
+
+  test("a marked key move inherits the old key's in-batch update, not its stored row") {
+    import spark.implicits._
+    val store = new KeyedParquetStore(
+      Files.createTempDirectory("cdc_merge_move_update").toString, nBuckets = 4)
+    val snap = Seq((5L, "n5", "old-bio"), (6L, "n6", "bio6")).toDF("id", "name", "bio")
+    CdcPipeline.snapshot(spark, store, Map("t" -> snap), Map("t" -> "id"))
+    val batch = Seq(tt(10, "U", 5, "n5b", "new-bio"), tt(11, "U", 105, "m", M, before = Some(5L)))
+    val want = Seq(Row(6L, "n6", "bio6"), Row(105L, "m", "new-bio"))
+    def rows(df: DataFrame) = df.select("id", "name", "bio").orderBy("id").collect().toSeq
+    CdcPipeline.applyBatch(batch.toDF(), store, Map("t" -> tSchema), Map("t" -> "id"))
+    assert(rows(store.read(spark, "t")) == want)
+    assert(rows(CdcPipeline.asOf(snap, batch.toDF(), tSchema, "id", Long.MaxValue,
+      resolveToast = true)) == want)
+    // a replay finds the moved value under the new key
+    CdcPipeline.applyBatch(batch.toDF(), store, Map("t" -> tSchema), Map("t" -> "id"))
+    assert(rows(store.read(spark, "t")) == want)
   }
 
   test("soft-delete merge equals a softImagePerKey control, batch by batch: a " +
@@ -249,7 +271,7 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     check(Seq(ev(200, "I", 2, 22), ev(201, "D", 105), ev(202, "D", 4)), false)
   }
 
-  test("plan shape: the merge's pinned plan shuffles once, the store write not at all") {
+  test("plan shape: the merge writes through one shuffle, no pin") {
     import spark.implicits._
     // the second input carries TOAST markers on a string column, resolved
     // from the stored rows: the carry rides the same window
@@ -279,14 +301,13 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         while (!mine.exists(_._1 == "command") && spins < 100) { Thread.sleep(100); spins += 1 }
         def shuffles(qe: QueryExecution) =
           collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }.size
-        val pins = mine.filter { case (f, qe) =>
-          f == "localCheckpoint" && collect(qe.executedPlan) { case w: WindowExec => w }.nonEmpty
-        }
-        assert(pins.size == 1, s"expected one merge pin, saw ${mine.map(_._1)}")
-        assert(shuffles(pins.head._2) == 1, pins.head._2.executedPlan.toString)
+        def windows(qe: QueryExecution) = collect(qe.executedPlan) { case w: WindowExec => w }
+        val pins = mine.filter { case (f, qe) => f == "localCheckpoint" && windows(qe).nonEmpty }
+        assert(pins.isEmpty, s"expected no merge pin, saw ${mine.map(_._1)}")
         val writes = mine.filter(_._1 == "command")
         assert(writes.size == 1, s"expected one store write, saw ${mine.map(_._1)}")
-        assert(shuffles(writes.head._2) == 0, writes.head._2.executedPlan.toString)
+        assert(shuffles(writes.head._2) == 1 && windows(writes.head._2).nonEmpty,
+          writes.head._2.executedPlan.toString)
       } finally spark.listenerManager.unregister(listener)
     }
   }

@@ -325,18 +325,19 @@ class CdcPipelineSpec extends AnyFunSuite {
     val src = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
     store.snapshot(spark, "t", src, "id")
 
-    val buckets = new java.io.File(s"$root/t").listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(f => f.getName -> f.lastModified()).toMap
+    // each bucket's live files, from the manifest
+    def layout() = store.liveFiles(spark, "t").groupBy(_._1).map { case (b, fs) =>
+      b -> fs.map(_._2).toSet }
+    val buckets = layout()
     assert(buckets.size == 8)
 
-    Thread.sleep(1100)
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)))
     val one = Seq(ChangeEvent(1, ts(1), "U", "t", 42, """{"id":42,"v":-1}""")).toDF()
     CdcPipeline.applyBatch(one, store, Map("t" -> schema), Map("t" -> "id"))
 
-    val after = new java.io.File(s"$root/t").listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(f => f.getName -> f.lastModified()).toMap
-    val changed = after.filter { case (k, m) => buckets(k) != m }
+    val after = layout()
+    assert(after.keySet == buckets.keySet)
+    val changed = after.filter { case (k, files) => buckets(k) != files }
     assert(changed.size == 1, s"expected exactly 1 rewritten bucket, got ${changed.keys}")
     assert(store.read(spark, "t").filter(col("id") === 42).collect().head.getLong(1) == -1L)
     assert(store.read(spark, "t").count() == 1000)
@@ -415,21 +416,20 @@ class CdcPipelineSpec extends AnyFunSuite {
       CdcPipeline.applyBatch(batch(2000L), store,
         Map("t" -> schema), Map("t" -> "id"))
     }
-    // measured steady state: 4 jobs in each of 3 runs (the batch pin,
+    // measured steady state: 3 jobs in each of 3 runs (the batch pin,
     // whose job also folds the fan-out; the merge's bucket shuffle map
-    // stage; its pin, which also folds the surviving-bucket set; the
-    // bucket overwrite). The previous shape ran 8 (fan-out aggregate and
-    // its AQE stage; a window dedup shuffled twice plus a broadcast
-    // before the merge pin; a repartitioned write) under a gate of 8;
-    // the pre-r19 shape ran 16. A reintroduced per-batch collect (2
-    // jobs) or probe trips it.
-    assert(cur <= 4,
-      s"steady-state applyBatch ran $cur jobs (expected 4) - a " +
+    // stage; the write of the new version's files). The merge pin the
+    // previous shape ran before its bucket overwrite made it 4; before
+    // that, 8 (fan-out aggregate and its AQE stage; a window dedup
+    // shuffled twice plus a broadcast before the merge pin; a
+    // repartitioned write); the pre-r19 shape ran 16. A reintroduced
+    // per-batch collect (2 jobs) or probe trips it.
+    assert(cur <= 3,
+      s"steady-state applyBatch ran $cur jobs (expected 3) - a " +
         "per-batch collect/probe job crept back into the apply path")
   }
 
-  test("job-count gate: a batch with key-moving updates takes the same " +
-    "4-job merge (no pre-dedup shuffle)") {
+  test("job-count gate: a key-moving batch takes the steady merge") {
     import spark.implicits._
     val store = new KeyedParquetStore(
       Files.createTempDirectory("cdc_jobs_moves").toString, nBuckets = 8)
@@ -449,10 +449,10 @@ class CdcPipelineSpec extends AnyFunSuite {
     val cur = JobCount.of(spark, "apply_jobcount_moves") {
       CdcPipeline.applyBatch(moves.toDF(), store, Map("t" -> schema), Map("t" -> "id"))
     }
-    // measured: 4 in each of 3 runs; the previous shape ran 11 (the key-change
-    // expansion's window dedup and the merge's own touched-bucket
-    // collect on top of the steady shape)
-    assert(cur <= 4, s"move-path applyBatch ran $cur jobs (expected 4)")
+    // measured: 3 in each of 3 runs; with the merge pin it ran 4, and
+    // before that 11 (the key-change expansion's window dedup and the
+    // merge's own touched-bucket collect on top of the steady shape)
+    assert(cur <= 3, s"move-path applyBatch ran $cur jobs (expected 3)")
     val state = store.read(spark, "t").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // moved keys 0..4 are gone; updates after the move recreate them
@@ -460,8 +460,7 @@ class CdcPipelineSpec extends AnyFunSuite {
       s"got ${state.toSeq.sorted.take(10)}")
   }
 
-  test("job-count gate: TOAST and soft-delete batches take the steady 4-job " +
-    "merge; a marked key move one broadcast job more") {
+  test("job-count gate: TOAST, soft and marked-move batches and snapshot") {
     import spark.implicits._
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType),
       StructField("bio", StringType)))
@@ -473,21 +472,28 @@ class CdcPipelineSpec extends AnyFunSuite {
     val deletes = (0 until 5).map(i => ev(i, "D", 40L + i))
     val marked = (0 until 10).map(i => ev(i, "U", i.toLong, M))
     val markedMoves = (0 until 5).map(i => ev(i, "U", 100L + i, M, Some(i.toLong)))
-    // measured, identical in each of 3 runs: 4, 4, 4 and 5 jobs. The
-    // previous shape ran 8, 8, 5 and 8: the TOAST path's per-key
-    // aggregate, bucket collect and lookup joins, and the soft path's
-    // own aggregate and delete fallback join, before the merge
+    // measured, identical in each of 3 runs: 3, 3, 3 and 4 jobs, the
+    // steady batch's plus the marked move's broadcast. With the merge pin
+    // they ran 4, 4, 4 and 5; before that 8, 8, 5 and 8: the TOAST
+    // path's per-key aggregate, bucket collect and lookup joins, and the
+    // soft path's own aggregate and delete fallback join, before the
+    // merge
     val shapes = Seq(
-      ("toast", false, marked ++ updates, 4),
-      ("soft_deletes", true, deletes ++ updates, 4),
-      ("soft", true, updates, 4),
-      ("marked_moves", false, markedMoves ++ updates, 5))
+      ("toast", false, marked ++ updates, 3),
+      ("soft_deletes", true, deletes ++ updates, 3),
+      ("soft", true, updates, 3),
+      ("marked_moves", false, markedMoves ++ updates, 4))
     shapes.foreach { case (name, soft, events, bound) =>
       val store = new KeyedParquetStore(
         Files.createTempDirectory(s"cdc_jobs_$name").toString, nBuckets = 8)
       val seed = Map("t" -> (0L until 50L).map(i => (i, i, s"b$i")).toDF("id", "v", "bio"))
-      if (soft) CdcPipeline.snapshotSoft(spark, store, seed, Map("t" -> "id"))
-      else CdcPipeline.snapshot(spark, store, seed, Map("t" -> "id"))
+      // a snapshot is its write's shuffle map stage and result stage,
+      // as before the manifest commit
+      val snap = JobCount.of(spark, s"snapshot_jobcount_$name") {
+        if (soft) CdcPipeline.snapshotSoft(spark, store, seed, Map("t" -> "id"))
+        else CdcPipeline.snapshot(spark, store, seed, Map("t" -> "id"))
+      }
+      assert(snap <= 2, s"$name snapshot ran $snap jobs (expected 2)")
       val cur = JobCount.of(spark, s"apply_jobcount_$name") {
         if (soft) CdcPipeline.applyBatchSoft(events.toDF(), store,
           Map("t" -> schema), Map("t" -> "id"))

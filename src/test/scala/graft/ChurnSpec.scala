@@ -77,16 +77,9 @@ class ChurnSpec extends AnyFunSuite {
     val clusteredState = store.read(spark, "t").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(clusteredState == state.toMap)
-    val f = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(store.root), spark.sparkContext.hadoopConfiguration)
-    store.bucketStats(spark, "t").foreach { case (b, _, _) =>
-      val files = f.listStatus(new org.apache.hadoop.fs.Path(s"${store.root}/t/bucket=$b"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      files.foreach { fileStatus =>
-        val ids = spark.read.parquet(fileStatus.getPath.toString)
-          .select("id").collect().map(_.getLong(0)).toSeq
-        assert(ids == ids.sorted, s"bucket $b not clustered by id")
-      }
+    store.liveFiles(spark, "t").foreach { case (b, file) =>
+      val ids = spark.read.parquet(file).select("id").collect().map(_.getLong(0)).toSeq
+      assert(ids == ids.sorted, s"bucket $b not clustered by id")
     }
   }
 

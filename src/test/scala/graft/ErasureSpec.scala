@@ -498,6 +498,29 @@ class ErasureSpec extends AnyFunSuite {
     assert(store.appliedLsn(spark).contains(41L))
   }
 
+  test("store forget leaves no copy of the keys in any file under the table") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft_erasure_retained").toString
+    val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
+    val rowSchema = StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType)))
+    store.snapshot(spark, "t", (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), "id")
+    // an update retires the files holding the keys; readers keep them
+    store.merge(spark, "t", Seq(("U", 5L, "u5"), ("U", 6L, "u6")).toDF("op", "id", "v"), "id")
+    def rawResidue(): Long = {
+      val files = Files.walk(Paths.get(s"$work/store/t")).toArray.map(_.toString)
+        .filter(f => f.endsWith(".parquet") && !Paths.get(f).getFileName.toString.startsWith("."))
+      spark.read.schema(rowSchema).parquet(files.toSeq: _*)
+        .filter(col("id").isin(5L, 6L)).count()
+    }
+    assert(rawResidue() > 2L, "precondition: retired files still hold the keys")
+    Erasure.forgetFromStore(spark, store, "t", "id", rowSchema, Seq(5L, 6L))
+    assert(rawResidue() == 0L)
+    assert(store.read(spark, "t").count() == 98L)
+    assert(Erasure.certificate(spark, Seq(5L, 6L).toDF("key"), store = Seq((store, "t", "id")))
+      .collect().forall(r => r.getLong(2) == 0L && r.getBoolean(3)))
+  }
+
   test("soft-delete store forget: right-to-be-forgotten HARD-purges rows " +
     "the soft mode retained — even already-flagged tombstones") {
     import spark.implicits._
