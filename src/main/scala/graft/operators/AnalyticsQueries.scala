@@ -494,9 +494,9 @@ object AnalyticsQueries {
     // so the boolean is stable, not flaky. Pair cardinality is
     // #types², so every frame after the first agg is tiny.
     "e5_hll_setops" -> { (s, d) =>
-      val ut = Tables.load(s, d, "events")
-        .select(col("user_id"), col("event_type")).distinct()
-        .localCheckpoint(true) // exact pairs + per-type + union sketches
+      // exact pairs + per-type + union sketches
+      val ut = Checkpointing.pin(Tables.load(s, d, "events")
+        .select(col("user_id"), col("event_type")).distinct())
       val exact = ut.as("a").join(ut.as("b"),
           col("a.user_id") === col("b.user_id") &&
             col("a.event_type") < col("b.event_type"))
@@ -575,9 +575,9 @@ object AnalyticsQueries {
     "e7_bloom_audit" -> { (s, d) =>
       import graft.functions.BloomFilter.{bloom_build, bloom_probe}
       val ev = Tables.load(s, d, "events")
-      val errUsers = ev.filter(col("event_type") === "error")
-        .select(col("user_id")).distinct()
-        .localCheckpoint(true) // build side reused: filter agg + member join
+      // build side reused: filter agg + member join
+      val errUsers = Checkpointing.pin(ev.filter(col("event_type") === "error")
+        .select(col("user_id")).distinct())
       // fixed 128 KiB scalar shipped as a LITERAL, not a cross-joined
       // column — a binary column is re-decoded from the row per probe
       // (j11's measured 19× tax); a literal is a class-field constant
@@ -655,9 +655,9 @@ object AnalyticsQueries {
     "e8_rolling_distinct" -> { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       import graft.functions.HllSketch.{hll_estimate, hll_merge, hll_sketch}
-      val ud = Tables.load(s, d, "events")
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-        .localCheckpoint(true) // sketch side + exact side share it
+      // sketch side + exact side share it
+      val ud = Checkpointing.pin(Tables.load(s, d, "events")
+        .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
       val daily = ud.groupBy("day").agg(hll_sketch(col("user_id")).as("sk"))
       // Frame by CALENDAR distance, not row position: rangeBetween on
       // an integer day ordinal keeps the 7-day semantics when the

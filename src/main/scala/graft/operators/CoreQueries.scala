@@ -275,10 +275,10 @@ object CoreQueries {
     // whole point of a pre-filtered join.
     "j11_bloom_pruned_join" -> { (s, d) =>
       import graft.functions.BloomFilter.{bloom_build, bloom_probe}
-      val dim = Tables.load(s, d, "supplier")
+      // filter build + join side
+      val dim = Checkpointing.pin(Tables.load(s, d, "supplier")
         .filter(col("s_acctbal") > 5000.0)
-        .select("s_suppkey", "s_nationkey")
-        .localCheckpoint(true) // filter build + join side
+        .select("s_suppkey", "s_nationkey"))
       // The filter is a FIXED 128 KiB scalar (size set by nBits, not by
       // data), so materializing it driver-side and re-shipping it as a
       // literal is control-plane, not a data collect — and it matters:

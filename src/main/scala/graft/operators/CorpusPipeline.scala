@@ -119,9 +119,9 @@ object CorpusPipeline {
     * construction. The Gopher recipe has [[filterFunnel]]; this is
     * the alternative published lineage over the same corpus. */
   def c4Funnel(docs: DataFrame): DataFrame = {
-    val gated = c4Gate(docs).localCheckpoint(true)
-    val deduped = spanDedupRebuild(gated, "text")
-      .filter(col("text") =!= "").localCheckpoint(true)
+    val gated = Checkpointing.pin(c4Gate(docs))
+    // unpinned: its stage count is its only consumer
+    val deduped = spanDedupRebuild(gated, "text").filter(col("text") =!= "")
     def stage(df: DataFrame, name: String): DataFrame =
       df.agg(count(lit(1)).as("n_kept"),
         coalesce(sum(size(tokenize(col("text"))).cast("long")), lit(0L))
@@ -321,20 +321,19 @@ object CorpusPipeline {
     // 2. quality gate on the keeper set; checkpointed because it feeds
     //    BOTH the shingle derivation and the final anti-join — without
     //    it the dedup + tokenize scan would run twice over the corpus
-    val qualified = keepers
+    val qualified = Checkpointing.pin(keepers
       .withColumn("tokens", tokenize(col("text")))
       .withColumn("n_tokens", size(col("tokens")))
       .filter(col("n_tokens") >= minTokens &&
-        size(array_distinct(col("tokens"))) / col("n_tokens").cast("double") >= minDiversity)
-      .localCheckpoint(true)
+        size(array_distinct(col("tokens"))) / col("n_tokens").cast("double") >= minDiversity))
     // 3. near-dup pairs over the survivors; drop the larger id of
     //    each pair (greedy-by-id, deterministic)
-    val sh = qualified
+    // feeds the self-join and both size lookups (in-row per-doc set
+    // dedup — see DedupQueries.shinglesOf)
+    val sh = Checkpointing.pin(qualified
       .select(col("doc_id"),
         explode(array_distinct(
-          shingle_hashes(char_fold_array(col("tokens")), 3))).as("shash"))
-      .localCheckpoint(true) // feeds the self-join and both size lookups
-      // (in-row per-doc set dedup — see DedupQueries.shinglesOf)
+          shingle_hashes(char_fold_array(col("tokens")), 3))).as("shash")))
     val dropped = DedupQueries
       .jaccardPairs(sh, jaccardThreshold, DedupQueries.StopShingleMaxDf)
       .select(col("db").as("doc_id")).distinct()
@@ -505,10 +504,10 @@ object CorpusPipeline {
     // a17's documented pattern. Output is the per-stage manifest a
     // training scheduler consumes: doc mass, score span, byte budget.
     "c8_curriculum" -> { (s, d) =>
-      val scored = TextQueries.qualityScores(s, d)
+      // consumed by globalRank's passes + cnt
+      val scored = Checkpointing.pin(TextQueries.qualityScores(s, d)
         .select(col("doc_id"), col("n_chars"), col("score_milli"))
-        .withColumn("k", expr("score_milli * 10000000L + doc_id"))
-        .localCheckpoint(true) // consumed by globalRank's passes + cnt
+        .withColumn("k", expr("score_milli * 10000000L + doc_id")))
       val cnt = scored.agg(count(lit(1)).as("n"))
       Ranks.globalRank(scored, "k", "rank")
         .crossJoin(broadcast(cnt))
@@ -613,13 +612,12 @@ object CorpusPipeline {
         .withColumn("n_sentences",
           size(filter(split(col("page"), "\n"), l => l =!= lit("")))
             .cast("long"))
-      spanDedupRebuild(pages, "page")
+      Checkpointing.pin(spanDedupRebuild(pages, "page")
         .select(col("doc_id"), col("n_sentences"),
           (col("n_sentences") -
             size(filter(split(col("page"), "\n"), l => l =!= lit("")))
               .cast("long")).as("n_removed"),
-          col("page").as("dedup_text"))
-        .localCheckpoint(true)
+          col("page").as("dedup_text")))
         .orderBy("doc_id")
     },
 
@@ -679,14 +677,13 @@ object CorpusPipeline {
       jaccardThreshold: Double,
       withHtmlGate: Boolean,
       lineDedupK: Option[Int] = None): DataFrame = {
-    val gated = if (withHtmlGate) htmlGate(docs).localCheckpoint(true) else docs
+    val gated = if (withHtmlGate) Checkpointing.pin(htmlGate(docs)) else docs
     // optional RefinedWeb line-dedup stage between the markup gate and
     // exact dedup: strip cross-doc boilerplate lines, drop docs whose
     // text was ALL boilerplate (non-increasing by construction — the
     // rebuild only removes lines)
     val lined = lineDedupK.fold(gated)(k =>
-      lineDedupRebuild(gated, "text", k)
-        .filter(col("text") =!= "").localCheckpoint(true))
+      Checkpointing.pin(lineDedupRebuild(gated, "text", k).filter(col("text") =!= "")))
     // pinned (r19): keepers has TWO consumers here — the quality gate
     // below AND its own funnel stage count — and the stage count was
     // re-running the full-text groupBy exchange + parquet scan inside
@@ -694,19 +691,18 @@ object CorpusPipeline {
     // Exchange(text) chain feeding only the `n_exact_dedup` row). One
     // eager pin serves both; `clean`/c1 keep the unpinned spelling
     // (single consumer there).
-    val keepers = lined.groupBy("text").agg(min("doc_id").as("doc_id"))
-      .localCheckpoint(true)
-    val qualified = keepers
+    val keepers = Checkpointing.pin(lined.groupBy("text").agg(min("doc_id").as("doc_id")))
+    // feeds the shingle pass + two counts
+    val qualified = Checkpointing.pin(keepers
       .withColumn("tokens", tokenize(col("text")))
       .withColumn("n_tokens", size(col("tokens")))
       .filter(col("n_tokens") >= minTokens &&
-        size(array_distinct(col("tokens"))) / col("n_tokens").cast("double") >= minDiversity)
-      .localCheckpoint(true) // feeds the shingle pass + two counts
-    val sh = qualified
+        size(array_distinct(col("tokens"))) / col("n_tokens").cast("double") >= minDiversity))
+    // in-row per-doc set dedup (shinglesOf)
+    val sh = Checkpointing.pin(qualified
       .select(col("doc_id"),
         explode(array_distinct(
-          shingle_hashes(char_fold_array(col("tokens")), 3))).as("shash"))
-      .localCheckpoint(true) // in-row per-doc set dedup (shinglesOf)
+          shingle_hashes(char_fold_array(col("tokens")), 3))).as("shash")))
     val dropped = DedupQueries
       .jaccardPairs(sh, jaccardThreshold, DedupQueries.StopShingleMaxDf)
       .select(col("db").as("doc_id")).distinct()
@@ -730,11 +726,11 @@ object CorpusPipeline {
 
   def dsirWeights(docs: DataFrame, isTarget: Column, buckets: Int): DataFrame = {
     val b = lit(buckets.toLong)
-    val toks = docs
+    // feeds the model build AND the scoring pass
+    val toks = Checkpointing.pin(docs
       .select(col("doc_id"), col("source"),
         explode(char_fold_array(tokenize(col("text")))).as("h"))
-      .withColumn("b", pmod(col("h"), b))
-      .localCheckpoint(true) // feeds the model build AND the scoring pass
+      .withColumn("b", pmod(col("h"), b)))
     val bucket = toks.groupBy("b").agg(
       count(lit(1)).as("cr"),
       sum(when(isTarget, 1L).otherwise(0L)).as("ct"))
@@ -771,14 +767,14 @@ object CorpusPipeline {
   def contaminationClusters(docs: DataFrame): DataFrame = {
     // ONE tokenize+shingle pass feeds the bench probe, the direct-hit
     // count, and the cluster-label derivation
-    val sh = DedupQueries.shinglesOf(docs).localCheckpoint(true)
+    val sh = Checkpointing.pin(DedupQueries.shinglesOf(docs))
     val bench = sh.filter(col("doc_id") < 10).select("shash").distinct()
-    val hits = sh.filter(col("doc_id") >= 10)
+    // feeds bad-key derivation + the reason flag
+    val hits = Checkpointing.pin(sh.filter(col("doc_id") >= 10)
       .join(broadcast(bench), Seq("shash"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
       .filter(col("n_hits") >= 3)
-      .select("doc_id")
-      .localCheckpoint(true) // feeds bad-key derivation + the reason flag
+      .select("doc_id"))
     val keyed = docs.select("doc_id")
       .join(broadcast(DedupQueries.clusterLabelsFromShingles(sh)), Seq("doc_id"), "left")
       .withColumn("key", coalesce(col("cluster_id"), col("doc_id")))

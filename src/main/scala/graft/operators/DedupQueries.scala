@@ -103,14 +103,13 @@ object DedupQueries {
     // the candidate set is consumed three times below (the doc cut +
     // the pair join) — pin it, or each reference re-plans the whole
     // candidate derivation (d11's window chain, d3's minhash explode)
-    val candP = cand.localCheckpoint(true)
+    val candP = Checkpointing.pin(cand)
     val candDocs = candP.select(col("da").as("doc_id"))
       .union(candP.select(col("db").as("doc_id")))
       .distinct()
     // pinned for the same reason: three consumers (both verify sides +
     // the set-size aggregate); candidate-bounded, so the pin is small
-    val shc = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val shc = Checkpointing.pin(sh.join(candDocs, Seq("doc_id"), "left_semi"))
     val inter = candP
       .join(shc.as("x"), col("da") === col("x.doc_id"))
       .join(shc.as("y"), col("db") === col("y.doc_id") && col("x.shash") === col("y.shash"))
@@ -239,8 +238,7 @@ object DedupQueries {
     * docs) on the floor — the pinned d3 oracle keeps its 4×2 geometry
     * — and is exact at power-of-two boundaries (both log₂ inputs are
     * exactly representable doubles there), monotone in N; spec-pinned
-    * in SimilaritySizingSpec, wall + candidate growth measured by
-    * [[graft.tools.BandWidthProbe]]. */
+    * in SimilaritySizingSpec. */
   def autoMinhashRows(n: Long, target: Long = 1280L, floor: Int = 2): Int = {
     require(target > 0, s"target must be > 0, got $target")
     if (n <= target) floor
@@ -277,9 +275,9 @@ object DedupQueries {
   }
 
   /** Candidate → exact-Jaccard verify at band width `r` — d3's full
-    * pipeline over an arbitrary shingle frame (public probe surface
-    * for [[graft.tools.BandWidthProbe]]). */
-  def minhashPairsAt(sh: DataFrame, r: Int, bands: Int = 4,
+    * pipeline over an arbitrary shingle frame (d3 and
+    * SimilaritySizingSpec's band-width cases). */
+  private[graft] def minhashPairsAt(sh: DataFrame, r: Int, bands: Int = 4,
       threshold: Double = 0.8): DataFrame =
     jaccardOf(minhashCandidates(sh, r, bands), sh, threshold)
 
@@ -372,14 +370,14 @@ object DedupQueries {
 
   /** Same derivation over any (doc_id, text) frame. */
   private[graft] def clusterLabelsOf(docs: DataFrame): DataFrame =
-    clusterLabelsFromShingles(shinglesOf(docs).localCheckpoint(true))
+    clusterLabelsFromShingles(Checkpointing.pin(shinglesOf(docs)))
 
   /** CC labels from an already-materialized (doc_id, shash) frame —
     * callers that need the shingles for other passes too (c4) hand in
     * one checkpointed frame instead of re-tokenizing the corpus. */
   private[graft] def clusterLabelsFromShingles(sh: DataFrame): DataFrame = {
-    val pairs = jaccardPairs(sh, 0.8, StopShingleMaxDf)
-      .select("da", "db").localCheckpoint(true)
+    val pairs = Checkpointing.pin(jaccardPairs(sh, 0.8, StopShingleMaxDf)
+      .select("da", "db"))
     connectedComponents(pairs)
   }
 
@@ -468,14 +466,15 @@ object DedupQueries {
           TextQueries.c4PageExpr.as("page"))
         .withColumn("n_tokens",
           size(tokenize(col("page"))).cast("long"))
-      CorpusPipeline.windowDedupRebuild(pages, "page", SubstrWindowK,
+      // pinned: the sort's sampling pass must not re-execute the dup
+      // rollup
+      Checkpointing.pin(CorpusPipeline.windowDedupRebuild(pages, "page", SubstrWindowK,
           tokenize(_), " ")
         .select(col("doc_id"), col("n_tokens"),
           (col("n_tokens") - size(tokenize(col("page"))).cast("long"))
             .as("n_removed"),
-          col("page").as("dedup_text"))
-        .localCheckpoint(true) // the sort's sampling pass must not
-        .orderBy("doc_id")     // re-execute the dup rollup
+          col("page").as("dedup_text")))
+        .orderBy("doc_id")
     },
 
     // n-gram Jaccard near-dup: direct threshold on 3-token shingle
@@ -485,7 +484,7 @@ object DedupQueries {
       // the shingle set feeds the self-join AND both size lookups —
       // materialize once (stats hidden → joins below are shuffle
       // joins on explicit keys, no broadcast decision to lose)
-      val sh = shingleSets(s, d).localCheckpoint(true)
+      val sh = Checkpointing.pin(shingleSets(s, d))
       jaccardPairs(sh, 0.8, StopShingleMaxDf)
     },
 
@@ -505,7 +504,8 @@ object DedupQueries {
     // (group-local sort, partitioned by doc_id — never global), one
     // equi-join on prefix tokens, then the shared verify join.
     "d11_prefix_filter" -> { (s, d) =>
-      val sh = shingleSets(s, d).localCheckpoint(true) // positions + verify + sizes
+      // positions + verify + sizes
+      val sh = Checkpointing.pin(shingleSets(s, d))
       val dfreq = sh.groupBy("shash").agg(count(lit(1)).as("df"))
       val pos = sh.join(dfreq, "shash")
         .withColumn("p", row_number().over(
@@ -533,7 +533,7 @@ object DedupQueries {
     "d3_minhash_lsh" -> { (s, d) =>
       val n = Tables.load(s, d, "documents").count()
       // computed once, consumed by minhash + verification + sizes
-      val sh = shingleSets(s, d).localCheckpoint(true)
+      val sh = Checkpointing.pin(shingleSets(s, d))
       minhashPairsAt(sh, autoMinhashRows(n))
     },
 
@@ -735,15 +735,15 @@ object DedupQueries {
     // arithmetic so the gate stays bit-identical either way.
     "d10_repeated_spans" -> { (s, d) =>
       val n = 5
-      val spans = Tables.load(s, d, "documents")
+      // feeds the hash rollup + the text recovery join
+      val spans = Checkpointing.pin(Tables.load(s, d, "documents")
         .select(col("doc_id"), tokenize(col("text")).as("toks"))
         .filter(size(col("toks")) >= n)
         .select(col("doc_id"), explode(expr(
           s"transform(sequence(0, size(toks) - $n), i -> array_join(slice(toks, i + 1, $n), ' '))"))
           .as("span"))
         .distinct()
-        .withColumn("h", char_fold(col("span")))
-        .localCheckpoint(true) // feeds the hash rollup + the text recovery join
+        .withColumn("h", char_fold(col("span"))))
       val top = spans.groupBy("h")
         .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
         .filter(col("n_docs") >= 2)
@@ -766,14 +766,14 @@ object DedupQueries {
       minFps: Int = 5,
       threshold10: Int = 8,
       maxFpDf: Int = 50): DataFrame = {
-    val fps = docs
+    // feeds counts + df-guard + pair join (per-doc fp dedup rides
+    // array_distinct in-row — the winnow array holds every fp of the
+    // doc, so no exchange is needed)
+    val fps = Checkpointing.pin(docs
       .select(col("doc_id"),
         explode(array_distinct(
           winnow(shingle_hashes(char_fold_array(tokenize(col("text"))), 3), 4)))
-          .as("fp"))
-      .localCheckpoint(true) // feeds counts + df-guard + pair join
-      // (per-doc fp dedup rides array_distinct in-row — the winnow
-      // array holds every fp of the doc, so no exchange is needed)
+          .as("fp")))
     val counts = fps.groupBy("doc_id").agg(count(lit(1)).as("nf"))
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxFpDf).select("fp")

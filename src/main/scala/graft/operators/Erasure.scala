@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
@@ -93,29 +92,19 @@ object Erasure {
     forget(spark, dataDir, table, keyCol, broadcast(ids.toDF(keyCol)))
   }
 
-  /** Run `body` on the tombstone frame pinned ([[Checkpointing.pin]]),
-    * so every pass of one erasure evaluates one materialized key set
-    * whose lineage cannot reference files a swap replaces. A frame that
-    * is already a pin ([[forgetCascade]]'s) is used as is and left to
-    * its owner to free; a pin made here is freed on return. */
-  private def pinned[T](tombstones: DataFrame)(body: DataFrame => T): T = {
-    val owned = Bridge.persistedRdd(tombstones).isEmpty
-    val tomb = if (owned) Checkpointing.pin(tombstones) else tombstones
-    try body(tomb) finally if (owned) Bridge.free(tomb)
-  }
-
   /** Erase every row of `<dataDir>/<table>.parquet` whose `keyCol`
     * appears in `tombstones` (a one-column DataFrame named `keyCol`) —
     * anti-join rewrite + atomic old-aside swap. The tombstone frame is
-    * [[pinned]] for the rewrite and the residue check. Distributed
-    * end-to-end: a cascade deriving
+    * pinned for the rewrite and the residue check
+    * ([[Checkpointing.pinned]]: a [[forgetCascade]] pin is used as is
+    * and left to its owner). Distributed end-to-end: a cascade deriving
     * millions of child keys never lands on the driver. */
   def forget(spark: SparkSession, dataDir: String, table: String,
       keyCol: String, tombstones: DataFrame): Report = {
     require(tombstones.columns.toSeq == Seq(keyCol),
       s"tombstone frame must have exactly one column '$keyCol', " +
         s"got ${tombstones.columns.mkString("[", ", ", "]")}")
-    pinned(tombstones) { tomb =>
+    Checkpointing.pinned(tombstones) { tomb =>
       val src = s"$dataDir/$table.parquet"
       val srcPath = new org.apache.hadoop.fs.Path(src)
       val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -221,12 +210,12 @@ object Erasure {
           // per pass, and the count is the emptiness test
           val fresh = Checkpointing.materialize(have.fold(derived)(
             derived.join(_, Seq(e.childKeyCol), "left_anti")))
-          if (fresh.rows == 0L) Bridge.free(fresh.df)
+          if (fresh.rows == 0L) Checkpointing.free(fresh.df)
           else {
             tombs(e.childTable) = have.fold(fresh.df) { h =>
               val grown = Checkpointing.pin(h.unionByName(fresh.df))
-              Bridge.free(h)
-              Bridge.free(fresh.df)
+              Checkpointing.free(h)
+              Checkpointing.free(fresh.df)
               grown
             }
             grew = true
@@ -255,7 +244,7 @@ object Erasure {
     try erased.toSeq.flatMap { table =>
       tombs.get(table).map(frame =>
         forget(spark, dataDir, table, keyColOf(table), frame))
-    } finally tombs.values.foreach(Bridge.free)
+    } finally tombs.values.foreach(Checkpointing.free)
   }
 
   /** Outcome of one [[forgetPartitioned]] sweep: partition directories
@@ -293,7 +282,7 @@ object Erasure {
     require(tombstones.columns.toSeq == Seq(keyCol),
       s"tombstone frame must have exactly one column '$keyCol', got " +
         tombstones.columns.mkString("[", ", ", "]"))
-    pinned(tombstones) { tomb =>
+    Checkpointing.pinned(tombstones) { tomb =>
       val root = s"$dataDir/$table.parquet"
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val conf = spark.sparkContext.hadoopConfiguration
@@ -404,7 +393,7 @@ object Erasure {
     require(tombstones.columns.toSeq == Seq("key"),
       s"tombstone frame must have exactly one column 'key', got " +
         tombstones.columns.mkString("[", ", ", "]"))
-    pinned(tombstones) { tomb =>
+    Checkpointing.pinned(tombstones) { tomb =>
       import graft.streaming.ChangeFeed
       val conf = spark.sparkContext.hadoopConfiguration
       // crash recovery BEFORE discovery: an attempt that died mid-swap
@@ -491,7 +480,7 @@ object Erasure {
       : DataFrame = {
     require(tombstones.columns.length == 1,
       "tombstone frame must have exactly one column (the key)")
-    pinned(tombstones) { tomb =>
+    Checkpointing.pinned(tombstones) { tomb =>
       def residue(df: DataFrame, keyCol: String): Long =
         df.join(tomb.toDF(keyCol), Seq(keyCol), "left_semi").count()
       val rows =

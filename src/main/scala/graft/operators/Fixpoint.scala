@@ -50,7 +50,7 @@ object Fixpoint {
         case None => gen
         case Some(df) =>
           val p = Checkpointing.materialize(df, sumOf)
-          Bridge.free(gen)
+          Checkpointing.free(gen)
           val m = valueOf(p)
           val next = withStats(p.df)
           if (m.isDefined && m == seen) next else loop(next, m, r + 1)

@@ -171,27 +171,18 @@ object Multimodal {
   def syntheticNearDupMedia(s: SparkSession, dir: String): DataFrame =
     syntheticNearDupMediaFrom(Tables.load(s, dir, "documents"))
 
+  /** The m8 duplicate-family modulus, pinned by its oracle: documents
+    * sharing `doc_id % MediaFamilies` are one family. The pattern
+    * arithmetic is MOD-REDUCED ((a² mod M)·K mod M), so the only
+    * overflow bound is a² itself: a = fam·72+72 keeps a·a inside int64
+    * for any modulus up to 4·10⁷. */
+  private val MediaFamilies = 97L
+
   /** Per-row variant over any documents frame — the shape that lets
     * the fingerprint index take [[IndexStore.getOrBuildIncremental]]'s
-    * delta path (each media row derives from one document row).
-    *
-    * `famMod` (default 97 — the m8 oracle's pinned modulus) is the
-    * duplicate-family axis: scale probes pass 97·factor so a grown
-    * corpus has MORE families of the SAME size (real corpora's shape —
-    * duplication is bounded by actual copying, not corpus size),
-    * instead of 97 families growing ×factor (which makes within-family
-    * pair work grow quadratically BY CONSTRUCTION and measures the
-    * data, not the plan — the r11 m8/m9 probe artifact). The pattern
-    * arithmetic is MOD-REDUCED ((a² mod M)·K mod M, r13 ask #6):
-    * identical residues to the r11 direct form wherever that form was
-    * int64-safe (so the pinned m8 oracle is unchanged at famMod 97),
-    * but the only remaining overflow bound is a² itself —
-    * a = fam·72+72 ⇒ famMod ≤ 4·10⁷ (probe factors to ×40 and far
-    * beyond). */
-  def syntheticNearDupMediaFrom(docs: DataFrame,
-      famMod: Long = 97L): DataFrame = {
-    require(famMod >= 1L && famMod <= 40000000L,
-      s"famMod=$famMod: a=famMod*72+72 must keep a*a inside int64")
+    * delta path (each media row derives from one document row). */
+  def syntheticNearDupMediaFrom(docs: DataFrame): DataFrame = {
+    val famMod = MediaFamilies
     val s = docs.sparkSession
     import s.implicits._
     docs
@@ -228,15 +219,15 @@ object Multimodal {
   def syntheticNearDupAudio(s: SparkSession, dir: String): DataFrame =
     syntheticNearDupAudioFrom(Tables.load(s, dir, "documents"))
 
+  /** The m9 duplicate-family modulus, pinned by its oracle. Same
+    * mod-reduced arithmetic as [[MediaFamilies]]: a = fam·131+65 keeps
+    * a·a inside int64 for any modulus up to 2·10⁷. */
+  private val AudioFamilies = 89L
+
   /** Per-row variant over any documents frame (see
-    * [[syntheticNearDupMediaFrom]]; same famMod contract and the same
-    * mod-reduced arithmetic — a = fam·131+65 bounds famMod at 2·10⁷,
-    * residues unchanged from the r11 form at every previously-legal
-    * famMod). */
-  def syntheticNearDupAudioFrom(docs: DataFrame,
-      famMod: Long = 89L): DataFrame = {
-    require(famMod >= 1L && famMod <= 20000000L,
-      s"famMod=$famMod: a=famMod*131+65 must keep a*a inside int64")
+    * [[syntheticNearDupMediaFrom]]). */
+  def syntheticNearDupAudioFrom(docs: DataFrame): DataFrame = {
+    val famMod = AudioFamilies
     val s = docs.sparkSession
     import s.implicits._
     docs
@@ -279,7 +270,7 @@ object Multimodal {
 
   /** m9's fingerprint derivation as a frame transform (WAV decode →
     * gain-invariant 64-bit delta-sign hash) — the audio analogue of
-    * [[perceptualHashes]], shared by the query and the scale probe. */
+    * [[perceptualHashes]]. */
   def audioHashes(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -296,16 +287,11 @@ object Multimodal {
       .toDF("doc_id", "ahash")
   }
 
-  /** The m8/m9 SERVING plan over an arbitrary fingerprint frame —
-    * public probe surface for [[graft.tools.MediaFamilyProbe]] (the
-    * banded join itself is package-private in DedupQueries).
-    * `limited = false` skips the queries' rank+limit tail so the probe
-    * can COUNT the raw candidate-pair population. */
-  def bandedPairsFor(hashes: DataFrame, sigCol: String,
-      limited: Boolean = true): DataFrame = {
-    val pairs = DedupQueries.bandedHammingPairs(hashes, sigCol)
-    if (limited) pairs.orderBy("hamming", "da", "db").limit(1000) else pairs
-  }
+  /** The m8/m9 SERVING plan over a fingerprint frame: the banded
+    * Hamming join, ranked and limited to 1000 pairs. */
+  private def bandedPairsFor(hashes: DataFrame, sigCol: String): DataFrame =
+    DedupQueries.bandedHammingPairs(hashes, sigCol)
+      .orderBy("hamming", "da", "db").limit(1000)
 
   /** Windowed audio feature extraction over WAV-PCM payloads: per
     * window of `windowFrames` samples, exact integer energy sums →
@@ -540,9 +526,7 @@ object Multimodal {
         "documents") { src =>
         perceptualHashes(syntheticNearDupMediaFrom(src))
       }
-      // the shared serving tail — the same surface MediaFamilyProbe
-      // times, so the probe cannot drift from the query
-      bandedPairsFor(hashes, "dhash")
+      bandedPairsFor(hashes, "dhash") // the serving tail shared with m9
     },
 
     // ── m9: perceptual near-dup AUDIO dedup — m8's pipeline with the
@@ -560,7 +544,7 @@ object Multimodal {
         "documents") { src =>
         audioHashes(syntheticNearDupAudioFrom(src))
       }
-      bandedPairsFor(hashes, "ahash") // shared with MediaFamilyProbe
+      bandedPairsFor(hashes, "ahash")
     },
 
     "m6_media_dedup" -> { (s, d) =>

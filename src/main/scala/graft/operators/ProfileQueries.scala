@@ -273,19 +273,19 @@ object ProfileQueries {
     * that ARE the whole corpus omitted (no rest to compare). */
   def distShift(docs: DataFrame, vocabSize: Int = 200): DataFrame = {
     import graft.functions.HashExprs.tokenize
-    val termCounts = docs
+    // one token pass serves vocab AND grid
+    val termCounts = Checkpointing.pin(docs
       .select(col("lang"), explode(tokenize(col("text"))).as("term"))
-      .groupBy("lang", "term").agg(count(lit(1)).as("cs"))
-      .localCheckpoint(true) // one token pass serves vocab AND grid
+      .groupBy("lang", "term").agg(count(lit(1)).as("cs")))
     val vocab = termCounts.groupBy("term").agg(sum("cs").as("cg"))
       .orderBy(col("cg").desc, col("term").asc).limit(vocabSize)
       .select(col("term"), lit(true).as("inv"))
-    val sliced = termCounts
+    // |slices|×(vocabSize+1) rows
+    val sliced = Checkpointing.pin(termCounts
       .join(broadcast(vocab), Seq("term"), "left")
       .withColumn("vterm",
         when(col("inv"), col("term")).otherwise(lit("<other>")))
-      .groupBy("lang", "vterm").agg(sum("cs").as("cs"))
-      .localCheckpoint(true) // |slices|×(vocabSize+1) rows
+      .groupBy("lang", "vterm").agg(sum("cs").as("cs")))
     val gterm = sliced.groupBy("vterm").agg(sum("cs").as("cg"))
     val tots = sliced.groupBy("lang").agg(sum("cs").as("ts"))
     val grid = broadcast(tots.select("lang")).crossJoin(broadcast(gterm))

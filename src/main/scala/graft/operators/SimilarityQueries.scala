@@ -92,11 +92,10 @@ object SimilarityQueries {
       import graft.functions.HashExprs.tokenize
       val qterms = Seq("spark", "join", "vector")
       // lexical arm (t17's shape: one tokenize pass, tiny pinned frame)
-      val docs = Tables.load(s, d, "documents")
+      val docs = Checkpointing.pin(Tables.load(s, d, "documents")
         .select(col("doc_id"), tokenize(col("text")).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-          filter(col("toks"), t => t.isin(qterms: _*)).as("qtoks"))
-        .localCheckpoint(true)
+          filter(col("toks"), t => t.isin(qterms: _*)).as("qtoks")))
       val stats = docs.agg(count(lit(1)).as("n_docs"), sum("dl").as("t_toks"))
       val tf = docs
         .select(col("doc_id"), col("dl"), explode(col("qtoks")).as("term"))
@@ -164,12 +163,12 @@ object SimilarityQueries {
     // expression + a k-group hash aggregate.
     "s21_coreset" -> { (s, d) =>
       val k = 5
-      val quant = Tables.load(s, d, "embeddings")
+      // k+2 passes reuse it (persist at scale)
+      val quant = Checkpointing.pin(Tables.load(s, d, "embeddings")
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
             .as("qv"))
-        .withColumn("n2", dot_long(col("qv"), col("qv")))
-        .localCheckpoint(true) // k+2 passes reuse it (persist at scale)
+        .withColumn("n2", dot_long(col("qv"), col("qv"))))
       // exact |x − c|² = x·x − 2x·c + c·c with c a plan literal
       def d2To(center: IndexedSeq[Long]): Column =
         col("n2") - lit(2L) * dot_long(col("qv"), typedLit(center)) +
@@ -224,15 +223,15 @@ object SimilarityQueries {
       val v = vecs(s, d)
       val anchor = v.filter(col("vec_id") === 0)
         .select(col("qv").as("va"), col("norm").as("qn"))
-      val pool = v.filter(col("vec_id") > 0)
+      // ≤20 rows from here on
+      val pool = Checkpointing.pin(v.filter(col("vec_id") > 0)
         .select(col("vec_id").as("id"), col("qv"), col("norm"))
         .crossJoin(broadcast(anchor))
         .withColumn("rel_ppm",
           floor(dot_long(col("qv"), col("va")) / (col("qn") * col("norm"))
             * lit(1000000.0)))
         .select(col("id"), col("rel_ppm"), col("qv"), col("norm"))
-        .orderBy(col("rel_ppm").desc, col("id").asc).limit(poolN)
-        .localCheckpoint(true) // ≤20 rows from here on
+        .orderBy(col("rel_ppm").desc, col("id").asc).limit(poolN))
       def simTo(cVec: IndexedSeq[Long], cNorm: Double): Column =
         floor(dot_long(col("qv"), typedLit(cVec)) /
           (col("norm") * lit(cNorm)) * lit(1000000.0))
@@ -464,7 +463,8 @@ object SimilarityQueries {
     // top-5 per query. All integer-exact, so the engines agree on
     // every distance and tie.
     "s11_pq_adc_topk" -> { (s, d) =>
-      val dists = pqDists(s, d).localCheckpoint(true) // feeds codes + the distance table
+      // feeds codes + the distance table
+      val dists = Checkpointing.pin(pqDists(s, d))
       val assign = dists.filter(col("vec_id") >= 5)
         .groupBy("vec_id", "m")
         .agg(min_by(col("k"), struct(col("dist2"), col("k"))).as("k"))
@@ -498,20 +498,20 @@ object SimilarityQueries {
       // exact integer L2 via the |a−b|² = a·a − 2a·b + b·b identity
       val cents = v.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      val assigned = v.crossJoin(broadcast(cents))
+      // feeds the query map + the target gate
+      val assigned = Checkpointing.pin(v.crossJoin(broadcast(cents))
         .withColumn("dist2",
           dot_long(col("qv"), col("qv")) - lit(2L) * dot_long(col("qv"), col("cv"))
             + dot_long(col("cv"), col("cv")))
         .withColumn("rn", row_number().over(
           Window.partitionBy("vec_id").orderBy(col("dist2").asc, col("cid").asc)))
         .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cell"))
-        .localCheckpoint(true) // feeds the query map + the target gate
+        .select(col("vec_id"), col("cid").as("cell")))
       val qCell = assigned.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("cell"))
       val tCell = assigned.filter(col("vec_id") >= 5)
       // PQ codes + per-query distance table — s10/s11's shared chain
-      val dists = pqDists(s, d).localCheckpoint(true)
+      val dists = Checkpointing.pin(pqDists(s, d))
       val codes = dists.filter(col("vec_id") >= 5)
         .groupBy("vec_id", "m")
         .agg(min_by(col("k"), struct(col("dist2"), col("k"))).as("k"))
@@ -613,12 +613,12 @@ object SimilarityQueries {
     // can afford. Ties break by vid, so the doubles-from-exact-ints
     // ranking is engine-stable (s9's proven bargain).
     "s15_matryoshka_recall" -> { (s, d) =>
-      val base = vecs(s, d)
+      // query panel + target side share the slices
+      val base = Checkpointing.pin(vecs(s, d)
         .withColumn("qv16", expr("slice(qv, 1, 16)"))
         .withColumn("qv32", expr("slice(qv, 1, 32)"))
         .withColumn("n16", sqrt(dot_long(col("qv16"), col("qv16")).cast("double")))
-        .withColumn("n32", sqrt(dot_long(col("qv32"), col("qv32")).cast("double")))
-        .localCheckpoint(true) // query panel + target side share the slices
+        .withColumn("n32", sqrt(dot_long(col("qv32"), col("qv32")).cast("double"))))
       val q = base.filter(col("vec_id") < 50).select(
         col("vec_id").as("qid"), col("qv").as("va"), col("norm").as("qn"),
         col("qv16").as("va16"), col("n16").as("qn16"),
@@ -694,17 +694,17 @@ object SimilarityQueries {
       val cents = IvfIndex.servedCentroids(s, d, "embeddings",
         v.select(col("vec_id"), col("qv")), k, rounds = 2,
         stride = IvfIndex.trainStride(n, k))
-      val assigned = IvfIndex.routeAssign(v, cents, IvfIndex.autoCoarseCells(k))
-        .select(col("vec_id"), col("qv"), col("norm"), col("cell"))
-        .localCheckpoint(true) // pair search + final keep-list join
+      // pair search + final keep-list join
+      val assigned = Checkpointing.pin(IvfIndex.routeAssign(v, cents, IvfIndex.autoCoarseCells(k))
+        .select(col("vec_id"), col("qv"), col("norm"), col("cell")))
       val a = assigned.select(col("vec_id").as("da"), col("qv").as("va"),
         col("norm").as("na"), col("cell"))
       val b = assigned.select(col("vec_id").as("db"), col("qv").as("vb"),
         col("norm").as("nb"), col("cell"))
-      val pairs = a.join(b, Seq("cell")).filter(col("da") < col("db"))
+      val pairs = Checkpointing.pin(a.join(b, Seq("cell")).filter(col("da") < col("db"))
         .withColumn("cos_raw", dotCol / (col("na") * col("nb")))
         .filter(col("cos_raw") >= 0.40)
-        .select("da", "db").localCheckpoint(true)
+        .select("da", "db"))
       val labels = DedupQueries.connectedComponents(pairs)
         .withColumnRenamed("doc_id", "vec_id")
       assigned.join(broadcast(labels), Seq("vec_id"), "left")
@@ -827,11 +827,11 @@ object SimilarityQueries {
     // exact trajectory, and the spec checks convergence (round-2
     // direction explains more variance than round-1).
     "s14_pca_power" -> { (s, d) =>
-      val emb = Tables.load(s, d, "embeddings")
+      // reused by both rounds
+      val emb = Checkpointing.pin(Tables.load(s, d, "embeddings")
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
-            .as("xm"))
-        .localCheckpoint(true) // reused by both rounds
+            .as("xm")))
       val cnt = emb.agg(count(lit(1)).as("n"))
       val w1 = emb
         .select(expr("aggregate(xm, 0L, (a, x) -> a + x)").as("dot0"),
@@ -972,9 +972,9 @@ object SimilarityQueries {
     * ground truth on the vec_id < 50 query sample. */
   def annRecall(s: SparkSession, d: String, nPlanes: Int,
       probeRadius: Int = 1): DataFrame = {
-    val base = vecs(s, d)
-      .withColumn("bucket", hyperplane_bucket(col("qv"), nPlanes))
-      .localCheckpoint(true) // feeds the query sample + both candidate sides
+    // feeds the query sample + both candidate sides
+    val base = Checkpointing.pin(vecs(s, d)
+      .withColumn("bucket", hyperplane_bucket(col("qv"), nPlanes)))
     val q = base.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("qv").as("va"),
         col("norm").as("qn"), col("bucket").as("qbucket"))
@@ -1017,10 +1017,10 @@ object SimilarityQueries {
       col("norm").as("na"), col("bucket"))
     val b = v.select(col("vec_id").as("db"), col("qv").as("vb"),
       col("norm").as("nb"), col("bucket"))
-    val pairs = a.join(b, Seq("bucket")).filter(col("da") < col("db"))
+    val pairs = Checkpointing.pin(a.join(b, Seq("bucket")).filter(col("da") < col("db"))
       .withColumn("cos_raw", dotCol / (col("na") * col("nb")))
       .filter(col("cos_raw") >= 0.40)
-      .select("da", "db").localCheckpoint(true)
+      .select("da", "db"))
     DedupQueries.connectedComponents(pairs)
       .groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
       .join(Tables.load(s, d, "embeddings")
@@ -1036,11 +1036,11 @@ object SimilarityQueries {
     * join + compiled dots. */
   private def pqDists(s: SparkSession, d: String): DataFrame = {
     val (mSub, kCent, dSub) = (8, 4, 8)
-    val parts = vecs(s, d).select(col("vec_id"), explode(expr(
+    // feeds the codebook side + the assignment side
+    val parts = Checkpointing.pin(vecs(s, d).select(col("vec_id"), explode(expr(
       s"transform(sequence(0, ${mSub - 1}), m -> struct(m AS m, slice(qv, m * $dSub + 1, $dSub) AS x))"))
       .as("p"))
-      .select(col("vec_id"), col("p.m").as("m"), col("p.x").as("x"))
-      .localCheckpoint(true) // feeds the codebook side + the assignment side
+      .select(col("vec_id"), col("p.m").as("m"), col("p.x").as("x")))
     val cents = parts.filter(col("vec_id") < kCent)
       .select(col("vec_id").as("k"), col("m"), col("x").as("c"))
     parts.join(broadcast(cents), Seq("m"))

@@ -1109,11 +1109,10 @@ object TextQueries {
     // TakeOrdered top-20.
     "t17_bm25" -> { (s, d) =>
       val qterms = Seq("spark", "join", "vector")
-      val base = Tables.load(s, d, "documents")
+      val base = Checkpointing.pin(Tables.load(s, d, "documents")
         .select(col("doc_id"), tokenize(col("text")).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-          filter(col("toks"), t => t.isin(qterms: _*)).as("qtoks"))
-        .localCheckpoint(true)
+          filter(col("toks"), t => t.isin(qterms: _*)).as("qtoks")))
       val stats = base.agg(count(lit(1)).as("n_docs"), sum("dl").as("t_toks"))
       val tf = base.select(col("doc_id"), col("dl"), explode(col("qtoks")).as("term"))
         .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
@@ -1382,7 +1381,7 @@ object TextQueries {
     // integer basis points. Docs with < 3 tokens have no shingles and
     // drop out (no novelty evidence), same rule both sides.
     "t28_ngram_novelty" -> { (s, d) =>
-      val sh = DedupQueries.shingleSets(s, d).localCheckpoint(true)
+      val sh = Checkpointing.pin(DedupQueries.shingleSets(s, d))
       val ref = sh.filter(col("doc_id") % 2 === 0).select("shash").distinct()
       val scored = sh.filter(col("doc_id") % 2 === 1)
       val tot = scored.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
@@ -1464,10 +1463,10 @@ object TextQueries {
         get(split(col("phrase"), " "), lit(1)).as("w2"),
         get(split(col("phrase"), " "), lit(2)).as("w3"))
       val vocab = TextQueries.PinnedPhrases.flatMap(_.split(" ")).distinct
-      val pruned = Tables.load(s, d, "documents")
+      // reused by all three position legs
+      val pruned = Checkpointing.pin(Tables.load(s, d, "documents")
         .select(col("doc_id"), posexplode(tokenize(col("text"))).as(Seq("pos", "token")))
-        .filter(col("token").isin(vocab: _*))
-        .localCheckpoint(true) // reused by all three position legs
+        .filter(col("token").isin(vocab: _*)))
       val starts = pruned.join(broadcast(w), col("token") === col("w1"))
         .select(col("phrase"), col("w2"), col("w3"), col("doc_id"), col("pos"))
       val second = pruned.select(

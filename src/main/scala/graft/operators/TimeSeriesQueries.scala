@@ -31,10 +31,9 @@ object TimeSeriesQueries {
     * three consumers AND their oracle CTE ([[hourlyCountsSql]])
     * together. */
   private def hourlyCounts(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
+    Checkpointing.pin(Tables.events(s, d)
       .select(col("event_type"), expr("ts_ns div 3600000000000").as("hr"))
-      .groupBy("event_type", "hr").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .groupBy("event_type", "hr").agg(count(lit(1)).as("cnt")))
 
   /** DuckDB CTE `hr(event_type, hr, cnt)` — the oracle half of
     * [[hourlyCounts]]. */

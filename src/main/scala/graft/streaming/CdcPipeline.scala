@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -531,16 +530,17 @@ object CdcPipeline {
     // table's commit lock, so an apply cannot revive a key between the
     // discovery read and the purge
     store.locked(table) {
-      val expired = graft.operators.Checkpointing.materialize(store.read(spark, table)
+      val expired = store.read(spark, table)
         .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn)
-        .select(col(keyCol)))
-      try {
-        if (expired.rows > 0L) {
-          store.merge(spark, table, expired.df.withColumn("op", lit("D")), keyCol)
-          store.purgeSuperseded(spark, table)
-        }
-        expired.rows
-      } finally Bridge.free(expired.df)
+        .select(col(keyCol))
+      Checkpointing.pinnedWith(expired, Checkpointing.counting(expired, None)) {
+        case (keys, (rows, _)) =>
+          if (rows > 0L) {
+            store.merge(spark, table, keys.withColumn("op", lit("D")), keyCol)
+            store.purgeSuperseded(spark, table)
+          }
+          rows
+      }
     }
   }
 
@@ -562,8 +562,11 @@ object CdcPipeline {
     * separate jobs, and immune to the scattered-key worst case.
     *
     * Same replay interplay as [[sweepSoftDeleted]]: run behind the
-    * applied-LSN watermark that gates feed pruning. Returns the number
-    * of tombstones purged. */
+    * applied-LSN watermark that gates feed pruning. Same purge rule
+    * too: a compaction that purged any row deletes every file the new
+    * version does not name at once, so no copy of a swept key is left
+    * for a certificate to find. Returns the number of tombstones
+    * purged. */
   def sweepAndCompact(
       spark: SparkSession,
       store: KeyedParquetStore,
@@ -574,8 +577,12 @@ object CdcPipeline {
     // the purge count comes from compact's OWN checkpointed read — a
     // separate pre-count here would race a concurrent applyBatchSoft
     // landing between the two reads (purged-but-uncounted rows)
-    store.compact(spark, table,
-      clusterBy = Seq(SyncedLsnCol), dropWhere = Some(expired))
+    store.locked(table) {
+      val purged = store.compact(spark, table,
+        clusterBy = Seq(SyncedLsnCol), dropWhere = Some(expired))
+      if (purged > 0L) store.purgeSuperseded(spark, table)
+      purged
+    }
   }
 
   /** Reject `op` on a table without the soft-delete columns; a missing
@@ -628,10 +635,10 @@ object CdcPipeline {
     * bounded by tables × buckets, so the fan-out costs no job of its
     * own; an empty batch folds to no tables and the body does nothing.
     * `bucketOf` gives the bucket column of an envelope key column
-    * ([[storeBucket]]); without a store, buckets stay empty. The free
-    * in `finally` matters: a long-lived mirror runs thousands of
-    * micro-batches, and leaked blocks accumulate until the executor
-    * heap thrashes. */
+    * ([[storeBucket]]); without a store, buckets stay empty. The
+    * scope's free ([[Checkpointing.pinnedWith]]) matters: a long-lived
+    * mirror runs thousands of micro-batches, and leaked blocks
+    * accumulate until the executor heap thrashes. */
   private[streaming] def withPinnedBatch(batch: DataFrame,
       bucketOf: String => Column = _ => lit(null).cast("int"))(
       body: (DataFrame, Map[String, SliceStats]) => Unit): Unit = {
@@ -648,9 +655,7 @@ object CdcPipeline {
       foldSlices, (a, b) => b.foldLeft(a) { case (m, (t, s)) =>
         m.updated(t, m.get(t).fold(s)(_ + s))
       })
-    val (pinned, slices) = Checkpointing.materializeWith(batch, stats)
-    try body(pinned, slices)
-    finally Bridge.free(pinned)
+    Checkpointing.pinnedWith(batch, stats)(body)
   }
 
   /** One partition's [[SliceStats]] over the fold columns of

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.Checkpointing
+
 /** Token-DISTRIBUTION drift monitor for a live document ingest — the
   * streaming half of dq6's batch audit, and the content-shaped
   * complement to [[StreamDrift]]'s scalar CUSUM: a crawler that starts
@@ -33,11 +35,7 @@ object CorpusDrift {
     * top-`vocabSize` tokens + '<other>' with nano-grid probabilities.
     * Persist with plain parquet and hand the path to [[start]]. */
   def trainBaseline(docs: DataFrame, vocabSize: Int = 200): DataFrame = {
-    import graft.functions.HashExprs.tokenize
-    val counts = docs
-      .select(explode(tokenize(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val counts = Checkpointing.pin(termCounts(docs))
     val vocab = counts.orderBy(col("c").desc, col("term").asc)
       .limit(vocabSize).select(col("term"), lit(true).as("inv"))
     counts.join(broadcast(vocab), Seq("term"), "left")
@@ -54,12 +52,18 @@ object CorpusDrift {
     * monitor (per micro-batch) and ad-hoc batch audits. A term absent
     * from the frame contributes its full baseline mass; a frame term
     * outside the baseline vocabulary lands in '<other>'. */
-  def score(docs: DataFrame, baseline: DataFrame): DataFrame = {
-    import graft.functions.HashExprs.tokenize
-    val counts = docs
-      .select(explode(tokenize(col("text"))).as("term"))
+  def score(docs: DataFrame, baseline: DataFrame): DataFrame =
+    scoreCounts(docs, Checkpointing.pin(termCounts(docs)), baseline)
+
+  /** (term, c) token counts of a document frame. */
+  private def termCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(graft.functions.HashExprs.tokenize(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // ONE tokenize pass serves grid + total
+
+  /** [[score]] over `docs`' pinned [[termCounts]]: ONE tokenize pass
+    * serves grid + total. */
+  private def scoreCounts(docs: DataFrame, counts: DataFrame,
+      baseline: DataFrame): DataFrame = {
     // vterm mapping against the baseline vocabulary ('<other>' is a
     // baseline row itself, so the right join keeps EVERY baseline term
     // — absent ones score their full p_nano)
@@ -105,14 +109,17 @@ object CorpusDrift {
     * the SAME row in the SAME place instead of appending a duplicate:
     * row multiplicity is replay-idempotent, not only row values.
     * Readers take `spark.read.parquet(alertDir)` and get `batch_id`
-    * back as the partition column. */
+    * back as the partition column. The batch's token counts are
+    * pinned for the write and freed once it lands. */
   def recordScore(batch: DataFrame, baseline: DataFrame, alertDir: String,
       batchId: Long, thresholdNano: Long): Unit =
-    score(batch, baseline)
-      .withColumn("drifted", col("tv_nano") > thresholdNano)
-      .select("n_docs", "n_toks", "tv_nano", "drifted")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$alertDir/batch_id=$batchId")
+    Checkpointing.pinned(termCounts(batch)) { counts =>
+      scoreCounts(batch, counts, baseline)
+        .withColumn("drifted", col("tv_nano") > thresholdNano)
+        .select("n_docs", "n_toks", "tv_nano", "drifted")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$alertDir/batch_id=$batchId")
+    }
 
   /** Start the monitor: every micro-batch of `docs` (streaming, with a
     * `text` column) is scored against the baseline and recorded as one
@@ -123,8 +130,8 @@ object CorpusDrift {
   def start(docs: DataFrame, baselinePath: String, alertDir: String,
       checkpointDir: String, thresholdNano: Long): StreamingQuery = {
     val spark = docs.sparkSession
-    val baseline = spark.read.parquet(baselinePath)
-      .localCheckpoint(true) // (K+1) rows, pinned once for the query's life
+    // (K+1) rows, pinned once for the query's life
+    val baseline = Checkpointing.pin(spark.read.parquet(baselinePath))
     docs.writeStream
       .queryName("corpus_drift_monitor")
       .option("checkpointLocation", checkpointDir)
@@ -146,7 +153,7 @@ object CorpusDrift {
     * `maxGrowFraction` of the trained bytes; retrain past the budget;
     * any rewrite/delete of a trained file is wrong-era data and
     * retrains immediately. Returns the (K+1)-row baseline frame —
-    * hand `.localCheckpoint(true)` of it to [[score]]/[[start]].
+    * hand its [[Checkpointing.pin]] to [[score]]/[[start]].
     *
     * Correctness domain: the baseline is an INDEX-like approximation
     * (a reference distribution), so stale-within-budget serving is the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashExprs.{char_fold_array, shingle_hashes, tokenize}
+import graft.operators.Checkpointing
 
 /** Streaming ingest with ONLINE near-dup deduplication — the streaming
   * counterpart of [[graft.operators.CorpusPipeline]]: each micro-batch
@@ -77,11 +78,38 @@ class IncrementalDedup(
   /** Process one micro-batch: returns the ADMITTED sub-batch (rows of
     * `batch` that survived dedup) after folding its shingles into the
     * store. Pure batch DataFrames in and out — call it from
-    * `foreachBatch` or a backfill loop alike. */
-  def admit(spark: SparkSession, batch: DataFrame): DataFrame = {
-    val sh = shingleSetsOf(batch).localCheckpoint(true)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n")).localCheckpoint(true)
+    * `foreachBatch` or a backfill loop alike. The batch's shingle sets,
+    * their sizes and the dropped ids are pinned for the probe and the
+    * two merges and freed once both commit; the returned frame is a
+    * pin the CALLER owns and frees ([[Checkpointing.free]]). */
+  def admit(spark: SparkSession, batch: DataFrame): DataFrame =
+    Checkpointing.pinned(shingleSetsOf(batch)) { sh =>
+      Checkpointing.pinned(sh.groupBy("doc_id").agg(count(lit(1)).as("n"))) { sizes =>
+        Checkpointing.pinned(droppedIds(spark, sh, sizes)) { dropped =>
+          val admitted = Checkpointing.pin(
+            batch.join(broadcast(dropped), Seq("doc_id"), "left_anti"))
+          // fold the admitted docs into the index AFTER the probe
+          val admittedSh = sh.join(broadcast(dropped), Seq("doc_id"), "left_anti")
+          store.merge(spark, shinglesTable,
+            admittedSh.select(lit("I").as("op"), col("shash"), col("doc_id"))
+              // one index row per (shash, doc_id); the store key is the
+              // shingle hash so probes bucket-prune on it
+              .withColumn("key_id", concat_ws(":", col("shash"), col("doc_id")))
+              .select(col("op"), col("key_id"), col("shash"), col("doc_id")),
+            "key_id")
+          store.merge(spark, sizesTable,
+            sizes.join(broadcast(dropped), Seq("doc_id"), "left_anti")
+              .select(lit("I").as("op"), col("doc_id"), col("n")),
+            "doc_id")
+          admitted
+        }
+      }
+    }
 
+  /** Ids of the batch's docs that are near-dups of an admitted doc or
+    * of an earlier-id doc in the same batch, from the batch's pinned
+    * shingle sets `sh` and their `sizes`. */
+  private def droppedIds(spark: SparkSession, sh: DataFrame, sizes: DataFrame): DataFrame = {
     // candidates vs the ADMITTED corpus — skipped on the first batch
     val vsCorpus =
       if (store.exists(spark, shinglesTable)) {
@@ -108,23 +136,6 @@ class IncrementalDedup(
       .filter(col("i") / (col("n_x") + col("n_y") - col("i")) >= threshold)
       .select(col("doc_id"))
 
-    val dropped = vsCorpus.union(within).distinct().localCheckpoint(true)
-    val admitted = batch.join(broadcast(dropped), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // consumed 3×: index merge, sizes merge, caller
-
-    // fold the admitted docs into the index AFTER the probe
-    val admittedSh = sh.join(broadcast(dropped), Seq("doc_id"), "left_anti")
-    store.merge(spark, shinglesTable,
-      admittedSh.select(lit("I").as("op"), col("shash"), col("doc_id"))
-        // one index row per (shash, doc_id); the store key is the
-        // shingle hash so probes bucket-prune on it
-        .withColumn("key_id", concat_ws(":", col("shash"), col("doc_id")))
-        .select(col("op"), col("key_id"), col("shash"), col("doc_id")),
-      "key_id")
-    store.merge(spark, sizesTable,
-      sizes.join(broadcast(dropped), Seq("doc_id"), "left_anti")
-        .select(lit("I").as("op"), col("doc_id"), col("n")),
-      "doc_id")
-    admitted
+    vsCorpus.union(within).distinct()
   }
 }

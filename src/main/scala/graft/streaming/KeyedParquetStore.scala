@@ -559,17 +559,22 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     if (cur.live.isEmpty) 0L
     else {
       val rows = scan(spark, table, cur)
-      val pin = dropWhere.map(c => Checkpointing.materialize(
-        rows.withColumn("_purged", coalesce(c, lit(false)).cast("int")), sumOf = Some("_purged")))
-      try {
-        val kept = pin.fold(rows)(_.df.filter(col("_purged") === 0).drop("_purged"))
+      def write(kept: DataFrame): Unit =
         commit(spark, table, Some(cur), cur.schema, kept.repartition(col("bucket"))
           .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*), _ => true)
-        pin.fold(0L)(_.sum.toLong)
-      } finally
-        // a compaction CADENCE (sweepAndCompact) must not accumulate one
-        // generation of checkpoint blocks per cycle
-        pin.foreach(p => Bridge.free(p.df))
+      dropWhere match {
+        case None => write(rows); 0L
+        case Some(c) =>
+          // the pin is freed on return: a compaction CADENCE
+          // (sweepAndCompact) must not accumulate one generation of
+          // checkpoint blocks per cycle
+          val marked = rows.withColumn("_purged", coalesce(c, lit(false)).cast("int"))
+          Checkpointing.pinnedWith(marked, Checkpointing.counting(marked, Some("_purged"))) {
+            case (pin, (_, purged)) =>
+              write(pin.filter(col("_purged") === 0).drop("_purged"))
+              purged.toLong
+          }
+      }
     }
   }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.operators.Checkpointing
 
 /** STREAMING sequence packing — the stateful half of
   * [[graft.operators.CorpusPipeline]]'s `c10_pack_sequences`: a
@@ -84,75 +85,77 @@ class StreamingPacker(
     val spark = docs.sparkSession
     val st = readState(spark)
     if (batchId <= st.batchId) return // replayed batch: already applied
-    val toks = docs.select(col("doc_id"),
+    val tokens = docs.select(col("doc_id"),
         size(graft.functions.HashExprs.tokenize(col("text")))
           .cast("long").as("n_tokens"))
-      .localCheckpoint(true) // feeds the scalar agg AND the prefix sum
-    try {
+    Checkpointing.pinned(tokens) { toks => // feeds the scalar agg AND the prefix sum
       val scalars = toks.agg(
         count(lit(1)), sum("n_tokens"), min("doc_id"), max("doc_id"),
         countDistinct("doc_id"))
         .collect().head
-      if (scalars.getLong(0) == 0L) {
-        // empty batch still advances the replay gate
-        writeState(spark, st.copy(batchId = batchId))
-        return
-      }
-      val (batchTokens, minDoc, maxDoc) =
-        (scalars.getLong(1), scalars.getLong(2), scalars.getLong(3))
-      // a duplicate doc_id would silently mis-rank the prefix sum
-      // (globalCumSum needs a unique order column) — fail loudly
-      require(scalars.getLong(4) == scalars.getLong(0),
-        s"batch $batchId carries duplicate doc_ids - corpus order " +
-          "requires unique document ids")
-      require(minDoc > st.lastDocId,
-        s"batch $batchId starts at doc_id $minDoc but doc_id " +
-          s"${st.lastDocId} was already packed - streaming packing " +
-          "requires batches in ascending doc_id order with no overlap " +
-          "(a re-sorted corpus is a DIFFERENT packing; re-pack from " +
-          "scratch instead)")
-      val newTotal = st.cumTokens + batchTokens
-      val nextBin = newTotal / budget
+      // an empty batch still advances the replay gate
+      if (scalars.getLong(0) == 0L) writeState(spark, st.copy(batchId = batchId))
+      else packBatch(spark, st, batchId, toks, scalars)
+    }
+  }
 
-      val binRows = graft.operators.Ranks
-        .globalCumSum(toks, "doc_id", "n_tokens", "cum")
-        .withColumn("bin_id",
-          expr(s"(${st.cumTokens}L + cum - n_tokens) DIV $budget"))
-        .groupBy("bin_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("bin_tokens"),
-          min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-      // fold the carried open bin in (its bin_id can only equal the
-      // batch's FIRST bin — re-agg merges the two partials)
-      val withCarry = st.open match {
-        case None => binRows
-        case Some(o) =>
-          import spark.implicits._
-          binRows.unionByName(
-            Seq((o.binId, o.nDocs, o.binTokens, o.firstDoc, o.lastDoc))
-              .toDF("bin_id", "n_docs", "bin_tokens", "first_doc", "last_doc"))
-            .groupBy("bin_id")
-            .agg(sum("n_docs").as("n_docs"),
-              sum("bin_tokens").as("bin_tokens"),
-              min("first_doc").as("first_doc"), max("last_doc").as("last_doc"))
-      }
-      val pinned = withCarry.localCheckpoint(true) // closed write + open pick
-      try {
-        val closed = pinned.filter(col("bin_id") < nextBin)
-          .withColumn("fill_bp", expr(s"(10000 * bin_tokens) DIV $budget"))
-        if (!closed.isEmpty)
-          closed.coalesce(1).write.mode("overwrite")
-            .parquet(s"$manifestDir/batch=$batchId")
-        val open = pinned.filter(col("bin_id") >= nextBin).collect().toSeq
-        require(open.size <= 1,
-          s"internal: ${open.size} open bins - offsets must leave at most one")
-        val newOpen = open.headOption.map(r => OpenBin(r.getLong(0),
-          r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        // state LAST: a crash before this line replays the batch into
-        // the same batch=<id> dir (overwrite = idempotent)
-        writeState(spark, State(batchId, maxDoc, newTotal, newOpen))
-      } finally Bridge.free(pinned)
-    } finally Bridge.free(toks)
+  /** Pack a non-empty batch's pinned (doc_id, n_tokens) rows, whose
+    * (count, sum, min, max, distinct) are `scalars`. */
+  private def packBatch(spark: SparkSession, st: State, batchId: Long,
+      toks: DataFrame, scalars: org.apache.spark.sql.Row): Unit = {
+    val (batchTokens, minDoc, maxDoc) =
+      (scalars.getLong(1), scalars.getLong(2), scalars.getLong(3))
+    // a duplicate doc_id would silently mis-rank the prefix sum
+    // (globalCumSum needs a unique order column) — fail loudly
+    require(scalars.getLong(4) == scalars.getLong(0),
+      s"batch $batchId carries duplicate doc_ids - corpus order " +
+        "requires unique document ids")
+    require(minDoc > st.lastDocId,
+      s"batch $batchId starts at doc_id $minDoc but doc_id " +
+        s"${st.lastDocId} was already packed - streaming packing " +
+        "requires batches in ascending doc_id order with no overlap " +
+        "(a re-sorted corpus is a DIFFERENT packing; re-pack from " +
+        "scratch instead)")
+    val newTotal = st.cumTokens + batchTokens
+    val nextBin = newTotal / budget
+
+    val binRows = graft.operators.Ranks
+      .globalCumSum(toks, "doc_id", "n_tokens", "cum")
+      .withColumn("bin_id",
+        expr(s"(${st.cumTokens}L + cum - n_tokens) DIV $budget"))
+      .groupBy("bin_id")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("n_tokens").as("bin_tokens"),
+        min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
+    // fold the carried open bin in (its bin_id can only equal the
+    // batch's FIRST bin — re-agg merges the two partials)
+    val withCarry = st.open match {
+      case None => binRows
+      case Some(o) =>
+        import spark.implicits._
+        binRows.unionByName(
+          Seq((o.binId, o.nDocs, o.binTokens, o.firstDoc, o.lastDoc))
+            .toDF("bin_id", "n_docs", "bin_tokens", "first_doc", "last_doc"))
+          .groupBy("bin_id")
+          .agg(sum("n_docs").as("n_docs"),
+            sum("bin_tokens").as("bin_tokens"),
+            min("first_doc").as("first_doc"), max("last_doc").as("last_doc"))
+    }
+    Checkpointing.pinned(withCarry) { pinned => // closed write + open pick
+      val closed = pinned.filter(col("bin_id") < nextBin)
+        .withColumn("fill_bp", expr(s"(10000 * bin_tokens) DIV $budget"))
+      if (!closed.isEmpty)
+        closed.coalesce(1).write.mode("overwrite")
+          .parquet(s"$manifestDir/batch=$batchId")
+      val open = pinned.filter(col("bin_id") >= nextBin).collect().toSeq
+      require(open.size <= 1,
+        s"internal: ${open.size} open bins - offsets must leave at most one")
+      val newOpen = open.headOption.map(r => OpenBin(r.getLong(0),
+        r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      // state LAST: a crash before this line replays the batch into
+      // the same batch=<id> dir (overwrite = idempotent)
+      writeState(spark, State(batchId, maxDoc, newTotal, newOpen))
+    }
   }
 
   /** The manifest so far — closed bins from disk plus the in-flight

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gen.Workload
+import graft.operators.Checkpointing
 import graft.streaming.{CdcPipeline, ChangeFeed, KeyedParquetStore, StreamMetrics}
 
 /** CDC insert-throughput benchmark — the measured counterpart of the
@@ -84,9 +85,9 @@ object CdcThroughput {
     // dimensions + deterministic order workload (seeded, FK-valid)
     val customers = spark.range(1, 501).toDF("id")
     val products = spark.range(1, 101).toDF("id")
-    val orders = Workload.generateOrders(customers, products, rows,
-      startId = 1L, seed = 42L, asOf = Date.valueOf("2026-01-01"))
-      .localCheckpoint(true) // one materialization; batches filter it
+    // one materialization; batches filter it
+    val orders = Checkpointing.pin(Workload.generateOrders(customers, products, rows,
+      startId = 1L, seed = 42L, asOf = Date.valueOf("2026-01-01")))
 
     // ── surface 1: the insert.ps1 batch-apply loop
     val storeA = new KeyedParquetStore(s"$work/store_batch")
@@ -202,9 +203,9 @@ object CdcThroughput {
     val products = spark.range(1, 101).toDF("id")
     val nFiles = math.ceil(halfRows.toDouble / batchSize).toInt
     def publishPhase(startId: Long): org.apache.spark.sql.types.StructType = {
-      val orders = Workload.generateOrders(customers, products, halfRows,
+      val orders = Checkpointing.pin(Workload.generateOrders(customers, products, halfRows,
         startId = startId, seed = 42L + startId,
-        asOf = Date.valueOf("2026-01-01")).localCheckpoint(true)
+        asOf = Date.valueOf("2026-01-01")))
       val schema = orders.schema
       val changes = orders.select(
         col("id").as("lsn"),
@@ -289,9 +290,9 @@ object CdcThroughput {
     val products = spark.range(1, 101).toDF("id")
     val nFiles = math.ceil(halfRows.toDouble / batchSize).toInt
     def publishPhase(startId: Long): org.apache.spark.sql.types.StructType = {
-      val orders = Workload.generateOrders(customers, products, halfRows,
+      val orders = Checkpointing.pin(Workload.generateOrders(customers, products, halfRows,
         startId = startId, seed = 42L + startId,
-        asOf = Date.valueOf("2026-01-01")).localCheckpoint(true)
+        asOf = Date.valueOf("2026-01-01")))
       val schema = orders.schema
       val changes = orders.select(
         col("id").as("lsn"), lit(new Timestamp(0)).as("commitTs"),
@@ -389,14 +390,13 @@ object CdcThroughput {
     def run(name: String, pToast: Double): Double = {
       val store = new KeyedParquetStore(s"$work/store_$name")
       store.snapshot(spark, "t", seed, "id")
-      val changes = Workload.generateChanges(keys, "t", rows,
+      val changes = Checkpointing.pin(Workload.generateChanges(keys, "t", rows,
         startLsn = 1000L, seed = 77L,
         afterJson = (key, lsn) => to_json(struct(key.as("id"),
           concat(lit("v"), lsn).as("v"), lsn.as("w"))),
         mix = (0.0, 0.0), pToast = pToast,
         toastJson = (key, lsn) => to_json(struct(key.as("id"),
-          lit(CdcPipeline.UnchangedToast).as("v"), lsn.as("w"))))
-        .localCheckpoint(true)
+          lit(CdcPipeline.UnchangedToast).as("v"), lsn.as("w")))))
       val nB = math.ceil(rows.toDouble / batchSize).toInt
       val t0 = System.nanoTime()
       (0 until nB).foreach { b =>

@@ -11,44 +11,41 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Checkpointing
 
 /** The materializing pin ([[Checkpointing.materialize]]): one job
-  * pins a frame and folds its row count, an exact integral sum and a
-  * bucket set, equal to what separate `count()` / `sum` / distinct
-  * jobs over the same rows return. */
+  * pins a frame and folds its row count and an exact integral sum,
+  * equal to what separate `count()` / `sum` jobs over the same rows
+  * return. */
 class MaterializeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private val big = Long.MaxValue
-  /** Longs near both ends of the range, nulls, an INT column and a
-    * small-domain bucket column, over 3 partitions: a Long running sum
-    * overflows several times before it comes back into range. */
+  /** Longs near both ends of the range, nulls and an INT column, over
+    * 3 partitions: a Long running sum overflows several times before it
+    * comes back into range. */
   private lazy val frame: DataFrame = {
     val schema = StructType(Seq(StructField("v", LongType),
-      StructField("i", IntegerType), StructField("bucket", IntegerType)))
-    val rows = Seq[(java.lang.Long, Integer, Integer)](
-      (big, Int.MaxValue, 3), (big - 1, Int.MaxValue, 3), (big, null, 5),
-      (null, Int.MinValue, null), (Long.MinValue, 7, 0), (big, -1, 5),
-      (Long.MinValue + 1, null, 7), (-5L, 2, 0), (big, 0, 1))
+      StructField("i", IntegerType)))
+    val rows = Seq[(java.lang.Long, Integer)](
+      (big, Int.MaxValue), (big - 1, Int.MaxValue), (big, null),
+      (null, Int.MinValue), (Long.MinValue, 7), (big, -1),
+      (Long.MinValue + 1, null), (-5L, 2), (big, 0))
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (a, b, c) =>
-        org.apache.spark.sql.Row(a, b, c) }, 3), schema)
+      spark.sparkContext.parallelize(rows.map { case (a, b) =>
+        org.apache.spark.sql.Row(a, b) }, 3), schema)
   }
 
   /** (count, exact sum via DECIMAL(38,0) — a BIGINT sum overflows, and
-    * ANSI mode makes that an error — and the distinct non-null buckets). */
-  private def expected(df: DataFrame, sumCol: String): (Long, BigInt, Set[Int]) = {
+    * ANSI mode makes that an error). */
+  private def expected(df: DataFrame, sumCol: String): (Long, BigInt) = {
     val s = df.agg(coalesce(sum(col(sumCol).cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    val keys = df.filter(col("bucket").isNotNull).select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    (df.count(), BigInt(s.toBigInteger), keys)
+    (df.count(), BigInt(s.toBigInteger))
   }
 
-  test("rows, exact BIGINT and INT sums and the bucket set equal " +
-    "count(), a DECIMAL(38,0) sum and a distinct collect") {
+  test("rows and exact BIGINT and INT sums equal count() and a DECIMAL sum") {
     Seq("v", "i").foreach { c =>
-      val p = Checkpointing.materialize(frame, sumOf = Some(c), keysOf = Some("bucket"))
+      val p = Checkpointing.materialize(frame, sumOf = Some(c))
       try {
-        assert((p.rows, p.sum, p.keys) == expected(frame, c), s"sumOf $c")
+        assert((p.rows, p.sum) == expected(frame, c), s"sumOf $c")
         // the pinned frame holds the same rows as its input
         assert(p.df.collect().map(_.toString).sorted.toSeq ==
           frame.collect().map(_.toString).sorted.toSeq)
@@ -58,23 +55,22 @@ class MaterializeSpec extends AnyFunSuite {
     assert(expected(frame, "v")._2 > BigInt(big))
   }
 
-  test("an empty frame pins to 0 rows, a 0 sum and no keys") {
+  test("an empty frame pins to 0 rows and a 0 sum") {
     val empty = frame.filter(lit(false))
-    val p = Checkpointing.materialize(empty, sumOf = Some("v"), keysOf = Some("bucket"))
-    assert((p.rows, p.sum, p.keys) == expected(empty, "v"))
-    assert((p.rows, p.sum, p.keys) == ((0L, BigInt(0), Set.empty[Int])))
+    val p = Checkpointing.materialize(empty, sumOf = Some("v"))
+    assert((p.rows, p.sum) == expected(empty, "v"))
+    assert((p.rows, p.sum) == ((0L, BigInt(0))))
     assert(p.df.count() == 0L)
   }
 
   test("a narrow frame pins and folds in ONE job; free drops its blocks") {
-    val df = spark.range(0, 1000, 1, 4).select(col("id").as("v"),
-      (col("id") % 8).cast("int").as("bucket"))
+    val df = spark.range(0, 1000, 1, 4).select(col("id").as("v"))
     var p: Checkpointing.Pinned = null
     val jobs = JobCount.of(spark, "materialize_one_job") {
-      p = Checkpointing.materialize(df, sumOf = Some("v"), keysOf = Some("bucket"))
+      p = Checkpointing.materialize(df, sumOf = Some("v"))
     }
     assert(jobs == 1, s"materialize ran $jobs jobs")
-    assert((p.rows, p.sum, p.keys) == ((1000L, BigInt(499500), (0 until 8).toSet)))
+    assert((p.rows, p.sum) == ((1000L, BigInt(499500))))
     // later reads come from the pinned blocks: no recompute job runs
     // the range again, and the count matches
     assert(p.df.count() == 1000L)
@@ -84,25 +80,21 @@ class MaterializeSpec extends AnyFunSuite {
     assert(!spark.sparkContext.getPersistentRDDs.contains(id))
   }
 
-  test("a non-integral sum column or a non-INT key column is rejected") {
-    val df = spark.range(3).select(col("id").cast("double").as("d"),
-      col("id").as("l"))
+  test("a non-integral sum column is rejected") {
+    val df = spark.range(3).select(col("id").cast("double").as("d"))
     intercept[IllegalArgumentException](
       Checkpointing.materialize(df, sumOf = Some("d")))
-    intercept[IllegalArgumentException](
-      Checkpointing.materialize(df, keysOf = Some("l")))
   }
 
   test("reliable mode is bit-identical and writes rdd-* dirs") {
-    val local = Checkpointing.materialize(frame, sumOf = Some("v"), keysOf = Some("bucket"))
+    val local = Checkpointing.materialize(frame, sumOf = Some("v"))
     val ckpt = Files.createTempDirectory("graft_materialize_ckpt")
     spark.sparkContext.setCheckpointDir(ckpt.toString)
     spark.conf.set(Checkpointing.ModeKey, "reliable")
     val reliable =
-      try Checkpointing.materialize(frame, sumOf = Some("v"), keysOf = Some("bucket"))
+      try Checkpointing.materialize(frame, sumOf = Some("v"))
       finally spark.conf.unset(Checkpointing.ModeKey)
-    assert((reliable.rows, reliable.sum, reliable.keys) ==
-      ((local.rows, local.sum, local.keys)))
+    assert((reliable.rows, reliable.sum) == ((local.rows, local.sum)))
     assert(reliable.df.collect().map(_.toString).sorted.toSeq ==
       local.df.collect().map(_.toString).sorted.toSeq)
     Bridge.free(local.df)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bpe, Checkpointing, DedupQueries, GraphQueries, IvfIndex}
+import graft.streaming.{IncrementalDedup, KeyedParquetStore}
 
 /** Opt-in RELIABLE checkpointing for the iterative operators (r14
   * verdict ask: `localCheckpoint(true)` is executor-memory-backed, so
@@ -97,5 +98,50 @@ class ReliableCheckpointSpec extends AnyFunSuite {
       }
       assert(reliable == local, s"$name must be bit-identical across modes")
     }
+  }
+
+  // one query per operator family whose only pins were its own
+  // shared intermediates: with every pin routed through Checkpointing,
+  // reliable mode reaches them too
+  Seq("e5_hll_setops", "j11_bloom_pruned_join", "t28_ngram_novelty",
+    "s11_pq_adc_topk", "c8_curriculum", "ts9_autocorr").foreach { name =>
+    test(s"$name: reliable mode is bit-identical to local mode and " +
+      "writes its pins to disk") {
+      val run = () => rows(SparkEntry.queries(name)(spark, sf))
+      val local = run()
+      val reliable = withReliable {
+        val out = run()
+        assert(checkpointRdds() >= 1, s"$name: reliable mode wrote no rdd-* dir")
+        out
+      }
+      assert(reliable == local, s"$name must be bit-identical across modes")
+    }
+  }
+
+  test("IncrementalDedup.admit: reliable mode is bit-identical to local " +
+    "mode and writes its pins to disk") {
+    import spark.implicits._
+    val batches = Seq(
+      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2L, "red orange yellow green blue indigo violet")),
+      Seq((3L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+        (4L, "one two three four five six seven eight"),
+        (5L, "one two three four five six seven eight nine")))
+    def run(): Seq[Seq[String]] = {
+      val store = new KeyedParquetStore(
+        Files.createTempDirectory("graft_reliable_admit").toString, nBuckets = 4)
+      val dedup = new IncrementalDedup(store, "docs", threshold = 0.8)
+      batches.map { b =>
+        val admitted = dedup.admit(spark, b.toDF("doc_id", "text"))
+        try rows(admitted) finally Checkpointing.free(admitted)
+      }
+    }
+    val local = run()
+    val reliable = withReliable {
+      val out = run()
+      assert(checkpointRdds() >= 1, "reliable mode wrote no rdd-* dir")
+      out
+    }
+    assert(reliable == local, "admit must be bit-identical across modes")
   }
 }

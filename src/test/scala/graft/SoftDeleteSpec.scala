@@ -312,6 +312,27 @@ class SoftDeleteSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not a soft-delete store"), e.getMessage)
   }
 
+  test("sweepAndCompact leaves no copy: a certificate right after it is clean") {
+    import spark.implicits._
+    val store = freshStore()
+    CdcPipeline.snapshotSoft(spark, store,
+      Map("t" -> (1L to 6L).map(i => (i, s"n$i", i * 10L))
+        .toDF("id", "name", "amount")),
+      Map("t" -> "id"))
+    CdcPipeline.applyBatchSoft(Seq(
+      ChangeEvent(10, ts(10), "D", "t", 1, null),
+      ChangeEvent(11, ts(11), "D", "t", 2, null)).toDF(),
+      store, Map("t" -> schema), Map("t" -> "id"))
+    assert(CdcPipeline.sweepAndCompact(spark, store, "t", 15L) == 2L)
+    // like sweepSoftDeleted, a purging compaction deletes the files the
+    // new version retired at once: no retired copy of keys 1/2 is left
+    val cert = graft.operators.Erasure.certificate(spark,
+      Seq(1L, 2L).toDF("id"),
+      store = Seq((store, "t", "id"))).collect().head
+    assert(cert.getAs[Long]("residue") == 0L && cert.getAs[Boolean]("clean"),
+      cert.toString)
+  }
+
   test("unchanged-TOAST markers reject loudly on the soft path (no silent upsert)") {
     import spark.implicits._
     val store = freshStore()
