@@ -20,11 +20,11 @@ import graft.sources.Tables
   *  - [[forget]]: batch corpus directory (`<dataDir>/<table>.parquet`)
   *    — anti-join rewrite + atomic old-aside swap. The cascade is BY
   *    CONSTRUCTION: the rewrite replaces the table's file inventory,
-  *    which fails every [[IndexStore]] guard on next access — the
-  *    fingerprint ([[IndexStore.getOrBuild]]), the per-file manifest
-  *    ([[IndexStore.getOrBuildIncremental]] treats a rewritten indexed
-  *    file as mutation ⇒ full rebuild) and the trained-state inventory
-  *    ([[IndexStore.getOrBuildIfFresh]] ⇒ retrain) alike. No eager
+  *    which no longer matches the inventory each [[IndexStore]]
+  *    manifest committed, on next access: [[IndexStore.getOrBuild]]
+  *    rebuilds, [[IndexStore.getOrBuildIncremental]] treats a
+  *    rewritten indexed file as mutation ⇒ full rebuild, and
+  *    [[IndexStore.getOrBuildIfFresh]] retrains. No eager
   *    sidecar deletion is needed, so a crash mid-erasure can never
   *    leave a half-invalidated index: guards compare against the data
   *    that IS there.

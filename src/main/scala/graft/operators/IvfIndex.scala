@@ -144,8 +144,9 @@ object IvfIndex {
     * a corpus state pays the Lloyd rounds, every later query (and every
     * consumer sharing the same k/rounds/quantization — s17, s18 and s19
     * all do) opens the k-row centroid parquet. Any source append or
-    * rewrite changes the fingerprint and retrains: centroids are a
-    * whole-corpus statistic, so there is no per-row delta path — but
+    * rewrite changes the source inventory the index committed, and the
+    * next consumer retrains: centroids are a whole-corpus statistic,
+    * so there is no per-row delta path — but
     * the rebuild is the TRAINING cost (O(rounds·N·√k) routed dots),
     * which production bounds further by sampling the training input
     * (the machinery is sample-size-agnostic). Lloyd is deterministic

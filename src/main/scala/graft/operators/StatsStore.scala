@@ -4,19 +4,23 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.streaming.AtomicFiles
+
 /** Persisted ANALYZE-style statistics for the join advisor (r10
   * verdict ask #5): at warehouse scale, statistics are collected ONCE
   * per (table, key) and reused by every subsequent planning decision —
   * re-sketching a side on each `advise()` call re-scans data the
   * optimizer has already measured.
   *
-  * The store is a tiny parquet sidecar keyed by (table, key): physical
-  * and non-null-key row counts, the Count-Min sketch blob, the HLL
-  * distinct estimate, and the Misra-Gries heavy-hitter candidates —
-  * exactly [[JoinAdvisor]]'s one-pass statistics row, all mergeable
-  * sketch blobs of a few KB. A driver-side read/rewrite upserts it
-  * (ANALYZE output is always driver-tiny — ~KBs per table, regardless
-  * of data size).
+  * The store is one tiny text file, `<path>/_graft_stats`, with a row
+  * per (table, key): physical and non-null-key row counts, the
+  * Count-Min sketch blob, the HLL distinct estimate, and the
+  * Misra-Gries heavy-hitter candidates — exactly [[JoinAdvisor]]'s
+  * one-pass statistics row, all mergeable sketch blobs of a few KB.
+  * ANALYZE output is always driver-tiny (~KBs per table, regardless of
+  * data size), so the driver reads it with no Spark job and upserts it
+  * by rewriting the file in one atomic replace ([[AtomicFiles]]): a
+  * reader sees the old rows or the new ones, never a torn file.
   *
   * INVALIDATION ON APPEND: every stored row carries a fingerprint of
   * the side's input files (path + length + mtime, from `df.inputFiles`
@@ -32,9 +36,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Safety net: the advisor's decisions change only PHYSICS (broadcast
   * vs salt vs shuffle, join order) — inner equi-join output is
   * row-identical under every strategy — so even a wrong served
-  * statistic can cost performance, never correctness. `version` pins
-  * the sketch parameterization; a store written by an older sketch
-  * format misses rather than mislead.
+  * statistic can cost performance, never correctness.
+  * [[StatsStore.FormatVersion]] pins the sketch parameterization; a
+  * row written by an older sketch format misses rather than mislead.
   */
 class StatsStore(spark: SparkSession, val path: String) {
   import StatsStore._
@@ -67,39 +71,13 @@ class StatsStore(spark: SparkSession, val path: String) {
     }
   }
 
-  private def readAll(): Seq[StoredStats] =
-    if (!new java.io.File(path).exists()) Seq.empty
-    else {
-      import spark.implicits._
-      spark.read.parquet(path).as[StoredStats].collect().toSeq
-    }
+  private val file = new org.apache.hadoop.fs.Path(path, "_graft_stats")
 
-  private def writeAll(rows: Seq[StoredStats]): Unit = {
-    import spark.implicits._
-    // rewrite via a temp dir + old-aside swap (r14, the IndexStore
-    // discipline): a reader never sees a half-written sidecar, the
-    // dest is absent only between two metadata renames (not for a
-    // whole recursive delete), and both renames are CHECKED — a false
-    // return must not leave the sidecar silently destroyed. A reader
-    // that races the swap window reads "no stats" and re-analyzes:
-    // costs one scan, never correctness (advisor stats change physics
-    // only). Crash at any point is self-healing the same way.
-    val tmp = path + ".tmp"
-    spark.createDataset(rows).repartition(1).write
-      .mode("overwrite").parquet(tmp)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(old, true) // leftover from a crash mid-swap
-    if (fs.exists(dest) && !fs.rename(dest, old))
-      throw new java.io.IOException(
-        s"stats sidecar swap failed: rename $dest -> $old returned false")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dest))
-      throw new java.io.IOException(
-        s"stats sidecar swap failed: rename $tmp -> $dest returned false" +
-          (if (fs.exists(old)) s"; previous sidecar preserved at $old" else ""))
-    fs.delete(old, true)
-  }
+  private def readAll(): Seq[StoredStats] =
+    AtomicFiles.read(spark, file).toSeq.flatMap(_.linesIterator.flatMap(decode))
+
+  private def writeAll(rows: Seq[StoredStats]): Unit =
+    AtomicFiles.writeAtomically(spark, file, rows.map(encode).mkString("\n"))
 
   /** Stored statistics for (table, key) if present AND still valid for
     * `df`'s current input files; None on miss or fingerprint drift. */
@@ -112,8 +90,7 @@ class StatsStore(spark: SparkSession, val path: String) {
         fromDisk.foreach(r => cache((table, key)) = r)
         fromDisk
       }
-    hit.filter(r => r.fingerprint == fp && r.version == FormatVersion)
-      .map(_.toSideStats)
+    hit.filter(_.fingerprint == fp).map(_.toSideStats)
   }
 
   /** Serve stored statistics or run ONE sketch pass and persist it. */
@@ -128,7 +105,7 @@ class StatsStore(spark: SparkSession, val path: String) {
     val s = JoinAdvisor.computeStats(df, key, mgK = MgK)
     if (fp != "mem") {
       val row = StoredStats(table, key, s.physRows, s.keyRows, s.cms,
-        s.distinct, s.candidates, fp, FormatVersion)
+        s.distinct, s.candidates, fp)
       writeAll(readAll().filterNot(r => r.table == table && r.key == key) :+ row)
       cache((table, key)) = row
     }
@@ -150,7 +127,7 @@ class StatsStore(spark: SparkSession, val path: String) {
     if (fp != "mem") {
       val rows = stats.map { case (k, s) =>
         k -> StoredStats(table, k, s.physRows, s.keyRows, s.cms,
-          s.distinct, s.candidates, fp, FormatVersion)
+          s.distinct, s.candidates, fp)
       }
       writeAll(readAll().filterNot(r =>
         r.table == table && keys.contains(r.key)) ++ rows.values)
@@ -165,8 +142,8 @@ class StatsStore(spark: SparkSession, val path: String) {
     * from serving dead weight). */
   def invalidate(table: String): Unit = {
     cache.filterInPlace { case ((t, _), _) => t != table }
-    val rest = readAll().filterNot(_.table == table)
-    if (new java.io.File(path).exists()) writeAll(rest)
+    val all = readAll()
+    if (all.exists(_.table == table)) writeAll(all.filterNot(_.table == table))
   }
 }
 
@@ -184,10 +161,32 @@ object StatsStore {
       table: String, key: String,
       physRows: Long, keyRows: Long,
       cms: Array[Byte], distinct: Long, candidates: Seq[String],
-      fingerprint: String, version: Int) {
+      fingerprint: String) {
     def toSideStats: JoinAdvisor.SideStats =
       JoinAdvisor.SideStats(physRows, keyRows, cms, distinct, candidates)
   }
+
+  private def b64(bytes: Array[Byte]): String = java.util.Base64.getEncoder.encodeToString(bytes)
+  private def unb64(s: String): Array[Byte] = java.util.Base64.getDecoder.decode(s)
+  private def b64(s: String): String = b64(s.getBytes("UTF-8"))
+  private def text(s: String): String = new String(unb64(s), "UTF-8")
+
+  /** One tab-separated line, [[FormatVersion]] first and one field per
+    * candidate last; names, blobs and candidates are base64, so no
+    * value can break the line. */
+  private def encode(r: StoredStats): String =
+    (Seq(FormatVersion.toString, b64(r.table), b64(r.key), r.physRows.toString,
+      r.keyRows.toString, b64(r.cms), r.distinct.toString, r.fingerprint) ++
+      r.candidates.map(b64)).mkString("\t")
+
+  /** The row a line holds; None for a line of another format. */
+  private def decode(line: String): Option[StoredStats] =
+    line.split("\t", -1).toSeq match {
+      case Seq(v, t, k, phys, keyed, cms, distinct, fp, cands @ _*) if v == FormatVersion.toString =>
+        Some(StoredStats(text(t), text(k), phys.toLong, keyed.toLong, unb64(cms),
+          distinct.toLong, cands.map(text), fp))
+      case _ => None
+    }
 
   /** A store scoped to one data directory (the engine's per-dataset
     * sidecar location): deterministic path under the JVM temp dir,

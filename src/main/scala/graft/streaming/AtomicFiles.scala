@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** One OVERWRITING-rename primitive for the small metadata files the
-  * engine maintains (store manifests, the applied record, consumer
-  * registrations, index pointers and inventories): a reader must never
+  * engine maintains (the [[FileManifest]] of every store, the applied
+  * record, consumer registrations, the join advisor's statistics): a
+  * reader must never
   * observe the destination absent or torn (rules out delete-then-rename
   * and in-place writes), and CONCURRENT writers must both survive with
   * one of their values winning (rules out Hadoop FileContext on the
@@ -44,4 +45,12 @@ private[graft] object AtomicFiles {
         .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   }
+
+  /** The text of a file [[writeAtomically]] wrote, or None when it does
+    * not exist. */
+  def read(spark: SparkSession, p: Path): Option[String] =
+    try {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 }

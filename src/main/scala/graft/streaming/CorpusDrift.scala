@@ -129,9 +129,9 @@ object CorpusDrift {
     * alerting; `batch_id` comes back as the partition column. */
   def start(docs: DataFrame, baselinePath: String, alertDir: String,
       checkpointDir: String, thresholdNano: Long): StreamingQuery = {
-    val spark = docs.sparkSession
-    // (K+1) rows, pinned once for the query's life
-    val baseline = Checkpointing.pin(spark.read.parquet(baselinePath))
+    // (K+1) rows, re-scanned per batch: a pin held for the stream's
+    // life would have no owner to free it when the query stops
+    val baseline = docs.sparkSession.read.parquet(baselinePath)
     docs.writeStream
       .queryName("corpus_drift_monitor")
       .option("checkpointLocation", checkpointDir)
@@ -152,8 +152,8 @@ object CorpusDrift {
     * baseline while the corpus has only APPENDED within
     * `maxGrowFraction` of the trained bytes; retrain past the budget;
     * any rewrite/delete of a trained file is wrong-era data and
-    * retrains immediately. Returns the (K+1)-row baseline frame —
-    * hand its [[Checkpointing.pin]] to [[score]]/[[start]].
+    * retrains immediately. Returns the (K+1)-row baseline frame, a
+    * scan of the index's files, for [[score]].
     *
     * Correctness domain: the baseline is an INDEX-like approximation
     * (a reference distribution), so stale-within-budget serving is the

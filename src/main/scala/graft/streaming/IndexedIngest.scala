@@ -27,8 +27,9 @@ import graft.operators.IndexStore
   * the new batch 0 (different rows!) would collide with the old
   * incarnation's landed file and be silently skipped — rows arriving
   * between the drop and the restart would be lost. Crash INSIDE the
-  * index build is covered by IndexStore's own manifest reconciliation
-  * (orphan deltas pruned before serving).
+  * index build is covered by IndexStore's one manifest commit: a delta
+  * whose commit is lost is never served, and the next build derives
+  * its rows again.
   *
   * At 100 TB this is the ingestion half of the signature-store
   * design: the d6/d13/m8/m9 family reads

@@ -1,18 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.locks.ReentrantLock
-
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.Checkpointing
 
@@ -20,29 +12,19 @@ import graft.operators.Checkpointing
   * CDC target (reference: PeerDB's ordered apply to target tables,
   * README.md:231–238) without requiring a transactional table format.
   *
-  * Layout: `<root>/<table>/_graft_manifest` names the table's one
-  * current version; every write puts NEW files into a fresh commit
-  * directory, `<root>/<table>/<commit>/bucket=<b>/part-*.parquet`
-  * where `b = pmod(hash(key), nBuckets)`, and never touches a file a
-  * version names. The manifest holds the row schema (schema
-  * propagation: target schema derives from source, never
-  * hand-declared — quickstart_prepare_peers.sh:80, SURVEY.md §1.3 —
-  * and reads never pay parquet-footer schema inference), every live
-  * file with its bucket and size, and the files earlier versions
-  * retired, each with its retire time. A directory without a manifest
-  * is a table that does not exist.
+  * Layout: each table is one [[FileManifest]] set in `<root>/<table>`,
+  * bucketed by `b = pmod(hash(key), nBuckets)`. The manifest holds the
+  * row schema (schema propagation: target schema derives from source,
+  * never hand-declared — quickstart_prepare_peers.sh:80, SURVEY.md
+  * §1.3). A directory without a manifest is a table that does not
+  * exist.
   *
-  * Commit: one atomic replace of the manifest ([[AtomicFiles]]) — the
-  * reference's target commits each normalize batch atomically, and so
-  * does this store: a crash at any step before it leaves the previous
-  * version whole, and after it the new one. Commits to one table are
-  * serialized by a JVM-wide lock on the table path, held from the
-  * manifest read to the commit, so a `compact` racing a `merge` cannot
-  * lose the merge's update. Readers take no lock: they resolve the
-  * manifest once and scan exactly its files, so a reader racing a
-  * commit sees one whole version. Each commit's retention pass deletes
-  * the files retired more than [[RetentionMs]] ago and the unreferenced
-  * directories (a crashed write's) older than that.
+  * Commit: one atomic replace of the manifest — the reference's target
+  * commits each normalize batch atomically, and so does this store: a
+  * crash at any step before it leaves the previous version whole, and
+  * after it the new one. Commits to one table are serialized by the
+  * manifest's lock, so a `compact` racing a `merge` cannot lose the
+  * merge's update; readers take no lock and see one whole version.
   *
   * Scale design (the point of bucketing): a merge only reads and
   * rewrites the buckets that contain changed keys — cost is
@@ -75,65 +57,19 @@ object KeyedParquetStore {
   }
 
 
-  /** How long a retired file stays on disk after the commit that
-    * retires it, and how old an unreferenced directory must be before
-    * a commit deletes it. It is the bound on a reader's lifetime: a
-    * frame from [[KeyedParquetStore.read]] must run within this time of
-    * the commit that retires its files, and a write must commit within
-    * it. */
-  val RetentionMs: Long = 60000L
+  /** The bound on a reader's lifetime ([[FileManifest.RetentionMs]]):
+    * a frame from [[KeyedParquetStore.read]] must run within this time
+    * of the commit that retires its files. */
+  val RetentionMs: Long = FileManifest.RetentionMs
 
   /** The applied record: the highest applied LSN, and the source
     * commit-time stamp with the LSN it was recorded at. */
   private[graft] final case class Applied(lsn: Long, stamp: Option[(Long, java.sql.Timestamp)])
-
-  private final case class LiveFile(path: String, bucket: Int, bytes: Long)
-  private final case class Retired(path: String, at: Long)
-  /** One version of a table; file paths are relative to its directory. */
-  private final case class Manifest(schema: StructType, live: Seq[LiveFile], retired: Seq[Retired])
-
-  private val ManifestName = "_graft_manifest"
-  private val BucketSchema = StructType(Seq(StructField("bucket", IntegerType)))
-  private val locks = new ConcurrentHashMap[String, ReentrantLock]()
-
-  private def render(m: Manifest): String =
-    (s"schema\t${m.schema.json}" +:
-      m.live.map(f => s"live\t${f.bucket}\t${f.bytes}\t${f.path}") ++:
-      m.retired.map(r => s"retired\t${r.at}\t${r.path}")).mkString("\n")
-
-  private def parse(text: String): Manifest = {
-    val lines = text.linesIterator.map(_.split("\t", 4)).toSeq
-    Manifest(
-      lines.collectFirst { case Array("schema", json) =>
-        DataType.fromJson(json).asInstanceOf[StructType] }.get,
-      lines.collect { case Array("live", b, n, p) => LiveFile(p, b.toInt, n.toLong) },
-      lines.collect { case Array("retired", t, p) => Retired(p, t.toLong) })
-  }
-
-  /** A manifest's files as a scan with `bucket` as its partition
-    * column: Spark lists nothing, and its partition pruning filters
-    * the entries. */
-  private final class ManifestIndex(dir: Path, files: Seq[LiveFile]) extends FileIndex {
-    def rootPaths: Seq[Path] = Seq(dir)
-    def partitionSchema: StructType = BucketSchema
-    def inputFiles: Array[String] = files.map(f => new Path(dir, f.path).toString).toArray
-    def refresh(): Unit = ()
-    def sizeInBytes: Long = files.map(_.bytes).sum
-    def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val keep = partitionFilters.reduceOption(And).map(e => Predicate.createInterpreted(
-        e.transform { case _: AttributeReference => BoundReference(0, IntegerType, true) }))
-      files.groupBy(_.bucket).toSeq.sortBy(_._1).collect {
-        case (b, fs) if keep.forall(_.eval(InternalRow(b))) =>
-          PartitionDirectory(InternalRow(b), fs.map(f =>
-            new FileStatus(f.bytes, false, 1, 0L, 0L, new Path(dir, f.path))).toArray)
-      }
-    }
-  }
 }
 
 class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   import KeyedParquetStore._
+  import FileManifest.Manifest
 
   private def path(table: String) = s"$root/$table"
   // merge's per-row order; stored rows carry a null rank, which sorts
@@ -151,23 +87,12 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   private def fs(spark: SparkSession): FileSystem =
     FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
-  /** A small file's text, or None when it does not exist. */
-  private def readText(spark: SparkSession, p: Path): Option[String] =
-    try {
-      val in = fs(spark).open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  private def manifestPath(table: String) = new Path(path(table), ManifestName)
-
-  private def manifest(spark: SparkSession, table: String) =
-    readText(spark, manifestPath(table)).map(parse)
+  private def manifest(spark: SparkSession, table: String) = FileManifest.read(spark, path(table))
 
   private def current(spark: SparkSession, table: String): Manifest = manifest(spark, table)
     .getOrElse(throw new java.io.FileNotFoundException(s"table '$table' does not exist in $root"))
 
-  def exists(spark: SparkSession, table: String): Boolean =
-    fs(spark).exists(manifestPath(table))
+  def exists(spark: SparkSession, table: String): Boolean = FileManifest.exists(spark, path(table))
 
   private def appliedPath = new Path(s"$root/_graft_applied")
 
@@ -207,7 +132,7 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   /** The applied record ([[recordAppliedLsn]]), if any batch has been
     * applied. */
   private[graft] def applied(spark: SparkSession): Option[Applied] =
-    readText(spark, appliedPath).map(_.trim.split("\\s+").map(_.toLong)).map {
+    AtomicFiles.read(spark, appliedPath).map(_.trim.split("\\s+").map(_.toLong)).map {
       case Array(lsn, l, ms) => Applied(lsn, Some((l, new java.sql.Timestamp(ms))))
       case a => Applied(a.head, None)
     }
@@ -231,12 +156,8 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   /** The persisted row schema (without the bucket partition column). */
   def schemaOf(spark: SparkSession, table: String): StructType = current(spark, table).schema
 
-  /** `m`'s live files, with the `bucket` column last; every column is
-    * nullable, as in any Spark file scan. */
   private def scan(spark: SparkSession, table: String, m: Manifest): DataFrame =
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      new ManifestIndex(new Path(path(table)), m.live), BucketSchema,
-      Bridge.asNullable(m.schema), None, new ParquetFileFormat, Map.empty)(spark))
+    FileManifest.scan(spark, path(table), m)
 
   /** Read the current version of a table: its manifest's files, with
     * its schema — an emptied table reads as an empty DataFrame, and no
@@ -252,83 +173,35 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * the full [[read]] when the keys cover every bucket. The apply path
     * never calls it: [[merge]] reads the touched buckets itself. */
   def readForKeys(spark: SparkSession, table: String, keys: DataFrame,
-      keyCol: String): DataFrame = {
-    val m = current(spark, table)
-    val rows = scan(spark, table, m)
-    val touched = if (m.live.isEmpty) Nil
-      else keys.select(bucketExpr(col(keyCol))).distinct().collect().map(_.getInt(0)).toSeq
-    (if (touched.size >= nBuckets) rows
-    else rows.filter(col("bucket").isin(touched: _*))).drop("bucket")
+      keyCol: String): DataFrame =
+    readBuckets(spark, table,
+      if (current(spark, table).live.isEmpty) Nil
+      else keys.select(bucketExpr(col(keyCol))).distinct().collect().map(_.getInt(0)).toSeq)
+
+  /** [[read]] restricted to `buckets` — a `bucket` PARTITION filter, so
+    * the scan opens only those buckets' files; the full [[read]] when
+    * they cover every bucket. */
+  private[graft] def readBuckets(spark: SparkSession, table: String,
+      buckets: Seq[Int]): DataFrame = {
+    val rows = scan(spark, table, current(spark, table))
+    (if (buckets.distinct.size >= nBuckets) rows
+    else rows.filter(col("bucket").isin(buckets: _*))).drop("bucket")
   }
 
   /** Live files of a table's current version: (bucket, path). */
   private[graft] def liveFiles(spark: SparkSession, table: String): Seq[(Int, String)] =
     current(spark, table).live.map(f => (f.bucket, new Path(path(table), f.path).toString))
 
-  /** Run `body` holding `table`'s commit lock, which every write takes
-    * from its manifest read to its commit. One reentrant lock per table
-    * path in this JVM: two stores over the same root share it. The lock
-    * is fair, so a compaction cadence cannot starve the mirror's merges. */
-  private[graft] def locked[T](table: String)(body: => T): T = {
-    val lock = locks.computeIfAbsent(new Path(path(table)).toString, _ => new ReentrantLock(true))
-    lock.lock()
-    try body finally lock.unlock()
-  }
-
-  /** Write `rows` (with a `bucket` column) into a fresh commit
-    * directory of `table` and commit its files as the next version
-    * after `cur`: `cur`'s live files in `replaced` buckets retire, the
-    * others carry over, and the new manifest replaces the old one
-    * atomically. The caller holds the table's lock. */
-  private def commit(spark: SparkSession, table: String, cur: Option[Manifest],
-      schema: StructType, rows: DataFrame, replaced: Int => Boolean): Unit = {
-    val dir = s"v${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
-    rows.write.partitionBy("bucket").parquet(s"${path(table)}/$dir")
-    val f = fs(spark)
-    val now = System.currentTimeMillis()
-    val written = f.globStatus(new Path(path(table), s"$dir/bucket=*/part-*")).toSeq.map { s =>
-      val b = s.getPath.getParent.getName.stripPrefix("bucket=")
-      LiveFile(s"$dir/bucket=$b/${s.getPath.getName}", b.toInt, s.getLen)
-    }
-    val (gone, kept) = cur.fold(Seq.empty[LiveFile])(_.live).partition(l => replaced(l.bucket))
-    val (expired, retained) =
-      cur.fold(Seq.empty[Retired])(_.retired).partition(_.at < now - RetentionMs)
-    val next = Manifest(schema, kept ++ written, retained ++ gone.map(l => Retired(l.path, now)))
-    AtomicFiles.writeAtomically(spark, manifestPath(table), render(next))
-    sweep(f, table, next, expired, now - RetentionMs)
-  }
-
-  /** Retention pass after a commit of `m`: delete the `expired` files
-    * (no longer in `m`), then every entry of the table directory that
-    * `m` does not reference and that was last modified before
-    * `cutoff` — a crashed write's commit directory or temp manifest,
-    * or a directory whose files all expired. A crash between the
-    * commit and this pass leaves the expired files in place until
-    * their directory holds no referenced file. */
-  private def sweep(f: FileSystem, table: String, m: Manifest, expired: Seq[Retired],
-      cutoff: Long): Unit = {
-    expired.foreach(r => f.delete(new Path(path(table), r.path), false))
-    val referenced = (m.live.map(_.path) ++ m.retired.map(_.path)).map(_.takeWhile(_ != '/')).toSet
-    f.listStatus(new Path(path(table))).foreach { s =>
-      val n = s.getPath.getName
-      if (n != ManifestName && !referenced(n) && s.getModificationTime < cutoff)
-        f.delete(s.getPath, true)
-    }
-  }
+  /** Run `body` holding `table`'s commit lock ([[FileManifest.locked]]). */
+  private[graft] def locked[T](table: String)(body: => T): T =
+    FileManifest.locked(path(table))(body)
 
   /** Delete every file of `table` that its current version does not
-    * name, whatever its age: the retained files older readers may
-    * still scan, and any crashed write's. Erasure's obligation covers
-    * those copies too ([[graft.operators.Erasure.forgetFromStore]]);
-    * a reader still scanning one fails instead of serving it. */
+    * name ([[FileManifest.purgeSuperseded]]). Erasure's obligation
+    * covers the retained copies too
+    * ([[graft.operators.Erasure.forgetFromStore]]). */
   private[graft] def purgeSuperseded(spark: SparkSession, table: String): Unit =
-    locked(table) {
-      manifest(spark, table).foreach { m =>
-        val kept = m.copy(retired = Nil)
-        AtomicFiles.writeAtomically(spark, manifestPath(table), render(kept))
-        sweep(fs(spark), table, kept, m.retired, Long.MaxValue)
-      }
-    }
+    FileManifest.purgeSuperseded(spark, path(table))
 
   /** Initial snapshot load (CDC snapshot-then-stream handoff,
     * flow-snapshot-worker docker-compose.yml:133–141): bulk-write the
@@ -337,7 +210,7 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   def snapshot(spark: SparkSession, table: String, source: DataFrame, keyCol: String): Unit = {
     require(!source.columns.contains("bucket"),
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
-    locked(table)(commit(spark, table, manifest(spark, table), source.schema,
+    locked(table)(FileManifest.commit(spark, path(table), manifest(spark, table), source.schema,
       source.withColumn("bucket", bucketExpr(col(keyCol))).repartition(col("bucket")), _ => true))
   }
 
@@ -410,7 +283,9 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * the old key — the old key's stored row, ranked above the new
     * key's own stored row (where a replay finds what the first apply
     * moved), and the old key's changes ranked below the move join the
-    * union under the new key, at the cost of one broadcast job.
+    * union under the new key: a broadcast left join re-keys them from
+    * the merge's one scan of the stored rows, at the cost of one
+    * broadcast job.
     *
     * `keepDeletes` (soft-delete mode): a delete winner is kept, not
     * dropped; the caller carries every data column, so a tombstone
@@ -458,19 +333,28 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     if (!onDisk || touched.nonEmpty) {
       val incoming = alignTo(keyed, target, col("op"),
         rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
-      def asStored(df: DataFrame, rank: Column) =
-        alignTo(df, target, lit(null).cast("string").as("op"), rank.cast(LongType).as(Rank))
       val stored = cur.filter(_ => onDisk).map(m =>
-        scan(spark, table, m).filter(col("bucket").isin(touched: _*)))
-      // a move's old key, stored and in the batch below the move, under
-      // the new key (a delete there is never carried)
-      val moved = movedKeys.map(m =>
-        (stored.map(asStored(_, lit(Long.MinValue))).toSeq :+ incoming).reduce(_ unionByName _)
-          .join(broadcast(m), col(keyCol) === col("_from") && col(Rank) < col("_at"))
-          .drop(keyCol, "bucket", "_from", "_at").withColumnRenamed("_to", keyCol)
-          .withColumn("bucket", bucketExpr(col(keyCol))))
-      val ranked = (stored.map(asStored(_, lit(null))).toSeq ++ moved :+ incoming)
-        .reduce(_ unionByName _)
+        alignTo(scan(spark, table, m).filter(col("bucket").isin(touched: _*)), target,
+          lit(null).cast("string").as("op"), lit(null).cast(LongType).as(Rank)))
+      val union = (stored.toSeq :+ incoming).reduce(_ unionByName _)
+      // a move's old key, stored and in the batch below the move, also
+      // joins under the new key, its stored row at Long.MinValue (a
+      // delete there is never carried): each row of the one scan is
+      // emitted as is and, when it matches a move, re-keyed
+      val ranked = movedKeys.fold(union) { m =>
+        val self = struct(union.columns.map(col): _*)
+        val rekeyed = struct(union.columns.map {
+          case `keyCol` => col("_to").as(keyCol)
+          case Rank => coalesce(col(Rank), lit(Long.MinValue)).as(Rank)
+          case "bucket" => bucketExpr(col("_to")).as("bucket")
+          case c => col(c)
+        }: _*)
+        union.join(broadcast(m), col(keyCol) === col("_from") &&
+            coalesce(col(Rank) < col("_at"), lit(true)), "left")
+          .select(explode(when(col("_to").isNull, array(self))
+            .otherwise(array(self, rekeyed))).as("_r"))
+          .select("_r.*")
+      }
       val byKey = Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)
       val isDelete = col("op") <=> "D"
       val carried = carry.map { c =>
@@ -492,7 +376,7 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
               "diverged; re-sync the table (KeyedParquetStore.resync)")).cast(f.dataType))
             .otherwise(col(s"_carry_${f.name}.v")).as(f.name)
         } :+ col("bucket"): _*)
-      commit(spark, table, cur, target, winners, touched.toSet)
+      FileManifest.commit(spark, path(table), cur, target, winners, touched.toSet)
     }
   }
 
@@ -560,7 +444,7 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     else {
       val rows = scan(spark, table, cur)
       def write(kept: DataFrame): Unit =
-        commit(spark, table, Some(cur), cur.schema, kept.repartition(col("bucket"))
+        FileManifest.commit(spark, path(table), Some(cur), cur.schema, kept.repartition(col("bucket"))
           .sortWithinPartitions((col("bucket") +: clusterBy.map(col)): _*), _ => true)
       dropWhere match {
         case None => write(rows); 0L

@@ -113,4 +113,26 @@ class AggMaintenanceSpec extends AnyFunSuite {
     assert(view(mv) == Seq(("open", 1L, 300L), ("paid", 1L, 400L)))
     assert(view(mv) == recompute(store))
   }
+
+  test("a one-key batch's retract reads only that key's bucket files") {
+    import spark.implicits._
+    val store = new KeyedParquetStore(
+      Files.createTempDirectory("mv_store3").toString, nBuckets = 4)
+    val mv = new AggMaintenance(store,
+      Files.createTempDirectory("mv_view3").toString, "orders", ordersSchema,
+      "id", "status", "amount")
+    mv.applyBatch((1L to 40L).map(i =>
+      ChangeEvent(i, ts(i), "I", "orders", i, row(i, "open", 1.25))).toDF(), 0L)
+    val bucket = spark.range(1).select(pmod(hash(lit(7L)), lit(4))).head().getInt(0)
+    // park every file of the other buckets: a scan that opens one fails
+    val parked = store.liveFiles(spark, "orders").collect { case (b, f) if b != bucket =>
+      val p = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
+      p -> Files.move(p, p.resolveSibling(s"${p.getFileName}.parked"))
+    }
+    assert(parked.nonEmpty)
+    mv.applyBatch(Seq(ChangeEvent(50, ts(50), "U", "orders", 7, row(7, "paid", 2.5))).toDF(), 1L)
+    parked.foreach { case (p, aside) => Files.move(aside, p) }
+    assert(view(mv) == Seq(("open", 39L, 4875L), ("paid", 1L, 250L)))
+    assert(view(mv) == recompute(store))
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.window.WindowExec
@@ -274,17 +274,22 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("plan shape: the merge writes through one shuffle, no pin") {
     import spark.implicits._
     // the second input carries TOAST markers on a string column, resolved
-    // from the stored rows: the carry rides the same window
-    Seq(false, true).foreach { toast =>
+    // from the stored rows: the carry rides the same window. The third
+    // adds marked key moves, whose old keys' rows join under the new
+    // keys from the merge's one scan of the stored files
+    Seq((false, false), (true, false), (true, true)).foreach { case (toast, moves) =>
       val root = Files.createTempDirectory("cdc_merge_plan").toString
       val store = new KeyedParquetStore(root, nBuckets = 8)
       val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)) ++
         (if (toast) Seq(StructField("bio", StringType)) else Nil))
-      def batch(lsn0: Long) = (0 until 200).map { i =>
+      def batch(lsn0: Long) = ((0 until 200).map { i =>
         val bio = if (lsn0 > 1000L && i % 3 == 0) M else s"b$i"
         ChangeEvent(lsn0 + i, ts(i), if (i % 9 == 4) "D" else "U", "t", i % 50,
           s"""{"id":${i % 50},"v":${lsn0 + i}${if (toast) s""","bio":"$bio"""" else ""}}""")
-      }.toDF()
+      } ++ (if (moves && lsn0 > 1000L) (0 until 3).map { j =>
+        ChangeEvent(lsn0 + 300 + j, ts(j), "U", "t", 100 + j,
+          s"""{"id":${100 + j},"v":$j,"bio":"$M"}""", Some(j.toLong))
+      } else Nil)).toDF()
       CdcPipeline.applyBatch(batch(1000L), store, Map("t" -> schema), Map("t" -> "id"))
 
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
@@ -307,6 +312,9 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val writes = mine.filter(_._1 == "command")
         assert(writes.size == 1, s"expected one store write, saw ${mine.map(_._1)}")
         assert(shuffles(writes.head._2) == 1 && windows(writes.head._2).nonEmpty,
+          writes.head._2.executedPlan.toString)
+        val scans = collect(writes.head._2.executedPlan) { case f: FileSourceScanExec => f }
+        assert(scans.size == 1, s"the stored files are scanned ${scans.size} times: " +
           writes.head._2.executedPlan.toString)
       } finally spark.listenerManager.unregister(listener)
     }

@@ -62,14 +62,11 @@ class ErasureSpec extends AnyFunSuite {
     // after the post-erasure rebuild, the purge destroys the residue
     // and the served index keeps working
     q(spark, work).collect() // rebuild over the 495-row corpus
-    val idxDir = new java.io.File(s"${IndexStore.rootFor(work)}/simhash64")
-    assert(idxDir.listFiles().count(f =>
-      f.isDirectory && f.getName.startsWith("v")) >= 2,
+    assert(IndexStoreSpec.unserved(work, "simhash64").nonEmpty,
       "precondition: a previous version must be retained")
     val dropped = IndexStore.pruneUnservedVersions(spark, work)
     assert(dropped >= 1, s"got $dropped")
-    assert(idxDir.listFiles().count(f =>
-      f.isDirectory && f.getName.startsWith("v")) == 1,
+    assert(IndexStoreSpec.unserved(work, "simhash64").isEmpty,
       "only the served version may survive the purge")
     val postPurge = IndexStore.getOrBuildIncremental(
       spark, work, "simhash64", "documents")(_ =>

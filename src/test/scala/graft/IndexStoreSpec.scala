@@ -69,6 +69,23 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(served == fresh)
   }
 
+  test("a warm serve runs no Spark job: d6, d13, m8 and m9 build with 0 jobs") {
+    val src = freshSource()
+    def lens() = IndexStore.getOrBuild(spark, src, "lens_warm", "documents") {
+      spark.read.parquet(s"$src/documents.parquet")
+        .select(col("doc_id"), length(col("text")).as("len"))
+    }
+    val n = lens().count()
+    assert(JobCount.of(spark, "index_warm_serve")(lens()) == 0)
+    assert(lens().count() == n)
+    Seq("d6_simhash64_pairs", "d13_simhash64_lookup", "m8_perceptual_dedup",
+        "m9_audio_dedup").foreach { q =>
+      SparkEntry.queries(q)(spark, sf) // warm
+      val jobs = JobCount.of(spark, s"index_warm_$q")(SparkEntry.queries(q)(spark, sf))
+      assert(jobs == 0, s"$q: building the warm query ran $jobs jobs")
+    }
+  }
+
   test("per-row index: append-only source growth takes the DELTA build " +
     "path (derives only the new files), mutation falls back to full rebuild") {
     val src = freshSource()
@@ -115,6 +132,11 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(rebuilt == fresh)
   }
 
+  private def appendCopy(src: String, offset: Long): Unit =
+    graft.sources.Tables.load(spark, sf, "documents")
+      .withColumn("doc_id", col("doc_id") + lit(offset))
+      .write.mode("append").parquet(s"$src/documents.parquet")
+
   test("reader isolation (r13 ask #2): a DataFrame planned over v1 keeps " +
     "reading while v2 builds and commits; versions older than the " +
     "previously-served one are pruned") {
@@ -125,41 +147,67 @@ class IndexStoreSpec extends AnyFunSuite {
     }
     val v1Reader = index() // plans v1's file list eagerly
     val n1 = v1Reader.count()
-    val idxDir = new java.io.File(s"${IndexStore.rootFor(src)}/lens_iso")
-    def versions() = Option(idxDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName).sorted.toSeq
-    assert(versions() == Seq("v1"))
     // source mutates → NEXT serve retrains into v2 while the v1 plan
     // is still held open
-    graft.sources.Tables.load(spark, sf, "documents")
-      .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      .write.mode("append").parquet(s"$src/documents.parquet")
+    appendCopy(src, 1000000L)
     val v2Reader = index()
-    assert(versions() == Seq("v1", "v2"), "previous version must survive the swap")
     // BOTH read successfully: the in-flight v1 reader was not broken
     assert(v1Reader.count() == n1, "v1 reader must still scan its planned files")
     assert(v2Reader.count() == 2 * n1)
-    // a third build prunes v1 (older than the previously-served v2)
-    graft.sources.Tables.load(spark, sf, "documents")
-      .withColumn("doc_id", col("doc_id") + lit(2000000L))
-      .write.mode("append").parquet(s"$src/documents.parquet")
+    // a third build retires v2; every reader within the retention
+    // bound keeps reading
+    appendCopy(src, 2000000L)
     val v3Reader = index()
-    assert(versions() == Seq("v2", "v3"), "v1 must be pruned once unreferenced")
-    assert(v2Reader.count() == 2 * n1 && v3Reader.count() == 3 * n1)
-
-    // purge-vs-rebuild race: a v4 dir whose pointer swap is pending
-    // (commitNewVersion's commit window) must SURVIVE the erasure
-    // purge — only versions OLDER than the served one are dead
-    val v4 = new java.io.File(idxDir, "v4")
-    java.nio.file.Files.createDirectories(v4.toPath)
-    java.nio.file.Files.writeString(
-      v4.toPath.resolve("part-fake.parquet"), "in-flight")
+    assert(v1Reader.count() == n1 && v2Reader.count() == 2 * n1 && v3Reader.count() == 3 * n1)
+    assert(IndexStoreSpec.unserved(src, "lens_iso").nonEmpty,
+      "retired versions must survive their rebuilds")
+    // the erasure purge deletes every file the served v3 does not name
     val dropped = IndexStore.pruneUnservedVersions(spark, src)
-    assert(dropped == 1, s"only v2 is prunable, got $dropped")
-    assert(versions() == Seq("v3", "v4"),
-      "the in-flight v4 build must survive the purge")
+    assert(dropped > 0, s"got $dropped")
+    assert(IndexStoreSpec.unserved(src, "lens_iso").isEmpty,
+      "only the served version may survive the purge")
     assert(v3Reader.count() == 3 * n1, "served version keeps serving")
+  }
+
+  test("purge-vs-rebuild race: an erasure purge waits for an in-flight " +
+    "build's commit and never destroys its files") {
+    val src = freshSource()
+    def index() = IndexStore.getOrBuild(spark, src, "lens_race", "documents") {
+      spark.read.parquet(s"$src/documents.parquet")
+        .select(col("doc_id"), length(col("text")).as("len"))
+    }
+    val n1 = index().count()
+    // v2's write job is in flight (blocked in its derivation) when the
+    // erasure purge runs — the purge must wait for the commit, not
+    // delete the build's files
+    appendCopy(src, 1000000L)
+    val blocking = udf { (t: String) =>
+      IndexStoreSpec.entered.countDown(); IndexStoreSpec.release.await(); t.length }
+    @volatile var v2Reader: org.apache.spark.sql.DataFrame = null
+    @volatile var dropped = -1
+    @volatile var failure: Option[Throwable] = None
+    def run(body: => Unit) = new Thread(() => try body catch { case e: Throwable => failure = Some(e) })
+    val builder = run {
+      v2Reader = IndexStore.getOrBuild(spark, src, "lens_race", "documents") {
+        spark.read.parquet(s"$src/documents.parquet")
+          .select(col("doc_id"), blocking(col("text")).as("len"))
+      }
+    }
+    builder.start()
+    assert(IndexStoreSpec.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+      "the v2 build never started")
+    val purger = run { dropped = IndexStore.pruneUnservedVersions(spark, src) }
+    purger.start()
+    purger.join(2000)
+    assert(purger.isAlive, "the purge must wait for the in-flight build's commit")
+    IndexStoreSpec.release.countDown()
+    builder.join(); purger.join()
+    failure.foreach(e => fail("build or purge failed", e))
+    assert(dropped > 0, s"got $dropped")
+    assert(IndexStoreSpec.unserved(src, "lens_race").isEmpty,
+      "only the served version may survive the purge")
+    assert(v2Reader.count() == 2 * n1, "the in-flight build commits whole")
+    assert(index().count() == 2 * n1, "served version keeps serving")
   }
 
   test("crash between delta write and manifest update, then ANOTHER " +
@@ -171,7 +219,7 @@ class IndexStoreSpec extends AnyFunSuite {
     }
     index().collect() // base build; manifest records {A}
     val manifest = java.nio.file.Paths.get(
-      s"${IndexStore.rootFor(src)}/lens_crash.manifest")
+      s"${IndexStore.rootFor(src)}/lens_crash/_graft_manifest")
     val preAppendManifest = java.nio.file.Files.readAllBytes(manifest)
     // append B → delta build lands and the manifest records it
     graft.sources.Tables.load(spark, sf, "documents")
@@ -201,5 +249,24 @@ class IndexStoreSpec extends AnyFunSuite {
     val builds = IndexStore.buildsPerformed
     assert(index().orderBy("doc_id").collect().toSeq == cold)
     assert(IndexStore.buildsPerformed == builds, "recovered index must serve warm")
+  }
+}
+
+object IndexStoreSpec {
+  /** The in-flight build's derivation signals `entered` and waits on
+    * `release` (tasks run in the test JVM). */
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
+
+  /** Data files under index `name` of `dataDir` that its manifest does
+    * not name as live. */
+  def unserved(dataDir: String, name: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get(s"${IndexStore.rootFor(dataDir)}/$name")
+    val live = new String(java.nio.file.Files.readAllBytes(dir.resolve("_graft_manifest")), "UTF-8")
+      .linesIterator.filter(_.startsWith("live\t")).map(_.split("\t", 4)(3)).toSet
+    java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .map(p => dir.relativize(p).toString).toSet -- live
   }
 }

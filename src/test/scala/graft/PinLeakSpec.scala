@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,5 +63,26 @@ class PinLeakSpec extends AnyFunSuite {
     CorpusDrift.recordScore(docs.limit(20), baseline, s"$work/alerts", 0L, 1000000L)
     assert(pinned() <= base, s"recordScore left ${pinned() - base} pins")
     assert(spark.read.parquet(s"$work/alerts").count() == 1L)
+  }
+
+  test("CorpusDrift.start holds no pin for the stream's life") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("pin_leak_drift").toString
+    Seq(("w1", 300000000L), ("w2", 300000000L), ("<other>", 400000000L))
+      .toDF("vterm", "p_nano").write.parquet(s"$work/baseline")
+    // earlier frames' unreachable pins go now, not while the stream runs
+    System.gc()
+    val base = pinned()
+    val src = MemoryStream[(Long, String)](spark)
+    val q = CorpusDrift.start(src.toDF().toDF("doc_id", "text"), s"$work/baseline",
+      s"$work/alerts", s"$work/ckpt", 1000000L)
+    try {
+      src.addData((1L, "w1 w2 w3"), (2L, "w4 w5"))
+      q.processAllAvailable()
+      src.addData((3L, "w6 w7 w8"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(pinned() <= base, s"the monitor left ${pinned() - base} pins")
+    assert(spark.read.parquet(s"$work/alerts").count() == 2L)
   }
 }

@@ -11,29 +11,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * file under `src/main/scala` may call `.localCheckpoint(` or
   * `.checkpoint(` in code (comment lines are skipped). */
 class PinLintSpec extends AnyFunSuite {
-  private val root = Paths.get("src/main/scala")
-
-  /** (file, line number, line) of each raw pin call outside Checkpointing. */
-  private def rawPins(): Seq[(Path, Int, String)] = {
-    val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Checkpointing.scala")
-      .toSeq
-    files.flatMap { f =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if {
-          val code = line.trim
-          !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*")) &&
-            (code.contains(".localCheckpoint(") || code.contains(".checkpoint("))
-        } => (f, i + 1, line.trim)
-      }
-    }
-  }
-
   test("no raw localCheckpoint or checkpoint call outside Checkpointing") {
-    assert(Files.isDirectory(root), s"run from the repository root ($root missing)")
-    val found = rawPins()
+    assert(Files.isDirectory(PinLintSpec.Root),
+      s"run from the repository root (${PinLintSpec.Root} missing)")
+    val found = PinLintSpec.codeLines("Checkpointing.scala")
+      .filter { case (_, _, l) => l.contains(".localCheckpoint(") || l.contains(".checkpoint(") }
     assert(found.isEmpty, found.map { case (f, n, l) => s"$f:$n: $l" }
       .mkString("raw pins outside Checkpointing:\n", "\n", ""))
   }
+}
+
+object PinLintSpec {
+  val Root: Path = Paths.get("src/main/scala")
+
+  /** (file, line number, trimmed line) of each code line under
+    * `src/main/scala` outside the file named `except`; comment lines
+    * are skipped. */
+  def codeLines(except: String): Seq[(Path, Int, String)] =
+    Files.walk(Root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != except)
+      .toSeq.flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if {
+            val code = line.trim
+            !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+          } => (f, i + 1, line.trim)
+        }
+      }
 }

@@ -125,4 +125,18 @@ class StatsStoreSpec extends AnyFunSuite {
     store.getOrAnalyze(mem, "mem", "k")
     assert(store.scansPerformed == 3) // 1 parquet + 2 mem
   }
+
+  test("a served read runs no Spark job: j12 and j13 build with 0 jobs") {
+    val (supp, li) = j12Sides()
+    val store = new StatsStore(spark, freshPath())
+    store.getOrAnalyze(supp, "supp", "sk")
+    val cold = new StatsStore(spark, store.path)
+    assert(JobCount.of(spark, "stats_served_read")(cold.get(supp, "supp", "sk")) == 0)
+    assert(cold.get(supp, "supp", "sk").isDefined && cold.scansPerformed == 0)
+    Seq("j12_advised_join", "j13_ordered_join").foreach { q =>
+      SparkEntry.queries(q)(spark, sf) // warm
+      val jobs = JobCount.of(spark, s"stats_warm_$q")(SparkEntry.queries(q)(spark, sf))
+      assert(jobs == 0, s"$q: building the warm query ran $jobs jobs")
+    }
+  }
 }

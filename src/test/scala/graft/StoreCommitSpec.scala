@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
+import graft.streaming.{AggMaintenance, CdcPipeline, ChangeEvent, KeyedParquetStore}
 
 /** The local filesystem under the `faulty` scheme, failing the
   * [[FaultyFs.failAt]]-th mutating call it sees (create, mkdirs,
@@ -62,9 +62,10 @@ class FaultyAbstractFs(uri: URI, conf: Configuration)
   }
 }
 
-/** The store's one commit point, the manifest: a write that fails at
-  * any filesystem step leaves its table readable as the version before
-  * or after it, and commits to one table are serialized. */
+/** The stores' one commit point, the manifest: a write that fails at
+  * any filesystem step leaves its table (or aggregate view) readable as
+  * the version before or after it, and commits to one table are
+  * serialized. */
 class StoreCommitSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
     val s = SparkTestSession.spark
@@ -100,43 +101,52 @@ class StoreCommitSpec extends AnyFunSuite {
       .filterNot(n => n == "_graft_manifest" || referenced(n)).toSet
   }
 
-  /** Run `op` on a copy of the store in `pre` once per mutating call it
-    * makes, failing that call: the store must read its pre- or
-    * post-state, converge when `op` is replayed, and the replay's
-    * retention pass must remove what the failed write left behind. */
-  private def crashEveryStep(name: String, pre: java.nio.file.Path,
-      op: KeyedParquetStore => Unit): Int = {
-    def storeAt(dir: java.nio.file.Path) = new KeyedParquetStore(s"faulty://$dir", nBuckets = 2)
-    val before = state(storeAt(pre))
+  /** Run `op` on a copy of the directory `pre` once per mutating call it
+    * makes, failing that call: `seen` must read its pre- or post-state,
+    * `converged` its post-state once `op` is replayed, and the replay's
+    * retention pass must remove what the failed write left behind in
+    * each of the `sets` (manifest directories under `pre`). */
+  private def crashEveryStep(name: String, pre: java.nio.file.Path, sets: Seq[String],
+      op: java.nio.file.Path => Unit, seen: java.nio.file.Path => Any,
+      converged: java.nio.file.Path => Any): Int = {
+    val before = seen(pre)
     val clean = Files.createTempDirectory(s"commit_${name}_clean")
     copyTree(pre, clean)
     FaultyFs.calls.set(0)
-    op(storeAt(clean))
+    op(clean)
     val steps = FaultyFs.calls.get()
-    val after = state(storeAt(clean))
+    val after = seen(clean)
+    val done = converged(clean)
     assert(steps > 3, s"$name: $steps steps")
     (1 to steps).foreach { n =>
       val dir = Files.createTempDirectory(s"commit_${name}_$n")
       copyTree(pre, dir)
-      val store = storeAt(dir)
       FaultyFs.calls.set(0)
       FaultyFs.failAt = n
-      val failed = try { op(store); false } catch { case _: Exception => true }
+      val failed = try { op(dir); false } catch { case _: Exception => true }
       finally FaultyFs.failAt = 0
-      val seen = state(store)
-      assert(seen == before || seen == after,
+      val got = seen(dir)
+      assert(got == before || got == after,
         s"$name failing step $n (failed: $failed): read neither the pre- nor the post-state")
       // age everything the failed write left, so the replay's
       // retention pass may take it
       val old = System.currentTimeMillis() - 2 * KeyedParquetStore.RetentionMs
-      Files.list(dir.resolve("t")).forEach(p => p.toFile.setLastModified(old))
-      op(store)
-      assert(state(store) == after, s"$name failing step $n: the replay did not converge")
-      assert(orphans(dir.resolve("t")).isEmpty,
-        s"$name failing step $n: orphans ${orphans(dir.resolve("t"))} survived the replay")
+      sets.foreach(t => Files.list(dir.resolve(t)).forEach(p => p.toFile.setLastModified(old)))
+      op(dir)
+      assert(converged(dir) == done, s"$name failing step $n: the replay did not converge")
+      sets.foreach(t => assert(orphans(dir.resolve(t)).isEmpty,
+        s"$name failing step $n: orphans ${orphans(dir.resolve(t))} survived the replay"))
     }
     steps
   }
+
+  private def storeAt(dir: java.nio.file.Path) = new KeyedParquetStore(s"faulty://$dir", nBuckets = 2)
+
+  /** [[crashEveryStep]] for a write to table `t` of the store in `pre`. */
+  private def crashEveryStoreStep(name: String, pre: java.nio.file.Path,
+      op: KeyedParquetStore => Unit): Int =
+    crashEveryStep(name, pre, Seq("t"), d => op(storeAt(d)), d => state(storeAt(d)),
+      d => state(storeAt(d)))
 
   private def seeded(soft: Boolean): java.nio.file.Path = {
     import spark.implicits._
@@ -161,18 +171,32 @@ class StoreCommitSpec extends AnyFunSuite {
     copyTree(soft, tomb)
     CdcPipeline.applyBatchSoft(Seq(ev(10, "D", 1), ev(11, "D", 6)).toDF(),
       new KeyedParquetStore(s"faulty://$tomb", nBuckets = 2), Map("t" -> schema), keys)
+    // an aggregate view over a store: a fold commits the view, then
+    // merges the batch into the store. The view must read the pre- or
+    // post-batch aggregate, and a replay of the batch id must fold it
+    // exactly once
+    val agg = Files.createTempDirectory("commit_pre_agg")
+    def mvAt(dir: java.nio.file.Path) =
+      new AggMaintenance(storeAt(dir.resolve("store")), s"faulty://${dir.resolve("mv")}", "t",
+        schema, "id", "bio", "v")
+    def view(dir: java.nio.file.Path) = mvAt(dir).readMv(spark).collect().toSet
+    mvAt(agg).applyBatch(Seq(ev(10, "I", 1), ev(11, "I", 2), ev(12, "I", 3, "c")).toDF(), 0L)
     val steps = Seq(
-      "snapshot" -> crashEveryStep("snapshot", plain, s => s.snapshot(spark, "t",
+      "snapshot" -> crashEveryStoreStep("snapshot", plain, s => s.snapshot(spark, "t",
         (100L until 106L).map(i => (i, i, s"s$i")).toDF("id", "v", "bio"), "id")),
-      "merge" -> crashEveryStep("merge", plain,
+      "merge" -> crashEveryStoreStep("merge", plain,
         CdcPipeline.applyBatch(steady.toDF(), _, Map("t" -> schema), keys)),
-      "toast" -> crashEveryStep("toast", plain,
+      "toast" -> crashEveryStoreStep("toast", plain,
         CdcPipeline.applyBatch(toast.toDF(), _, Map("t" -> schema), keys)),
-      "soft" -> crashEveryStep("soft", soft,
+      "soft" -> crashEveryStoreStep("soft", soft,
         CdcPipeline.applyBatchSoft(steady.toDF(), _, Map("t" -> schema), keys)),
-      "compact" -> crashEveryStep("compact", plain, s => s.compact(spark, "t", Seq("v"))),
-      "sweepAndCompact" -> crashEveryStep("sweepAndCompact", tomb,
-        s => CdcPipeline.sweepAndCompact(spark, s, "t", 100L)))
+      "compact" -> crashEveryStoreStep("compact", plain, s => s.compact(spark, "t", Seq("v"))),
+      "sweepAndCompact" -> crashEveryStoreStep("sweepAndCompact", tomb,
+        s => CdcPipeline.sweepAndCompact(spark, s, "t", 100L)),
+      "aggFold" -> crashEveryStep("aggFold", agg, Seq("store/t", "mv"),
+        d => mvAt(d).applyBatch(Seq(ev(20, "U", 1, "c"), ev(21, "D", 2), ev(22, "I", 4))
+          .toDF(), 1L),
+        view, d => (view(d), state(storeAt(d.resolve("store"))))))
     info(steps.map { case (n, k) => s"$n: $k steps" }.mkString(", "))
   }
 
