@@ -2,13 +2,23 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** File-based change-feed source — the production shape of S5: the
   * capture side (PeerDB's WAL decoder in the reference,
   * docker-compose.yml:143–153) lands change batches as JSON-lines
-  * files in a feed directory; the engine tails the directory with a
-  * file `readStream`.
+  * files in a flat feed directory; the engine tails the directory
+  * with [[stream]], Spark's JSON file source behind [[FeedSource]].
+  *
+  * Polling: the mirror polls every `spark.sql.streaming.pollingDelay`
+  * (10 ms). A poll that finds new files lists the feed in full, as
+  * the file source does. A poll of an idle feed costs one directory
+  * listing: the gate skips the file source's `InMemoryFileIndex`
+  * rebuild while no new name has landed since it last caught up. A
+  * subdirectory the file source reads, a file sink's
+  * `_spark_metadata` log, a glob path or a missing directory falls
+  * back to the full listing on every poll.
   *
   * Backpressure maps to the reference's batch pacing
   * (insert.ps1:11–13, 327–329): `maxFilesPerTrigger` bounds each
@@ -32,15 +42,20 @@ object ChangeFeed {
     StructField("beforeKey", LongType)))
 
   /** Open the feed directory as a streaming DataFrame of ChangeEvents.
+    * Offsets and the checkpoint's `sources/<n>` log are the file
+    * source's own, so a checkpoint written by a plain file
+    * `readStream` of the feed resumes here unchanged. An idle poll
+    * of a flat feed costs one `listStatus` ([[FeedSource]] states
+    * the rule).
     *
     * @param maxFilesPerTrigger micro-batch size bound (backpressure;
     *                           0 = unbounded)
     */
   def stream(spark: SparkSession, feedDir: String, maxFilesPerTrigger: Int = 0): DataFrame = {
-    val reader = spark.readStream.schema(schema)
+    val reader = spark.readStream.format(classOf[FeedSourceProvider].getName).schema(schema)
     val tuned = if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
-    tuned.json(feedDir)
+    tuned.load(feedDir)
   }
 
   /** Batch view of a feed directory (replay / backfill). */
@@ -213,17 +228,18 @@ object ChangeFeed {
   }
 
   /** Driver-side listing of the feed's DATA files, canonical leaf →
-    * bytes: everything except `_`-prefixed metadata (`_consumers/`,
-    * `_SUCCESS`) and hidden files. File-count-sized FS metadata walk,
-    * no data read — the denominator for
-    * [[CdcPipeline.consumerLag]]'s per-consumer retention drag. */
+    * bytes: the files the stream's file source reads, by Spark's own
+    * hidden-name rule ([[org.apache.spark.sql.graftbridge.Bridge.hiddenName]]:
+    * no `_consumers/`, `_SUCCESS`, dot files or in-flight `._COPYING_`
+    * uploads). File-count-sized FS metadata walk, no data read — the
+    * denominator for [[CdcPipeline.consumerLag]]'s per-consumer
+    * retention drag. */
   def dataFiles(spark: SparkSession, feedDir: String): Map[String, Long] = {
     val dir = new org.apache.hadoop.fs.Path(feedDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+      .filter(s => s.isFile && !Bridge.hiddenName(s.getPath.getName))
       .map(s => canonicalLeaf(s.getPath.toString) -> s.getLen).toMap
   }
 

@@ -42,6 +42,13 @@ object Bridge {
   def free(df: org.apache.spark.sql.DataFrame): Unit =
     persistedRdd(df).foreach(r => r.sparkContext.unpersistRDD(r.id, blocking = false))
 
+  /** Whether Spark's file sources skip a file or directory by its
+    * name: `_`- and `.`-prefixed names, except `_metadata*`,
+    * `_common_metadata*` and `_k=v` partition directories, and
+    * in-flight `._COPYING_` uploads. */
+  def hiddenName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** The schema `spark.read.parquet(path)` would infer, read on the
     * driver from the one footer Spark's inference reads (a summary
     * file first, else the first data file by path), so a load runs no
@@ -65,8 +72,7 @@ object Bridge {
     val st = try fs.getFileStatus(p) catch { case _: java.io.FileNotFoundException => return None }
     val leaves =
       if (!st.isDirectory) Seq(st)
-      else fs.listStatus(p).toSeq.filterNot(f =>
-        org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+      else fs.listStatus(p).toSeq.filterNot(f => hiddenName(f.getPath.getName))
     if (leaves.exists(_.isDirectory)) return None
     val sorted = leaves.sortBy(_.getPath.toString)
     val summaries = Seq("_common_metadata", "_metadata")

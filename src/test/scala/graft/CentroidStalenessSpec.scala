@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -22,7 +20,7 @@ import graft.streaming.IndexedIngest
   * nearest-neighbor search landing in the true (brute-force) anchor
   * region — until growth crosses the threshold and ONE retrain
   * happens. */
-class CentroidStalenessSpec extends AnyFunSuite {
+class CentroidStalenessSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
 
   private val dim = 64
@@ -40,7 +38,7 @@ class CentroidStalenessSpec extends AnyFunSuite {
   test("ingest composition: N micro-batches = N per-row deltas but <=1 " +
     "centroid retrain; stale centroids still serve correct search") {
     import spark.implicits._
-    val dataDir = Files.createTempDirectory("graft_cent_stale").toString
+    val dataDir = indexedTempDir("graft_cent_stale")
     val src = MemoryStream[(Long, Array[Long])](spark)
     val docs = src.toDF().toDF("vec_id", "qv")
     // per-row index: squared norm (a row-decomposable derivation)
@@ -141,7 +139,7 @@ class CentroidStalenessSpec extends AnyFunSuite {
   test("mutation of trained files always retrains — stale serving is " +
     "append-only territory") {
     import spark.implicits._
-    val dataDir = Files.createTempDirectory("graft_cent_mutate").toString
+    val dataDir = indexedTempDir("graft_cent_mutate")
     rows(0 until 256).toDF("vec_id", "qv")
       .coalesce(1).write.parquet(s"$dataDir/embeddings.parquet")
     def corpus(): DataFrame = spark.read.parquet(s"$dataDir/embeddings.parquet")

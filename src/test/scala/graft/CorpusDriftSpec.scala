@@ -13,7 +13,7 @@ import graft.streaming.CorpusDrift
   * test: the threshold sits between the corpus's self-TV (floor noise
   * only) and a planted out-of-vocabulary batch's TV, both measured
   * through the SAME shared scoring kernel the monitor runs. */
-class CorpusDriftSpec extends AnyFunSuite {
+class CorpusDriftSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
 
   test("in-distribution batch stays quiet, planted drift batch alerts; " +
@@ -89,7 +89,7 @@ class CorpusDriftSpec extends AnyFunSuite {
   test("baselineAuto: trained baseline served under the growth budget " +
     "(stale serve, zero retrains), retrained past it") {
     import graft.operators.IndexStore
-    val work = Files.createTempDirectory("graft_drift_stale").toString
+    val work = indexedTempDir("graft_drift_stale")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.parquet(s"$work/documents.parquet")
 

@@ -13,12 +13,12 @@ import graft.streaming.{CdcPipeline, KeyedParquetStore}
   * [[Erasure.forget]], neither the table nor any persisted derived
   * artifact (here the shared simhash64 signature sidecar behind
   * d6/d13) may keep serving the tombstoned rows. */
-class ErasureSpec extends AnyFunSuite {
+class ErasureSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
 
   test("corpus forget: residue 0; the warm signature sidecar is forced " +
     "through a FULL rebuild and serves no forgotten id") {
-    val work = Files.createTempDirectory("graft_erasure").toString
+    val work = indexedTempDir("graft_erasure")
     Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
       Paths.get(s"$work/documents.parquet"))
     val q = DedupQueries.queries("d13_simhash64_lookup")

@@ -12,12 +12,12 @@ import graft.operators.IndexStore
   * DELTA build over only the new files (the O(batch)-per-ingest path
   * that keeps index maintenance off the corpus-rescan cost curve).
   */
-class IndexStoreSpec extends AnyFunSuite {
+class IndexStoreSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def freshSource(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_src").toString
+    val dir = indexedTempDir("graft_idx_src")
     graft.sources.Tables.load(spark, sf, "documents")
       .write.mode("append").parquet(s"$dir/documents.parquet")
     dir

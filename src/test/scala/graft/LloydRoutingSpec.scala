@@ -20,7 +20,7 @@ import graft.operators.IvfIndex
   *    can never beat the flat minimum, and the router must stay
   *    within the winning coarse group (structural containment).
   */
-class LloydRoutingSpec extends AnyFunSuite {
+class LloydRoutingSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
 
   /** 4 far-apart anchors; ids 0..7 (the first-k init) ALL near anchor
@@ -96,7 +96,7 @@ class LloydRoutingSpec extends AnyFunSuite {
   test("servedCentroids: trains once per corpus state, serves row-identical " +
     "centroids after") {
     import graft.operators.IndexStore
-    val dir = java.nio.file.Files.createTempDirectory("graft_cents_serve").toString
+    val dir = indexedTempDir("graft_cents_serve")
     // table name doubles as the fingerprinted source
     plantedSkew().select(col("vec_id"),
         col("qv").as("embedding")) // schema shape irrelevant to the store

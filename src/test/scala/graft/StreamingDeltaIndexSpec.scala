@@ -16,7 +16,7 @@ import graft.streaming.IndexedIngest
   * at-least-once window (sink work done, checkpoint commit lost) must
   * replay to EXACTLY the same corpus and index — no duplicated rows,
   * no wasted rebuild. */
-class StreamingDeltaIndexSpec extends AnyFunSuite {
+class StreamingDeltaIndexSpec extends AnyFunSuite with IndexRoots {
   private lazy val spark = SparkTestSession.spark
 
   private def lens(df: DataFrame): DataFrame =
@@ -25,7 +25,7 @@ class StreamingDeltaIndexSpec extends AnyFunSuite {
   test("each micro-batch lands once and pays one DELTA build; index " +
     "always equals a cold re-derivation of the corpus") {
     import spark.implicits._
-    val dataDir = Files.createTempDirectory("graft_ingest_idx").toString
+    val dataDir = indexedTempDir("graft_ingest_idx")
     val src = MemoryStream[(Long, String)](spark)
     val docs = src.toDF().toDF("doc_id", "text")
     val builds0 = IndexStore.buildsPerformed
@@ -55,7 +55,7 @@ class StreamingDeltaIndexSpec extends AnyFunSuite {
   test("zero-partition micro-batch: lands nothing, still refreshes the " +
     "index, never kills the stream (r12 advice); stale scratch swept") {
     import org.apache.spark.sql.types._
-    val dataDir = Files.createTempDirectory("graft_ingest_empty").toString
+    val dataDir = indexedTempDir("graft_ingest_empty")
     // seed one real batch so the index exists
     import spark.implicits._
     IndexedIngest.landAndIndex(Seq((1L, "alpha")).toDF("doc_id", "text"),
@@ -95,7 +95,7 @@ class StreamingDeltaIndexSpec extends AnyFunSuite {
     "batch ids reset to 0 but its files never collide with the old " +
     "incarnation's — rows arriving between drop and restart are kept") {
     import spark.implicits._
-    val dataDir = Files.createTempDirectory("graft_ingest_incarn").toString
+    val dataDir = indexedTempDir("graft_ingest_incarn")
     val ckpt = s"$dataDir/ckpt"
     // incarnation 1: two batches (ids 0, 1)
     val src1 = MemoryStream[(Long, String)](spark)
@@ -135,7 +135,7 @@ class StreamingDeltaIndexSpec extends AnyFunSuite {
   test("crash after sink work, before checkpoint commit: the replayed " +
     "batch re-lands nothing, the index serves warm, totals exact") {
     import spark.implicits._
-    val dataDir = Files.createTempDirectory("graft_ingest_idx_crash").toString
+    val dataDir = indexedTempDir("graft_ingest_idx_crash")
     val src = MemoryStream[(Long, String)](spark)
     val docs = src.toDF().toDF("doc_id", "text")
     val ckpt = s"$dataDir/ckpt"
