@@ -163,7 +163,7 @@ object CdcQueries {
     // snapshot is each table's converged state below LSN 1000, the
     // retained stream is [1000, ∞), and the cut is 7000. This query
     // calls the ENGINE's [[graft.streaming.CdcPipeline.asOf]] — the
-    // same lastImagePerKey the apply path uses — so the oracle pins
+    // same apply rule the store's merge runs — so the oracle pins
     // the reconstruction semantics, not a parallel spelling. The
     // per-table aggregate (rows, cents, max lsn applied) hash-proves
     // both tables were cut at the same position.
@@ -204,8 +204,8 @@ object CdcQueries {
     // user_id + 100) — the old-tuple event Postgres logical decoding
     // emits so a PK change replicates as delete(old)+upsert(new)
     // (volumes/postgresql.conf:3). This query runs the ENGINE's
-    // normalizeKeyChanges expansion through the same lastImagePerKey
-    // the apply path uses; the oracle spells the expansion as an
+    // normalizeKeyChanges expansion through lastImagePerKey, the apply
+    // rule the store's merge runs; the oracle spells the expansion as an
     // explicit UNION ALL of the delete half. Moved-to keys may collide
     // with other users' native keys (user_id+100 overlaps the key
     // domain) — deliberately: both sides resolve the collision by the
@@ -242,13 +242,14 @@ object CdcQueries {
     // feed reinterpreted: every non-error event is an UPDATE of a
     // string `payload` column, but events with event_id ≡ 3 (mod 7)
     // arrive with payload UNCHANGED — the marker ships instead of the
-    // value. This query runs the ENGINE's lastImageResolvingToast
-    // (the same per-key aggregate applyBatch's gated path uses): each
+    // value. This query runs the ENGINE's lastImagePerKey — the apply
+    // rule applyBatch's merge runs, here with no stored rows: each
     // key's winner takes its payload from the key's last UNMARKED
-    // event; a key whose every event was marked keeps the marker (the
-    // store-fallback input — pinned in the hash so the contract is
-    // oracle-visible). The oracle spells the inheritance as an
-    // explicit arg-max-with-FILTER. Converged non-deleted rows.
+    // event; a key whose every event was marked keeps the marker (with
+    // stored rows the rule would inherit from them — pinned in the hash
+    // so the contract is oracle-visible). The oracle spells the
+    // inheritance as an explicit arg-max-with-FILTER. Converged
+    // non-deleted rows.
     "cdc_toast" -> { (s, d) =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       import graft.streaming.CdcPipeline
@@ -268,7 +269,7 @@ object CdcQueries {
           when(marked, lit(CdcPipeline.UnchangedToast))
             .otherwise(concat(lit("v"),
               expr("CAST(round(value * 100) AS BIGINT)"))).as("payload")))).as("after"))
-      CdcPipeline.lastImageResolvingToast(env, rowSchema, "user_id")
+      CdcPipeline.lastImagePerKey(env, rowSchema, "user_id", toast = true)
         .filter(col("op") =!= "D").drop("op")
         .orderBy("user_id")
     },
@@ -277,7 +278,8 @@ object CdcQueries {
     // DELETE marks the warehouse row and stamps the sync position
     // instead of removing it — audit trails and reversible reads).
     // The events feed reinterpreted as usual (error = delete); this
-    // query runs the ENGINE's softImagePerKey: EVERY key surfaces,
+    // query runs the ENGINE's soft lastImagePerKey (applyBatchSoft's
+    // rule, with no stored rows): EVERY key surfaces,
     // carrying the last non-delete image it died with (cents from the
     // last non-error event — null when the key only ever errored, the
     // "deleted before first sync" tombstone), an is_deleted flag from
@@ -297,7 +299,7 @@ object CdcQueries {
         when(col("event_type") =!= "error", to_json(struct(
           col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents")))).as("after"))
-      CdcPipeline.softImagePerKey(env, rowSchema, "user_id")
+      CdcPipeline.lastImagePerKey(env, rowSchema, "user_id", soft = true)
         .select(col("user_id"), col("cents"),
           col(CdcPipeline.SoftDeleteCol).as("is_deleted"),
           col(CdcPipeline.SyncedLsnCol).as("synced_lsn"))
@@ -459,8 +461,8 @@ object CdcQueries {
          SELECT key AS user_id, lsn AS event_id, cents
          FROM last WHERE op <> 'D' ORDER BY user_id""",
     // the explicit inherit-last-unmarked-value spelling — the engine's
-    // lastImageResolvingToast must converge to exactly this state,
-    // including keys where the marker survives (store-fallback input)
+    // lastImagePerKey must converge to exactly this state, including
+    // keys where the marker survives (nothing to inherit from)
     "cdc_toast" ->
       """WITH env AS (
            SELECT event_id AS lsn,
@@ -488,7 +490,7 @@ object CdcQueries {
          WHERE w.op <> 'D'
          ORDER BY user_id""",
     // winner op decides the flag; the retained image is the last
-    // non-delete event's — exactly softImagePerKey's aggregate
+    // non-delete event's — exactly the soft lastImagePerKey's carry
     "cdc_soft_delete" ->
       """WITH env AS (
            SELECT event_id AS lsn,

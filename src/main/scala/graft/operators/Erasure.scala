@@ -557,14 +557,12 @@ object Erasure {
   }
 
   /** Erase keys from a [[graft.streaming.KeyedParquetStore]] table by
-    * applying delete tombstones THROUGH the replication merge (the
-    * same last-image + idempotent by-PK path a mirror's batches take),
-    * WITHOUT touching the applied-LSN watermark: the watermark means
-    * "every feed position ≤ this was applied", and synthetic
-    * out-of-band LSNs above it would let rotation prune feed files the
-    * store never read (eroding exactly the safety margin the
-    * watermark exists for). The tombstones' LSNs only order the batch
-    * internally.
+    * merging one delete per distinct key, the key cast to its declared
+    * type — the idempotent by-PK merge a mirror's batches take, as
+    * [[graft.streaming.CdcPipeline.sweepSoftDeleted]] does — WITHOUT
+    * touching the applied-LSN watermark: the watermark means "every
+    * feed position ≤ this was applied", and an out-of-band erasure has
+    * no feed position.
     *
     * Contract for LIVE-replicated tables: publish `op='D'` events
     * through the FEED instead (one erasure, every mirror converges) —
@@ -585,16 +583,8 @@ object Erasure {
       keyCol: String, rowSchema: StructType, ids: Seq[Long]): Unit = {
     require(ids.nonEmpty, "empty tombstone set")
     import spark.implicits._
-    val batch = ids.zipWithIndex
-      .map { case (id, i) => (i + 1L, id) }
-      .toDF("lsn", "key")
-      .select(col("lsn"),
-        to_timestamp(lit("2000-01-01 00:00:00")).as("commitTs"),
-        lit("D").as("op"), lit(table).as("table"), col("key"),
-        lit(null).cast("string").as("after"))
-    val changes = graft.streaming.CdcPipeline
-      .lastImagePerKey(batch, rowSchema, keyCol)
-    store.merge(spark, table, changes, keyCol)
+    store.merge(spark, table, ids.distinct.toDF(keyCol).select(
+      col(keyCol).cast(rowSchema(keyCol).dataType).as(keyCol), lit("D").as("op")), keyCol)
     store.purgeSuperseded(spark, table)
   }
 }

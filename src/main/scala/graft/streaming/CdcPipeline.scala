@@ -3,10 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructType}
 
 import graft.operators.Checkpointing
 
@@ -78,6 +77,13 @@ object CdcPipeline {
     if (!events.columns.contains("beforeKey")) lit(false)
     else coalesce(col("op") === "U" && col("beforeKey").isNotNull &&
       col("beforeKey") =!= col("key"), lit(false))
+
+  /** A key move whose after-image carries an unchanged-TOAST marker, as
+    * (old key, new key) text — null for every other event. */
+  private def markedMove(events: DataFrame): Column =
+    if (!events.columns.contains("beforeKey")) lit(null).cast("struct<from:string,to:string>")
+    else when(keyMove(events) && marked, struct(col("beforeKey").cast("string").as("from"),
+      col("key").cast("string").as("to")))
 
   /** Bulk snapshot of source tables into the target store (step 1). */
   def snapshot(
@@ -193,33 +199,109 @@ object CdcPipeline {
       cleanupDelayMs.toString)
   }
 
-  /** Last-write-wins dedup + after-image parse for one table's slice
-    * of a micro-batch: max(lsn) per key wins; output is `op` plus the
-    * parsed row columns — one row per key, the shape a sink that
-    * cannot rank by LSN itself consumes. The window partitions by key,
-    * so the shuffle is on the merge key. PK-changing updates are
-    * expanded FIRST ([[normalizeKeyChanges]]), so every consumer —
-    * [[asOf]], [[JdbcMirror.applyEnvelopeBatch]], [[AggMaintenance]] —
-    * applies a key-change as delete(old)+upsert(new) with no
-    * caller-side handling. [[applyBatch]] skips this dedup: the
-    * store's merge ranks the parsed events by LSN in its own shuffle. */
-  def lastImagePerKey(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    parseImages(normalizeKeyChanges(events)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy("key").orderBy(col("lsn").desc)))
-      .filter(col("_rn") === 1), schema, keyCol)
+  /** Last-write-wins image per key of one table's events, resolved by
+    * the apply rule ([[ApplyRule.resolve]]) with no target rows: `op`
+    * plus the parsed row columns, one row per key, delete winners
+    * included — the shape a sink that cannot rank by LSN itself
+    * consumes. PK-changing updates are expanded FIRST
+    * ([[normalizeKeyChanges]]), so every consumer applies a key-change
+    * as delete(old)+upsert(new) with no caller-side handling. With
+    * `toast`, string columns carry ([[UnchangedToast]]): a marked winner
+    * takes the key's last unmarked value, and a column marked in every
+    * event of the key keeps the marker; without it the winner's image is
+    * taken as is. [[applyBatch]] does not call it: the store's merge
+    * runs the same rule over its stored rows.
+    *
+    * `soft`: the soft-delete image ([[applyBatchSoft]]'s rule) — every
+    * data column carries the key's last non-delete image (a deleted key
+    * keeps the data it died with; a key the events only delete keeps
+    * nulls), plus [[SoftDeleteCol]] (the winner is a delete) and
+    * [[SyncedLsnCol]] (the winner's LSN). */
+  def lastImagePerKey(events: DataFrame, schema: StructType, keyCol: String,
+      soft: Boolean = false, toast: Boolean = false): DataFrame =
+    resolve(events, schema, keyCol, None, Nil, soft = soft, carry = soft || toast)
 
-  /** `op`, then `keep`, then the row columns parsed from each event's
-    * after-image, the key cast to its declared type. */
-  private def parseImages(events: DataFrame, schema: StructType, keyCol: String,
-      keep: Column*): DataFrame =
-    events
+  /** One table's events resolved by the apply rule over `base`, the
+    * target's current rows: the parsed events ranked by LSN, string
+    * columns carried when `carry` (every data column in `soft` mode),
+    * and the old keys of the marked key `moves` ([[Move]]) re-keyed
+    * under the new ones. `where` names the target in the rule's failure
+    * message. */
+  private[streaming] def resolve(events: DataFrame, schema: StructType, keyCol: String,
+      base: Option[DataFrame], moves: Seq[Move], soft: Boolean = false, carry: Boolean = true,
+      where: String = ""): DataFrame =
+    ApplyRule.resolve(ranked(events, schema, keyCol, soft), col(LsnRank), keyCol,
+      if (soft) schema.add(SoftDeleteCol, BooleanType).add(SyncedLsnCol, LongType) else schema,
+      base, if (carry) carried(schema, keyCol, soft) else Nil,
+      movedKeys(events.sparkSession, moves, schema(keyCol).dataType), where = where)
+
+  /** `op`, the LSN as [[LsnRank]], then the row columns parsed from each
+    * event's after-image, the key cast to its declared type; key moves
+    * are expanded unless `expand` is false (a slice with none), the new
+    * key's row of a marked one flagged [[ApplyRule.Born]]. `soft` adds
+    * [[SoftDeleteCol]] and [[SyncedLsnCol]] from the event. */
+  private def ranked(events: DataFrame, schema: StructType, keyCol: String, soft: Boolean,
+      expand: Boolean = true): DataFrame =
+    (if (expand) normalizeKeyChanges(events.withColumn("_mm", markedMove(events).isNotNull))
+    else events.withColumn("_mm", lit(false)))
       .withColumn("_row", from_json(col("after"), schema))
-      .select((col("op") +: keep) ++ schema.fieldNames.toSeq.map { f =>
+      .select((col("op") +: col("lsn").as(LsnRank) +: schema.fieldNames.toSeq.map { f =>
         if (f == keyCol) col("key").cast(schema(f).dataType).as(f)
         else col("_row").getField(f).as(f)
-      }: _*)
+      }) ++ (if (soft) Seq((col("op") === "D").as(SoftDeleteCol), col("lsn").as(SyncedLsnCol))
+        else Nil) :+ (col("_mm") && col("op") =!= "D").as(ApplyRule.Born): _*)
+
+  // the apply rule's rank column: the event's LSN
+  private val LsnRank = "_lsn"
+
+  /** The columns the rule carries: every data column in soft mode, else
+    * the ones a TOAST marker may stand in for. */
+  private def carried(schema: StructType, keyCol: String, soft: Boolean): Seq[String] =
+    schema.fields.toSeq.collect {
+      case f if f.name != keyCol && (soft || f.dataType == StringType) => f.name
+    }
+
+  /** A key-moving UPDATE that carries an unchanged-TOAST marker: old
+    * key, new key (as text) and LSN. */
+  private[streaming] final case class Move(from: String, to: String, at: Long)
+
+  /** `moves` as the rule's `movedKeys`: for each new key, the life its
+    * latest marked move came from. That is the old key's rows from its
+    * own latest marked move in below the move (all of them, its stored
+    * row included, when there is none), and, through that earlier move,
+    * its old key's likewise — so a chain of marked moves inherits from
+    * the life it started in, and a key that was moved onto, moved away
+    * and moved onto again inherits from its latest life only. A key
+    * moved away again after its latest move in needs no edges: its
+    * winner is a delete or an image that holds its values. Each step of
+    * a chain reads only the moves into one key. Keys travel as
+    * `keyType`; None without edges. */
+  private def movedKeys(spark: SparkSession, moves: Seq[Move],
+      keyType: DataType): Option[DataFrame] = {
+    val into = moves.groupBy(_.to).map { case (k, ms) => k -> ms.sortBy(_.at) }
+    val outAt = moves.groupMapReduce(_.from)(_.at)(_ max _)
+    def latestInto(k: String, below: Long): Option[Move] =
+      into.get(k).flatMap(_.takeWhile(_.at < below).lastOption)
+    val edges = into.values.map(_.last).filterNot(m => outAt.get(m.to).exists(_ > m.at))
+      .flatMap { last =>
+        Iterator.unfold(Option(last))(_.map { m =>
+          val prev = latestInto(m.from, m.at)
+          ((m.from, last.to, prev.map(_.at), m.at), prev)
+        })
+      }.toSeq
+    Option.when(edges.nonEmpty) {
+      import spark.implicits._
+      edges.toDF("_from", "_to", "_lo", "_hi").select(col("_from").cast(keyType),
+        col("_to").cast(keyType), col("_lo"), col("_hi"))
+    }
+  }
+
+  /** The marked key moves of `events`, collected: one job, bounded by
+    * their count. */
+  private def markedMoves(events: DataFrame): Seq[Move] =
+    events.select(markedMove(events).as("m"), col("lsn")).filter(col("m").isNotNull)
+      .collect().map(r => Move(r.getStruct(0).getString(0), r.getStruct(0).getString(1),
+        r.getLong(1))).toSeq
 
   /** Postgres "unchanged TOAST" placeholder. Logical decoding does NOT
     * re-emit a large out-of-line (TOASTed) column an UPDATE left
@@ -232,8 +314,8 @@ object CdcPipeline {
     * wide-text column on its first partial UPDATE, so the apply path
     * carries the previous value into a marked column: the key's
     * highest-ranked unmarked value in the batch, the target's stored
-    * row ranked lowest, in the store's one merge shuffle
-    * ([[KeyedParquetStore.merge]] `carry`). Scope: StringType columns —
+    * row ranked lowest ([[ApplyRule.resolve]] `carry`, in the store's
+    * one merge shuffle). Scope: StringType columns —
     * TOAST applies to varlena types, which this engine's feed models
     * as JSON strings.
     *
@@ -250,161 +332,6 @@ object CdcPipeline {
     * distinction doesn't exist at that layer. */
   val UnchangedToast = "__graft_unchanged_toast__"
 
-  private def toastableCols(schema: StructType, keyCol: String): Seq[String] =
-    schema.fields.toSeq.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType &&
-        f.name != keyCol => f.name
-    }
-
-  /** [[lastImagePerKey]] for feeds that may carry [[UnchangedToast]]
-    * markers: per key, the max-LSN winner's marked columns resolve to
-    * that key's last UNMARKED value in the slice (by LSN, deletes
-    * excluded); a column marked in EVERY event of the slice keeps the
-    * marker, so a caller with a target ([[asOf]],
-    * [[JdbcMirror.applyEnvelopeBatch]]) can finish the resolution
-    * against its current row. Output shape matches
-    * [[lastImagePerKey]] exactly.
-    *
-    * One hash aggregate on the key — the same single shuffle as the
-    * window dedup, but with map-side partial aggregation (the window
-    * variant sorts whole partitions; `max(struct(lsn,…))` combines
-    * early), so the marked path is no worse at scale than the plain
-    * one. LSN uniqueness (WAL total order) makes every `max` a pure
-    * last-by-lsn — op/image never act as tie-breakers.
-    *
-    * Key-change interplay: events run [[normalizeKeyChanges]] FIRST,
-    * and in-batch inheritance is keyed on the POST-change key; the old
-    * key's events ranked below a PK-changing UPDATE join the new key's
-    * group (one join of the events with their moves, on frames with a
-    * `beforeKey` column), so the move inherits the old key's last
-    * in-batch value, and the OLD key's stored image is the fallback
-    * (`_resolveKey` = beforeKey). Inheritance also ignores an intervening
-    * in-batch delete: Postgres cannot emit U-after-D for one key inside
-    * one WAL span without the I that re-creates it carrying a full
-    * image, so the case is unreachable from a real decoder; the
-    * behavior is defined (inherit across the delete) for robustness,
-    * not fidelity. */
-  def lastImageResolvingToast(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame =
-    lastImageToastWithResolveKey(events, schema, keyCol).drop("_resolveKey")
-
-  /** [[lastImageResolvingToast]] plus a `_resolveKey` column — the key
-    * under which the row's PREVIOUS image lives in the target (the
-    * pre-change key for a PK-changing UPDATE) — so store-backed callers
-    * can finish unresolved markers with one join. */
-  private[streaming] def lastImageToastWithResolveKey(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame = {
-    val withRk =
-      if (events.columns.contains("beforeKey"))
-        events.withColumn("_resolveKey", coalesce(col("beforeKey"), col("key")))
-      else events.withColumn("_resolveKey", col("key"))
-    // normalizeKeyChanges carries non-envelope columns through both
-    // halves of the expansion, so _resolveKey survives it
-    val expanded = normalizeKeyChanges(withRk)
-    // a move's new key also sees its old key's events below the move;
-    // their lower LSNs never win, so they only feed the carried values
-    val parsed = (if (!events.columns.contains("beforeKey")) expanded
-      else expanded.unionByName(expanded
-        .join(events.filter(keyMove(events)).select(col("beforeKey").as("_from"),
-          col("key").as("_to"), col("lsn").as("_at")),
-          col("key") === col("_from") && col("lsn") < col("_at"))
-        .withColumn("key", col("_to")).drop("_from", "_to", "_at")))
-      .withColumn("_row", from_json(col("after"), schema))
-    val tcols = toastableCols(schema, keyCol)
-    val winner = max(struct(col("lsn").as("l"), col("op").as("o"),
-      col("_row").as("r"), col("_resolveKey").as("rk"))).as("_w")
-    val carried = tcols.map { c =>
-      val v = col("_row").getField(c)
-      // carry the last NON-MARKER image INCLUDING explicit NULLs
-      // (v.isNull || v =!= marker — a bare =!= is null-valued on null
-      // input and `when` would skip it): the store-fallback path
-      // ([[resolveToastAgainstCurrent]]) treats a stored NULL as a
-      // legitimate previous image, so in-batch inheritance must agree —
-      // otherwise U(col=NULL) then U(marker) converges differently
-      // depending on whether the two events share a micro-batch.
-      // Presence is the STRUCT's own nullability (non-null iff any
-      // qualifying event existed), read downstream via isNotNull.
-      max(when(col("op") =!= "D" && (v.isNull || v =!= UnchangedToast),
-        struct(col("lsn").as("l"), v.as("v")))).as(s"_c_$c")
-    }
-    parsed.groupBy(col("key")).agg(winner, carried: _*)
-      .select(col("_w.o").as("op") +: col("_w.rk").as("_resolveKey") +:
-        schema.fieldNames.toSeq.map { f =>
-          val w = col("_w.r").getField(f)
-          if (f == keyCol) col("key").cast(schema(f).dataType).as(f)
-          else if (tcols.contains(f))
-            // presence-flagged inheritance: a carried struct exists →
-            // take its value EVEN IF NULL (agrees with the store
-            // fallback's stored-NULL semantics); no struct → keep the
-            // marker for the store-backed resolution
-            when(w === UnchangedToast,
-              when(col(s"_c_$f").isNotNull, col(s"_c_$f").getField("v"))
-                .otherwise(lit(UnchangedToast)))
-              .otherwise(w).as(f)
-          else w.as(f)
-        }: _*)
-  }
-
-  /** Finish TOAST-marker resolution against the target's current rows:
-    * markers that survived in-batch inheritance (every event of the
-    * batch left the column untouched — the steady state for a rarely-
-    * rewritten large column) take the stored row's value, looked up
-    * under `_resolveKey` first (the pre-change key of a PK-changing
-    * UPDATE) and the row's own key second (where an at-least-once
-    * replay finds the value the FIRST apply already moved). A marker
-    * neither lookup can satisfy fails loudly: Postgres only omits a
-    * TOAST value for a row that exists, so reaching that state means
-    * the feed and the target have diverged — upserting the marker (or
-    * null) would be silent corruption. Callers: [[asOf]] (against the
-    * snapshot image) and [[JdbcMirror.applyEnvelopeBatch]] (against
-    * the target table, on slices with markers). The parquet store
-    * applies the same rule, in the same lookup order, inside its merge
-    * ([[KeyedParquetStore.merge]] `carry` and `movedKeys`). */
-  private[streaming] def resolveToastAgainstCurrent(
-      img: DataFrame, current: DataFrame, schema: StructType,
-      keyCol: String): DataFrame = {
-    val tcols = toastableCols(schema, keyCol)
-    if (tcols.isEmpty) return img.drop("_resolveKey")
-    val marked = tcols.map(c => col(c) === UnchangedToast)
-      .reduce(_ || _)
-    val markedSafe = coalesce(marked, lit(false))
-    val clean = img.filter(!markedSafe).drop("_resolveKey")
-    val pending = img.filter(markedSafe)
-    // two lookups, old key first: a PK-changing UPDATE inherits from
-    // its beforeKey's row, but on an at-least-once REPLAY that row is
-    // already deleted and the resolved value lives under the NEW key
-    // (the first apply put it there) — without the second lookup a
-    // replayed move+marker batch would fail loudly instead of
-    // reconverging. For the common no-move marker `_resolveKey == key`
-    // and the two lookups coincide.
-    val curOld = current.select(
-      col(keyCol).as("_old_key") +: tcols.map(c => col(c).as(s"_old_$c")): _*)
-    val curNew = current.select(
-      col(keyCol).as("_new_key") +: tcols.map(c => col(c).as(s"_new_$c")): _*)
-    val resolved = pending
-      .join(curOld, pending("_resolveKey") === curOld("_old_key"), "left")
-      .join(curNew, col(keyCol) === curNew("_new_key"), "left")
-      .select(col("op") +: schema.fieldNames.toSeq.map { f =>
-        if (tcols.contains(f))
-          // neither lookup matched = the marker has nothing to inherit
-          // (fresh key, or the row was erased underneath the feed):
-          // fail loudly rather than upsert a hole over real data. A
-          // matched row whose column is legitimately NULL inherits the
-          // null — that IS the previous image.
-          when(col(f) === UnchangedToast,
-            when(col("_old_key").isNotNull, col(s"_old_$f"))
-              .when(col("_new_key").isNotNull, col(s"_new_$f"))
-              .otherwise(raise_error(lit(s"unchanged-TOAST column '$f' " +
-                "has no stored image to inherit from - feed and target " +
-                "have diverged; re-sync the table " +
-                "(KeyedParquetStore.resync)")).cast(
-                org.apache.spark.sql.types.StringType)))
-            .otherwise(col(f)).as(f)
-        else col(f)
-      }: _*)
-    clean.unionByName(resolved)
-  }
-
   /** Soft-delete metadata columns — the PeerDB-documented target shape
     * (public PeerDB soft-delete option: deletes MARK the target row
     * and stamp the sync position instead of removing it, so the
@@ -414,38 +341,6 @@ object CdcPipeline {
     * the key — both maintained on every row, not only deleted ones. */
   val SoftDeleteCol = "_deleted"
   val SyncedLsnCol = "_synced_lsn"
-
-  /** Converged SOFT state of one table's event slice: one row per key
-    * — the schema columns carry the key's last NON-delete image (a
-    * deleted key keeps the data it died with), [[SoftDeleteCol]] says
-    * whether the key's LAST event was a delete, [[SyncedLsnCol]] is
-    * that last event's LSN. A re-insert after a delete flips the flag
-    * back with the new image — same max-LSN rule as everywhere else.
-    * A delete with NO in-slice image leaves the data columns null
-    * ([[applyBatchSoft]]'s merge carries them from the stored row
-    * instead — retain-what-it-died-with), and a tombstone for a key
-    * the target never saw keeps the nulls — an honest record of
-    * "deleted before first sync", not corruption, so no loud failure
-    * (contrast [[resolveToastAgainstCurrent]], where a hole would
-    * OVERWRITE real data). Key-changing updates expand first, so the
-    * OLD key stays behind as a flagged tombstone — exactly what an
-    * auditable target wants from a PK change. Same single key-shuffle
-    * hash aggregate as [[lastImageResolvingToast]]. */
-  def softImagePerKey(
-      events: DataFrame, schema: StructType, keyCol: String): DataFrame = {
-    val parsed = normalizeKeyChanges(events)
-      .withColumn("_row", from_json(col("after"), schema))
-    val winner = max(struct(col("lsn").as("l"), col("op").as("o"))).as("_w")
-    val carried = max(when(col("op") =!= "D",
-      struct(col("lsn").as("l"), col("_row").as("r")))).as("_c")
-    parsed.groupBy(col("key")).agg(winner, carried)
-      .select(schema.fieldNames.toSeq.map { f =>
-        if (f == keyCol) col("key").cast(schema(f).dataType).as(f)
-        else col("_c.r").getField(f).as(f)
-      } ++ Seq(
-        (col("_w.o") === "D").as(SoftDeleteCol),
-        col("_w.l").as(SyncedLsnCol)): _*)
-  }
 
   /** [[snapshot]] for a soft-delete mirror: the initial image lands
     * with `_deleted = false` and `_synced_lsn = 0` (every feed LSN is
@@ -598,26 +493,28 @@ object CdcPipeline {
 
   /** One table's slice of a micro-batch, folded in the job that pins
     * the batch: its max LSN (the applied-watermark input), key-moving
-    * UPDATE count, count of those moves that carry an unchanged-TOAST
-    * marker, marker count, max source commit time, and the store
-    * buckets its keys hash to, the old keys of moves included. */
+    * UPDATE count, the moves among them that carry an unchanged-TOAST
+    * marker (bounded by the batch's marker count), marker count, max
+    * source commit time, and the store buckets its keys hash to, the
+    * old keys of moves included. */
   private[streaming] final case class SliceStats(maxLsn: Long, moves: Long,
-      markedMoves: Long, toasts: Long, maxCommitTs: Option[java.sql.Timestamp],
+      markedMoves: Seq[Move], toasts: Long, maxCommitTs: Option[java.sql.Timestamp],
       buckets: Set[Int]) {
     def +(o: SliceStats): SliceStats = SliceStats(maxLsn.max(o.maxLsn),
-      moves + o.moves, markedMoves + o.markedMoves, toasts + o.toasts,
+      moves + o.moves, markedMoves ++ o.markedMoves, toasts + o.toasts,
       (maxCommitTs ++ o.maxCommitTs).maxByOption(_.getTime), buckets ++ o.buckets)
   }
 
   // whether an event's after-image carries an unchanged-TOAST marker:
   // a raw-JSON substring test, no parse, and the sentinel cannot
   // appear in organic data (it is this engine's own marker)
-  private def marked: Column = coalesce(col("after").contains(UnchangedToast), lit(false))
+  private[streaming] def marked: Column =
+    coalesce(col("after").contains(UnchangedToast), lit(false))
 
   /** The bucket of envelope column `c` (`key` or `beforeKey`) in
     * `store`, per table. `hash()` is type-sensitive (`hash("1") !=
     * hash(1L)`), so the value is first cast to the table's declared key
-    * type — the cast [[parseImages]] gives the merged key column. */
+    * type — the cast [[ranked]] gives the merged key column. */
   private[streaming] def storeBucket(store: KeyedParquetStore, schemas: Map[String, StructType],
       keyCols: Map[String, String])(c: String): Column =
     schemas.foldLeft(lit(null).cast("int")) { case (acc, (t, sch)) =>
@@ -627,13 +524,13 @@ object CdcPipeline {
 
   /** Pin a micro-batch, run `body` over it with its per-table
     * [[SliceStats]], then free its blocks. Downstream reads it once
-    * per table slice (and once more for a slice's marked key moves);
-    * without pinning, each read re-executes the source scan — 3–5×
-    * read amplification per batch (observed via
+    * per table slice; without pinning, each read re-executes the source
+    * scan — 3–5× read amplification per batch (observed via
     * StreamingQueryProgress.numInputRows). The one job that stores the
     * batch also folds the stats ([[Checkpointing.materializeWith]]),
-    * bounded by tables × buckets, so the fan-out costs no job of its
-    * own; an empty batch folds to no tables and the body does nothing.
+    * bounded by tables × buckets and the batch's marked key moves, so
+    * the fan-out costs no job of its own; an empty batch folds to no
+    * tables and the body does nothing.
     * `bucketOf` gives the bucket column of an envelope key column
     * ([[storeBucket]]); without a store, buckets stay empty. The
     * scope's free ([[Checkpointing.pinnedWith]]) matters: a long-lived
@@ -643,15 +540,15 @@ object CdcPipeline {
       bucketOf: String => Column = _ => lit(null).cast("int"))(
       body: (DataFrame, Map[String, SliceStats]) => Unit): Unit = {
     val move = keyMove(batch)
+    val moves = batch.columns.contains("beforeKey")
     // commitTs guard mirrors beforeKey's: a hand-built envelope frame
     // may omit the column — the time-lag metric then reads unknown
     val stats = Checkpointing.Fold[Map[String, SliceStats]](Seq(
-      col("table"), col("lsn"), move, move && marked, marked,
+      col("table"), col("lsn"), move, markedMove(batch), marked,
       if (batch.columns.contains("commitTs")) col("commitTs")
       else lit(null).cast("timestamp"),
       bucketOf("key"),
-      if (batch.columns.contains("beforeKey")) when(move, bucketOf("beforeKey"))
-      else lit(null).cast("int")),
+      if (moves) when(move, bucketOf("beforeKey")) else lit(null).cast("int")),
       foldSlices, (a, b) => b.foldLeft(a) { case (m, (t, s)) =>
         m.updated(t, m.get(t).fold(s)(_ + s))
       })
@@ -664,8 +561,9 @@ object CdcPipeline {
     it.foldLeft(Map.empty[String, SliceStats]) { (m, r) =>
       def count(i: Int) = if (r.getBoolean(i)) 1L else 0L
       def opt[T](i: Int, get: Int => T) = if (r.isNullAt(i)) None else Some(get(i))
-      val s = SliceStats(opt(1, r.getLong).getOrElse(Long.MinValue),
-        count(2), count(3), count(4),
+      val lsn = opt(1, r.getLong).getOrElse(Long.MinValue)
+      val s = SliceStats(lsn, count(2), opt(3, r.getStruct(_, 2)).map(m =>
+          Move(m.getUTF8String(0).toString, m.getUTF8String(1).toString, lsn)).toSeq, count(4),
         opt(5, r.getLong).map(DateTimeUtils.toJavaTimestamp),
         (opt(6, r.getInt) ++ opt(7, r.getInt)).toSet)
       val t = String.valueOf(r.getUTF8String(0))
@@ -698,9 +596,11 @@ object CdcPipeline {
     * merge's `carry` rule for its string columns on the same shuffle
     * ([[UnchangedToast]]), so it runs the same 3 jobs; a marked key
     * move also brings its old key's stored row and earlier events in
-    * under the new key (`movedKeys`, one broadcast job more). Every
-    * slice's merged keys are the slice's keys, old keys of moves
-    * included, so the folded bucket set is the merge's exact hint.
+    * under the new key (`movedKeys`, one broadcast job more), and a
+    * chain of marked moves in the batch brings the life it started
+    * from. Every slice's merged keys are the slice's keys, old keys of
+    * moves included, so the folded bucket set is the merge's exact
+    * hint.
     *
     * `dropPolicy`: change images are parsed with the source's DECLARED
     * schema (`schemas`), so a stored column absent from it means the
@@ -719,7 +619,10 @@ object CdcPipeline {
 
   /** The per-table body of [[applyBatch]] and [[applyBatchSoft]]: one
     * [[KeyedParquetStore.merge]] per slice, fed the slice's parsed
-    * events ranked by LSN. */
+    * events ranked by LSN — the apply rule ([[ApplyRule.resolve]]) over
+    * the touched buckets' stored rows. String columns are carried only
+    * on a slice with markers, and old keys join only for marked moves,
+    * so a steady slice's merge is the plain window. */
   private def applyTables(batch: DataFrame, store: KeyedParquetStore,
       schemas: Map[String, StructType], keyCols: Map[String, String],
       dropPolicy: KeyedParquetStore.DropPolicy, soft: Boolean): Unit =
@@ -733,9 +636,8 @@ object CdcPipeline {
           require(s.toasts == 0L,
             s"table '$table': ${s.toasts} unchanged-TOAST marker(s) in a " +
               "soft-delete apply - marker resolution is not supported on " +
-              "the soft-delete path; resolve markers upstream " +
-              "(lastImageResolvingToast) or mirror this table with " +
-              "applyBatch")
+              "the soft-delete path; resolve markers upstream or mirror " +
+              "this table with applyBatch")
           // soft mode's contract is positional: the store must have been
           // seeded via [[snapshotSoft]] (or a prior soft apply). Against a
           // plain-snapshot store the merge would additively WIDEN the
@@ -746,28 +648,14 @@ object CdcPipeline {
         }
         val (schema, keyCol) = (schemas(table), keyCols(table))
         val slice = pinned.filter(col("table") === table)
-        val events = parseImages(if (s.moves == 0L) slice else normalizeKeyChanges(slice),
-          schema, keyCol, col("lsn").as(LsnRank))
-        // a marked key move inherits from its old key
-        val movedKeys = Option.when(s.markedMoves > 0L) {
-          val kType = schema(keyCol).dataType
-          slice.filter(keyMove(slice) && marked).select(col("beforeKey").cast(kType).as("_from"),
-            col("key").cast(kType).as("_to"), col("lsn").as("_at"))
-        }
-        store.merge(spark, table,
-          if (!soft) events
-          else events.withColumn(SoftDeleteCol, col("op") === "D")
-            .withColumn(SyncedLsnCol, col(LsnRank)),
+        store.merge(spark, table, ranked(slice, schema, keyCol, soft, expand = s.moves > 0L),
           keyCol, dropPolicy, Some(s.buckets.toSeq), Some(LsnRank),
-          carry = if (soft) schema.fieldNames.toSeq.filterNot(_ == keyCol)
-            else if (s.toasts > 0L) toastableCols(schema, keyCol) else Nil,
-          movedKeys = movedKeys, keepDeletes = soft)
+          carry = if (soft || s.toasts > 0L) carried(schema, keyCol, soft) else Nil,
+          movedKeys = movedKeys(spark, s.markedMoves, schema(keyCol).dataType),
+          keepDeletes = soft)
       }
       recordApplied(store, spark, slices)
     }
-
-  // the merge's rank column on the apply path: the event's LSN
-  private val LsnRank = "_lsn"
 
   /** Consistent read AS OF an LSN — reconstruct a table's state at one
     * WAL position from its snapshot image plus the retained change
@@ -780,43 +668,36 @@ object CdcPipeline {
     * reference, child delete precedes parent delete) — asserted over a
     * mixed-churn stream in CdcAsOfSpec.
     *
-    * Shape per table: lsn filter (pushes to the feed scan), the SAME
-    * last-write-wins dedup the apply path uses ([[lastImagePerKey]] —
-    * the read cannot drift from the apply semantics), one anti-join
-    * for the snapshot rows the feed never touched. One shuffle on the
-    * key; at 100 TB the feed is partitioned by table/lsn so the cut
-    * filter prunes whole partitions before anything shuffles.
+    * Shape per table: lsn filter (pushes to the feed scan), then the
+    * apply rule the store's merge runs ([[ApplyRule.resolve]]) with the
+    * snapshot as its base — the read cannot drift from the apply
+    * semantics. String columns carry, so [[UnchangedToast]] markers in
+    * the retained feed (it keeps source events verbatim) resolve in the
+    * feed first, then against the snapshot image, and a marker with
+    * neither fails loudly; on a marker-free feed the carry is exact,
+    * since a non-delete winner holds its own value, NULL included. On
+    * a feed with `beforeKey`, asOf runs one job when it is CALLED, not
+    * when its result is read: it collects the marked key moves up to
+    * the cut to the driver — as many as the retained feed holds, not
+    * one batch's — and their old keys join under the new ones (one
+    * broadcast). One shuffle on the key; at 100 TB the feed is
+    * partitioned by table/lsn so the cut filter prunes whole partitions
+    * before anything shuffles.
     *
     * @param snapshot  the table's snapshot image (state as of the
     *                  snapshot LSN; pass an empty DF for log-only)
     * @param changes   envelope rows ([[envelope]]) for THIS table with
     *                  lsn AFTER the snapshot
-    * @param resolveToast set true when the feed may carry
-    *                  [[UnchangedToast]] markers (the feed retains
-    *                  source events verbatim, so the markers ARE in the
-    *                  retained history): winners resolve in-feed first,
-    *                  then against the snapshot image — the carry rule
-    *                  [[applyBatch]]'s merge applies in its one
-    *                  shuffle, spelled here as two steps over a feed
-    *                  and a snapshot. Off by default so
-    *                  marker-free feeds keep the plain window dedup
-    *                  plan unchanged.
     */
   def asOf(
       snapshot: DataFrame,
       changes: DataFrame,
       schema: StructType,
       keyCol: String,
-      lsn: Long,
-      resolveToast: Boolean = false): DataFrame = {
+      lsn: Long): DataFrame = {
     val cut = changes.filter(col("lsn") <= lsn)
-    val last =
-      if (resolveToast)
-        resolveToastAgainstCurrent(
-          lastImageToastWithResolveKey(cut, schema, keyCol), snapshot, schema, keyCol)
-      else lastImagePerKey(cut, schema, keyCol)
-    val untouched = snapshot.join(last.select(keyCol), Seq(keyCol), "left_anti")
-    untouched.unionByName(last.filter(col("op") =!= "D").drop("op"))
+    resolve(cut, schema, keyCol, Some(snapshot), markedMoves(cut), where = s"asOf($lsn)")
+      .filter(!(col("op") <=> "D")).drop("op")
   }
 
   /** Multi-table [[asOf]]: ONE cut LSN applied to every table — the

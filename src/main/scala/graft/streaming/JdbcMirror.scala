@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager}
+import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   * README.md:99–106; our [[KeyedParquetStore]] is the lakehouse
   * analogue, this is the database-parity path).
   *
-  * Apply semantics: the input batch is the LWW-deduped change set
-  * ([[CdcPipeline.lastImagePerKey]] — exactly one row per key), and
+  * Apply semantics: the input batch is the change set resolved by the
+  * engine's apply rule ([[ApplyRule.resolve]] — exactly one row per
+  * key, the winner's `op` and image), and
   * each partition applies DELETE-then-INSERT per key in ONE
   * transaction:
   *
@@ -130,29 +131,32 @@ object JdbcMirror {
       .map(ks => s"$keyCol IN (${ks.mkString(", ")})").toArray
   }
 
-  /** Apply one raw envelope micro-batch (multi-table fan-out + LWW
-    * dedup + parse) into JDBC targets — the foreachBatch body of a
-    * database-to-database mirror. Table name passes through unchanged;
-    * pass a `tableNameOf` to map namespaces.
+  /** Apply one raw envelope micro-batch (multi-table fan-out, then the
+    * apply rule per table) into JDBC targets — the foreachBatch body of
+    * a database-to-database mirror. Table name passes through
+    * unchanged; pass a `tableNameOf` to map namespaces.
     *
-    * Unchanged-TOAST markers ([[CdcPipeline.UnchangedToast]]) resolve
-    * by the parquet path's rule in two steps: in-batch inheritance
-    * first, then the TARGET table's current rows (read back over the
-    * same JDBC connection properties) — so a psql→psql mirror keeps its wide
-    * text columns through partial UPDATEs, the behavior the reference
-    * relies on (volumes/postgresql.conf:3). The read-back is gated on
-    * a per-table marker count, so marker-free batches — the steady
-    * state — never touch the target for reads.
+    * A slice without unchanged-TOAST markers ([[CdcPipeline.UnchangedToast]])
+    * runs the plain rule — no target rows, no carried columns, as
+    * [[CdcPipeline.lastImagePerKey]] does — so marker-free batches, the
+    * steady state, never touch the target for reads. A marked slice
+    * runs the rule with the TARGET table's current rows as its base
+    * (read back over the same JDBC connection properties), exactly as
+    * the parquet store's merge runs it over its stored rows: a marker
+    * inherits in-batch first, then from the target row (for a marked
+    * key move, the old key's — through a chain of marked moves, the
+    * key the chain started from), and fails loudly with neither — so
+    * a psql→psql mirror keeps its wide text columns through partial
+    * UPDATEs, the behavior the reference relies on
+    * (volumes/postgresql.conf:3). Only the winners of the slice's own
+    * keys are written; the base rows they did not touch are dropped.
     *
     * The read-back is BATCH-SIZED, not target-sized: the marked rows'
     * lookup keys (own key + beforeKey) collect to the driver — bounded
     * by the micro-batch's marker count — and ship back as chunked
     * `WHERE <key> IN (…)` partition predicates
     * ([[keyInPredicates]]), one database-side index probe per chunk
-    * instead of a full table scan. The parquet store needs no
-    * read-back: its merge already reads the touched buckets' rows and
-    * carries the stored value in the same shuffle
-    * ([[KeyedParquetStore.merge]] `carry`). */
+    * instead of a full table scan. */
   def applyEnvelopeBatch(
       batch: DataFrame,
       url: String,
@@ -163,32 +167,23 @@ object JdbcMirror {
     CdcPipeline.withPinnedBatch(batch) { (pinned, slices) =>
       val spark = pinned.sparkSession
       slices.foreach { case (table, s) =>
+        val (schema, keyCol) = (schemas(table), keyCols(table))
         val slice = pinned.filter(col("table") === table)
-        val changes =
-          if (s.toasts == 0L)
-            CdcPipeline.lastImagePerKey(slice, schemas(table), keyCols(table))
-          else {
-            checkIdent(tableNameOf(table), "table name")
-            checkIdent(keyCols(table), "key column")
-            // lookup keys for the marked rows only: own key + the
-            // beforeKey a PK-changing UPDATE resolves through. Driver
-            // collect bounded by the batch's marker count.
-            val marked = slice.filter(
-              col("after").contains(CdcPipeline.UnchangedToast))
-            val keys = (if (slice.columns.contains("beforeKey"))
-              marked.select(col("key"))
-                .unionByName(marked.select(
-                  coalesce(col("beforeKey"), col("key")).as("key")))
-            else marked.select(col("key")))
-              .distinct().collect().map(_.getLong(0)).toSeq
-            val current = spark.read.jdbc(url, tableNameOf(table),
-              keyInPredicates(keyCols(table), keys), props)
-            CdcPipeline.resolveToastAgainstCurrent(
-              CdcPipeline.lastImageToastWithResolveKey(
-                slice, schemas(table), keyCols(table)),
-              current, schemas(table), keyCols(table))
-          }
-        applyChanges(changes, url, tableNameOf(table), keyCols(table), props)
+        val base = Option.when(s.toasts > 0L) {
+          checkIdent(tableNameOf(table), "table name")
+          checkIdent(keyCol, "key column")
+          // lookup keys: the marked rows' own keys and the old keys of
+          // the marked moves. Driver collect bounded by the batch's
+          // marker count.
+          val keys = slice.filter(CdcPipeline.marked).select(col("key")).distinct()
+            .collect().map(_.getLong(0)).toSeq ++ s.markedMoves.map(_.from.toLong)
+          // the database may report its column names in another case
+          spark.read.jdbc(url, tableNameOf(table), keyInPredicates(keyCol, keys), props)
+            .select(schema.fieldNames.toSeq.map(f => col(f).as(f)): _*)
+        }
+        applyChanges(CdcPipeline.resolve(slice, schema, keyCol, base, s.markedMoves,
+            carry = s.toasts > 0L, where = s"table '${tableNameOf(table)}'").filter(col("op").isNotNull),
+          url, tableNameOf(table), keyCol, props)
       }
     }
 }

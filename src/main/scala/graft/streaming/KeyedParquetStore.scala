@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Checkpointing
 
@@ -72,9 +71,6 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   import FileManifest.Manifest
 
   private def path(table: String) = s"$root/$table"
-  // merge's per-row order; stored rows carry a null rank, which sorts
-  // below every change
-  private val Rank = "_graft_rank"
 
   /** The store's bucket assignment as a column expression — exposed so
     * the apply path can fold the touched-bucket set into the job that
@@ -235,32 +231,25 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       incoming.fields.filterNot(f => stored.fieldNames.contains(f.name)))
   }
 
-  /** Project `df` to `schema`, then `extra`, then bucket, null-padding
-    * absent schema columns. */
-  private def alignTo(df: DataFrame, schema: StructType, extra: Column*): DataFrame =
-    df.select((schema.fields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    } ++ extra) :+ col("bucket"): _*)
-
   /** Idempotent merge of a change set into the table.
     *
     * `changes` carries `op` ("I"|"U"|"D"), the key column and the row
     * image for upserts. With `rankCol`, a key may appear several times
     * and its highest-ranked row wins (the apply path passes parsed
     * feed events ranked by LSN); without it, `changes` must carry one
-    * row per key. The batch schema may be WIDER than the stored one
-    * (new source columns) or narrower (columns absent from this batch)
-    * — see [[unionSchema]]; existing rows get nulls for new columns,
-    * new rows get nulls for omitted ones.
+    * row per key; with `movedKeys`, also the rule's [[ApplyRule.Born]]
+    * flag, which is not stored. The batch schema may be WIDER than the
+    * stored one (new source columns) or narrower (columns absent from
+    * this batch) — see [[unionSchema]]; existing rows get nulls for new
+    * columns, new rows get nulls for omitted ones.
     *
     * Only buckets containing changed keys are read and rewritten: the
     * merge reads version N's files of those buckets and writes version
-    * N+1's, so it never reads a file it replaces. The stored rows,
-    * ranked below every change, and the changes meet in ONE shuffle on
-    * the bucket column; `row_number` over (bucket, key) by rank
-    * descending runs on that partitioning with no second exchange,
-    * keeps each key's winner and drops deletes. Its partitions hold
+    * N+1's, so it never reads a file it replaces. The stored rows are
+    * the base of the apply rule ([[ApplyRule.resolve]]), which meets
+    * them and the changes in ONE shuffle on the bucket column and runs
+    * its window over (bucket, key) on that partitioning with no second
+    * exchange; the merge then drops delete winners. Its partitions hold
     * whole buckets, so the write needs no exchange and each touched
     * bucket that keeps rows gets one file; a touched bucket that
     * emptied gets none, and the commit drops its old files. On the
@@ -269,23 +258,11 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * effective exactly-once on top of Spark's at-least-once
     * foreachBatch (SURVEY.md §2.8 C5).
     *
-    * `carry`: columns a winner may leave unset. Each takes the value
-    * of the highest-ranked row of its key (the winner first, the
-    * stored row last) that is not a delete and does not hold
-    * [[CdcPipeline.UnchangedToast]] there; an explicit NULL is a
-    * value. The rule is a whole-partition window aggregate on the
-    * same window as `row_number`, so it adds no exchange and no job.
-    * A winner that is not a delete and finds no value fails the write
-    * job (`raise_error`), before anything is committed: Postgres omits
-    * a TOAST value only for a row that exists, so the feed and the
-    * target have diverged. `movedKeys` (`_from`, `_to` key columns and
-    * the move's rank `_at`): key moves whose new row may inherit from
-    * the old key — the old key's stored row, ranked above the new
-    * key's own stored row (where a replay finds what the first apply
-    * moved), and the old key's changes ranked below the move join the
-    * union under the new key: a broadcast left join re-keys them from
-    * the merge's one scan of the stored rows, at the cost of one
-    * broadcast job.
+    * `carry` and `movedKeys` are the rule's: columns a winner may leave
+    * unset inherit the key's previous value, the stored row last, and a
+    * marker with no value to inherit fails the write job before
+    * anything is committed; a key move's new row may inherit from the
+    * old key (one broadcast job more).
     *
     * `keepDeletes` (soft-delete mode): a delete winner is kept, not
     * dropped; the caller carries every data column, so a tombstone
@@ -309,7 +286,7 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       s"table '$table' has a 'bucket' column — it collides with the store's partition column")
     val keyed = changes.withColumn("bucket", bucketExpr(col(keyCol)))
     val dataSchema = StructType(changes.schema.filterNot(f =>
-      f.name == "op" || rankCol.contains(f.name)))
+      f.name == "op" || f.name == ApplyRule.Born || rankCol.contains(f.name)))
     val cur = manifest(spark, table)
     cur.filter(_ => dropPolicy == DropPolicy.Error).foreach { m =>
       val dropped = m.schema.fieldNames.filterNot(dataSchema.fieldNames.contains)
@@ -331,52 +308,15 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
       else touchedHint.getOrElse(
         keyed.select("bucket").distinct().collect().map(_.getInt(0)).toSeq)
     if (!onDisk || touched.nonEmpty) {
-      val incoming = alignTo(keyed, target, col("op"),
-        rankCol.fold(lit(0L))(col(_).cast(LongType)).as(Rank))
-      val stored = cur.filter(_ => onDisk).map(m =>
-        alignTo(scan(spark, table, m).filter(col("bucket").isin(touched: _*)), target,
-          lit(null).cast("string").as("op"), lit(null).cast(LongType).as(Rank)))
-      val union = (stored.toSeq :+ incoming).reduce(_ unionByName _)
-      // a move's old key, stored and in the batch below the move, also
-      // joins under the new key, its stored row at Long.MinValue (a
-      // delete there is never carried): each row of the one scan is
-      // emitted as is and, when it matches a move, re-keyed
-      val ranked = movedKeys.fold(union) { m =>
-        val self = struct(union.columns.map(col): _*)
-        val rekeyed = struct(union.columns.map {
-          case `keyCol` => col("_to").as(keyCol)
-          case Rank => coalesce(col(Rank), lit(Long.MinValue)).as(Rank)
-          case "bucket" => bucketExpr(col("_to")).as("bucket")
-          case c => col(c)
-        }: _*)
-        union.join(broadcast(m), col(keyCol) === col("_from") &&
-            coalesce(col(Rank) < col("_at"), lit(true)), "left")
-          .select(explode(when(col("_to").isNull, array(self))
-            .otherwise(array(self, rekeyed))).as("_r"))
-          .select("_r.*")
-      }
-      val byKey = Window.partitionBy(col("bucket"), col(keyCol)).orderBy(col(Rank).desc_nulls_last)
-      val isDelete = col("op") <=> "D"
-      val carried = carry.map { c =>
-        val holds = if (target(c).dataType != StringType) !isDelete
-          else !isDelete && !(col(c) <=> CdcPipeline.UnchangedToast)
-        first(when(holds, struct(col(c).as("v"))), ignoreNulls = true)
-          .over(byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-          .as(s"_carry_$c")
-      }
-      val winner = col("_rn") === 1
-      val winners = ranked.repartition(col("bucket"))
-        .select(col("*") +: row_number().over(byKey).as("_rn") +: carried: _*)
-        .filter(if (keepDeletes) winner else winner && !isDelete)
-        .select(target.fields.toSeq.map { f =>
-          if (!carry.contains(f.name)) col(f.name)
-          else when(col(s"_carry_${f.name}").isNull && !isDelete,
-            raise_error(lit(s"table '$table': unchanged-TOAST column '${f.name}' " +
-              "has no stored image to inherit from - feed and target have " +
-              "diverged; re-sync the table (KeyedParquetStore.resync)")).cast(f.dataType))
-            .otherwise(col(s"_carry_${f.name}.v")).as(f.name)
-        } :+ col("bucket"): _*)
-      FileManifest.commit(spark, path(table), cur, target, winners, touched.toSet)
+      // before the first commit the base is empty: a marker still has
+      // nothing to inherit and fails
+      val stored = scan(spark, table, cur.getOrElse(Manifest(target, Nil, Nil, Map.empty)))
+        .filter(col("bucket").isin(touched: _*))
+      val winners = ApplyRule.resolve(keyed, rankCol.fold(lit(0L))(col), keyCol, target,
+        Some(stored), carry, movedKeys, Some(bucketExpr), s"table '$table'")
+      FileManifest.commit(spark, path(table), cur, target,
+        (if (keepDeletes) winners else winners.filter(!(col("op") <=> "D"))).drop("op"),
+        touched.toSet)
     }
   }
 

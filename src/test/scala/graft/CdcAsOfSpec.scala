@@ -11,7 +11,7 @@ import graft.streaming.CdcPipeline
 /** Cross-table consistent read AS OF an LSN (r8 verdict #7): over an
   * FK-disciplined mixed-churn WAL (users + orders sharing ONE global
   * LSN sequence), [[CdcPipeline.asOf]] must (a) equal a brute-force
-  * in-memory replay at sampled cuts — including through a
+  * sequential replay ([[ApplyModel]]) at sampled cuts — including through a
   * snapshot-then-stream handoff — and (b) yield FK closure at EVERY
   * cut: every live order's purchaser resolves to a live user, exactly
   * because one lsn bound is applied to both tables.
@@ -32,62 +32,44 @@ class CdcAsOfSpec extends AnyFunSuite {
     * insert precedes every child reference; child deletes precede the
     * parent delete — the discipline a transactional source guarantees,
     * which is what makes one-lsn cuts FK-closed. */
-  private def wal: Seq[(Long, String, String, Long, String)] =
+  private val wal: Seq[(String, ApplyModel.Event)] =
     (0L until 8L).flatMap { k =>
       val base = 100 * k
       val oid = (j: Int) => 1000 + 10 * k + j
-      Seq((base, "I", "users", k, s"""{"id":$k,"version":1}""")) ++
-        (0 until 3).map(j => (base + 1 + j, "I", "orders", oid(j),
-          s"""{"id":${oid(j)},"purchaser":$k,"quantity":${j + 1}}""")) ++
-        Seq(
-          (base + 10, "U", "users", k, s"""{"id":$k,"version":2}"""),
-          (base + 12, "U", "orders", oid(0),
-            s"""{"id":${oid(0)},"purchaser":$k,"quantity":9}""")) ++
-        (0 until 3).map(j => (base + 40 + j, "D", "orders", oid(j), null: String)) ++
-        (if (k % 2 == 1) Seq((base + 50, "D", "users", k, null: String)) else Nil)
+      def user(lsn: Long, op: String, version: Long = 0L) = "users" -> ApplyModel.Event(lsn, op,
+        k, Option.when(op != "D")(Map[String, Any]("id" -> k, "version" -> version)))
+      def order(lsn: Long, op: String, j: Int, quantity: Long = 0L) = "orders" ->
+        ApplyModel.Event(lsn, op, oid(j), Option.when(op != "D")(
+          Map[String, Any]("id" -> oid(j), "purchaser" -> k, "quantity" -> quantity)))
+      Seq(user(base, "I", 1)) ++ (0 until 3).map(j => order(base + 1 + j, "I", j, j + 1)) ++
+        Seq(user(base + 10, "U", 2), order(base + 12, "U", 0, 9)) ++
+        (0 until 3).map(j => order(base + 40 + j, "D", j)) ++
+        (if (k % 2 == 1) Seq(user(base + 50, "D")) else Nil)
     }
 
   private lazy val envDf: DataFrame = {
     import spark.implicits._
-    wal.toDF("lsn", "op", "table", "key", "after")
-      .withColumn("commitTs", lit(new java.sql.Timestamp(0)))
-      .localCheckpoint(true)
+    wal.map { case (t, e) => e.envelope(t) }.toDF().localCheckpoint(true)
   }
 
   private def emptyOf(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** In-memory replay of one table's state at `cut`. */
-  private def replay(table: String, cut: Long): Map[Long, String] = {
-    val st = scala.collection.mutable.Map[Long, String]()
-    wal.filter(e => e._3 == table && e._1 <= cut).sortBy(_._1).foreach {
-      case (_, "D", _, key, _) => st.remove(key)
-      case (_, _, _, key, after) => st.put(key, after)
-    }
-    st.toMap
-  }
+  /** The model's state of one table at `cut`. */
+  private def replay(table: String, cut: Long): Map[Long, ApplyModel.Row] =
+    ApplyModel.replay(Map.empty, wal.collect { case (`table`, e) if e.lsn <= cut => e },
+      ApplyModel.applyHard("id"))
 
   private val cuts = Seq(0L, 2L, 11L, 41L, 50L, 105L, 152L, 341L, 450L, 750L)
 
   test("asOf equals the brute-force replay at sampled cuts (log-only and snapshot handoff)") {
     for (c <- cuts) {
-      val gotUsers = CdcPipeline.asOf(emptyOf(userSchema),
-          envDf.filter(col("table") === "users"), userSchema, "id", c)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val expUsers = replay("users", c).map { case (k, after) =>
-        k -> "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(after).get.group(1).toLong
+      Seq("users" -> userSchema, "orders" -> orderSchema).foreach { case (t, schema) =>
+        val got = CdcPipeline.asOf(emptyOf(schema), envDf.filter(col("table") === t), schema,
+          "id", c)
+        assert(ApplyModel.values(got, schema, "id") == ApplyModel.values(replay(t, c), schema),
+          s"$t diverge at cut $c")
       }
-      assert(gotUsers == expUsers, s"users diverge at cut $c")
-
-      val gotOrders = CdcPipeline.asOf(emptyOf(orderSchema),
-          envDf.filter(col("table") === "orders"), orderSchema, "id", c)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val expOrders = replay("orders", c).map { case (k, after) =>
-        val p = "\"purchaser\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(after).get.group(1).toLong
-        val q = "\"quantity\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(after).get.group(1).toLong
-        k -> (p, q)
-      }
-      assert(gotOrders == expOrders, s"orders diverge at cut $c")
     }
 
     // snapshot-then-stream handoff: the snapshot image is the replayed
@@ -113,7 +95,7 @@ class CdcAsOfSpec extends AnyFunSuite {
     // live orders anti-joined against live users on (cut, purchaser)
     val cutsDf = {
       import spark.implicits._
-      wal.map(_._1).distinct.toDF("cut")
+      wal.map(_._2.lsn).distinct.toDF("cut")
     }
     val w = Window.partitionBy("cut", "table", "key").orderBy(col("lsn").desc)
     val live = envDf.join(broadcast(cutsDf), col("lsn") <= col("cut"))

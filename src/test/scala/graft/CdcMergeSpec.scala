@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -16,12 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
 
 /** The store's one-shuffle merge, as [[CdcPipeline.applyBatch]] and
-  * [[CdcPipeline.applyBatchSoft]] drive it, against a control that
-  * never calls it: [[CdcPipeline.asOf]] over the snapshot and every
-  * event so far (its own window dedup, or TOAST resolution, and
-  * anti-join), or for soft mode [[CdcPipeline.softImagePerKey]] over
-  * every event. Batch by batch the two must hold the same rows. */
-class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  * [[CdcPipeline.applyBatchSoft]] drive it, against [[ApplyModel]], the
+  * sequential replay of the snapshot and every event so far. Batch by
+  * batch the two must hold the same rows. */
+class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
@@ -35,20 +32,23 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val keys = Map("lt" -> "id", "st" -> "code")
 
   private def lt(lsn: Long, op: String, k: Long, n: Long = 0L, w: Option[String] = None,
-      before: Option[Long] = None): ChangeEvent =
-    ChangeEvent(lsn, ts(lsn), op, "lt", k,
-      if (op == "D") null
-      else s"""{"id":$k,"name":"v$n","n":$n${w.fold("")(x => s""","w":"$x"""")}}""",
-      before)
+      before: Option[Long] = None): (String, ApplyModel.Event) =
+    "lt" -> ApplyModel.Event(lsn, op, k, Option.when(op != "D")(
+      Map[String, Any]("id" -> k, "name" -> s"v$n", "n" -> n) ++ w.map("w" -> _)), before)
 
   private def st(lsn: Long, op: String, k: Long, n: Long = 0L,
-      before: Option[Long] = None): ChangeEvent =
-    ChangeEvent(lsn, ts(lsn), op, "st", k,
-      if (op == "D") null else s"""{"code":"$k","n":$n}""", before)
+      before: Option[Long] = None): (String, ApplyModel.Event) =
+    "st" -> ApplyModel.Event(lsn, op, k, Option.when(op != "D")(
+      Map[String, Any]("code" -> k.toString, "n" -> n)), before)
+
+  private def envelopes(batch: Seq[(String, ApplyModel.Event)]): DataFrame = {
+    import spark.implicits._
+    batch.map { case (t, e) => e.envelope(t) }.toDF()
+  }
 
   /** Several events per key in one batch, a delete of an absent key,
     * a key move, on both a long- and a string-keyed table. */
-  private val batch1: Seq[ChangeEvent] =
+  private val batch1: Seq[(String, ApplyModel.Event)] =
     Seq(lt(100, "I", 100, 1), lt(101, "U", 100, 2), lt(102, "D", 100),
       lt(103, "D", 5), lt(104, "I", 5, 55)) ++
       (105L to 109L).map(l => lt(l, "U", 7, l)) ++
@@ -74,29 +74,37 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "repeated keys, absent deletes, moves, string keys, an emptied bucket, " +
     "a widened schema") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_merge_eq").toString
-    val store = new KeyedParquetStore(root, nBuckets = 4)
+    val store = new KeyedParquetStore(tempDir("cdc_merge_eq"), nBuckets = 4)
     val lSnap = (1L to 40L).map(i => (i, s"s$i", i)).toDF("id", "name", "n")
     val sSnap = (1L to 40L).map(i => (i.toString, i)).toDF("code", "n")
     CdcPipeline.snapshot(spark, store, Map("lt" -> lSnap, "st" -> sSnap), keys)
 
-    val fed = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
-    def applyAndCheck(batch: Seq[ChangeEvent], lNow: StructType): Unit = {
+    // the store and asOf must both hold the model's rows
+    var model = Map(
+      "lt" -> (1L to 40L).map(i => i -> Map[String, Any]("id" -> i, "name" -> s"s$i", "n" -> i)).toMap,
+      "st" -> (1L to 40L).map(i => i -> Map[String, Any]("code" -> i.toString, "n" -> i)).toMap)
+    val fed = scala.collection.mutable.ArrayBuffer.empty[(String, ApplyModel.Event)]
+    def applyAndCheck(batch: Seq[(String, ApplyModel.Event)], lNow: StructType): Unit = {
       val schemas = Map("lt" -> lNow, "st" -> sSchema)
-      CdcPipeline.applyBatch(batch.toDF(), store, schemas, keys)
+      CdcPipeline.applyBatch(envelopes(batch), store, schemas, keys)
       fed ++= batch
-      val all = fed.toSeq.toDF()
-      val maxLsn = fed.map(_.lsn).max
+      model = model.map { case (t, rows) =>
+        t -> ApplyModel.replay(rows, batch.collect { case (`t`, e) => e }, ApplyModel.applyHard(keys(t)))
+      }
+      val all = envelopes(fed.toSeq)
+      val maxLsn = fed.map(_._2.lsn).max
       val lPadded = lNow.fieldNames.foldLeft(lSnap)((df, f) =>
         if (df.columns.contains(f)) df else df.withColumn(f, lit(null).cast(lNow(f).dataType)))
-      val controls = Map(
+      val asOfs = Map(
         "lt" -> CdcPipeline.asOf(lPadded, all.filter(col("table") === "lt"), lNow, "id", maxLsn),
         "st" -> CdcPipeline.asOf(sSnap, all.filter(col("table") === "st"), sSchema, "code", maxLsn))
-      controls.foreach { case (t, control) =>
-        val got = sorted(store.read(spark, t), keys(t))
-        val want = sorted(control, keys(t))
-        assert(got == want, s"table $t after lsn $maxLsn: store=${got.take(8)} " +
-          s"control=${want.take(8)}")
+      asOfs.foreach { case (t, asOf) =>
+        val want = ApplyModel.values(model(t), schemas(t))
+        val got = ApplyModel.values(store.read(spark, t), schemas(t), keys(t))
+        assert(got == want, s"table $t after lsn $maxLsn: store=${got.toSeq.take(8)} " +
+          s"model=${want.toSeq.take(8)}")
+        assert(ApplyModel.values(asOf, schemas(t), keys(t)) == want,
+          s"asOf of table $t at lsn $maxLsn")
       }
     }
 
@@ -106,7 +114,7 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(lRows(5L).getLong(2) == 55L && lRows(7L).getLong(2) == 109L &&
       lRows(300L).getLong(2) == 300L)
     // a replayed batch reconverges to the same state
-    CdcPipeline.applyBatch(batch1.toDF(), store, Map("lt" -> lSchema, "st" -> sSchema), keys)
+    CdcPipeline.applyBatch(envelopes(batch1), store, Map("lt" -> lSchema, "st" -> sSchema), keys)
     assert(sorted(store.read(spark, "lt"), "id") == sorted(
       spark.createDataFrame(spark.sparkContext.parallelize(lRows.values.toSeq), lSchema), "id"))
 
@@ -134,41 +142,41 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     StructField("name", StringType), StructField("bio", StringType)))
 
   private def tt(lsn: Long, op: String, k: Long, name: String = null, bio: String = null,
-      before: Option[Long] = None): ChangeEvent = {
-    def js(v: String) = if (v == null) "null" else s""""$v""""
-    ChangeEvent(lsn, ts(lsn), op, "t", k,
-      if (op == "D") null else s"""{"id":$k,"name":${js(name)},"bio":${js(bio)}}""", before)
-  }
+      before: Option[Long] = None): ApplyModel.Event =
+    ApplyModel.Event(lsn, op, k,
+      Option.when(op != "D")(Map[String, Any]("id" -> k, "name" -> name, "bio" -> bio)), before)
 
-  /** Apply batch after batch, checking the store against `control`
-    * over the snapshot and every event fed so far. */
+  /** Apply batch after batch, checking the store's `cols` against the
+    * model's `step` from `initial` over every event fed so far. */
   private def checker(store: KeyedParquetStore, apply: DataFrame => Unit,
-      control: DataFrame => DataFrame): (Seq[ChangeEvent], Boolean) => Unit = {
+      initial: Map[Long, ApplyModel.Row], step: (Map[Long, ApplyModel.Row], ApplyModel.Event) =>
+        Map[Long, ApplyModel.Row], cols: StructType): (Seq[ApplyModel.Event], Boolean) => Unit = {
     import spark.implicits._
-    val fed = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
+    var state = initial
     (batch, replay) => {
-      apply(batch.toDF())
-      if (!replay) fed ++= batch
-      val got = sorted(store.read(spark, "t"), "id")
-      val want = sorted(control(fed.toSeq.toDF()), "id")
-      assert(got == want, s"after lsn ${fed.map(_.lsn).max}${if (replay) " (replay)" else ""}: " +
-        s"store=$got control=$want")
+      apply(batch.map(_.envelope("t")).toDF())
+      if (!replay) state = ApplyModel.replay(state, batch, step)
+      val got = ApplyModel.values(store.read(spark, "t"), cols, "id")
+      val want = ApplyModel.values(state, cols)
+      assert(got == want, s"after lsn ${batch.map(_.lsn).max}${if (replay) " (replay)" else ""}: " +
+        s"store=$got model=$want")
     }
   }
 
-  test("TOAST markers carried by the merge equal asOf(resolveToast = true), batch by " +
+  test("TOAST markers carried by the merge equal the sequential model, batch by " +
     "batch: in-batch chain, stored fallback, stored NULL, in-batch NULL, a marked " +
     "move and its replay, a move onto a key deleted in the batch, a marked batch " +
     "that empties a bucket") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_merge_toast").toString
+    val root = tempDir("cdc_merge_toast")
     val store = new KeyedParquetStore(root, nBuckets = 4)
     val snap = (1L to 40L).map(i => (i, s"n$i", if (i == 3L) null else s"bio$i"))
       .toDF("id", "name", "bio")
     CdcPipeline.snapshot(spark, store, Map("t" -> snap), Map("t" -> "id"))
     val check = checker(store,
       CdcPipeline.applyBatch(_, store, Map("t" -> tSchema), Map("t" -> "id")),
-      all => CdcPipeline.asOf(snap, all, tSchema, "id", Long.MaxValue, resolveToast = true))
+      (1L to 40L).map(i => i -> Map[String, Any]("id" -> i, "name" -> s"n$i",
+        "bio" -> (if (i == 3L) null else s"bio$i"))).toMap, ApplyModel.applyHard("id"), tSchema)
 
     val batchA = Seq(
       // in-batch chain: the last unmarked value of each column wins
@@ -184,8 +192,8 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       tt(110, "U", 106, "m6", "full", before = Some(6L)),
       // a marked update, then a delete
       tt(111, "U", 7, M, M), tt(112, "D", 7),
-      // a marked move onto a key deleted earlier in the batch: the old
-      // key's stored row outranks the new key's own
+      // a marked move onto a key deleted earlier in the batch: the new
+      // key's own stored row is an earlier life, the old key's is carried
       tt(113, "D", 9), tt(114, "U", 9, "m9", M, before = Some(10L)))
     check(batchA, false)
     val rows = store.read(spark, "t").as[(Long, String, String)].collect()
@@ -212,49 +220,39 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a marked key move inherits the old key's in-batch update, not its stored row") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_merge_move_update").toString, nBuckets = 4)
+      tempDir("cdc_merge_move_update"), nBuckets = 4)
     val snap = Seq((5L, "n5", "old-bio"), (6L, "n6", "bio6")).toDF("id", "name", "bio")
     CdcPipeline.snapshot(spark, store, Map("t" -> snap), Map("t" -> "id"))
     val batch = Seq(tt(10, "U", 5, "n5b", "new-bio"), tt(11, "U", 105, "m", M, before = Some(5L)))
+      .map(_.envelope("t"))
     val want = Seq(Row(6L, "n6", "bio6"), Row(105L, "m", "new-bio"))
     def rows(df: DataFrame) = df.select("id", "name", "bio").orderBy("id").collect().toSeq
     CdcPipeline.applyBatch(batch.toDF(), store, Map("t" -> tSchema), Map("t" -> "id"))
     assert(rows(store.read(spark, "t")) == want)
-    assert(rows(CdcPipeline.asOf(snap, batch.toDF(), tSchema, "id", Long.MaxValue,
-      resolveToast = true)) == want)
+    assert(rows(CdcPipeline.asOf(snap, batch.toDF(), tSchema, "id", Long.MaxValue)) == want)
     // a replay finds the moved value under the new key
     CdcPipeline.applyBatch(batch.toDF(), store, Map("t" -> tSchema), Map("t" -> "id"))
     assert(rows(store.read(spark, "t")) == want)
   }
 
-  test("soft-delete merge equals a softImagePerKey control, batch by batch: a " +
+  test("soft-delete merge equals the sequential model, batch by batch: a " +
     "delete-only key keeps its stored image, re-inserts, a move's tombstone, a " +
     "never-seen key, a replay") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_merge_soft").toString
-    val store = new KeyedParquetStore(root, nBuckets = 4)
+    val store = new KeyedParquetStore(tempDir("cdc_merge_soft"), nBuckets = 4)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("name", StringType), StructField("amount", LongType)))
     val snap = (1L to 20L).map(i => (i, s"n$i", i * 10)).toDF("id", "name", "amount")
     CdcPipeline.snapshotSoft(spark, store, Map("t" -> snap), Map("t" -> "id"))
     def ev(lsn: Long, op: String, k: Long, amount: Long = 0L, before: Option[Long] = None) =
-      ChangeEvent(lsn, ts(lsn), op, "t", k,
-        if (op == "D") null else s"""{"id":$k,"name":"v$lsn","amount":$amount}""", before)
-    // the control: softImagePerKey over every event; a key with no
-    // image in the feed takes its data from the snapshot (or nulls)
-    def control(all: DataFrame): DataFrame = {
-      val img = CdcPipeline.softImagePerKey(all, schema, "id")
-      val imaged = CdcPipeline.normalizeKeyChanges(all).filter(col("op") =!= "D")
-        .select(col("key").as("id"))
-      val meta = Seq(CdcPipeline.SoftDeleteCol, CdcPipeline.SyncedLsnCol)
-      snap.withColumn(meta(0), lit(false)).withColumn(meta(1), lit(0L))
-        .join(img.select("id"), Seq("id"), "left_anti")
-        .unionByName(img.join(imaged, Seq("id"), "left_semi"))
-        .unionByName(img.join(imaged, Seq("id"), "left_anti").select("id", meta: _*)
-          .join(snap, Seq("id"), "left"))
-    }
+      ApplyModel.Event(lsn, op, k, Option.when(op != "D")(
+        Map[String, Any]("id" -> k, "name" -> s"v$lsn", "amount" -> amount)), before)
     val check = checker(store,
-      CdcPipeline.applyBatchSoft(_, store, Map("t" -> schema), Map("t" -> "id")), control)
+      CdcPipeline.applyBatchSoft(_, store, Map("t" -> schema), Map("t" -> "id")),
+      (1L to 20L).map(i => i -> Map[String, Any]("id" -> i, "name" -> s"n$i", "amount" -> i * 10,
+        CdcPipeline.SoftDeleteCol -> false, CdcPipeline.SyncedLsnCol -> 0L)).toMap,
+      ApplyModel.applySoft("id"), schema.add(CdcPipeline.SoftDeleteCol, BooleanType)
+        .add(CdcPipeline.SyncedLsnCol, LongType))
 
     val batchA = Seq(ev(100, "D", 2), ev(101, "D", 3), ev(102, "I", 3, 33),
       ev(103, "U", 105, 55, before = Some(5L)), ev(104, "D", 99),
@@ -278,7 +276,7 @@ class CdcMergeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // adds marked key moves, whose old keys' rows join under the new
     // keys from the merge's one scan of the stored files
     Seq((false, false), (true, false), (true, true)).foreach { case (toast, moves) =>
-      val root = Files.createTempDirectory("cdc_merge_plan").toString
+      val root = tempDir("cdc_merge_plan")
       val store = new KeyedParquetStore(root, nBuckets = 8)
       val schema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)) ++
         (if (toast) Seq(StructField("bio", StringType)) else Nil))

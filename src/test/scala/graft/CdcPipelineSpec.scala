@@ -14,7 +14,7 @@ import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
   * reconciliation oracle (insert.ps1:426–431): snapshot + I/U/D stream
   * → target converges to source; idempotent re-apply; delete-emptied
   * buckets are cleared. */
-class CdcPipelineSpec extends AnyFunSuite {
+class CdcPipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val customersSchema = StructType(Seq(
@@ -31,8 +31,8 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("snapshot + I/U/D stream converges, merge is idempotent") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_store").toString
-    val ckpt = Files.createTempDirectory("cdc_ckpt").toString
+    val root = tempDir("cdc_store")
+    val ckpt = tempDir("cdc_ckpt")
     val store = new KeyedParquetStore(root, nBuckets = 4)
 
     // reference seed rows (quickstart_prepare_peers.sh:54–58,72–77)
@@ -118,7 +118,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     "survives the feed's JSON round-trip, old key deleted, new key live; " +
     "pre-r15 feed files (no beforeKey field) replay unchanged") {
     import spark.implicits._
-    val work = Files.createTempDirectory("cdc_pkc_stream").toString
+    val work = tempDir("cdc_pkc_stream")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     val schema = StructType(Seq(
@@ -164,7 +164,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     // re-applied are a no-op, later events win.
     import spark.implicits._
     import graft.streaming.ChangeFeed
-    val work = Files.createTempDirectory("cdc_snapracE").toString
+    val work = tempDir("cdc_snapracE")
     val feed = s"$work/feed"
     val ckpt = s"$work/ckpt"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
@@ -234,7 +234,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("lagReport is one lazy union-all job and keeps empty tables in the report") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_lag").toString
+    val root = tempDir("cdc_lag")
     val store = new KeyedParquetStore(root, nBuckets = 2)
     store.snapshot(spark, "t1", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id")
     val sources = Map(
@@ -254,7 +254,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("deleting every row in a bucket clears it") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_store2").toString
+    val root = tempDir("cdc_store2")
     val store = new KeyedParquetStore(root, nBuckets = 2)
     val src = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     store.snapshot(spark, "t", src, "id")
@@ -270,7 +270,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("re-snapshot after a merge fully replaces the table (no stale buckets)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_resnap").toString
+    val root = tempDir("cdc_resnap")
     val store = new KeyedParquetStore(root, nBuckets = 8)
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
     store.snapshot(spark, "t", (1L to 100L).map(k => (k, s"a$k")).toDF("id", "v"), "id")
@@ -289,7 +289,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val key = "spark.sql.sources.partitionOverwriteMode"
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_owmode").toString, nBuckets = 8)
+      tempDir("cdc_owmode"), nBuckets = 8)
     def unchanged(step: String)(body: => Unit): Unit = {
       val before = spark.conf.getAll.toSet
       body
@@ -320,7 +320,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("bucketed layout prunes: merge touches only affected buckets") {
     import spark.implicits._
-    val root = Files.createTempDirectory("cdc_store3").toString
+    val root = tempDir("cdc_store3")
     val store = new KeyedParquetStore(root, nBuckets = 8)
     val src = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
     store.snapshot(spark, "t", src, "id")
@@ -370,9 +370,9 @@ class CdcPipelineSpec extends AnyFunSuite {
     val keys = Map("st" -> "code", "lt" -> "id")
 
     val hinted = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_hint_a").toString, nBuckets = 8)
+      tempDir("cdc_hint_a"), nBuckets = 8)
     val control = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_hint_b").toString, nBuckets = 8)
+      tempDir("cdc_hint_b"), nBuckets = 8)
     Seq(1000L, 2000L).foreach { lsn0 =>
       val batch = events(lsn0).toDF()
       // production path: fan-out aggregate computes the hints
@@ -403,7 +403,7 @@ class CdcPipelineSpec extends AnyFunSuite {
     "a bounded job count (no per-batch collect creep)") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_jobs").toString, nBuckets = 8)
+      tempDir("cdc_jobs"), nBuckets = 8)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", LongType)))
     def batch(lsn0: Long) = (0 until 200).map { i =>
@@ -432,7 +432,7 @@ class CdcPipelineSpec extends AnyFunSuite {
   test("job-count gate: a key-moving batch takes the steady merge") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("cdc_jobs_moves").toString, nBuckets = 8)
+      tempDir("cdc_jobs_moves"), nBuckets = 8)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", LongType)))
     CdcPipeline.applyBatch((0 until 50).map { i =>
@@ -485,7 +485,7 @@ class CdcPipelineSpec extends AnyFunSuite {
       ("marked_moves", false, markedMoves ++ updates, 4))
     shapes.foreach { case (name, soft, events, bound) =>
       val store = new KeyedParquetStore(
-        Files.createTempDirectory(s"cdc_jobs_$name").toString, nBuckets = 8)
+        tempDir(s"cdc_jobs_$name"), nBuckets = 8)
       val seed = Map("t" -> (0L until 50L).map(i => (i, i, s"b$i")).toDF("id", "v", "bio"))
       // a snapshot is its write's shuffle map stage and result stage,
       // as before the manifest commit

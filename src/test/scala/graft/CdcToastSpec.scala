@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.{DriverManager, Timestamp}
 import java.util.Properties
 
@@ -18,7 +17,7 @@ import graft.sources.Tables
   * stored row) rather than upsert the marker verbatim. The reference's
   * psql→psql mirrors rely on exactly this merge-at-target behavior
   * (volumes/postgresql.conf:3 wal_level=logical). */
-class CdcToastSpec extends AnyFunSuite {
+class CdcToastSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val M = CdcPipeline.UnchangedToast
@@ -32,7 +31,7 @@ class CdcToastSpec extends AnyFunSuite {
 
   private def freshStore(): KeyedParquetStore =
     new KeyedParquetStore(
-      Files.createTempDirectory("toast_store").toString, nBuckets = 4)
+      tempDir("toast_store"), nBuckets = 4)
 
   private def img(id: Long, name: String, bio: String): String =
     s"""{"id":$id,"name":"$name","bio":"$bio"}"""
@@ -180,15 +179,14 @@ class CdcToastSpec extends AnyFunSuite {
     assert(rowOf(oneBatch) == rowOf(twoBatch))
   }
 
-  test("asOf(resolveToast = true) resolves markers against the snapshot image") {
+  test("asOf resolves markers against the snapshot image") {
     import spark.implicits._
     val snapshot = Seq((1L, "a", "snap-bio")).toDF("id", "name", "bio")
     val feed = Seq(
       ChangeEvent(50, ts(50), "U", "t", 1, img(1, "a2", M)),
       ChangeEvent(51, ts(51), "I", "t", 2, img(2, "b", "new-bio"))
     ).toDF()
-    val cut = CdcPipeline.asOf(snapshot, feed, schema, "id", lsn = 51,
-      resolveToast = true)
+    val cut = CdcPipeline.asOf(snapshot, feed, schema, "id", lsn = 51)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     assert(cut == Seq((1L, "a2", "snap-bio"), (2L, "b", "new-bio")))

@@ -20,7 +20,7 @@ import graft.streaming.IndexedIngest
   * nearest-neighbor search landing in the true (brute-force) anchor
   * region — until growth crosses the threshold and ONE retrain
   * happens. */
-class CentroidStalenessSpec extends AnyFunSuite with IndexRoots {
+class CentroidStalenessSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val dim = 64

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,13 +11,13 @@ import graft.streaming.CorpusDrift
   * test: the threshold sits between the corpus's self-TV (floor noise
   * only) and a planted out-of-vocabulary batch's TV, both measured
   * through the SAME shared scoring kernel the monitor runs. */
-class CorpusDriftSpec extends AnyFunSuite with IndexRoots {
+class CorpusDriftSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("in-distribution batch stays quiet, planted drift batch alerts; " +
     "self-TV is floor-noise only; scoring is stateless per batch") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_corpus_drift").toString
+    val work = tempDir("graft_corpus_drift")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     CorpusDrift.trainBaseline(docs).write.parquet(s"$work/baseline")
     val baseline = spark.read.parquet(s"$work/baseline")
@@ -71,7 +69,7 @@ class CorpusDriftSpec extends AnyFunSuite with IndexRoots {
 
   test("alert rows are replay-idempotent in MULTIPLICITY: a redelivered " +
     "batch overwrites its own batch_id partition, never double-fires") {
-    val work = Files.createTempDirectory("graft_drift_replay").toString
+    val work = tempDir("graft_drift_replay")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     CorpusDrift.trainBaseline(docs).write.parquet(s"$work/baseline")
     val baseline = spark.read.parquet(s"$work/baseline").localCheckpoint(true)

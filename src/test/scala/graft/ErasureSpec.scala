@@ -13,7 +13,7 @@ import graft.streaming.{CdcPipeline, KeyedParquetStore}
   * [[Erasure.forget]], neither the table nor any persisted derived
   * artifact (here the shared simhash64 signature sidecar behind
   * d6/d13) may keep serving the tombstoned rows. */
-class ErasureSpec extends AnyFunSuite with IndexRoots {
+class ErasureSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("corpus forget: residue 0; the warm signature sidecar is forced " +
@@ -76,7 +76,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
 
   test("cascade forget: child tombstones derived by semi-join, erased " +
     "bottom-up (lineitem, orders, customer), zero FK orphans, residue 0") {
-    val work = Files.createTempDirectory("graft_erasure_cascade").toString
+    val work = tempDir("graft_erasure_cascade")
     Seq("customer", "orders", "lineitem").foreach(t =>
       Files.copy(Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
         Paths.get(s"$work/$t.parquet")))
@@ -117,7 +117,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
 
   test("cascade over a multi-parent FK DAG: the fixpoint erases every " +
     "reachable key, and leaves at most one pinned frame per table") {
-    val work = Files.createTempDirectory("graft_erasure_dag").toString
+    val work = tempDir("graft_erasure_dag")
     // A→X, X→Y, A→B, B→X in this order: one ordered pass would miss
     // the X keys B→X adds after X→Y ran, and Y's keys behind them
     spark.range(10).select(col("id").as("a_id"))
@@ -165,7 +165,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("forgetPartitioned, forgetFromFeed and certificate free the pin " +
     "they make: no call leaves a persistent RDD") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_pins").toString
+    val work = tempDir("graft_erasure_pins")
     spark.range(40).select(col("id").as("k"), (col("id") % 4).as("p"))
       .write.partitionBy("p").parquet(s"$work/pt.parquet")
     graft.streaming.ChangeFeed.publish((0L until 10L).map { i =>
@@ -191,7 +191,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("cascade at scale: 100k derived child keys stay a DataFrame — " +
     "no isin literal list in the rewrite plan, residue 0") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_big").toString
+    val work = tempDir("graft_erasure_big")
     // 3 subjects, each deriving ~33k child rows: the DERIVED set is
     // 100k — far beyond any sane driver literal list
     spark.range(5).select(col("id").as("c_id"))
@@ -227,7 +227,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
     "leaf names; fresh replay and asOf no longer resurrect the keys; " +
     "unaffected files byte-identical") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_feed").toString
+    val work = tempDir("graft_erasure_feed")
     val feed = s"$work/feed"
     val rowSchema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -297,7 +297,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("partitioned forget: only partitions holding tombstoned keys are " +
     "rewritten; untouched partitions byte-identical; worst crash point restored") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_part").toString
+    val work = tempDir("graft_erasure_part")
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("d", to_date(col("ts")))
       .select(col("event_id"), col("user_id"), col("value"), col("d"))
@@ -402,7 +402,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("erasing EVERY row leaves a readable empty table (explicit-schema " +
     "read), residue 0") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_all").toString
+    val work = tempDir("graft_erasure_all")
     (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
       .write.parquet(s"$work/t.parquet")
     val rep = Erasure.forget(spark, work, "t", "id", (1L to 20L))
@@ -415,7 +415,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("certificate: residue audit across corpus + store + feed + jdbc — " +
     "names the dirty surface before the sweeps, all-clean after") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_cert").toString
+    val work = tempDir("graft_erasure_cert")
     val doomed = Seq(3L, 7L)
     val rowSchema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -473,7 +473,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
   test("store forget: delete tombstones ride the product merge path, " +
     "idempotently, WITHOUT touching the applied-LSN watermark") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_store").toString
+    val work = tempDir("graft_erasure_store")
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     val rowSchema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -483,7 +483,13 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
     // prunes at this watermark, and synthetic LSNs above it would let
     // feed files the store never read be deleted
     store.recordAppliedLsn(spark, 41L)
-    Erasure.forgetFromStore(spark, store, "t", "id", rowSchema, Seq(5L, 6L))
+    // measured: 4 jobs in each of 3 runs (the merge's touched-bucket
+    // collect, its shuffle map stage and its write); the synthetic
+    // envelope and its window dedup made it 6
+    val jobs = JobCount.of(spark, "forget_from_store") {
+      Erasure.forgetFromStore(spark, store, "t", "id", rowSchema, Seq(5L, 6L))
+    }
+    assert(jobs <= 4, s"forgetFromStore ran $jobs jobs (expected 4)")
     val rows = store.read(spark, "t")
     assert(rows.count() == 98L &&
       rows.filter(col("id").isin(5L, 6L)).count() == 0L)
@@ -497,7 +503,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
 
   test("store forget leaves no copy of the keys in any file under the table") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_erasure_retained").toString
+    val work = tempDir("graft_erasure_retained")
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     val rowSchema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -522,7 +528,7 @@ class ErasureSpec extends AnyFunSuite with IndexRoots {
     "the soft mode retained — even already-flagged tombstones") {
     import spark.implicits._
     import java.sql.Timestamp
-    val work = Files.createTempDirectory("graft_erasure_soft").toString
+    val work = tempDir("graft_erasure_soft")
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     val rowSchema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))

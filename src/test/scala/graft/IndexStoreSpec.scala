@@ -12,7 +12,7 @@ import graft.operators.IndexStore
   * DELTA build over only the new files (the O(batch)-per-ingest path
   * that keeps index maintenance off the corpus-rescan cost curve).
   */
-class IndexStoreSpec extends AnyFunSuite with IndexRoots {
+class IndexStoreSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 

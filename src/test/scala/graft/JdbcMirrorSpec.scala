@@ -15,7 +15,7 @@ import graft.streaming.{ChangeEvent, JdbcMirror}
   * Derby; against Postgres only the URL changes). Pins the three
   * contract points: ordered LWW apply, idempotent replay, and
   * streaming foreachBatch delivery. */
-class JdbcMirrorSpec extends AnyFunSuite {
+class JdbcMirrorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val url = "jdbc:derby:memory:graftmirror;create=true"
@@ -86,7 +86,7 @@ class JdbcMirrorSpec extends AnyFunSuite {
   test("streaming mirror into JDBC via foreachBatch converges") {
     import spark.implicits._
     freshTable("customers_s")
-    val ckpt = java.nio.file.Files.createTempDirectory("jdbc_ckpt").toString
+    val ckpt = tempDir("jdbc_ckpt")
     val stream = MemoryStream[ChangeEvent](spark)
     val q = stream.toDF().writeStream
       .option("checkpointLocation", ckpt)

@@ -20,7 +20,7 @@ import graft.operators.IvfIndex
   *    can never beat the flat minimum, and the router must stay
   *    within the winning coarse group (structural containment).
   */
-class LloydRoutingSpec extends AnyFunSuite with IndexRoots {
+class LloydRoutingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   /** 4 far-apart anchors; ids 0..7 (the first-k init) ALL near anchor

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
   * Pins: retain-on-delete, re-insert flips back, imageless tombstones,
   * store fallback for delete-only batches, idempotent replay, and the
   * live view (`NOT _deleted`) agreeing with hard-delete apply. */
-class SoftDeleteSpec extends AnyFunSuite {
+class SoftDeleteSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val schema = StructType(Seq(
@@ -30,7 +29,7 @@ class SoftDeleteSpec extends AnyFunSuite {
 
   private def freshStore(): KeyedParquetStore =
     new KeyedParquetStore(
-      Files.createTempDirectory("soft_store").toString, nBuckets = 4)
+      tempDir("soft_store"), nBuckets = 4)
 
   private def stateOf(store: KeyedParquetStore)
       : Map[Long, (Option[String], Option[Long], Boolean, Long)] =
@@ -111,7 +110,7 @@ class SoftDeleteSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val store = freshStore()
-    val ckpt = java.nio.file.Files.createTempDirectory("soft_ckpt").toString
+    val ckpt = tempDir("soft_ckpt")
     CdcPipeline.snapshotSoft(spark, store,
       Map("t" -> Seq((1L, "a", 100L)).toDF("id", "name", "amount")),
       Map("t" -> "id"))

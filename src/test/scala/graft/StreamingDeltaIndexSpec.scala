@@ -16,7 +16,7 @@ import graft.streaming.IndexedIngest
   * at-least-once window (sink work done, checkpoint commit lost) must
   * replay to EXACTLY the same corpus and index — no duplicated rows,
   * no wasted rebuild. */
-class StreamingDeltaIndexSpec extends AnyFunSuite with IndexRoots {
+class StreamingDeltaIndexSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def lens(df: DataFrame): DataFrame =
