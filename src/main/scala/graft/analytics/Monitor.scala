@@ -98,7 +98,7 @@ object Monitor {
     *  - `applied_watermark` ↔ a slot's confirmed-flush LSN: the
     *    store-maintained applied record
     *    ([[KeyedParquetStore.appliedLsn]]) — WARNING when absent
-    *    (nothing ever applied → retention/rotation cannot engage);
+    *    (nothing ever applied to this store);
     *  - `checkpoint_retention` ↔ `wal_level = logical`: the session
     *    retention SQLConfs
     *    ([[graft.streaming.CdcPipeline.configureCheckpointRetention]])

@@ -387,7 +387,7 @@ object Erasure {
     * affected file), never an `isin` literal list in the plan and
     * never a driver-side collection (r14 verdict wrong #1). Only the
     * AFFECTED FILE PATHS are collected — bounded by the tombstones'
-    * locality in the feed, the same driver budget as the prune path. */
+    * locality in the feed. */
   def forgetFromFeed(spark: SparkSession, feedDir: String, table: String,
       tombstones: DataFrame): (Long, Long) = {
     require(tombstones.columns.toSeq == Seq("key"),
@@ -429,7 +429,7 @@ object Erasure {
       var removed = 0L
       affected.foreach { p =>
         // _metadata.file_path may carry URI-encoded forms — hand the raw
-        // string to Hadoop's lenient Path parser (the prune discipline)
+        // string to Hadoop's lenient Path parser
         val orig = new org.apache.hadoop.fs.Path(p)
         val fs = orig.getFileSystem(conf)
         val scratchDir = new org.apache.hadoop.fs.Path(

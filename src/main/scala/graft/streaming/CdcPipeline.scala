@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructType}
 
@@ -182,10 +183,9 @@ object CdcPipeline {
     * `maxFileAge` trims only the in-memory seen-map. (r11 documented
     * the opposite; the r12 measurement corrected it.) The engine's
     * answer is FEED RETENTION + CHECKPOINT ROTATION
-    * ([[ChangeFeed.prune]]): prune applied feed files at the sink's
-    * committed watermark, restart the mirror on a fresh
-    * `checkpointDir`, and let the idempotent by-PK merge absorb any
-    * overlap re-read — metadata becomes O(retention window), measured
+    * ([[rotateCheckpoint]]): delete the feed files every consumer's
+    * commit log records as applied, then restart the mirror on a fresh
+    * `checkpointDir` — metadata becomes O(retention window), measured
     * by the `x40_rotate` block in CDC_BENCH.json
     * ([[graft.tools.CdcThroughput]]). */
   def configureCheckpointRetention(
@@ -383,7 +383,7 @@ object CdcPipeline {
     * soft mirror grows monotonically, and the reference's
     * converged-store monitoring assumption quietly breaks on an
     * ever-growing target). Hard-purges tombstones whose `_synced_lsn`
-    * is at or below `upToLsn` — an LSN watermark doubles as an age
+    * is at or below `throughLsn` — an LSN watermark doubles as an age
     * policy (pick the LSN at "now − retention" from the feed's
     * commitTs↔lsn correspondence); younger tombstones and ALL live
     * rows survive untouched.
@@ -401,8 +401,7 @@ object CdcPipeline {
     *  - a replay of a pre-watermark batch may RESURRECT a swept
     *    tombstone (the apply path is deliberately idempotent-by-replay);
     *    the live view still converges identically, and the next sweep
-    *    removes it again — run sweeps behind the same applied-LSN
-    *    watermark that gates feed pruning and replay never crosses it;
+    *    removes it again;
     *  - [[graft.operators.Erasure]] purges NAMED keys on demand
     *    (right-to-be-forgotten, certificate-backed); this sweep is the
     *    complementary AGE policy — erasure of an already-swept key is
@@ -418,7 +417,7 @@ object CdcPipeline {
       store: KeyedParquetStore,
       table: String,
       keyCol: String,
-      upToLsn: Long): Long = {
+      throughLsn: Long): Long = {
     requireSoft(spark, store, table, "sweepSoftDeleted")
     // one materialization feeds the count AND the merge's key frame;
     // the count is folded into the pin's own job. Both run under the
@@ -426,7 +425,7 @@ object CdcPipeline {
     // discovery read and the purge
     store.locked(table) {
       val expired = store.read(spark, table)
-        .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn)
+        .filter(col(SoftDeleteCol) && col(SyncedLsnCol) <= throughLsn)
         .select(col(keyCol))
       Checkpointing.pinnedWith(expired, Checkpointing.counting(expired, None)) {
         case (keys, (rows, _)) =>
@@ -456,9 +455,8 @@ object CdcPipeline {
     * was paying anyway — strictly cheaper than sweep-then-compact as
     * separate jobs, and immune to the scattered-key worst case.
     *
-    * Same replay interplay as [[sweepSoftDeleted]]: run behind the
-    * applied-LSN watermark that gates feed pruning. Same purge rule
-    * too: a compaction that purged any row deletes every file the new
+    * Same replay interplay as [[sweepSoftDeleted]], and the same purge
+    * rule: a compaction that purged any row deletes every file the new
     * version does not name at once, so no copy of a swept key is left
     * for a certificate to find. Returns the number of tombstones
     * purged. */
@@ -466,9 +464,9 @@ object CdcPipeline {
       spark: SparkSession,
       store: KeyedParquetStore,
       table: String,
-      upToLsn: Long): Long = {
+      throughLsn: Long): Long = {
     requireSoft(spark, store, table, "sweepAndCompact")
-    val expired = col(SoftDeleteCol) && col(SyncedLsnCol) <= upToLsn
+    val expired = col(SoftDeleteCol) && col(SyncedLsnCol) <= throughLsn
     // the purge count comes from compact's OWN checkpointed read — a
     // separate pre-count here would race a concurrent applyBatchSoft
     // landing between the two reads (purged-but-uncounted rows)
@@ -713,103 +711,37 @@ object CdcPipeline {
         schemas(t), keyCols(t), lsn)
     }
 
-  /** The source-log format version this parser understands —
-    * `HDFSMetadataLog`'s `v1` header line (verified against Spark
-    * 4.1.2's on-disk logs). A header this code doesn't recognize means
-    * the entry regexes below cannot be trusted either, so the scan
-    * reports DEGRADED instead of silently returning an empty set. */
-  private val SourceLogVersion = "v1"
-
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Canonical leaf names ([[ChangeFeed.canonicalLeaf]]) of every feed
-    * file the checkpoint records as part of a COMMITTED batch — the
-    * ground truth [[rotateCheckpoint]] gates deletion on. Three
-    * details are load-bearing:
-    *
-    *  - Spark writes the source-log entry (`sources/<i>/<id>`) at
-    *    offset-PLANNING time, before the batch runs; only the commit
-    *    marker (`commits/<id>`) proves the sink work happened. Each
-    *    log entry carries its `"batchId"`, so entries above the max
-    *    committed id are excluded — a file planned into a batch the
-    *    stop() interrupted is NOT deletable (its replay would be lost
-    *    with the checkpoint).
-    *  - Leaf names are canonicalized through the SAME function
-    *    [[ChangeFeed.prune]] applies to `_metadata.file_path` — on
-    *    Spark 4.1 both sides carry the URI-encoded `SparkPath` form,
-    *    but a one-sided representation drift in either would make
-    *    encoded-name files permanently unprunable, so both sides
-    *    decode to the literal name via one codec.
-    *  - The scan VALIDATES what it parses: an unrecognized version
-    *    header or an entry line missing path/batchId returns
-    *    `Left(reason)` (and warns via slf4j) instead of a silent empty
-    *    set — a Spark-version format drift must surface as a visible
-    *    degraded mode in [[Rotation.skipped]], not as every rotation
-    *    quietly becoming a no-op while the checkpoint-bytes plateau
-    *    stops holding.
+  /** The feed files ([[ChangeFeed.dataFiles]] names) the checkpoint
+    * records as read by a COMMITTED batch — the ground truth
+    * [[rotateCheckpoint]] deletes by — read through Spark's own source
+    * and commit logs
+    * ([[org.apache.spark.sql.graftbridge.Bridge.committedSourceFiles]]).
+    * A log Spark cannot read returns `Left(reason)` (and warns via
+    * slf4j) instead of a silent empty set, naming the version when the
+    * log was written in a format this Spark does not read and saying
+    * "unparsable" otherwise: a format drift must surface as a visible
+    * degraded mode in [[Rotation.skipped]], not as every rotation
+    * quietly becoming a no-op while the checkpoint-bytes plateau stops
+    * holding.
     *
     * `Right(Set.empty)` = genuinely nothing committed (absent log /
-    * zero commit markers — a young checkpoint, not an error);
-    * `Left(reason)` = the log exists but cannot be trusted. Both make
+    * zero commit markers — a young checkpoint, not an error). Both make
     * [[rotateCheckpoint]] skip (fail safe), with distinct reasons. */
-  private[streaming] def sourceLogPaths(
-      spark: SparkSession, checkpointDir: String): Either[String, Set[String]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val commits = new org.apache.hadoop.fs.Path(s"$checkpointDir/commits")
-    val src = new org.apache.hadoop.fs.Path(s"$checkpointDir/sources")
-    val fs = src.getFileSystem(conf)
+  private[streaming] def committedFiles(spark: SparkSession, feedDir: String,
+      checkpointDir: String): Either[String, Set[String]] =
     try {
-      if (!fs.exists(src) || !fs.exists(commits)) return Right(Set.empty)
-      val committed = fs.listStatus(commits).toSeq
-        .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-      if (committed.isEmpty) return Right(Set.empty)
-      val maxCommitted = committed.max
-      val names = scala.collection.mutable.Set.empty[String]
-      val it = fs.listFiles(src, true)
-      val pathRe = """"path":"([^"]+)"""".r
-      val batchRe = """"batchId":(\d+)""".r
-      while (it.hasNext) {
-        val st = it.next()
-        val leaf = st.getPath.getName
-        // skip scratch and checksum sidecars (".tmp", ".<name>.crc") —
-        // they are not log entries and must not trip validation
-        if (st.isFile && !leaf.endsWith(".tmp") && !leaf.startsWith(".")) {
-          val in = fs.open(st.getPath)
-          val body =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val lines = body.linesIterator.toSeq
-          if (!lines.headOption.contains(SourceLogVersion)) {
-            val reason = s"unrecognized source-log version header " +
-              s"'${lines.headOption.getOrElse("<empty>").take(40)}' in $leaf " +
-              s"(expected $SourceLogVersion)"
-            logger.warn(s"checkpoint rotation degraded: $reason")
-            return Left(reason)
-          }
-          // one JSON entry per line: pair each path with ITS batchId
-          lines.drop(1).filter(_.nonEmpty).foreach { line =>
-            (pathRe.findFirstMatchIn(line), batchRe.findFirstMatchIn(line)) match {
-              case (Some(p), Some(b)) =>
-                if (b.group(1).toLong <= maxCommitted)
-                  names += ChangeFeed.canonicalLeaf(p.group(1))
-              case _ =>
-                val reason =
-                  s"unparsable source-log entry in $leaf: '${line.take(80)}'"
-                logger.warn(s"checkpoint rotation degraded: $reason")
-                return Left(reason)
-            }
-          }
-        }
-      }
-      Right(names.toSet)
+      val name = ChangeFeed.fileNames(spark, feedDir)
+      Right(Bridge.committedSourceFiles(spark, checkpointDir).flatMap(name).toSet)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        val reason = s"source log unreadable: " +
-          s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        val reason =
+          if (Bridge.unsupportedLogVersion(e)) s"unsupported source-log version: ${e.getMessage}"
+          else s"unparsable source log: ${e.getClass.getSimpleName}: ${e.getMessage}"
         logger.warn(s"checkpoint rotation degraded: $reason")
         Left(reason)
     }
-  }
 
   /** Outcome of one [[rotateCheckpoint]] attempt. `skipped` empty =
     * the rotation HAPPENED (feed pruned at the gates, checkpoint
@@ -965,20 +897,20 @@ object CdcPipeline {
 
   /** Per-consumer retention drag for every VALID registration on a
     * feed (invalidated consumers hold nothing by definition). Driver
-    * metadata only: one feed FS listing + each consumer's source-log
-    * scan — never a data read. The monitoring input for the
+    * metadata only: one feed FS listing + each consumer's source and
+    * commit log — never a data read. The monitoring input for the
     * `max_slot_wal_keep_size` analogue below, and the row
     * [[graft.analytics.Monitor.replicationInfra]] surfaces. */
   def consumerLag(spark: SparkSession, feedDir: String): Seq[ConsumerLag] = {
-    val feed = ChangeFeed.dataFiles(spark, feedDir) // canonical leaf → bytes
+    val feed = ChangeFeed.dataFiles(spark, feedDir) // name → bytes
     registeredConsumers(spark, feedDir).toSeq.sortBy(_._1).map {
       case (name, ckpt) =>
-        sourceLogPaths(spark, ckpt) match {
+        committedFiles(spark, feedDir, ckpt) match {
           case Left(reason) =>
             ConsumerLag(name, ckpt, 0L, feed.size.toLong,
               feed.valuesIterator.sum, Some(reason))
           case Right(committed) =>
-            val held = feed.filter { case (leaf, _) => !committed(leaf) }
+            val held = feed.filter { case (file, _) => !committed(file) }
             ConsumerLag(name, ckpt,
               feed.keysIterator.count(committed).toLong,
               held.size.toLong, held.valuesIterator.sum, None,
@@ -1016,7 +948,7 @@ object CdcPipeline {
     require(maxHeldBytes >= 0L, s"negative byte budget: $maxHeldBytes")
     // Three exemptions guard this DESTRUCTIVE policy (invalidation
     // breaks a consumer's continuity for good):
-    //  - DEGRADED positions: a Left from sourceLogPaths can be the
+    //  - DEGRADED positions: a Left from committedFiles can be the
     //    documented transient race (a LIVE mirror's log compaction
     //    deleting entries mid-listing); a healthy caught-up mirror
     //    must never be condemned on a read race. Degraded consumers
@@ -1075,34 +1007,24 @@ object CdcPipeline {
     * verdict ask #6 — promote the measured x40_rotate choreography out
     * of the bench harness). The file-source compact log grows linearly
     * forever (see [[configureCheckpointRetention]]'s doc), so a
-    * long-lived mirror periodically: (1) stops, (2) prunes feed files
-    * fully applied at the store's own watermark minus a safety margin
-    * ([[ChangeFeed.prune]]; [[KeyedParquetStore.appliedLsn]] is
-    * maintained by [[applyBatch]], so no out-of-band position
-    * tracking), (3) deletes the checkpoint — the SAME `checkpointDir`
-    * restarts as a brand-new query whose source log lists only the
-    * surviving tail, O(retention window) instead of O(history). Any
-    * overlap re-read after the restart (files above the pruned
-    * watermark that were already applied) is absorbed by the
-    * idempotent by-PK merge.
+    * long-lived mirror periodically: (1) stops, (2) deletes the feed
+    * files every consumer has committed ([[ChangeFeed.prune]]), (3)
+    * deletes the checkpoint — the SAME `checkpointDir` restarts as a
+    * brand-new query whose source log lists only the surviving tail,
+    * O(retention window) instead of O(history).
     *
-    * Deletion is TRIPLY gated: a feed file goes only if its max LSN is
-    * under the watermark−margin, AND the checkpoint's own source log
-    * records the file as committed ([[sourceLogPaths]]), AND every
-    * OTHER registered consumer of the feed ([[registerConsumer]]) has
-    * committed it too — one feed can serve several mirrors (the
-    * reference provisions four replication slots on one WAL,
-    * volumes/postgresql.conf:4–5), and pruning at one consumer's
-    * position would silently lose files a lagging consumer still
-    * needs. The LSN watermark alone is not proof of delivery when feed
-    * files can land out of LSN order (a decoder retry/backfill writes
-    * old LSNs with a new mtime AFTER newer LSNs were applied — the
-    * watermark has moved past a file the source never read); the
-    * committed-set gates make rotation safe at any margin ≥ 0 under
-    * ANY arrival order, because an unread file is never deleted
-    * regardless of its LSNs. Measured at 800 batches: checkpoint bytes
-    * ratio 1.00 across a rotation vs ~2× unrotated (CDC_BENCH.json
-    * `x40_rotate`).
+    * The commit log is the one gate, as a replication slot's confirmed
+    * position is for Postgres WAL (the reference provisions four slots
+    * on one WAL, volumes/postgresql.conf:4–5). A feed file goes exactly
+    * when the caller's checkpoint AND every OTHER registered consumer's
+    * ([[registerConsumer]]) records it as read by a committed batch
+    * ([[committedFiles]]). Spark writes `commits/<id>` only after the
+    * batch's sink returned, and the sink's merge commits before it
+    * returns, so a committed file has been applied; a file no consumer
+    * read — one that landed out of LSN order, or in another partition
+    * under the same leaf name — is never deleted, whatever its LSNs.
+    * Measured at 800 batches: checkpoint bytes ratio 1.00 across a
+    * rotation vs ~2× unrotated (CDC_BENCH.json `x40_rotate`).
     *
     * Call order: rotate, then [[start]] with the same `checkpointDir` —
     * the named mirror is ALWAYS stopped (even on the skip paths), so
@@ -1110,9 +1032,9 @@ object CdcPipeline {
     * The caller is self-registered as a consumer before anything else,
     * so the registry converges to the full consumer set as each mirror
     * rotates. Skip paths (feed AND checkpoint left untouched, reason
-    * in [[Rotation.skipped]]): nothing ever applied; the caller's own
-    * committed set empty or DEGRADED (unreadable/format-drifted source
-    * log — wiping the checkpoint without pruning would force a
+    * in [[Rotation.skipped]]): the caller's own committed set empty
+    * (nothing committed yet) or DEGRADED (unreadable/format-drifted
+    * source log — wiping the checkpoint without pruning would force a
     * full-feed replay every cadence cycle while the feed never
     * shrinks); any other registered consumer's source log degraded
     * (its position cannot be trusted, so no deletion is provably
@@ -1121,18 +1043,12 @@ object CdcPipeline {
     * own checkpoint is deleted, so until its next restart re-commits
     * the surviving files, OTHER mirrors' rotations read its committed
     * set as empty and prune nothing — conservative by construction.
-    *
-    * @param safetyLsns extra LSN margin below the applied watermark to
-    *   KEEP on the feed (defense against a sink whose last batch is
-    *   torn mid-crash); replayed rows cost one idempotent merge each */
+    * Driver-side log reads and deletes only: no Spark job. */
   def rotateCheckpoint(
       spark: SparkSession,
-      store: KeyedParquetStore,
       feedDir: String,
       mirrorName: String,
-      checkpointDir: String,
-      safetyLsns: Long = 0L): Rotation = {
-    require(safetyLsns >= 0L, s"negative safety margin: $safetyLsns")
+      checkpointDir: String): Rotation = {
     spark.streams.active.filter(_.name == mirrorName).foreach(_.stop())
     // an invalidated caller cannot rotate: its continuity is already
     // broken (budget invalidation pruned past its position) — surface
@@ -1144,37 +1060,27 @@ object CdcPipeline {
       case None =>
     }
     registerConsumer(spark, feedDir, mirrorName, checkpointDir)
-    store.appliedLsn(spark) match {
-      case None => // nothing applied: rotating would orphan nothing
-        Rotation(0L, 0L, Some("nothing applied yet (no watermark)"))
-      case Some(applied) =>
-        sourceLogPaths(spark, checkpointDir) match {
-          case Left(reason) =>
-            Rotation(0L, 0L, Some(s"own source log degraded: $reason"))
-          case Right(own) if own.isEmpty =>
-            Rotation(0L, 0L, Some("no committed batches in the source log"))
-          case Right(own) =>
-            // every other consumer's committed set, fail-safe on any
-            // degraded one; a missing/young checkpoint reads as empty
-            // (= that consumer holds everything)
-            val others = (registeredConsumers(spark, feedDir) - mirrorName)
-              .toSeq.sortBy(_._1)
-              .map { case (n, ckpt) => n -> sourceLogPaths(spark, ckpt) }
-            others.collectFirst { case (n, Left(reason)) => (n, reason) } match {
-              case Some((n, reason)) =>
-                Rotation(0L, 0L,
-                  Some(s"consumer '$n' source log degraded: $reason"))
-              case None =>
-                val prunable = others
-                  .collect { case (_, Right(s)) => s }
-                  .foldLeft(own)(_ intersect _)
-                val (pruned, kept) = ChangeFeed.prune(spark, feedDir,
-                  applied - safetyLsns, onlyFiles = Some(prunable))
-                val ckpt = new org.apache.hadoop.fs.Path(checkpointDir)
-                ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                  .delete(ckpt, true)
-                Rotation(pruned, kept)
-            }
+    committedFiles(spark, feedDir, checkpointDir) match {
+      case Left(reason) =>
+        Rotation(0L, 0L, Some(s"own source log degraded: $reason"))
+      case Right(own) if own.isEmpty =>
+        Rotation(0L, 0L, Some("no committed batches in the source log"))
+      case Right(own) =>
+        // every other consumer's committed set, fail-safe on any
+        // degraded one; a missing/young checkpoint reads as empty
+        // (= that consumer holds everything)
+        val others = (registeredConsumers(spark, feedDir) - mirrorName)
+          .toSeq.sortBy(_._1)
+          .map { case (n, ckpt) => n -> committedFiles(spark, feedDir, ckpt) }
+        others.collectFirst { case (n, Left(reason)) => (n, reason) } match {
+          case Some((n, reason)) =>
+            Rotation(0L, 0L, Some(s"consumer '$n' source log degraded: $reason"))
+          case None =>
+            val prunable = others.collect { case (_, Right(s)) => s }.foldLeft(own)(_ intersect _)
+            val (pruned, kept) = ChangeFeed.prune(spark, feedDir, prunable)
+            val ckpt = new org.apache.hadoop.fs.Path(checkpointDir)
+            ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
+            Rotation(pruned, kept)
         }
     }
   }
@@ -1218,15 +1124,12 @@ object CdcPipeline {
     * prevent). */
   def rotateIfOversized(
       spark: SparkSession,
-      store: KeyedParquetStore,
       feedDir: String,
       mirrorName: String,
       checkpointDir: String,
-      maxCheckpointBytes: Long,
-      safetyLsns: Long = 0L): Option[Rotation] =
+      maxCheckpointBytes: Long): Option[Rotation] =
     if (checkpointBytes(spark, checkpointDir) <= maxCheckpointBytes) None
-    else Some(rotateCheckpoint(spark, store, feedDir, mirrorName,
-      checkpointDir, safetyLsns))
+    else Some(rotateCheckpoint(spark, feedDir, mirrorName, checkpointDir))
 
   /** Mirror lifecycle: DROP — completes the reference UI's
     * create/start/drop loop (/root/reference/README.md:99–106, where a

@@ -227,89 +227,68 @@ object ChangeFeed {
         (expr(s"((_rk - 1) * $nFiles) div _total") + 1).cast("int").as("_file"))
   }
 
-  /** Driver-side listing of the feed's DATA files, canonical leaf →
-    * bytes: the files the stream's file source reads, by Spark's own
-    * hidden-name rule ([[org.apache.spark.sql.graftbridge.Bridge.hiddenName]]:
-    * no `_consumers/`, `_SUCCESS`, dot files or in-flight `._COPYING_`
-    * uploads). File-count-sized FS metadata walk, no data read — the
-    * denominator for [[CdcPipeline.consumerLag]]'s per-consumer
-    * retention drag. */
-  def dataFiles(spark: SparkSession, feedDir: String): Map[String, Long] = {
+  /** Driver-side listing of the feed's DATA files, name → bytes: the
+    * files the stream's file source reads, found by Spark's own
+    * hidden-name rule at every level
+    * ([[org.apache.spark.sql.graftbridge.Bridge.hiddenName]]: no
+    * `_consumers/`, `_SUCCESS`, dot files or in-flight `._COPYING_`
+    * uploads), partition subdirectories included. A file's name is its
+    * decoded path under the feed (`a.json`, `p=2/x.json`), the name
+    * [[fileNames]] gives a source-log entry. File-count-sized FS
+    * metadata walk, no data read — the listing [[prune]] deletes from
+    * and [[CdcPipeline.consumerLag]] measures against. */
+  def dataFiles(spark: SparkSession, feedDir: String): Map[String, Long] =
+    listing(spark, feedDir).map { case (name, s) => name -> s.getLen }.toMap
+
+  private def listing(spark: SparkSession,
+      feedDir: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     val dir = new org.apache.hadoop.fs.Path(feedDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !Bridge.hiddenName(s.getPath.getName))
-      .map(s => canonicalLeaf(s.getPath.toString) -> s.getLen).toMap
+    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.filterNot(s => Bridge.hiddenName(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    if (!fs.exists(dir)) Nil
+    else {
+      val name = fileNames(spark, feedDir)
+      walk(dir).flatMap(s => name(s.getPath).map(_ -> s))
+    }
   }
 
-  /** Canonical LITERAL leaf name of a file-path string that may arrive
-    * in either of Spark's two representations: the URI-encoded form
-    * (`SparkPath` — what the checkpoint source log's `"path"` field
-    * and `_metadata.file_path` both carry on Spark 4.1, e.g.
-    * `with%20space.json`) or a raw literal form (an external tool's
-    * hand-built path). Decode through `java.net.URI` when the string
-    * parses as one (URI path decoding maps `%20`→space, `%2520`→`%20`;
-    * it does NOT form-decode `+` — that's URLDecoder's rule, not
-    * URI's), fall back to the raw leaf when it doesn't (a literal
-    * space/bracket makes the URI ctor throw — but then the string IS
-    * the literal name already). Encoding is injective, so two distinct
-    * files never converge to one canonical leaf.
-    *
-    * EVERY membership test between a processed-file set and a feed
-    * file must pass BOTH sides through this one function
-    * ([[CdcPipeline.sourceLogPaths]] builds the sets, [[prune]] tests
-    * them) — one-sided decoding makes encoded-name files permanently
-    * unprunable (fail-safe but unbounded feed growth). */
-  private[graft] def canonicalLeaf(p: String): String =
-    scala.util.Try(
-      new org.apache.hadoop.fs.Path(new java.net.URI(p)).getName)
-      .getOrElse(new org.apache.hadoop.fs.Path(p).getName)
+  /** A file's name under the feed, as [[dataFiles]] keys it: its
+    * decoded path relative to the feed directory, None outside it. A
+    * qualified listing path and a source-log entry (URI-encoded in the
+    * log, decoded by Spark's `SparkPath`) name one file the same way,
+    * so `with space.json` and `pct%20enc.json` match on both sides,
+    * while two files sharing a leaf in different partitions stay apart. */
+  private[graft] def fileNames(spark: SparkSession,
+      feedDir: String): org.apache.hadoop.fs.Path => Option[String] = {
+    val dir = new org.apache.hadoop.fs.Path(feedDir)
+    val root = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(dir).toUri.getPath.stripSuffix("/") + "/"
+    p => Some(p.toUri.getPath).filter(_.startsWith(root)).map(_.drop(root.length))
+  }
 
-  /** FEED RETENTION: delete feed files whose every event is at or
-    * below the mirror's applied-LSN watermark. This is the engine's
-    * half of bounding a long-lived mirror's metadata — Spark's
-    * file-source compact log retains every file entry FOREVER
-    * (`CompactibleFileStreamLog.shouldRetain` is a constant `true` in
-    * OSS Spark, and `maxFileAge` only bounds the in-memory seen-map),
-    * so the only way to a bytes plateau is to shrink the FEED and
-    * rotate the checkpoint: prune applied files, then restart the
-    * mirror with a FRESH `checkpointDir`. The new source log lists
-    * only surviving files — O(retention window), not O(history) — and
-    * any overlap re-read after rotation is absorbed by the sink's
-    * idempotent by-PK merge (re-applying an already-applied change is
-    * a no-op), so rotation is safe at any watermark ≤ the committed
-    * one. Call with the query STOPPED.
+  /** FEED RETENTION: delete the feed data files named in `files`
+    * ([[dataFiles]] names) and nothing else — FS metadata only, no data
+    * read. This is the engine's half of bounding a long-lived mirror's
+    * metadata — Spark's file-source compact log retains every file
+    * entry FOREVER (`CompactibleFileStreamLog.shouldRetain` is a
+    * constant `true` in OSS Spark, and `maxFileAge` only bounds the
+    * in-memory seen-map), so the only way to a bytes plateau is to
+    * shrink the FEED and rotate the checkpoint: prune applied files,
+    * then restart the mirror with a FRESH `checkpointDir`. The new
+    * source log lists only surviving files — O(retention window), not
+    * O(history) — and any surviving file the mirror already applied is
+    * re-read and absorbed by the sink's idempotent by-PK merge. Call
+    * with the query STOPPED. [[CdcPipeline.rotateCheckpoint]] passes
+    * the files every registered consumer has committed.
     *
-    * One feed scan computes per-file max LSN (file-count-sized driver
-    * result); returns (filesDeleted, filesKept).
-    *
-    * `onlyFiles` ([[canonicalLeaf]] names) further gates deletion to
-    * files every consumer PROVABLY processed —
-    * [[CdcPipeline.rotateCheckpoint]] passes the intersection of the
-    * registered consumers' committed source-log file sets, so a feed
-    * file that landed out of LSN order (old LSNs, new mtime — never
-    * read by the stopped mirror) survives the prune no matter where
-    * the watermark sits. None = LSN-only (the caller owns the
-    * in-order guarantee). */
-  def prune(spark: SparkSession, feedDir: String, upToLsn: Long,
-      onlyFiles: Option[Set[String]] = None): (Long, Long) = {
-    val perFile = readAll(spark, feedDir)
-      .select(col("lsn"), expr("_metadata.file_path").as("path"))
-      .groupBy("path").agg(max("lsn").as("maxLsn"))
-      .collect()
-    def processed(path: String): Boolean =
-      onlyFiles.forall(_.contains(canonicalLeaf(path)))
-    val (dead, live) = perFile.partition(r =>
-      r.getLong(1) <= upToLsn && processed(r.getString(0)))
-    val conf = spark.sparkContext.hadoopConfiguration
-    dead.foreach { r =>
-      // _metadata.file_path is a URI string, but feed paths may contain
-      // characters java.net.URI rejects (spaces, brackets) — hand the
-      // raw string to Hadoop's Path, which parses schemes leniently
-      val p = new org.apache.hadoop.fs.Path(r.getString(0))
-      p.getFileSystem(conf).delete(p, false)
+    * Returns (filesDeleted, filesKept) over the feed's data files. */
+  def prune(spark: SparkSession, feedDir: String, files: Set[String]): (Long, Long) = {
+    val (dead, live) = listing(spark, feedDir).partition { case (name, _) => files(name) }
+    dead.foreach { case (_, s) =>
+      s.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(s.getPath, false)
     }
-    (dead.length.toLong, live.length.toLong)
+    (dead.size.toLong, live.size.toLong)
   }
 }

@@ -39,27 +39,22 @@ import graft.operators.IndexStore
 object IndexedIngest {
 
   /** This query incarnation's identity: the id Spark itself wrote to
-    * `<checkpointDir>/metadata` at query start — STABLE across
-    * restarts of the same checkpoint (replays dedupe), FRESH after a
-    * drop-recreate (new incarnation's batches never collide with the
-    * old one's landed files). Loud when absent: silently falling back
-    * to an untagged name would re-open the drop-recreate loss window
-    * this tag exists to close. */
+    * the checkpoint's `metadata` file at query start, read with Spark's
+    * own reader ([[org.apache.spark.sql.graftbridge.Bridge.streamQueryId]])
+    * — STABLE across restarts of the same checkpoint (replays dedupe),
+    * FRESH after a drop-recreate (new incarnation's batches never
+    * collide with the old one's landed files). Loud when absent:
+    * silently falling back to an untagged name would re-open the
+    * drop-recreate loss window this tag exists to close. */
   private[streaming] def incarnationTag(
       spark: org.apache.spark.sql.SparkSession, checkpointDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no streaming-query metadata at $p — incarnationTag must be read " +
-        "under a RUNNING query (Spark writes the file at query start)")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(body) match {
-      case Some(m) => m.group(1).replace("-", "").take(8)
-      case None => throw new IllegalStateException(
-        s"unrecognized streaming-query metadata format at $p: ${body.take(80)}")
-    }
+    val id = org.apache.spark.sql.graftbridge.Bridge.streamQueryId(spark, checkpointDir)
+    require(id.isDefined,
+      s"no streaming-query metadata in checkpoint $checkpointDir — incarnationTag must be " +
+        "read under a RUNNING query (Spark writes the file at query start)")
+    id.flatMap(Option(_)).filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
+      s"streaming-query metadata in checkpoint $checkpointDir has no query id"))
+      .replace("-", "").take(8)
   }
 
   private def targetName(runTag: String, batchId: Long): String =

@@ -93,10 +93,11 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
   private def appliedPath = new Path(s"$root/_graft_applied")
 
   /** Record the highest fully-applied LSN (monotonic — a replayed
-    * batch's lower max never regresses it). The watermark is what
-    * makes feed retention self-serve: [[CdcPipeline.rotateCheckpoint]]
-    * prunes at `appliedLsn - safety` without the operator tracking
-    * positions out of band.
+    * batch's lower max never regresses it): the store's
+    * confirmed-flush position, read by the monitor's
+    * `applied_watermark` row. Feed retention does not read it —
+    * [[CdcPipeline.rotateCheckpoint]] deletes by the consumers' commit
+    * logs.
     *
     * `commitTs` (the watermark event's source commit timestamp, when
     * the apply path has it) is the "applied as of <source time>" half
@@ -111,10 +112,11 @@ class KeyedParquetStore(val root: String, val nBuckets: Int = 16) {
     * (`<applied lsn> [<stamp lsn> <stamp millis>]`), written as one
     * OVERWRITING atomic rename from a per-call-unique tmp
     * ([[AtomicFiles]]): a concurrent reader (Monitor.replicationInfra,
-    * rotateIfOversized on a cadence thread) never observes it absent
-    * or half-updated, and two mirrors sharing one store write
-    * CONCURRENTLY — racing lower-LSN writers are the benign race (a
-    * lower watermark only means extra idempotent replay, never loss). */
+    * [[CdcPipeline.timeLagSeconds]]) never observes it absent or
+    * half-updated, and two mirrors sharing one store write
+    * CONCURRENTLY — racing lower-LSN writers are the benign race (the
+    * watermark reads lower until the next apply, never past an
+    * unapplied change). */
   def recordAppliedLsn(spark: SparkSession, lsn: Long,
       commitTs: Option[java.sql.Timestamp] = None): Unit = {
     val prev = applied(spark)

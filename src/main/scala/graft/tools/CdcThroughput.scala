@@ -183,7 +183,7 @@ object CdcThroughput {
 
   /** The x40 RETENTION measurement (r11 verdict ask #5): two
     * equal-size streaming phases with FEED PRUNING + CHECKPOINT
-    * ROTATION between them ([[ChangeFeed.prune]]). Background: the
+    * ROTATION between them ([[CdcPipeline.rotateCheckpoint]]). Background: the
     * file-source compact log retains every entry forever
     * (`CompactibleFileStreamLog.shouldRetain` ≡ true in OSS Spark —
     * r11's claim that `maxFileAge` ages entries out was wrong), so
@@ -191,11 +191,9 @@ object CdcThroughput {
     * linear floor (base/x10/x20 trend). With rotation the phase-2
     * checkpoint re-lists only the surviving feed tail: its final
     * footprint must land at phase-1's O(window) size instead of 2×.
-    * The prune watermark deliberately trails the applied watermark by
-    * two batches, so the rotated mirror RE-READS two files and the
-    * by-PK idempotent merge must absorb them — the rotation-safety
-    * claim, exercised at full scale (reconciliation requires
-    * exactly-once totals). */
+    * The rotation deletes exactly the files the mirror's commit log
+    * records as applied, so phase 2 re-reads none of phase 1 and
+    * reconciliation requires exactly-once totals across it. */
   def measureRotate(spark: SparkSession, halfRows: Long = 400000L,
       batchSize: Int = 1000): Seq[(String, Double)] = {
     val work = java.nio.file.Files.createTempDirectory("graft_cdc_rotate").toString
@@ -217,8 +215,7 @@ object CdcThroughput {
       // A real feed lands in COMMIT ORDER: each file is a contiguous
       // LSN window (the decoder drains the WAL sequentially). Range-
       // partition by lsn to reproduce that layout — a round-robin
-      // repartition would scatter near-max LSNs into every file and
-      // make the watermark prune a no-op (nothing is fully applied).
+      // repartition would scatter every LSN range over every file.
       ChangeFeed.publish(
         changes.repartitionByRange(nFiles, col("lsn")), s"$work/feed")
       schema
@@ -240,13 +237,10 @@ object CdcThroughput {
     val (b1, f1) = dirStats(s"$work/ckpt")
     // rotation through the PRODUCT operation (r12 ask #6 — the bench
     // drives CdcPipeline.rotateCheckpoint, not hand-rolled prune
-    // choreography): the applied watermark comes from the store's own
-    // sidecar, the safety margin holds back two batches so the rotated
-    // mirror re-reads those files and the merge must absorb them, and
-    // the SAME checkpoint path restarts fresh
-    val rotation = CdcPipeline.rotateCheckpoint(spark, store,
-      s"$work/feed", "cdc_rotate_mirror", s"$work/ckpt",
-      safetyLsns = 2L * batchSize)
+    // choreography): the mirror's commit log names the files to
+    // delete, and the SAME checkpoint path restarts fresh
+    val rotation = CdcPipeline.rotateCheckpoint(spark,
+      s"$work/feed", "cdc_rotate_mirror", s"$work/ckpt")
     require(rotation.rotated, s"rotation skipped: ${rotation.skipped}")
     val (pruned, kept) = (rotation.prunedFiles, rotation.keptFiles)
     val s2 = publishPhase(halfRows + 1L)
@@ -274,7 +268,7 @@ object CdcThroughput {
   /** Multi-consumer retention measured END-TO-END (r14): two mirrors
     * tailing ONE feed — the reference's several-slots-one-WAL shape.
     * Phase 1: both consume, A's rotation prunes at the registry
-    * intersection (B caught up ⇒ near-full prune). Phase 2 lands while
+    * intersection (B caught up ⇒ full prune). Phase 2 lands while
     * B is DEAD: A's rotation keeps everything B has not committed (the
     * retention drag made measurable), the byte-budget policy then
     * invalidates B (`max_slot_wal_keep_size` analogue), and A's next
@@ -318,9 +312,8 @@ object CdcThroughput {
     val s1 = publishPhase(1L)
     val wA1 = run("mirror_a", s"$work/ckptA", storeA, s1)
     val wB1 = run("mirror_b", s"$work/ckptB", storeB, s1)
-    // both caught up: the intersection gate prunes near-fully
-    val rotBoth = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
-      "mirror_a", s"$work/ckptA", safetyLsns = 2L * batchSize)
+    // both caught up: the intersection gate prunes every file
+    val rotBoth = CdcPipeline.rotateCheckpoint(spark, feed, "mirror_a", s"$work/ckptA")
     require(rotBoth.rotated, s"rotation skipped: ${rotBoth.skipped}")
     run("mirror_a", s"$work/ckptA", storeA, s1) // re-commit survivors
     // phase 2 with B dead: the laggard's drag must hold the feed
@@ -328,8 +321,7 @@ object CdcThroughput {
     val wA2 = run("mirror_a", s"$work/ckptA", storeA, s2)
     val bHeld = CdcPipeline.consumerLag(spark, feed)
       .find(_.name == "mirror_b").map(_.heldFiles).getOrElse(-1L)
-    val rotLag = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
-      "mirror_a", s"$work/ckptA", safetyLsns = 2L * batchSize)
+    val rotLag = CdcPipeline.rotateCheckpoint(spark, feed, "mirror_a", s"$work/ckptA")
     require(rotLag.rotated, s"rotation skipped: ${rotLag.skipped}")
     run("mirror_a", s"$work/ckptA", storeA, s2)
     // budget invalidation unblocks retention — TWO-STRIKE policy:
@@ -340,8 +332,7 @@ object CdcThroughput {
     val inv = CdcPipeline
       .invalidateConsumersOverBudget(spark, feed, maxHeldBytes = 1L)
     require(inv.map(_.name) == Seq("mirror_b"), s"invalidated: $inv")
-    val rotFree = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
-      "mirror_a", s"$work/ckptA", safetyLsns = 2L * batchSize)
+    val rotFree = CdcPipeline.rotateCheckpoint(spark, feed, "mirror_a", s"$work/ckptA")
     require(rotFree.rotated, s"rotation skipped: ${rotFree.skipped}")
     val rowsA = storeA.read(spark, "orders").count()
     val rowsB = storeB.read(spark, "orders").count()

@@ -49,6 +49,50 @@ object Bridge {
   def hiddenName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** The files a streaming checkpoint records as read by a committed
+    * batch, read through Spark's own logs: every `sources/<n>` log's
+    * `FileStreamSourceLog.allFiles()`, kept to entries whose batch id is
+    * at most `CommitLog.getLatestBatchId`. A source log entry is written
+    * when a batch is planned and the commit only after its sink returned,
+    * so a file planned into an uncommitted batch is left out. Paths come
+    * back decoded (the log stores them URI-encoded). Empty when no batch
+    * committed; a log Spark cannot read throws what Spark throws. The
+    * logs' directories are checked first, because opening a log creates
+    * its directory. */
+  def committedSourceFiles(spark: org.apache.spark.sql.SparkSession,
+      checkpointDir: String): Seq[org.apache.hadoop.fs.Path] = {
+    import org.apache.spark.sql.execution.streaming.checkpointing.CommitLog
+    import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog
+    val root = new org.apache.hadoop.fs.Path(checkpointDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dir(name: String) = Option(new org.apache.hadoop.fs.Path(root, name)).filter(fs.exists)
+    val committed = dir("commits").flatMap(d => new CommitLog(spark, d.toString).getLatestBatchId())
+    (for (last <- committed.toSeq; sources <- dir("sources").toSeq;
+          log <- fs.listStatus(sources).toSeq if log.isDirectory;
+          entry <- new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark,
+            log.getPath.toString).allFiles() if entry.batchId <= last)
+      yield entry.sparkPath.toPath)
+  }
+
+  /** Whether `e`, or a cause of it, is Spark's refusal of a metadata log
+    * written in a format version it does not read. */
+  def unsupportedLogVersion(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: org.apache.spark.SparkThrowable =>
+        Option(s.getCondition).exists(_.startsWith("INVALID_LOG_VERSION"))
+      case _ => false
+    }
+
+  /** The query id Spark wrote to a streaming checkpoint's `metadata`
+    * file when the query first started, read with Spark's own
+    * `StreamMetadata.read`; None when the file is absent. */
+  def streamQueryId(spark: org.apache.spark.sql.SparkSession,
+      checkpointDir: String): Option[String] =
+    org.apache.spark.sql.execution.streaming.runtime.StreamMetadata
+      .read(new org.apache.hadoop.fs.Path(checkpointDir, "metadata"),
+        spark.sparkContext.hadoopConfiguration)
+      .map(_.id)
+
   /** The schema `spark.read.parquet(path)` would infer, read on the
     * driver from the one footer Spark's inference reads (a summary
     * file first, else the first data file by path), so a load runs no

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.streaming.Trigger
@@ -12,15 +11,15 @@ import graft.streaming.{CdcPipeline, ChangeEvent, ChangeFeed, KeyedParquetStore}
 /** File-based CDC end-to-end: change batches landed as JSON files are
   * tailed by a readStream and merged into the target store, with
   * maxFilesPerTrigger bounding each micro-batch. */
-class ChangeFeedSpec extends AnyFunSuite {
+class ChangeFeedSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private def ts(s: Long) = new Timestamp(1700000000000L + s * 1000)
 
   test("file feed → stream → store converges; trigger bound respected") {
     import spark.implicits._
-    val feed = Files.createTempDirectory("feed").toString
-    val root = Files.createTempDirectory("feed_store").toString
-    val ckpt = Files.createTempDirectory("feed_ckpt").toString
+    val feed = tempDir("feed")
+    val root = tempDir("feed_store")
+    val ckpt = tempDir("feed_ckpt")
     val store = new KeyedParquetStore(root, nBuckets = 4)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -65,9 +64,9 @@ class ChangeFeedSpec extends AnyFunSuite {
 
   test("checkpoint recovery: restart consumes only unseen files (C5 durability)") {
     import spark.implicits._
-    val feed = Files.createTempDirectory("feed2").toString
-    val root = Files.createTempDirectory("feed2_store").toString
-    val ckpt = Files.createTempDirectory("feed2_ckpt").toString
+    val feed = tempDir("feed2")
+    val root = tempDir("feed2_store")
+    val ckpt = tempDir("feed2_ckpt")
     val store = new KeyedParquetStore(root, nBuckets = 4)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -107,9 +106,9 @@ class ChangeFeedSpec extends AnyFunSuite {
   test("transactional publish: no transaction spans two files, files range in " +
     "commit order, micro-batches apply whole transactions in order") {
     import spark.implicits._
-    val feed = Files.createTempDirectory("feed_txn").toString
-    val root = Files.createTempDirectory("feed_txn_store").toString
-    val ckpt = Files.createTempDirectory("feed_txn_ckpt").toString
+    val feed = tempDir("feed_txn")
+    val root = tempDir("feed_txn_store")
+    val ckpt = tempDir("feed_txn_ckpt")
     val store = new KeyedParquetStore(root, nBuckets = 4)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
@@ -208,7 +207,7 @@ class ChangeFeedSpec extends AnyFunSuite {
       spark.sparkContext.setJobGroup(gid, "publishTransactional job count",
         interruptOnCancel = false)
       try {
-        val feed = Files.createTempDirectory(s"feed_jobs_$nFiles").toString
+        val feed = tempDir(s"feed_jobs_$nFiles")
         ChangeFeed.publishTransactional(events, feed, nFiles)
       } finally spark.sparkContext.clearJobGroup()
       // the status store ingests listener events asynchronously — poll
@@ -230,7 +229,7 @@ class ChangeFeedSpec extends AnyFunSuite {
 
   test("repeated publishes into one feed keep lexical name order = commit order") {
     import spark.implicits._
-    val feed = Files.createTempDirectory("feed_seq").toString
+    val feed = tempDir("feed_seq")
     def batch(txnBase: Int, lsnBase: Long) = (0 until 60).map { i =>
       ChangeEvent(lsnBase + i, ts((txnBase + i / 15).toLong), "U", "t",
         (i % 10).toLong, s"""{"id":${i % 10},"v":"v${lsnBase + i}"}""")

@@ -17,8 +17,8 @@ import graft.streaming.{CdcPipeline, ChangeFeed, KeyedParquetStore}
   * true; `maxFileAge` trims only the in-memory seen-map). The
   * contract under test:
   *
-  *  1. pruning at a watermark ≤ the committed one deletes exactly the
-  *     fully-applied feed files;
+  *  1. rotation deletes exactly the feed files every consumer's commit
+  *     log records as applied, and nothing a consumer never read;
   *  2. a mirror restarted on a FRESH checkpoint over the pruned feed
   *     re-reads the surviving tail, and the idempotent by-PK merge
   *     absorbs the overlap — the store converges to exactly-once
@@ -28,7 +28,7 @@ import graft.streaming.{CdcPipeline, ChangeFeed, KeyedParquetStore}
   *     full history (the x40_rotate block of CDC_BENCH.json measures
   *     the same at 800 batches).
   */
-class CheckpointRotationSpec extends AnyFunSuite {
+class CheckpointRotationSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val rowSchema = StructType(Seq(
@@ -56,16 +56,18 @@ class CheckpointRotationSpec extends AnyFunSuite {
 
   test("prune + rotate: overlap re-read absorbed, exactly-once totals, " +
     "rotated source log lists only the surviving tail") {
-    val work = Files.createTempDirectory("graft_rotate_spec").toString
+    val work = tempDir("graft_rotate_spec")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     // phase 1: 10 feed files of 100 rows each
-    (0 until 10).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
+    (0 until 8).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
+    val firstEight = ChangeFeed.dataFiles(spark, feed).keySet
+    (8 until 10).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
     runMirror(feed, s"$work/ckpt1", store)
     assert(store.read(spark, "t").count() == 1000L)
-    // prune TWO batches short of the applied watermark (999): files
-    // holding only lsn <= 799 go, the last two files survive
-    val (pruned, kept) = ChangeFeed.prune(spark, feed, upToLsn = 799L)
+    // prune all but the last two files: both are applied, so the
+    // rotated mirror re-reads them and the merge must absorb them
+    val (pruned, kept) = ChangeFeed.prune(spark, feed, firstEight)
     assert(pruned == 8L && kept == 2L, s"pruned=$pruned kept=$kept")
     // phase 2: two more files, then a mirror on a FRESH checkpoint —
     // it re-reads the two surviving (already-applied) files too
@@ -94,10 +96,10 @@ class CheckpointRotationSpec extends AnyFunSuite {
     assert(listedFiles(s"$work/ckpt1") >= 10, "unrotated log lists full history")
   }
 
-  test("rotateCheckpoint API (r12 ask #6): one call stops, prunes at the " +
-    "store's own watermark, resets the checkpoint; same ckpt dir restarts " +
+  test("rotateCheckpoint API (r12 ask #6): one call stops, prunes every " +
+    "committed file, resets the checkpoint; same ckpt dir restarts " +
     "on the surviving tail with exactly-once totals") {
-    val work = Files.createTempDirectory("graft_rotate_api").toString
+    val work = tempDir("graft_rotate_api")
     val feed = s"$work/feed"
     val ckpt = s"$work/ckpt" // ONE checkpoint path across the rotation
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
@@ -105,33 +107,31 @@ class CheckpointRotationSpec extends AnyFunSuite {
     runMirror(feed, ckpt, store)
     // applyBatch maintained the applied watermark — no out-of-band LSN
     assert(store.appliedLsn(spark).contains(999L))
-    // margin of 200 LSNs: files with maxLsn <= 799 pruned, 2 kept
-    val r = CdcPipeline.rotateCheckpoint(spark, store, feed,
-      "rotation_mirror", ckpt, safetyLsns = 200L)
-    assert(r == CdcPipeline.Rotation(8L, 2L), s"got $r")
+    // every file is committed, so every file goes
+    val r = CdcPipeline.rotateCheckpoint(spark, feed, "rotation_mirror", ckpt)
+    assert(r == CdcPipeline.Rotation(10L, 0L), s"got $r")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt)),
       "rotation must reset the checkpoint")
-    // phase 2 on the SAME checkpoint path: re-reads the 2 surviving
-    // (already-applied) files plus 2 new ones
+    // phase 2 on the SAME checkpoint path: reads the 2 new files
     (10 until 12).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
     runMirror(feed, ckpt, store)
     val rows = store.read(spark, "t")
     assert(rows.count() == 1200L && rows.select("id").distinct().count() == 1200L,
       "exactly-once totals across the rotation")
     assert(store.appliedLsn(spark).contains(1199L))
-    // rotating with NOTHING applied is a visible skip (fresh store)
-    val empty = new KeyedParquetStore(s"$work/store2", nBuckets = 4)
-    val skip = CdcPipeline.rotateCheckpoint(spark, empty, feed,
-      "rotation_mirror", ckpt)
+    // rotating with NOTHING committed is a visible skip (fresh checkpoint)
+    val fresh = s"$work/ckpt_fresh"
+    Files.createDirectories(java.nio.file.Paths.get(fresh))
+    val skip = CdcPipeline.rotateCheckpoint(spark, feed, "rotation_mirror", fresh)
     assert(!skip.rotated && skip.prunedFiles == 0L &&
-      skip.skipped.exists(_.contains("nothing applied")), s"got $skip")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt)),
-      "no-applied rotation must not delete the checkpoint")
+      skip.skipped.exists(_.contains("no committed batches")), s"got $skip")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fresh)),
+      "no-committed rotation must not delete the checkpoint")
   }
 
   test("out-of-LSN-order arrival: a late feed file below the watermark " +
     "that the mirror never read SURVIVES rotation (no data loss)") {
-    val work = Files.createTempDirectory("graft_rotate_late").toString
+    val work = tempDir("graft_rotate_late")
     val feed = s"$work/feed"
     val ckpt = s"$work/ckpt"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
@@ -143,7 +143,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     // a decoder backfill lands the MISSING 200-299 file AFTER the
     // mirror stopped: old LSNs, new mtime — never processed
     publishBatch(feed, 200 until 300)
-    val r = CdcPipeline.rotateCheckpoint(spark, store, feed,
+    val r = CdcPipeline.rotateCheckpoint(spark, feed,
       "rotation_mirror", ckpt)
     // the two processed files go; the unread backfill file — although
     // its max LSN (299) is under the watermark — must survive
@@ -158,7 +158,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
 
   test("rotateIfOversized: under-budget checkpoints are untouched; an " +
     "over-budget one rotates through the same API") {
-    val work = Files.createTempDirectory("graft_rotate_policy").toString
+    val work = tempDir("graft_rotate_policy")
     val feed = s"$work/feed"
     val ckpt = s"$work/ckpt"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
@@ -167,11 +167,11 @@ class CheckpointRotationSpec extends AnyFunSuite {
     val bytes = CdcPipeline.checkpointBytes(spark, ckpt)
     assert(bytes > 0L)
     // generous budget: the policy must not stop/delete anything
-    assert(CdcPipeline.rotateIfOversized(spark, store, feed,
+    assert(CdcPipeline.rotateIfOversized(spark, feed,
       "rotation_mirror", ckpt, maxCheckpointBytes = bytes * 10).isEmpty)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt)))
     // 1-byte budget: rotation fires, feed pruned at the watermark
-    val rotated = CdcPipeline.rotateIfOversized(spark, store, feed,
+    val rotated = CdcPipeline.rotateIfOversized(spark, feed,
       "rotation_mirror", ckpt, maxCheckpointBytes = 1L)
     assert(rotated.contains(CdcPipeline.Rotation(5L, 0L)), s"got $rotated")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt)))
@@ -183,7 +183,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
   test("multi-consumer feed (r13 ask #1): rotating mirror A prunes NOTHING " +
     "lagging mirror B hasn't committed; once B catches up the remainder " +
     "prunes; both mirrors exactly-once") {
-    val work = Files.createTempDirectory("graft_rotate_multi").toString
+    val work = tempDir("graft_rotate_multi")
     val feed = s"$work/feed"
     val storeA = new KeyedParquetStore(s"$work/storeA", nBuckets = 4)
     val storeB = new KeyedParquetStore(s"$work/storeB", nBuckets = 4)
@@ -204,7 +204,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     assert(storeA.appliedLsn(spark).contains(499L))
     // A rotates at its own full watermark — but only the 2 files B has
     // COMMITTED may go; the 3 B still needs survive
-    val r1 = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
+    val r1 = CdcPipeline.rotateCheckpoint(spark, feed,
       "mirror_a", s"$work/ckptA")
     assert(r1 == CdcPipeline.Rotation(2L, 3L), s"got $r1")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/ckptB")),
@@ -219,7 +219,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     assert(store2Rows(storeA) == (500L, 500L))
     // now EVERY registered consumer has committed the survivors —
     // rotating A again prunes the remainder
-    val r2 = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
+    val r2 = CdcPipeline.rotateCheckpoint(spark, feed,
       "mirror_a", s"$work/ckptA")
     assert(r2 == CdcPipeline.Rotation(3L, 0L), s"got $r2")
     assert(store2Rows(storeA) == (500L, 500L) && store2Rows(storeB) == (500L, 500L))
@@ -239,7 +239,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
   test("stale-consumer invalidation (r14, max_slot_wal_keep_size analogue): " +
     "lag is visible, budget invalidation unblocks pruning, and the " +
     "invalidated mirror fails LOUDLY until rebuilt + acknowledged") {
-    val work = Files.createTempDirectory("graft_rotate_stale").toString
+    val work = tempDir("graft_rotate_stale")
     val feed = s"$work/feed"
     val storeA = new KeyedParquetStore(s"$work/storeA", nBuckets = 4)
     val storeB = new KeyedParquetStore(s"$work/storeB", nBuckets = 4)
@@ -263,7 +263,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     assert(lag0 == Map("mirror_a" -> ((5L, 0L)), "mirror_b" -> ((1L, 4L))),
       s"got $lag0")
     // A's rotation is gated by dead B: only B's one committed file goes
-    val r1 = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
+    val r1 = CdcPipeline.rotateCheckpoint(spark, feed,
       "mirror_a", s"$work/ckptA")
     assert(r1 == CdcPipeline.Rotation(1L, 4L), s"got $r1")
     run("mirror_a", s"$work/ckptA", storeA) // re-commit the survivors
@@ -298,7 +298,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     assert(post("feed_consumers")._1 == "WARNING" &&
       post("feed_consumers")._2.contains("INVALIDATED"), s"got $post")
     // with B no longer gating, A's next rotation drains the feed
-    val r2 = CdcPipeline.rotateCheckpoint(spark, storeA, feed,
+    val r2 = CdcPipeline.rotateCheckpoint(spark, feed,
       "mirror_a", s"$work/ckptA")
     assert(r2 == CdcPipeline.Rotation(4L, 0L), s"got $r2")
     // the invalidated mirror CANNOT silently resume: start throws,
@@ -308,7 +308,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
     }
     assert(boom.getMessage.contains("INVALIDATED") &&
       boom.getMessage.contains("over budget"))
-    val rb = CdcPipeline.rotateCheckpoint(spark, storeB, feed,
+    val rb = CdcPipeline.rotateCheckpoint(spark, feed,
       "mirror_b", s"$work/ckptB")
     assert(!rb.rotated && rb.skipped.exists(_.contains("invalidated")),
       s"got $rb")
@@ -329,7 +329,7 @@ class CheckpointRotationSpec extends AnyFunSuite {
   test("budget-invalidation exemptions: a bootstrapping consumer (zero " +
     "committed batches ever) is never invalidated, and an under-budget " +
     "recovery clears a standing strike") {
-    val work = Files.createTempDirectory("graft_rotate_grace").toString
+    val work = tempDir("graft_rotate_grace")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     publishBatch(feed, 0 until 100)
@@ -378,13 +378,12 @@ class CheckpointRotationSpec extends AnyFunSuite {
 
   test("special-character feed file names (encoded-form leaves) prune " +
     "end-to-end — both comparison sides share one canonical codec") {
-    val work = Files.createTempDirectory("graft_rotate_enc").toString
+    val work = tempDir("graft_rotate_enc")
     val feed = s"$work/feed"
     Files.createDirectories(java.nio.file.Paths.get(feed))
     // a hand-written decoder file with a space AND a literal percent
-    // sequence in its name — Spark represents both encoded
-    // (with%20space / pct%2520enc) in the source log and in
-    // _metadata.file_path
+    // sequence in its name — Spark's source log records both encoded
+    // (with%20space / pct%2520enc)
     Seq("with space.json" -> 1L, "pct%20enc.json" -> 2L).foreach {
       case (name, lsn) =>
         Files.write(java.nio.file.Paths.get(feed, name),
@@ -394,27 +393,31 @@ class CheckpointRotationSpec extends AnyFunSuite {
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     runMirror(feed, s"$work/ckpt", store)
     assert(store.read(spark, "t").count() == 12L)
-    // full-watermark rotation: ALL THREE files must prune — a one-sided
-    // decode would leave the special-character files unprunable forever
-    val r = CdcPipeline.rotateCheckpoint(spark, store, feed,
+    // ALL THREE committed files must prune, and really leave the feed —
+    // a one-sided decode would leave the special-character files
+    // unprunable forever
+    val r = CdcPipeline.rotateCheckpoint(spark, feed,
       "rotation_mirror", s"$work/ckpt")
     assert(r == CdcPipeline.Rotation(3L, 0L), s"got $r")
+    assert(ChangeFeed.dataFiles(spark, feed).isEmpty,
+      s"pruned files left on the feed: ${ChangeFeed.dataFiles(spark, feed).keySet}")
   }
 
   test("degraded source log is VISIBLE (r13 ask #3): unknown version " +
     "header or unparsable entry skips with a reason; rotateIfOversized " +
     "surfaces budget-exceeded-but-skipped") {
-    val work = Files.createTempDirectory("graft_rotate_degraded").toString
+    val work = tempDir("graft_rotate_degraded")
     val feed = s"$work/feed"
     val ckpt = s"$work/ckpt"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     (0 until 3).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
     runMirror(feed, ckpt, store)
-    // a format-drifted log file lands in sources/0 (e.g. a future Spark
-    // writes v2): rotation must SKIP and say why, never silently no-op
-    val drifted = java.nio.file.Paths.get(s"$ckpt/sources/0/99")
+    // a format-drifted log file lands in sources/0 as the next batch
+    // (e.g. a future Spark writes v2): rotation must SKIP and say why,
+    // never silently no-op
+    val drifted = java.nio.file.Paths.get(s"$ckpt/sources/0/3")
     Files.write(drifted, "v2\n{\"some\":\"future-format\"}".getBytes("UTF-8"))
-    val r = CdcPipeline.rotateCheckpoint(spark, store, feed,
+    val r = CdcPipeline.rotateCheckpoint(spark, feed,
       "rotation_mirror", ckpt)
     assert(!r.rotated && r.skipped.exists(_.contains("version")), s"got $r")
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt)) &&
@@ -422,31 +425,76 @@ class CheckpointRotationSpec extends AnyFunSuite {
       "degraded rotation must leave feed and checkpoint untouched")
     // the policy wrapper makes the same state distinguishable from
     // healthy-under-budget: budget exceeded AND rotation skipped
-    val policy = CdcPipeline.rotateIfOversized(spark, store, feed,
+    val policy = CdcPipeline.rotateIfOversized(spark, feed,
       "rotation_mirror", ckpt, maxCheckpointBytes = 1L)
     assert(policy.exists(p => !p.rotated && p.skipped.nonEmpty), s"got $policy")
     // unparsable-entry drift (right version, wrong shape) is equally loud
     Files.write(drifted, "v1\n{\"noPathField\":42}".getBytes("UTF-8"))
-    val r2 = CdcPipeline.rotateCheckpoint(spark, store, feed,
+    val r2 = CdcPipeline.rotateCheckpoint(spark, feed,
       "rotation_mirror", ckpt)
     assert(!r2.rotated && r2.skipped.exists(_.contains("unparsable")), s"got $r2")
     // cured log (drift file removed): the same call rotates normally
     Files.delete(drifted)
-    val r3 = CdcPipeline.rotateCheckpoint(spark, store, feed,
+    val r3 = CdcPipeline.rotateCheckpoint(spark, feed,
       "rotation_mirror", ckpt)
     assert(r3 == CdcPipeline.Rotation(3L, 0L), s"got $r3")
   }
 
   test("prune at the full committed watermark removes every applied file " +
     "and an idle rotated mirror applies nothing") {
-    val work = Files.createTempDirectory("graft_rotate_spec2").toString
+    val work = tempDir("graft_rotate_spec2")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
     (0 until 5).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
     runMirror(feed, s"$work/ckpt1", store)
-    val (pruned, kept) = ChangeFeed.prune(spark, feed, upToLsn = 499L)
+    val (pruned, kept) = ChangeFeed.prune(spark, feed, ChangeFeed.dataFiles(spark, feed).keySet)
     assert(pruned == 5L && kept == 0L)
     runMirror(feed, s"$work/ckpt2", store)
     assert(store.read(spark, "t").count() == 500L)
+  }
+
+  test("same leaf name in a partitioned feed: an unread p=2/x.json " +
+    "survives the rotation that deletes the committed p=1/x.json, and the " +
+    "restarted mirror applies it") {
+    val work = tempDir("graft_rotate_leaf")
+    val feed = s"$work/feed"
+    val ckpt = s"$work/ckpt"
+    val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
+    // one decoder file per partition, keys offset from the LSNs
+    def land(part: Int, lsns: Range, keyOffset: Long): Unit = {
+      val dir = java.nio.file.Paths.get(feed, s"p=$part")
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("x.json"), lsns.map { l =>
+        val k = keyOffset + l
+        s"""{"lsn":$l,"commitTs":"2024-01-01T00:00:00.000Z","op":"I","table":"t","key":$k,"after":"{\\"id\\":$k,\\"v\\":\\"v$l\\"}"}"""
+      }.mkString("\n").getBytes("UTF-8"))
+    }
+    land(1, 1 to 10, 0L)
+    runMirror(feed, ckpt, store)
+    assert(store.read(spark, "t").count() == 10L)
+    // a backfill lands under the same leaf name after the mirror
+    // stopped: LSNs below the watermark, never read
+    land(2, 5 to 8, 100L)
+    val r = CdcPipeline.rotateCheckpoint(spark, feed, "rotation_mirror", ckpt)
+    assert(r == CdcPipeline.Rotation(1L, 1L), s"got $r")
+    assert(ChangeFeed.dataFiles(spark, feed).keySet == Set("p=2/x.json"))
+    runMirror(feed, ckpt, store)
+    val ids = store.read(spark, "t").select("id").collect().map(_.getLong(0)).toSet
+    assert(ids == (1L to 10L).toSet ++ (105L to 108L).toSet, s"got ${ids.toSeq.sorted}")
+  }
+
+  test("rotateCheckpoint over a committed 5-file feed runs 0 Spark jobs") {
+    val work = tempDir("graft_rotate_jobs")
+    val feed = s"$work/feed"
+    val ckpt = s"$work/ckpt"
+    val store = new KeyedParquetStore(s"$work/store", nBuckets = 4)
+    (0 until 5).foreach(b => publishBatch(feed, (b * 100) until ((b + 1) * 100)))
+    runMirror(feed, ckpt, store)
+    var r: CdcPipeline.Rotation = null
+    val jobs = JobCount.of(spark, "rotate_checkpoint") {
+      r = CdcPipeline.rotateCheckpoint(spark, feed, "rotation_mirror", ckpt)
+    }
+    assert(r == CdcPipeline.Rotation(5L, 0L), s"got $r")
+    assert(jobs == 0, s"rotateCheckpoint ran $jobs Spark jobs")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -17,7 +16,7 @@ import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore, StreamMetri
   * per-mirror progress isolation in [[StreamMetrics]], one mirror
   * continuing while the other is stopped, and independent
   * checkpoint recovery per mirror. */
-class ConcurrentMirrorsSpec extends AnyFunSuite {
+class ConcurrentMirrorsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val rowSchema = StructType(Seq(
@@ -31,9 +30,9 @@ class ConcurrentMirrorsSpec extends AnyFunSuite {
   test("two named mirrors: concurrent, isolated progress/lag, independent recovery") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("mirrors_store").toString, nBuckets = 4)
-    val ckptA = Files.createTempDirectory("mirror_a_ckpt").toString
-    val ckptB = Files.createTempDirectory("mirror_b_ckpt").toString
+      tempDir("mirrors_store"), nBuckets = 4)
+    val ckptA = tempDir("mirror_a_ckpt")
+    val ckptB = tempDir("mirror_b_ckpt")
     val metrics = StreamMetrics.attach(spark)
     try {
       val srcA = MemoryStream[ChangeEvent](spark)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -19,7 +18,7 @@ import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
   * StreamingQuery restart instead of a hand replay; the acceptance
   * check is the reference's count reconciliation
   * (/root/reference/insert.ps1:426–431). */
-class CrashRecoverySpec extends AnyFunSuite {
+class CrashRecoverySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val rowSchema = StructType(Seq(
@@ -37,8 +36,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     // pins offsets against it, mirroring a durable feed)
     val crashSrc = MemoryStream[ChangeEvent](spark)
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("crash_store").toString, nBuckets = 4)
-    val ckpt = Files.createTempDirectory("crash_ckpt").toString
+      tempDir("crash_store"), nBuckets = 4)
+    val ckpt = tempDir("crash_ckpt")
     val schemas = Map("delta" -> rowSchema)
     val keys = Map("delta" -> "id")
 

@@ -15,7 +15,7 @@ import graft.streaming.{CdcPipeline, ChangeFeed, FeedSource}
 
 /** The change feed's stream source: an idle poll skips the file
   * source's listing, and no file is skipped or read twice for it. */
-class FeedSourceSpec extends AnyFunSuite {
+class FeedSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def lines(lsns: Seq[Long]): Array[Byte] =
@@ -61,13 +61,11 @@ class FeedSourceSpec extends AnyFunSuite {
     try body(m) finally m.query.stop()
   }
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   test("a file landed after a long idle stretch is applied; an in-flight " +
     "._COPYING_ upload is not read until it is renamed") {
-    val feed = tmp("feedsrc_idle")
+    val feed = tempDir("feedsrc_idle")
     land(feed, "a.json", 1)
-    withMirror(ChangeFeed.stream(spark, feed), tmp("feedsrc_idle_ckpt")) { m =>
+    withMirror(ChangeFeed.stream(spark, feed), tempDir("feedsrc_idle_ckpt")) { m =>
       m.await(1)
       Thread.sleep(1000)
       Files.write(Paths.get(feed, "b.json._COPYING_"), lines(Seq(2)))
@@ -82,9 +80,9 @@ class FeedSourceSpec extends AnyFunSuite {
   }
 
   test("idle witness: over 50+ idle polls the file source lists at most once") {
-    val feed = tmp("feedsrc_witness")
+    val feed = tempDir("feedsrc_witness")
     land(feed, "a.json", 1)
-    withMirror(ChangeFeed.stream(spark, feed), tmp("feedsrc_witness_ckpt")) { m =>
+    withMirror(ChangeFeed.stream(spark, feed), tempDir("feedsrc_witness_ckpt")) { m =>
       m.await(1)
       val src = m.feedSource
       val (polls0, inner0) = (src.polls, src.innerListings)
@@ -102,10 +100,10 @@ class FeedSourceSpec extends AnyFunSuite {
 
   test("a maxFilesPerTrigger = 1 backlog drains over successive triggers " +
     "with no new file landing") {
-    val feed = tmp("feedsrc_backlog")
+    val feed = tempDir("feedsrc_backlog")
     land(feed, "a.json", 1)
     withMirror(ChangeFeed.stream(spark, feed, maxFilesPerTrigger = 1),
-        tmp("feedsrc_backlog_ckpt")) { m =>
+        tempDir("feedsrc_backlog_ckpt")) { m =>
       m.await(1)
       Thread.sleep(500)
       Seq("b", "c", "d").zip(2L to 4L).foreach { case (n, l) => land(feed, s"$n.json", l) }
@@ -116,9 +114,9 @@ class FeedSourceSpec extends AnyFunSuite {
 
   test("a partitioned feed's files are read: subdirectories the file " +
     "source descends into fall back to full listings") {
-    val feed = tmp("feedsrc_subdir")
+    val feed = tempDir("feedsrc_subdir")
     land(s"$feed/p=1", "a.json", 1)
-    withMirror(ChangeFeed.stream(spark, feed), tmp("feedsrc_subdir_ckpt")) { m =>
+    withMirror(ChangeFeed.stream(spark, feed), tempDir("feedsrc_subdir_ckpt")) { m =>
       m.await(1)
       Thread.sleep(500)
       land(s"$feed/p=1", "b.json", 2)
@@ -131,8 +129,8 @@ class FeedSourceSpec extends AnyFunSuite {
 
   test("a checkpoint written by a plain file readStream resumes with no " +
     "re-read and no skipped file") {
-    val feed = tmp("feedsrc_restart")
-    val ckpt = tmp("feedsrc_restart_ckpt")
+    val feed = tempDir("feedsrc_restart")
+    val ckpt = tempDir("feedsrc_restart_ckpt")
     land(feed, "a.json", 1)
     land(feed, "b.json", 2)
     withMirror(spark.readStream.schema(ChangeFeed.schema).json(feed), ckpt)(_.await(1, 2))
@@ -146,9 +144,9 @@ class FeedSourceSpec extends AnyFunSuite {
   }
 
   test("a feed directory that goes missing and appears again is read") {
-    val feed = tmp("feedsrc_missing")
+    val feed = tempDir("feedsrc_missing")
     land(feed, "a.json", 1)
-    withMirror(ChangeFeed.stream(spark, feed), tmp("feedsrc_missing_ckpt")) { m =>
+    withMirror(ChangeFeed.stream(spark, feed), tempDir("feedsrc_missing_ckpt")) { m =>
       m.await(1)
       Thread.sleep(300)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(feed))
@@ -160,8 +158,8 @@ class FeedSourceSpec extends AnyFunSuite {
 
   test("an in-flight ._COPYING_ upload is not feed data: consumer lag " +
     "does not count it") {
-    val feed = tmp("feedsrc_lag")
-    val ckpt = tmp("feedsrc_lag_ckpt")
+    val feed = tempDir("feedsrc_lag")
+    val ckpt = tempDir("feedsrc_lag_ckpt")
     land(feed, "a.json", 1)
     withMirror(ChangeFeed.stream(spark, feed), ckpt)(_.await(1))
     CdcPipeline.registerConsumer(spark, feed, "m", ckpt)

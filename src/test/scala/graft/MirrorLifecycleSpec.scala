@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,7 +15,7 @@ import graft.streaming.{CdcPipeline, ChangeEvent, KeyedParquetStore}
   * same mirror name then re-creates FRESH (reprocessing the source
   * from the start — which the idempotent merge makes safe even when
   * the targets were kept). */
-class MirrorLifecycleSpec extends AnyFunSuite {
+class MirrorLifecycleSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val rowSchema = StructType(Seq(
@@ -30,8 +29,8 @@ class MirrorLifecycleSpec extends AnyFunSuite {
   test("drop stops the query, GCs the checkpoint, drops targets; same name re-creates fresh") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("lifecycle_store").toString, nBuckets = 4)
-    val ckpt = Files.createTempDirectory("lifecycle_ckpt").toString
+      tempDir("lifecycle_store"), nBuckets = 4)
+    val ckpt = tempDir("lifecycle_ckpt")
     try {
       val src = MemoryStream[ChangeEvent](spark)
       src.addData(ins(1, 1), ins(2, 2), ins(3, 3))

@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.{LogAnalytics, Monitor}
 import graft.streaming.{CdcPipeline, KeyedParquetStore}
 
-class MonitorSpec extends AnyFunSuite {
+class MonitorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("monitoring report bundle over a live store") {
     import spark.implicits._
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("mon_store").toString, nBuckets = 4)
+      tempDir("mon_store"), nBuckets = 4)
     val customers = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     val orders = Seq((10L, 1L), (11L, 2L)).toDF("id", "cust")
     CdcPipeline.snapshot(spark, store,
@@ -88,7 +88,7 @@ class MonitorSpec extends AnyFunSuite {
 
   test("feed_consumers infra row (r14): unregistered feed warns — pruning " +
     "cannot engage; registrations flip it OK and list the positions") {
-    val work = Files.createTempDirectory("mon_feed").toString
+    val work = tempDir("mon_feed")
     val feed = s"$work/feed"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 2)
@@ -108,7 +108,7 @@ class MonitorSpec extends AnyFunSuite {
   test("time_lag: a lagging mirror shows positive, shrinking seconds-behind-source") {
     import spark.implicits._
     import graft.streaming.{ChangeEvent, ChangeFeed}
-    val work = Files.createTempDirectory("mon_tlag").toString
+    val work = tempDir("mon_tlag")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 2)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -168,7 +168,7 @@ class MonitorSpec extends AnyFunSuite {
   test("time_lag: stale commit-time stamp reads unknown, not an overstated lag") {
     import spark.implicits._
     import graft.streaming.{ChangeEvent, ChangeFeed}
-    val work = Files.createTempDirectory("mon_stale").toString
+    val work = tempDir("mon_stale")
     val feed = s"$work/feed"
     val store = new KeyedParquetStore(s"$work/store", nBuckets = 2)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -215,13 +215,13 @@ class MonitorSpec extends AnyFunSuite {
 
   test("storage report handles a missing table as zeros") {
     val store = new KeyedParquetStore(
-      Files.createTempDirectory("mon_store_empty").toString, nBuckets = 2)
+      tempDir("mon_store_empty"), nBuckets = 2)
     val r = Monitor.storageReport(spark, store, Seq("ghost")).collect().head
     assert(r.getAs[Long]("total_bytes") == 0L && r.getAs[Int]("n_files") == 0)
   }
 
   test("latest-file selection picks newest mtime (monitoring.ps1:61–65)") {
-    val dir = Files.createTempDirectory("files")
+    val dir = java.nio.file.Paths.get(tempDir("files"))
     Files.write(dir.resolve("old.log"), "x".getBytes)
     Files.write(dir.resolve("new.log"), "y".getBytes)
     dir.resolve("old.log").toFile.setLastModified(1000000L)
